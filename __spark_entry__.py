@@ -4508,7 +4508,7 @@ WITH turns AS (
   WHERE user_id % 7 = 0
 ), entries AS (
   SELECT user_id, event_id,
-         CAST(event_id AS VARCHAR) || ':'
+         coalesce(CAST(event_id AS VARCHAR), '__null__') || ':'
            || CAST(coalesce(length(props), -1) AS VARCHAR) || ':'
            || coalesce(props, '') AS e
   FROM turns

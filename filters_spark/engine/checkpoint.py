@@ -42,10 +42,11 @@ STATE_VERSION = 2
 
 def suite_fingerprint(suite: ValidationSuite) -> str:
     """Stable digest of the suite config that determines what the stored
-    per-bucket state MEANS (rules, keys, bucket count, stat/drift
-    columns).  Specs without a stable ``__repr__`` fall back to their
-    class name, so the fingerprint can never false-refuse a valid resume
-    on object identity — it only catches real config drift."""
+    per-bucket state MEANS (rules, table rules, keys, bucket count,
+    stat/drift columns).  Specs without a stable ``__repr__`` fall back
+    to their class name, so the fingerprint can never false-refuse a
+    valid resume on object identity — it only catches real config
+    drift."""
     import hashlib
 
     def sig(v) -> str:
@@ -55,6 +56,7 @@ def suite_fingerprint(suite: ValidationSuite) -> str:
     spec = repr(
         {
             "rules": {k: sig(v) for k, v in sorted(suite.rules.items())},
+            "table_rules": sorted((suite.table_rules or {}).items()),
             "conv": suite.conv,
             "idx": suite.idx,
             "n_buckets": suite.n_buckets,
@@ -170,6 +172,11 @@ def run_resumable(
     over the full table would report — quantile summaries cannot make
     that claim (merge-of-merges degrades).
 
+    ``baseline`` (optional) is the drift reference snapshot.  Groups run
+    without it; once every bucket has committed, ``suite.drift`` runs ONCE
+    over the whole input, is returned as ``drift`` and gates ``passed``
+    exactly as the one-shot ``suite.run`` does.
+
     ``fail_after_buckets`` is a test hook: abort after N newly-completed
     buckets to simulate a killed job.
     """
@@ -181,6 +188,9 @@ def run_resumable(
     done = manifest.completed()
     todo = [b for b in range(n) if b not in done]
     newly = 0
+    counters = ("n_rows", "n_invalid", "dup_keys", "gappy_convs") + (
+        ("rule_fails",) if suite.table_rules else ()
+    )
     conv_bucket = suite.bucket_fn(F.col(suite.conv), n)
 
     for i in range(0, len(todo), buckets_per_job):
@@ -208,7 +218,7 @@ def run_resumable(
                 lo=hist_range[0],
                 hi=hist_range[1],
             )
-        result = suite.run(sub, baseline=baseline)
+        result = suite.run(sub)
         try:
             if output is not None:
                 out = output.rstrip("/")
@@ -241,12 +251,7 @@ def run_resumable(
                 # matched zero rows for it ⇒ genuinely empty (same
                 # transform on both sides, checked above).
                 row = {
-                    "n_rows": 0,
-                    "n_invalid": 0,
-                    "dup_keys": 0,
-                    "surplus_rows": 0,
-                    "n_convs": 0,
-                    "gappy_convs": 0,
+                    **dict.fromkeys(counters + ("surplus_rows", "n_convs"), 0),
                     "bucket_pass": True,
                 }
             row.pop("bucket", None)
@@ -254,7 +259,6 @@ def run_resumable(
                 "state_version": STATE_VERSION,
                 "suite_fingerprint": fingerprint,
                 "verdict": row,
-                "metrics": result.metrics,
             }
             if b in sketches:
                 payload["sketches"] = sketches[b]
@@ -266,7 +270,7 @@ def run_resumable(
                 return {"completed": len(done) + newly, "aborted": True}
 
     # aggregate lineage across all manifest entries
-    total = {"n_rows": 0, "n_invalid": 0, "dup_keys": 0, "gappy_convs": 0}
+    total = dict.fromkeys(counters, 0)
     passed = True
     states: list[dict[str, str]] = []
     hist_states: list[dict[str, list[int]]] = []
@@ -280,11 +284,13 @@ def run_resumable(
             states.append(entry["sketches"])
         if entry.get("histograms"):
             hist_states.append(entry["histograms"])
+    drift = suite.drift(df, baseline) if baseline is not None else {}
     out = {
         "completed": len(manifest.completed()),
         "aborted": False,
-        "passed": passed,
+        "passed": passed and not drift.get("drift_failed", False),
         **total,
+        "drift": drift,
     }
     if states:
         from filters_spark.engine.stats import merge_distinct_sketches

@@ -1,17 +1,43 @@
 """Distribution-drift checks (BASELINE.json north_star: "role/tool
 frequency KL-divergence and text-length PSI against a baseline snapshot").
 
-The heavy part — frequency / histogram aggregation — is distributed (one
-hash agg per side).  The divergence math runs on the collected frequency
-tables, which are tiny (|categories| or |buckets| rows), per SURVEY.md
-§4.3(6).
+One-sided profiles (:func:`frequencies`, :func:`length_histogram`,
+:func:`dist_profile`) aggregate one snapshot with one hash agg; the
+KL/PSI math runs on the collected tables, which are tiny (|categories|
+or |buckets| rows), per SURVEY.md §4.3(6).
+
+Every TWO-snapshot estimator sits on one census, ``_census``: both
+sides are tagged ``(nc, nb) = (1, 0) | (0, 1)``, unioned and fed to ONE
+hash aggregation keyed by ``(by…, k)`` — map-side combine collapses
+10^12 rows to |keys| rows before the shuffle — giving the mergeable
+per-key count state ``(by…, k, nc, nb)``.  Two wrappers fix the key:
+
+- the CATEGORICAL census keys by the column as a string, nulls as the
+  literal ``'__null__'`` (presence drift stays visible), and folds keys
+  ranked past ``max_categories`` into ``'__other__'`` (rank by combined
+  count, ties by key, so both engines fold identically) — under
+  :func:`chi2_statistic`, :func:`js_divergence` and :func:`psi_by_group`;
+- the NUMERIC census keys by the value as a double and drops nulls
+  (presence drift is :func:`frequencies`' job).  ``grid=`` snaps values
+  to a fixed lattice first, bounding the distinct-value count of a truly
+  continuous column; one window over the AGGREGATED table then gives the
+  running CDFs and each value's gap to its successor (a CDF is a global
+  order, so that window is one sorted run) — under :func:`ks_statistic`
+  and :func:`wasserstein_distance`.
+
+Side totals ``(tc, tb)`` ride a broadcast 1-row cross join, or a
+group-keyed join under ``by``; each estimator is then one aggregation
+of its cell formula.  EXACT, never sampled, and no driver action.  The
+census is the same per-key count state that checkpoint resume merges
+exactly through :func:`psi_from_histograms`.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -54,10 +80,13 @@ def _cap_categories(
     alias: str,
     max_categories: int | None,
     partition_cols: tuple = (),
+    count_cols: tuple = ("n",),
 ) -> DataFrame:
-    """Collapse all but the ``max_categories`` most frequent keys (per
-    ``partition_cols`` group, if any) into ``'__other__'`` — distributed
+    """Collapse all but the ``max_categories`` keys with the largest
+    total over ``count_cols`` (per ``partition_cols`` group, if any)
+    into ``'__other__'``, summing each count column — distributed
     (window rank + re-aggregate over the already-aggregated counts).
+    Ties rank by key value, so every engine folds the same keys.
 
     The rank runs over the counts table (one row per DISTINCT key, i.e.
     post-aggregation), sorted with Spark's external sort — a
@@ -67,10 +96,9 @@ def _cap_categories(
     have thousands of categories at most."""
     if max_categories is None:
         return counts
-    from pyspark.sql import Window
-
     w = Window.partitionBy(*partition_cols).orderBy(
-        F.desc("n"), F.col(alias)
+        F.desc(reduce(Column.__add__, map(F.col, count_cols))),
+        F.col(alias),
     )
     keep = F.row_number().over(w) <= max_categories
     return (
@@ -78,8 +106,94 @@ def _cap_categories(
             alias, F.when(keep, F.col(alias)).otherwise(F.lit("__other__"))
         )
         .groupBy(*partition_cols, alias)
-        .agg(F.sum("n").alias("n"))
+        .agg(*[F.sum(c).alias(c) for c in count_cols])
     )
+
+
+def _census(
+    current: DataFrame,
+    baseline: DataFrame,
+    key: Column,
+    by: tuple = (),
+    where: Column | None = None,
+) -> DataFrame:
+    """The two-snapshot census ``(by…, k, nc, nb)``: ``where``-filtered
+    sides tagged, unioned and counted by ONE ``(by…, key)``-keyed hash
+    aggregation."""
+
+    def side(df: DataFrame, c: int, b: int) -> DataFrame:
+        if where is not None:
+            df = df.where(where)
+        return df.select(
+            *by, key.alias("k"), F.lit(c).alias("nc"), F.lit(b).alias("nb")
+        )
+
+    return (
+        side(current, 1, 0)
+        .unionAll(side(baseline, 0, 1))
+        .groupBy(*by, "k")
+        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
+    )
+
+
+def _cat_census(
+    current: DataFrame,
+    baseline: DataFrame,
+    col: str,
+    max_categories: int | None,
+    by: tuple = (),
+) -> DataFrame:
+    """Categorical census: nulls as ``'__null__'``, keys ranked past
+    ``max_categories`` (per ``by`` group) folded into ``'__other__'``."""
+    key = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
+    return _cap_categories(
+        _census(current, baseline, key, by), "k", max_categories, by,
+        ("nc", "nb"),
+    )
+
+
+def _num_census(
+    current: DataFrame, baseline: DataFrame, col: str, grid: float | None
+) -> DataFrame:
+    """Numeric census: the value as a double, nulls dropped, snapped to
+    the ``grid`` lattice when one is given."""
+    v = F.col(col).cast("double")
+    if grid is not None:
+        v = F.round(v / F.lit(float(grid)), 0) * F.lit(float(grid))
+    return _census(current, baseline, v, where=F.col(col).isNotNull())
+
+
+def _with_totals(counts: DataFrame, by: tuple = ()) -> DataFrame:
+    """Attach each side's total ``(tc, tb)`` — per ``by`` group through
+    a group-keyed join (AQE broadcasts when #groups is small), else a
+    broadcast 1-row cross join."""
+    tot = counts.groupBy(*by).agg(
+        F.sum("nc").alias("tc"), F.sum("nb").alias("tb")
+    )
+    if by:
+        return counts.join(tot, list(by))
+    return counts.crossJoin(F.broadcast(tot))
+
+
+def _cdf(counts: DataFrame) -> DataFrame:
+    """Running counts ``cc``/``cb`` and the gap ``dv`` to the successor
+    value over a numeric census, from one window ordered by value."""
+    order = Window.orderBy("k")
+    run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return counts.select(
+        "*",
+        F.sum("nc").over(run).alias("cc"),
+        F.sum("nb").over(run).alias("cb"),
+        (F.lead("k").over(order) - F.col("k")).alias("dv"),
+    )
+
+
+def _sizes() -> list[Column]:
+    """The ``(n_current, n_baseline)`` outputs over attached totals."""
+    return [
+        F.max("tc").cast("long").alias("n_current"),
+        F.max("tb").cast("long").alias("n_baseline"),
+    ]
 
 
 def _freq_dict(freq: DataFrame, alias: str = "k") -> dict[str, float]:
@@ -260,59 +374,16 @@ def ks_statistic(
     (c(0.05)=1.358) for a significance gate.  Nulls are dropped (they
     are presence drift, ``frequencies``' job).
 
-    Scale shape: EXACT, not sampled — both sides tag-union and feed ONE
-    hash aggregation keyed by the value (map-side combine collapses
-    10^12 rows to #distinct-values rows); the running-CDF window then
-    sorts only that aggregated table.  The window is a single sorted
-    run by construction (a CDF is a global order), so bound the
-    distinct-value count when the column is truly continuous:
-    ``grid=0.01`` snaps values to a fixed lattice first (the KS error
-    introduced is at most the mass of one lattice cell).  Totals ride a
-    broadcast 1-row cross join — no driver action anywhere.
+    Runs on the numeric census (module docstring).  ``grid=0.01`` snaps
+    values to a fixed lattice first; the KS error introduced is at most
+    the mass of one lattice cell.
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        v = F.col(col).cast("double")
-        if grid is not None:
-            v = F.round(v / F.lit(float(grid)), 0) * F.lit(float(grid))
-        return (
-            df.where(F.col(col).isNotNull())
-            .select(
-                v.alias("v"),
-                F.lit(nc).alias("nc"),
-                F.lit(nb).alias("nb"),
-            )
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("v")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-    )
-    from pyspark.sql import Window
-
-    w = (
-        Window.orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = counts.select(
-        F.sum("nc").over(w).alias("cc"),
-        F.sum("nb").over(w).alias("cb"),
-    )
-    totals = counts.agg(
-        F.sum("nc").alias("tc"), F.sum("nb").alias("tb")
-    )
-    return (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("cc") / F.col("tc") - F.col("cb") / F.col("tb")
-                )
-            ).alias("ks_stat"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
-        )
+    cdf = _cdf(_with_totals(_num_census(current, baseline, col, grid)))
+    return cdf.agg(
+        F.max(
+            F.abs(F.col("cc") / F.col("tc") - F.col("cb") / F.col("tb"))
+        ).alias("ks_stat"),
+        *_sizes(),
     )
 
 
@@ -343,49 +414,12 @@ def chi2_statistic(
     total never arise (every key comes from an observed row), so no
     expected-count division by zero.
 
-    Scale shape: both sides tag-union into ONE hash aggregation keyed
-    by the category (map-side combine collapses 10^12 rows to K rows);
-    totals ride a broadcast 1-row cross join; the cell sum is a second
-    K-row aggregation.  No window, no sort, no driver action.  For
+    Runs on the categorical census (module docstring): no window unless
+    ``max_categories`` is set, no driver action.  For
     unbounded-cardinality columns set ``max_categories``: category
-    ranks beyond it fold into ``'__other__'`` (rank by combined count,
-    ties broken by category value, so both engines fold identically).
+    ranks beyond it fold into ``'__other__'``.
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        k = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
-        return df.select(
-            k.alias("k"),
-            F.lit(nc).alias("nc"),
-            F.lit(nb).alias("nb"),
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("k")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-    )
-    if max_categories is not None:
-        from pyspark.sql import Window
-
-        w = Window.orderBy(
-            (F.col("nc") + F.col("nb")).desc(), F.col("k").asc()
-        )
-        counts = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .select(
-                F.when(F.col("__rk") <= max_categories, F.col("k"))
-                .otherwise(F.lit("__other__"))
-                .alias("k"),
-                "nc",
-                "nb",
-            )
-            .groupBy("k")
-            .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-        )
-    totals = counts.agg(
-        F.sum("nc").alias("tc"), F.sum("nb").alias("tb")
-    )
+    t = _with_totals(_cat_census(current, baseline, col, max_categories))
     row = F.col("nc") + F.col("nb")
     grand = (F.col("tc") + F.col("tb")).cast("double")
     ec = row * F.col("tc") / grand
@@ -394,12 +428,10 @@ def chi2_statistic(
         F.col("nb") - eb
     ) * (F.col("nb") - eb) / eb
     return (
-        counts.crossJoin(F.broadcast(totals))
-        .agg(
+        t.agg(
             F.sum(cell).alias("chi2"),
             (F.count(F.lit(1)) - 1).cast("long").alias("dof"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
+            *_sizes(),
             F.sum(row).cast("double").alias("__n"),
             F.least(
                 F.count(F.lit(1)) - F.lit(1), F.lit(1)
@@ -439,59 +471,20 @@ def wasserstein_distance(
     ``(w1, n_current, n_baseline)``.  Nulls are dropped (presence drift
     is ``frequencies``' job).
 
-    Scale shape: identical to :func:`ks_statistic` — EXACT, never
-    sampled.  Both sides tag-union into ONE hash aggregation keyed by
-    the value (map-side combine collapses 10^12 rows to
-    #distinct-values rows); one window over the AGGREGATED table
-    produces the running CDFs plus each value's gap to its successor
-    (``lead``), and ``Σ |ΔCDF| · Δv`` is a final 1-row aggregation.
-    Totals ride a broadcast 1-row cross join — no driver action.  For
-    truly continuous columns bound the distinct-value count with
-    ``grid=`` (fixed lattice; the W1 error introduced is at most half a
-    lattice step).
+    ``Σ |ΔCDF| · Δv`` over the numeric census's CDF is a final 1-row
+    aggregation.  With ``grid=`` (fixed lattice) the W1 error
+    introduced is at most half a lattice step.
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        v = F.col(col).cast("double")
-        if grid is not None:
-            v = F.round(v / F.lit(float(grid)), 0) * F.lit(float(grid))
-        return df.where(F.col(col).isNotNull()).select(
-            v.alias("v"), F.lit(nc).alias("nc"), F.lit(nb).alias("nb")
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("v")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-    )
-    from pyspark.sql import Window
-
-    order = Window.orderBy("v")
-    cum = counts.select(
-        F.sum("nc")
-        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cc"),
-        F.sum("nb")
-        .over(order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cb"),
-        (F.lead("v").over(order) - F.col("v")).alias("dv"),
-    )
-    totals = counts.agg(F.sum("nc").alias("tc"), F.sum("nb").alias("tb"))
-    return (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.abs(
-                        F.col("cc") / F.col("tc") - F.col("cb") / F.col("tb")
-                    )
-                    * F.col("dv")
-                ),
-                F.lit(0.0),
-            ).alias("w1"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
-        )
+    cdf = _cdf(_with_totals(_num_census(current, baseline, col, grid)))
+    return cdf.agg(
+        F.coalesce(
+            F.sum(
+                F.abs(F.col("cc") / F.col("tc") - F.col("cb") / F.col("tb"))
+                * F.col("dv")
+            ),
+            F.lit(0.0),
+        ).alias("w1"),
+        *_sizes(),
     )
 
 
@@ -512,48 +505,10 @@ def js_divergence(
     is bounded — ``[0, ln 2]`` in nats, ``[0, 1]`` with ``base=2`` —
     so one alert threshold works across columns of any cardinality.
     Returns ONE row ``(jsd, n_current, n_baseline)``.  Nulls count as
-    the literal ``'__null__'`` (presence drift stays visible).
-
-    Scale shape: identical to :func:`chi2_statistic` — both sides
-    tag-union into ONE hash aggregation keyed by the category
-    (map-side combine collapses 10^12 rows to K rows); totals ride a
-    broadcast 1-row cross join; the divergence is a second K-row
-    aggregation.  No window, no sort, no driver action.
-    ``max_categories=`` folds the cardinality tail into ``'__other__'``
-    exactly as chi2 does (rank by combined count, category-value
-    tiebreak — both engines fold identically).
+    the literal ``'__null__'`` (presence drift stays visible);
+    ``max_categories=`` folds the cardinality tail into ``'__other__'``.
     """
-    def side(df: DataFrame, nc: int, nb: int) -> DataFrame:
-        k = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
-        return df.select(
-            k.alias("k"), F.lit(nc).alias("nc"), F.lit(nb).alias("nb")
-        )
-
-    counts = (
-        side(current, 1, 0)
-        .unionAll(side(baseline, 0, 1))
-        .groupBy("k")
-        .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-    )
-    if max_categories is not None:
-        from pyspark.sql import Window
-
-        w = Window.orderBy(
-            (F.col("nc") + F.col("nb")).desc(), F.col("k").asc()
-        )
-        counts = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .select(
-                F.when(F.col("__rk") <= max_categories, F.col("k"))
-                .otherwise(F.lit("__other__"))
-                .alias("k"),
-                "nc",
-                "nb",
-            )
-            .groupBy("k")
-            .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-        )
-    totals = counts.agg(F.sum("nc").alias("tc"), F.sum("nb").alias("tb"))
+    t = _with_totals(_cat_census(current, baseline, col, max_categories))
     p = F.col("nc") / F.col("tc")
     q = F.col("nb") / F.col("tb")
     m = (p + q) / F.lit(2.0)
@@ -564,14 +519,7 @@ def js_divergence(
         + F.when(q > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
     ) / F.lit(2.0)
     scale = F.lit(1.0 / math.log(base)) if base is not None else F.lit(1.0)
-    return (
-        counts.crossJoin(F.broadcast(totals))
-        .agg(
-            (F.sum(cell) * scale).alias("jsd"),
-            F.max("tc").cast("long").alias("n_current"),
-            F.max("tb").cast("long").alias("n_baseline"),
-        )
-    )
+    return t.agg((F.sum(cell) * scale).alias("jsd"), *_sizes())
 
 
 def quantile_shift(
@@ -603,9 +551,7 @@ def quantile_shift(
 
     def side(df: DataFrame, name: str) -> DataFrame:
         agg = df.where(F.col(col).isNotNull()).agg(
-            F.expr(
-                f"percentile({col}, array({', '.join(repr(float(q)) for q in qs)}))"
-            ).alias("__vs")
+            F.percentile(F.col(col), probs).alias("__vs")
         )
         return agg.select(
             F.posexplode("__vs").alias("__i", name)
@@ -727,59 +673,19 @@ def psi_by_group(
     into ``'__other__'``, mass preserved) — the same driver-safety
     guard as :func:`frequencies`, ranked within each group.
 
-    Scale shape: ONE union + (group, category)-keyed hash aggregation
-    with conditional sums (map-side combine; the corpus collapses to
-    #groups × #categories rows before any join), per-group totals are
-    a second agg over that bounded table, joined back group-keyed (AQE
-    broadcasts when #groups is small); the PSI sum is a final
+    Runs on the categorical census keyed by ``(group…, category)``
+    (module docstring): the corpus collapses to #groups × #categories
+    rows before the group-keyed totals join; the PSI sum is a final
     group-keyed agg.  No window over raw data, no driver state.
     """
-    gcols = (
-        [group_cols] if isinstance(group_cols, str) else list(group_cols)
+    by = (group_cols,) if isinstance(group_cols, str) else tuple(group_cols)
+    t = _with_totals(
+        _cat_census(current, baseline, col, max_categories, by), by
     )
-    key = F.coalesce(F.col(col).cast("string"), F.lit("__null__"))
-
-    def tagged(df: DataFrame, c: int, b: int) -> DataFrame:
-        return df.select(
-            *[F.col(g) for g in gcols],
-            key.alias("__k"),
-            F.lit(c).alias("__c"),
-            F.lit(b).alias("__b"),
-        )
-
-    u = tagged(current, 1, 0).unionAll(tagged(baseline, 0, 1))
-    counts = u.groupBy(*gcols, "__k").agg(
-        F.sum("__c").alias("nc"), F.sum("__b").alias("nb")
-    )
-    if max_categories is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*gcols).orderBy(
-            F.desc(F.col("nc") + F.col("nb")), F.col("__k")
-        )
-        keep = F.row_number().over(w) <= max_categories
-        counts = (
-            counts.withColumn(
-                "__k",
-                F.when(keep, F.col("__k")).otherwise(F.lit("__other__")),
-            )
-            .groupBy(*gcols, "__k")
-            .agg(F.sum("nc").alias("nc"), F.sum("nb").alias("nb"))
-        )
-    tot = counts.groupBy(*gcols).agg(
-        F.sum("nc").alias("__tc"), F.sum("nb").alias("__tb")
-    )
-    j = counts.join(tot, gcols) if gcols else counts.crossJoin(
-        F.broadcast(tot)
-    )
-    p = F.greatest(F.col("nc") / F.col("__tc"), F.lit(float(eps)))
-    q = F.greatest(F.col("nb") / F.col("__tb"), F.lit(float(eps)))
+    p = F.greatest(F.col("nc") / F.col("tc"), F.lit(float(eps)))
+    q = F.greatest(F.col("nb") / F.col("tb"), F.lit(float(eps)))
     term = F.when(
-        (F.col("__tc") > 0) & (F.col("__tb") > 0),
+        (F.col("tc") > 0) & (F.col("tb") > 0),
         (p - q) * F.log(p / q),
     )
-    return j.groupBy(*gcols).agg(
-        F.sum(term).alias("psi"),
-        F.max("__tc").cast("long").alias("n_current"),
-        F.max("__tb").cast("long").alias("n_baseline"),
-    )
+    return t.groupBy(*by).agg(F.sum(term).alias("psi"), *_sizes())

@@ -271,7 +271,8 @@ def conv_fingerprints(
     """Order-exact conversation fingerprint: ``(conv, fingerprint,
     n_turns)`` with ``fingerprint = md5`` of the turn texts
     concatenated in ``(idx, text)`` order, each turn length-prefixed
-    (``idx ':' len ':' text``, null text → length ``-1``) so no
+    (``idx ':' len ':' text``, null idx → ``'__null__'``, null text →
+    length ``-1``) so no
     concatenation boundary can collide and the SAME conversation
     content always produces the SAME digest on any engine.
 
@@ -285,7 +286,7 @@ def conv_fingerprints(
     join.
     """
     entry = F.concat(
-        F.col(idx).cast("string"),
+        F.coalesce(F.col(idx).cast("string"), F.lit("__null__")),
         F.lit(":"),
         F.coalesce(F.length(F.col(text)), F.lit(-1)).cast("string"),
         F.lit(":"),

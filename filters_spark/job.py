@@ -146,9 +146,10 @@ def main(argv: list[str] | None = None) -> int:
     out = args.output.rstrip("/")
     if args.manifest:
         # run_resumable writes verdicts/violations per bucket group as it
-        # goes (dynamic partition overwrite keyed by bucket), so the only
-        # extra work here is the stats scan over the raw input — the
-        # validation chains never run a second time.
+        # goes (dynamic partition overwrite keyed by bucket) and computes
+        # drift once over the whole input, so the only extra work here is
+        # the stats scan over the raw input — the validation chains never
+        # run a second time.
         summary = run_resumable(
             df,
             suite,
@@ -169,8 +170,6 @@ def main(argv: list[str] | None = None) -> int:
         column_stats(df, suite.stat_columns).write.mode("overwrite").parquet(
             f"{out}/stats"
         )
-        drift = suite.drift(df, baseline) if baseline is not None else {}
-        summary["drift"] = drift
     else:
         result = suite.run(df, baseline=baseline)
         verdicts = result.verdicts.collect()

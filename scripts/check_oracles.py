@@ -40,6 +40,57 @@ def normalise(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def compare(spark, con, sf_dir: str, name: str) -> tuple[int, list[str]]:
+    """Run registry query ``name`` on Spark and its oracle on ``con``
+    over ``sf_dir``; returns ``(spark row count, problems)``, where an
+    empty ``problems`` means row count, column names and
+    order-insensitive values all match.  A query without an oracle
+    only has to run."""
+    import __spark_entry__ as e
+
+    try:
+        sdf = e.queries()[name](spark, sf_dir).toPandas()
+    except Exception as ex:
+        return 0, [f"spark error: {ex}"]
+    oracle = e.oracle_sql().get(name)
+    if oracle is None:
+        return len(sdf), []
+    try:
+        odf = con.sql(oracle).df()
+    except Exception as ex:
+        return len(sdf), [f"oracle error: {ex}"]
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(
+            f"schema {sorted(sdf.columns)} vs {sorted(odf.columns)}"
+        )
+    if not problems:
+        a, b = normalise(sdf), normalise(odf)
+        if not a.equals(b):
+            diff = (a != b).any(axis=1)
+            idx = diff[diff].index[:3]
+            problems.append(
+                "values differ, first rows:\n"
+                + "\n".join(
+                    f"  spark={a.loc[i].to_dict()}\n  duck ={b.loc[i].to_dict()}"
+                    for i in idx
+                )
+            )
+    return len(sdf), problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -58,62 +109,25 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect(sf_dir)
 
     import __spark_entry__ as e
 
-    qs, oracles = e.queries(), e.oracle_sql()
+    oracles = e.oracle_sql()
     failures = []
-    for name, fn in qs.items():
+    for name in e.queries():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
-            failures.append(name)
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows, "
-                  f"{time.time()-t0:.1f}s)")
-            continue
-        try:
-            odf = con.sql(oracles[name]).df()
-        except Exception as ex:
-            print(f"FAIL {name}: oracle error: {ex}")
-            failures.append(name)
-            continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(
-                f"schema {sorted(sdf.columns)} vs {sorted(odf.columns)}"
-            )
-        if not problems:
-            a, b = normalise(sdf), normalise(odf)
-            if not a.equals(b):
-                diff = (a != b).any(axis=1)
-                idx = diff[diff].index[:3]
-                problems.append(
-                    "values differ, first rows:\n"
-                    + "\n".join(
-                        f"  spark={a.loc[i].to_dict()}\n  duck ={b.loc[i].to_dict()}"
-                        for i in idx
-                    )
-                )
+        n, problems = compare(spark, con, sf_dir, name)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             failures.append(name)
+        elif name not in oracles:
+            print(f"ok   {name}: rows-only ({n} rows, "
+                  f"{time.time()-t0:.1f}s)")
         else:
-            print(f"ok   {name}: {len(sdf)} rows match "
-                  f"({time.time()-t0:.1f}s)")
+            print(f"ok   {name}: {n} rows match ({time.time()-t0:.1f}s)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()
     return 1 if failures else 0

@@ -400,6 +400,71 @@ def test_checkpoint_refuses_incompatible_state(tmp_path, tdf, baseline):
     assert final["n_rows"] == tdf.count()
 
 
+def test_checkpoint_table_rules_state(tmp_path, tdf):
+    """Table rules are part of the checkpointed suite config: resuming
+    with changed table rules is refused, a resumed run's ``rule_fails``
+    equals the one-shot ``suite.run`` total, and empty buckets record
+    zero rule failures."""
+    def half(c, n):  # buckets n/2..n-1 stay empty
+        return F.pmod(F.xxhash64(c), F.lit(n // 2)).cast("int")
+
+    rules = {"tool_on_assistant": "tool IS NULL OR role = 'assistant'"}
+    suite = ValidationSuite(
+        RULES, n_buckets=8, bucket_fn=half, table_rules=rules
+    )
+    manifest = CheckpointManifest(tmp_path / "mr")
+    partial = run_resumable(
+        tdf, suite, manifest, buckets_per_job=2, fail_after_buckets=2
+    )
+    assert partial["aborted"]
+    changed = ValidationSuite(
+        RULES, n_buckets=8, bucket_fn=half,
+        table_rules={"no_tool": "tool IS NULL"},
+    )
+    with pytest.raises(RuntimeError, match="suite config"):
+        run_resumable(tdf, changed, manifest)
+
+    final = run_resumable(tdf, suite, manifest, buckets_per_job=4)
+    result = suite.run(tdf)
+    one_shot = sum(r["rule_fails"] for r in result.verdicts.collect())
+    result.unpersist()
+    assert one_shot > 0
+    assert final["completed"] == 8 and final["rule_fails"] == one_shot
+    assert [manifest.read(b)["verdict"]["rule_fails"] for b in (6, 7)] == [
+        0, 0
+    ]
+
+
+def test_checkpoint_drift_once_gates_passed(tmp_path, spark, tdf, baseline):
+    """run_resumable computes drift once, over the whole input, after the
+    bucket loop: a resumed run reports the one-shot ``suite.drift``, and
+    a drifted baseline fails a table whose every bucket passes."""
+    suite = ValidationSuite(RULES, n_buckets=8)
+    manifest = CheckpointManifest(tmp_path / "md")
+    partial = run_resumable(
+        tdf, suite, manifest, baseline=baseline, buckets_per_job=2,
+        fail_after_buckets=3,
+    )
+    assert partial["aborted"] and "drift" not in partial
+    final = run_resumable(
+        tdf, suite, manifest, baseline=baseline, buckets_per_job=4
+    )
+    assert final["drift"] == suite.drift(tdf, baseline)
+
+    clean = spark.range(40).select(
+        (F.col("id") % 10).cast("string").alias("conv_id"),
+        (F.col("id") / 10).cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit("hello").alias("text"),
+    )
+    drifted = clean.withColumn("role", F.lit("assistant"))
+    mc = CheckpointManifest(tmp_path / "mc")
+    out = run_resumable(clean, suite, mc, baseline=drifted)
+    assert all(mc.read(b)["verdict"]["bucket_pass"] for b in mc.completed())
+    assert out["drift"]["drift_failed"] and out["passed"] is False
+
+
 def test_salted_agg_spreads_identical_duplicate_flood(spark):
     """A hot key whose rows are BYTE-IDENTICAL must still spread over the
     salt buckets (a value-derived salt would collapse them onto one
@@ -947,6 +1012,14 @@ def test_conv_fingerprints_order_exact(spark):
     )
     f2 = {r.conv_id: r.fingerprint for r in conv_fingerprints(df2).collect()}
     assert f2["x"] != f2["y"]
+    # a NULL idx renders as '__null__': its turn's text still counts
+    df3 = spark.createDataFrame(
+        [("f", 0, "hi"), ("f", None, "x"), ("g", 0, "hi"), ("g", None, "y")],
+        "conv_id string, turn_idx int, text string",
+    )
+    f3 = {r.conv_id: r for r in conv_fingerprints(df3).collect()}
+    assert f3["f"].fingerprint != f3["g"].fingerprint
+    assert f3["f"].n_turns == 2
 
 
 def test_duplicate_convs(spark):
@@ -1136,6 +1209,12 @@ def test_quantile_shift(spark):
         with_null, with_null, "v", qs=(0.5,)
     ).collect()}
     assert row[0.5].v_current == pytest.approx(2.0)
+    # the column is resolved by name, never spliced into SQL text
+    spaced = cur.withColumnRenamed("v", "text len")
+    assert {
+        r.q: r.v_current
+        for r in quantile_shift(spaced, spaced, "text len").collect()
+    } == {r.q: r.v_current for r in same}
     with pytest.raises(ValueError):
         quantile_shift(cur, cur, "v", qs=())
 
