@@ -4048,8 +4048,8 @@ def q_boundary_census(spark, sf_dir):
 SQL_BOUNDARY_CENSUS = """
 WITH fl AS (
   SELECT o_custkey,
-         coalesce(arg_min(o_orderstatus, o_orderkey), '__null__') AS f,
-         coalesce(arg_max(o_orderstatus, o_orderkey), '__null__') AS l
+         arg_min(coalesce(o_orderstatus, '__null__'), o_orderkey) AS f,
+         arg_max(coalesce(o_orderstatus, '__null__'), o_orderkey) AS l
   FROM orders GROUP BY 1
 )
 SELECT f AS "first", l AS "last", CAST(count(*) AS BIGINT) AS n_convs
@@ -4081,8 +4081,8 @@ def q_boundary_violations(spark, sf_dir):
 SQL_BOUNDARY_VIOLATIONS = """
 WITH fl AS (
   SELECT o_custkey,
-         coalesce(arg_min(o_orderstatus, o_orderkey), '__null__') AS f,
-         coalesce(arg_max(o_orderstatus, o_orderkey), '__null__') AS l
+         arg_min(coalesce(o_orderstatus, '__null__'), o_orderkey) AS f,
+         arg_max(coalesce(o_orderstatus, '__null__'), o_orderkey) AS l
   FROM orders GROUP BY 1
 )
 SELECT o_custkey, 'bad_first' AS code, f AS value

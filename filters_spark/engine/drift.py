@@ -200,10 +200,15 @@ def _freq_dict(freq: DataFrame, alias: str = "k") -> dict[str, float]:
     return {r[alias]: r["p"] for r in freq.collect()}
 
 
+# Both dict divergences sum in sorted key order: a float sum depends on
+# its order, and a set's (or a dict's insertion) order would make the
+# result vary with PYTHONHASHSEED or with the order rows were collected.
+
+
 def kl_from_dicts(p: dict, q: dict, eps: float = 1e-9) -> float:
     kl = 0.0
-    for k, pv in p.items():
-        qv = q.get(k, eps)
+    for k in sorted(p):
+        pv, qv = p[k], q.get(k, eps)
         if pv > 0:
             kl += pv * math.log(pv / max(qv, eps))
     return kl
@@ -211,7 +216,7 @@ def kl_from_dicts(p: dict, q: dict, eps: float = 1e-9) -> float:
 
 def psi_from_dicts(p: dict, q: dict, eps: float = 1e-6) -> float:
     out = 0.0
-    for k in set(p) | set(q):
+    for k in sorted(set(p) | set(q)):
         pv = max(p.get(k, 0.0), eps)
         qv = max(q.get(k, 0.0), eps)
         out += (pv - qv) * math.log(pv / qv)
@@ -302,30 +307,70 @@ def len_entry(name: str, bucket_col: Column) -> Column:
     )
 
 
+def entry_counts(df: DataFrame, entries: list, by: tuple = ()) -> DataFrame:
+    """The uncapped profile census ``(by…, dim, k, n)``: explode the
+    per-row entry structs, ONE hash aggregation keyed by ``(by…, dim,
+    k)``.  Counts merge by addition, so per-bucket censuses summed in
+    Python equal the census of their union."""
+    return (
+        df.select(*by, F.explode(F.array(*entries)).alias("e"))
+        .groupBy(*by, F.col("e.dim").alias("dim"), F.col("e.k").alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _normalise(rows) -> dict[str, dict[str, float]]:
+    """``{dim: {key: n / total_of_dim}}`` from ``(dim, k, n)`` rows."""
+    totals: dict[str, int] = {}
+    for dim, _, n in rows:
+        totals[dim] = totals.get(dim, 0) + n
+    out: dict[str, dict[str, float]] = {}
+    for dim, k, n in rows:
+        out.setdefault(dim, {})[k] = n / totals[dim]
+    return out
+
+
+def profile_from_counts(
+    counts: DataFrame, max_categories: int | None = DEFAULT_MAX_CATEGORIES
+) -> dict:
+    """Normalised ``{dim: {key: probability}}`` from a ``(dim, k, n)``
+    census.  The collect is bounded to ``max_categories`` keys *per
+    dimension* (tail → ``'__other__'``, see :func:`frequencies`)."""
+    return _normalise(
+        _cap_categories(
+            counts, "k", max_categories, partition_cols=("dim",)
+        ).collect()
+    )
+
+
+def profile_from_census(
+    spark,
+    census: dict[str, dict[str, int]],
+    max_categories: int | None = DEFAULT_MAX_CATEGORIES,
+) -> dict:
+    """:func:`profile_from_counts` over an already collected census,
+    ``{dim: {key: n}}`` (e.g. summed per-bucket checkpoint censuses).
+    The fold changes only a dimension with more than ``max_categories``
+    keys, so only such a census goes through Spark."""
+    rows = [(d, k, n) for d, kn in census.items() for k, n in kn.items()]
+    if max_categories is not None and any(
+        len(kn) > max_categories for kn in census.values()
+    ):
+        return profile_from_counts(
+            spark.createDataFrame(rows, "dim string, k string, n long"),
+            max_categories,
+        )
+    return _normalise(rows)
+
+
 def profile_from_entries(
     df: DataFrame,
     entries: list,
     max_categories: int | None = DEFAULT_MAX_CATEGORIES,
 ) -> dict:
-    """Shared core of :func:`dist_profile`: explode the per-row entry
-    structs, ONE hash aggregation, normalise on the driver.  The collect
-    is bounded to ``max_categories`` keys *per dimension* (tail →
-    ``'__other__'``, see :func:`frequencies`)."""
-    agg = (
-        df.select(F.explode(F.array(*entries)).alias("e"))
-        .groupBy(F.col("e.dim").alias("dim"), F.col("e.k").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    counts = _cap_categories(
-        agg, "k", max_categories, partition_cols=("dim",)
-    ).collect()
-    totals: dict[str, int] = {}
-    for r in counts:
-        totals[r["dim"]] = totals.get(r["dim"], 0) + r["n"]
-    out: dict[str, dict[str, float]] = {}
-    for r in counts:
-        out.setdefault(r["dim"], {})[r["k"]] = r["n"] / totals[r["dim"]]
-    return out
+    """Shared core of :func:`dist_profile`: :func:`entry_counts`, then
+    :func:`profile_from_counts`."""
+    return profile_from_counts(entry_counts(df, entries), max_categories)
 
 
 def length_histogram(

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from filters_spark.engine.drift import entry_counts
+
 
 def _numeric(dtype) -> bool:
     return isinstance(
@@ -31,6 +33,30 @@ def _numeric(dtype) -> bool:
             T.DoubleType,
             T.DecimalType,
         ),
+    )
+
+
+def hist_bin(
+    df: DataFrame, column: str, bins: int, lo: float, hi: float
+) -> Column:
+    """Fixed-grid bin index of ``column`` in ``df``: ``bins`` equal-width
+    bins over ``[lo, hi)``, underflow clamped into bin 0 and overflow
+    into the last bin; string columns bin by ``length()``, numeric
+    columns by value; null values get a null bin (they fall in no bin).
+    """
+    dt = df.schema[column].dataType
+    v = (
+        F.length(F.col(column)).cast("double")
+        if isinstance(dt, T.StringType)
+        else F.col(column).cast("double")
+    )
+    width = (float(hi) - float(lo)) / bins
+    raw = F.floor((v - F.lit(float(lo))) / F.lit(width))
+    # least/greatest SKIP nulls in Spark (unlike standard SQL), so an
+    # unguarded clamp would drop null values into bin 0 — gate the whole
+    # expression on v being present
+    return F.when(
+        v.isNotNull(), F.least(F.lit(bins - 1), F.greatest(F.lit(0), raw))
     )
 
 
@@ -67,6 +93,33 @@ def bucket_distinct_sketches(
     }
 
 
+#: ``dim`` prefix of histogram-bin entries in an ``entry_counts`` census
+HIST_DIM = "hist:"
+
+
+def hist_entry(name: str, bin_col: Column) -> Column:
+    """One ``(dim, k)`` count entry for the histogram bin of ``name``."""
+    return F.struct(
+        F.lit(HIST_DIM + name).alias("dim"), bin_col.cast("string").alias("k")
+    )
+
+
+def hist_vectors(rows, bins: int) -> dict[int, dict[str, list[int]]]:
+    """``{bucket: {column: [count, ...]}}`` from the ``(__b, dim, k, n)``
+    rows of an :func:`~filters_spark.engine.drift.entry_counts` census:
+    the :func:`hist_entry` rows, a null bin (a null value) counted in no
+    bin.  Other dimensions are ignored."""
+    out: dict[int, dict[str, list[int]]] = {}
+    for r in rows:
+        if r["dim"].startswith(HIST_DIM):
+            vec = out.setdefault(int(r["__b"]), {}).setdefault(
+                r["dim"][len(HIST_DIM) :], [0] * bins
+            )
+            if r["k"] is not None:
+                vec[int(r["k"])] += r["n"]
+    return out
+
+
 def bucket_length_histograms(
     df: DataFrame,
     bucket_col: Column,
@@ -76,54 +129,25 @@ def bucket_length_histograms(
     hi: float = 2048.0,
 ) -> dict[int, dict[str, list[int]]]:
     """Per-bucket FIXED-GRID histograms — ``{bucket: {column:
-    [count, ...]}}`` with ``bins`` equal-width bins over ``[lo, hi)``
-    (underflow clamps into bin 0, overflow into the last bin; string
-    columns are histogrammed by ``length()``, numeric columns by
-    value).
+    [count, ...]}}`` over the :func:`hist_bin` grid (``bins``
+    equal-width bins over ``[lo, hi)``; string columns by length).
 
     This is the EXACTLY-mergeable distribution state for the
     checkpoint manifest: merging two fixed-grid histograms is vector
     addition, so a resumed job's table-wide text-length distribution
     (the PSI drift input) is bit-identical to a single-shot run —
     unlike quantile summaries, whose merge-of-merges degrades.  One
-    hash aggregation keyed by bucket; state is ``bins`` longs per
-    column (a few hundred bytes per manifest entry).  Nulls fall in no
-    bin.
+    hash aggregation keyed by ``(bucket, column, bin)``; state is
+    ``bins`` longs per column (a few hundred bytes per manifest entry).
+    Nulls fall in no bin.
     """
-    width = (float(hi) - float(lo)) / bins
-
-    def bin_of(c: str) -> Column:
-        dt = df.schema[c].dataType
-        v = (
-            F.length(F.col(c)).cast("double")
-            if isinstance(dt, T.StringType)
-            else F.col(c).cast("double")
-        )
-        raw = F.floor((v - F.lit(float(lo))) / F.lit(width))
-        # least/greatest SKIP nulls in Spark (unlike standard SQL), so
-        # an unguarded clamp would drop null values into bin 0 — gate
-        # the whole expression on v being present
-        return F.when(
-            v.isNotNull(),
-            F.least(F.lit(bins - 1), F.greatest(F.lit(0), raw)),
-        )
-
-    aggs = [
-        F.array(
-            *[
-                F.coalesce(
-                    F.sum((bin_of(c) == i).cast("long")), F.lit(0)
-                )
-                for i in range(bins)
-            ]
-        ).alias(c)
-        for c in columns
-    ]
-    rows = df.groupBy(bucket_col.alias("__b")).agg(*aggs).collect()
-    return {
-        int(r["__b"]): {c: [int(x) for x in r[c]] for c in columns}
-        for r in rows
-    }
+    entries = [hist_entry(c, hist_bin(df, c, bins, lo, hi)) for c in columns]
+    return hist_vectors(
+        entry_counts(
+            df.withColumn("__b", bucket_col), entries, by=("__b",)
+        ).collect(),
+        bins,
+    )
 
 
 def merge_length_histograms(

@@ -37,9 +37,12 @@ from pyspark.sql import functions as F
 
 from filters_spark.core.compiler import validate
 from filters_spark.engine.drift import (
+    cat_entry,
     dist_profile,
     kl_from_dicts,
+    len_entry,
     length_bucket,
+    profile_from_entries,
     psi_from_dicts,
 )
 from filters_spark.engine.stats import column_stats
@@ -64,7 +67,7 @@ def bucket_of(conv_col, n_buckets: int):
 class SuiteResult:
     rows: DataFrame  # cleaned rows + _violations + _is_valid + _bucket (lazy)
     verdicts: DataFrame  # per-bucket pass/fail + counters
-    stats: DataFrame  # long-format column stats
+    stats: DataFrame | None  # long-format column stats
     violations: DataFrame  # exploded violation rows (key, code, message)
     metrics: dict = field(default_factory=dict)  # drift + thresholds
     #: narrow persisted projection feeding verdicts/violations (see
@@ -236,17 +239,11 @@ class ValidationSuite:
             bucket_pass.alias("bucket_pass"),
         )
 
-    def _cur_profile_from_rows(self, rows: DataFrame) -> dict:
-        """Current-side drift profile from the raw copies riding the
-        (persisted) row-pass output — no rescan of the input.  The
+    def _drift_entries(self, rows: DataFrame) -> list:
+        """Current-side drift profile entries over the raw copies riding
+        the (persisted) row-pass output — no rescan of the input.  The
         length dimension uses the pre-computed bucket int, so the text
         itself never enters the cache."""
-        from filters_spark.engine.drift import (
-            cat_entry,
-            len_entry,
-            profile_from_entries,
-        )
-
         entries = [
             cat_entry(c, F.col(RAW_PREFIX + c))
             for c in self.drift_cols
@@ -256,7 +253,7 @@ class ValidationSuite:
             entries.append(
                 len_entry(self.length_col, F.col(RAW_PREFIX + "lenbucket"))
             )
-        return profile_from_entries(rows, entries)
+        return entries
 
     def drift(
         self,
@@ -266,10 +263,15 @@ class ValidationSuite:
     ) -> dict:
         """All drift dimensions in ONE scan per side (dist_profile);
         KL/PSI math runs on the collected frequency dicts (tiny).
-        ``cur_profile`` (from :meth:`_cur_profile_from_rows`) skips the
-        current-side scan; the baseline side is scanned here — at real
-        scale the baseline profile is computed once and stored."""
-        cur = cur_profile or dist_profile(df, self.drift_cols, self.length_col)
+        ``cur_profile`` (from the persisted row pass, or the
+        checkpoint's summed per-bucket censuses) skips the current-side
+        scan; the baseline side is scanned here — at real scale the
+        baseline profile is computed once and stored."""
+        cur = (
+            cur_profile
+            if cur_profile is not None
+            else dist_profile(df, self.drift_cols, self.length_col)
+        )
         base = dist_profile(baseline, self.drift_cols, self.length_col)
         metrics: dict = {}
         failed = False
@@ -317,6 +319,26 @@ class ValidationSuite:
         second full materialisation.  Call ``result.unpersist()`` when
         done.
         """
+        result, agg_src = self._row_pass(df, persist)
+        result.stats = column_stats(df, self.stat_columns)
+        if baseline is not None:
+            result.metrics = self.drift(
+                df,
+                baseline,
+                cur_profile=profile_from_entries(
+                    agg_src, self._drift_entries(agg_src)
+                ),
+            )
+        return result
+
+    def _row_pass(
+        self, df: DataFrame, persist: bool = True
+    ) -> tuple[SuiteResult, DataFrame]:
+        """:meth:`run` without column stats and drift — the row pass,
+        verdicts and violations (``stats`` is ``None``) — plus the frame
+        those aggregate: the persisted narrow projection, or the lazy
+        rows with their raw copies.  ``run_resumable`` calls it per
+        bucket group, which needs neither stats nor drift."""
         from pyspark import StorageLevel
 
         missing = [c for c in self.drift_cols if c not in df.columns]
@@ -344,7 +366,6 @@ class ValidationSuite:
             ).persist(StorageLevel.MEMORY_AND_DISK)
         agg_src = keyed if keyed is not None else rows
         verdicts = self.verdicts(df, agg_src)
-        stats = column_stats(df, self.stat_columns)
         violations = (
             agg_src.select(
                 self.conv,
@@ -360,20 +381,15 @@ class ValidationSuite:
                 F.col("v.message").alias("message"),
             )
         )
-        metrics = (
-            self.drift(
-                df, baseline, cur_profile=self._cur_profile_from_rows(agg_src)
-            )
-            if baseline is not None
-            else {}
-        )
-        return SuiteResult(
-            rows=rows.drop(*raw_cols, *rule_cols),
-            verdicts=verdicts,
-            stats=stats,
-            violations=violations,
-            metrics=metrics,
-            keyed=keyed,
+        return (
+            SuiteResult(
+                rows=rows.drop(*raw_cols, *rule_cols),
+                verdicts=verdicts,
+                stats=None,
+                violations=violations,
+                keyed=keyed,
+            ),
+            agg_src,
         )
 
 

@@ -212,6 +212,31 @@ def test_dist_profile_cap_per_dimension(spark):
     assert prof["cat:tool"] == {"search": 1.0}
 
 
+def test_profile_from_census_matches_entries(spark):
+    """A census summed in Python gives the same profile as the
+    one-pass entry aggregation, folded past the cap or not."""
+    from filters_spark.engine.drift import (
+        cat_entry,
+        entry_counts,
+        profile_from_census,
+        profile_from_entries,
+    )
+
+    wide = spark.range(2_000).select(
+        (F.col("id") % 120).cast("string").alias("role"),
+        F.when(F.col("id") % 7 == 0, None).otherwise("search").alias("tool"),
+    )
+    entries = [cat_entry(c, F.col(c)) for c in ("role", "tool")]
+    census: dict = {}
+    for r in entry_counts(wide, entries).collect():
+        census.setdefault(r["dim"], {})[r["k"]] = r["n"]
+    for cap in (None, 50, 10_000):
+        assert profile_from_census(spark, census, cap) == profile_from_entries(
+            wide, entries, max_categories=cap
+        )
+    assert len(profile_from_census(spark, census, 50)["cat:role"]) == 51
+
+
 def test_suite_raises_on_missing_drift_column(tdf, baseline):
     """A typo'd drift/length column must fail loudly at run() instead of
     silently producing KL=0 over an empty profile (ADVICE r2)."""
@@ -463,6 +488,132 @@ def test_checkpoint_drift_once_gates_passed(tmp_path, spark, tdf, baseline):
     out = run_resumable(clean, suite, mc, baseline=drifted)
     assert all(mc.read(b)["verdict"]["bucket_pass"] for b in mc.completed())
     assert out["drift"]["drift_failed"] and out["passed"] is False
+
+
+def test_checkpoint_state_from_one_read(tmp_path, spark, tdf, baseline):
+    """A resumed run's per-bucket sketches and histograms come from the
+    chain pass, yet equal the state computed directly on the raw input;
+    every entry carries the bucket's drift census (state version 3)."""
+    import base64
+
+    from filters_spark.engine.checkpoint import STATE_VERSION
+    from filters_spark.engine.stats import (
+        bucket_distinct_sketches,
+        bucket_length_histograms,
+        merge_distinct_sketches,
+    )
+
+    assert STATE_VERSION == 3
+    suite = ValidationSuite(RULES, n_buckets=8)
+    manifest = CheckpointManifest(tmp_path / "ms")
+    kw = dict(
+        sketch_cols=["conv_id", "text"], hist_cols=["text", "turn_idx"],
+        hist_bins=16, hist_range=(0.0, 512.0),
+    )
+    partial = run_resumable(
+        tdf, suite, manifest, buckets_per_job=2, fail_after_buckets=3, **kw
+    )
+    assert partial["aborted"]
+    final = run_resumable(tdf, suite, manifest, buckets_per_job=4, **kw)
+    assert final["completed"] == 8
+
+    bucket = suite.bucket_fn(F.col("conv_id"), 8)
+    sketches = bucket_distinct_sketches(tdf, bucket, ["conv_id", "text"])
+    hists = bucket_length_histograms(
+        tdf, bucket, ["text", "turn_idx"], bins=16, lo=0.0, hi=512.0
+    )
+    assert set(sketches) == set(hists) == set(range(8))
+    for b in range(8):
+        entry = manifest.read(b)
+        assert entry["state_version"] == STATE_VERSION
+        assert entry["histograms"] == hists[b]
+        assert merge_distinct_sketches(
+            spark, [entry["sketches"]]
+        ) == merge_distinct_sketches(spark, [sketches[b]])
+        assert set(entry["sketches"]) == {"conv_id", "text"}
+        assert all(base64.b64decode(v) for v in entry["sketches"].values())
+        census = entry["census"]
+        assert set(census) == {"cat:role", "cat:tool", "len:text"}
+        assert all(
+            sum(census[d].values()) == entry["verdict"]["n_rows"]
+            for d in census
+        )
+    # the summed censuses are the whole table's uncapped profile counts
+    roles = {
+        r["role"] or "__null__": r["count"]
+        for r in tdf.groupBy("role").count().collect()
+    }
+    summed: dict = {}
+    for b in range(8):
+        for k, n in manifest.read(b)["census"]["cat:role"].items():
+            summed[k] = summed.get(k, 0) + n
+    assert summed == roles
+
+
+def test_checkpoint_reads_each_input_row_once(tmp_path, spark, tdf, baseline):
+    """A full resumable run — with a baseline, sketches and histograms —
+    reads each input row once: a non-deterministic counting filter on
+    the input sees every row exactly one time (the bucket predicate
+    cannot move below it, so one group covers all buckets)."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    counted = tdf.where(
+        F.udf(count_row, "boolean").asNondeterministic()(F.col("conv_id"))
+    )
+    suite = ValidationSuite(RULES, n_buckets=8)
+    out = run_resumable(
+        counted, suite, CheckpointManifest(tmp_path / "m1"),
+        baseline=baseline, buckets_per_job=8, sketch_cols=["conv_id"],
+        hist_cols=["text"],
+    )
+    assert out["completed"] == 8 and out["drift"]
+    assert seen.value == tdf.count()
+
+
+def test_dict_divergences_sum_in_sorted_key_order():
+    """KL and PSI over collected dicts do not depend on the order the
+    keys were collected in, nor on the interpreter's string hash seed:
+    both sum in sorted key order."""
+    import json
+    import os
+    import random
+    import subprocess
+    import sys
+
+    from filters_spark.engine.drift import kl_from_dicts, psi_from_dicts
+
+    rng = random.Random(3)
+    keys = [f"k{i}" for i in range(40)]
+    p = {k: rng.random() ** 3 for k in keys}
+    q = {k: rng.random() ** 3 for k in keys[5:]}
+    rev = dict(reversed(list(p.items())))
+    assert kl_from_dicts(p, q) == kl_from_dicts(rev, q)
+    assert psi_from_dicts(p, q) == psi_from_dicts(rev, q)
+
+    code = (
+        "import json, sys\n"
+        "from filters_spark.engine.drift import psi_from_dicts\n"
+        "p, q = json.load(sys.stdin)\n"
+        "print(repr(psi_from_dicts(p, q)))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    got = {
+        subprocess.run(
+            [sys.executable, "-c", code],
+            input=json.dumps([p, q]),
+            capture_output=True,
+            text=True,
+            check=True,
+            cwd=root,
+            env={**os.environ, "PYTHONHASHSEED": str(seed)},
+        ).stdout.strip()
+        for seed in range(6)
+    }
+    assert got == {repr(psi_from_dicts(p, q))}
 
 
 def test_salted_agg_spreads_identical_duplicate_flood(spark):

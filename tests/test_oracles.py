@@ -1,10 +1,12 @@
 """Registry queries against their DuckDB oracles on the smallest scale
 factor: the per-query comparison of ``scripts/check_oracles.py``, run
 for the drift estimators, the duplicate-conversation check and the
-suite verdicts."""
+suite verdicts — plus the boundary queries on a hand-made table."""
 
 from __future__ import annotations
 
+import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as e
@@ -36,5 +38,27 @@ def con():
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_oracle(spark, con, name):
     n, problems = compare(spark, con, e.DEFAULT_SF_DIR, name)
+    assert not problems, problems
+    assert n > 0
+
+
+@pytest.mark.parametrize("name", ("boundary_census", "boundary_violations"))
+def test_boundary_oracle_null_first_status(spark, tmp_path, name):
+    """A NULL status at a conversation's first (or last) order is that
+    boundary's value, ``'__null__'``, on both engines: the oracle
+    coalesces before ``arg_min``/``arg_max``, which skip NULL values."""
+    pd.DataFrame(
+        {
+            "o_custkey": [1, 1, 2, 2, 3, 3],
+            "o_orderkey": [1, 2, 3, 4, 5, 6],
+            "o_orderstatus": [None, "F", "O", None, "O", "F"],
+        }
+    ).to_parquet(tmp_path / "orders.parquet")
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW orders AS SELECT * FROM '{tmp_path}/orders.parquet'"
+    )
+    n, problems = compare(spark, con, str(tmp_path), name)
+    con.close()
     assert not problems, problems
     assert n > 0
