@@ -2795,10 +2795,13 @@ def q_asof_join(spark, sf_dir):
     )
 
 
+# arg_max over a one-field struct: DuckDB's arg_max skips rows whose
+# value is NULL, Spark's max_by returns the max-key row's value even when
+# it is NULL; the struct itself is never NULL, so both engines agree.
 SQL_ASOF_JOIN = """
 WITH errors AS (
   SELECT user_id, ts,
-         arg_max(value, event_id) AS err_value
+         arg_max(struct_pack(v := value), event_id).v AS err_value
   FROM events WHERE event_type = 'error'
   GROUP BY user_id, ts
 ), clicks AS (
@@ -3080,11 +3083,12 @@ def q_asof_join_skew(spark, sf_dir):
     )
 
 
+# same NULL-keeping arg_max as SQL_ASOF_JOIN
 SQL_ASOF_JOIN_SKEW = f"""
 WITH ev AS ({_SQL_HOT_EVENTS}),
 errors AS (
   SELECT user_id, ts,
-         arg_max(value, event_id) AS err_value
+         arg_max(struct_pack(v := value), event_id).v AS err_value
   FROM ev WHERE event_type = 'error'
   GROUP BY user_id, ts
 ), clicks AS (

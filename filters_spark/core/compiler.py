@@ -1,31 +1,52 @@
 """Chain compiler: spec tree → Spark columns.
 
-Compiles a :class:`~filters_spark.core.spec.Chain` into a single projection
-that threads ``(value, error-mask, violations)`` through every step:
+Compiles a :class:`~filters_spark.core.spec.Chain` into a cleaned value, an
+error mask and one *fired* mask, folding the steps in order:
 
-- ``value_i   = (err_{i-1} OR null-pass) ? NULL : step_i.value``
-- ``err_i     = err_{i-1} OR step_i.invalid``   (first-error short-circuit,
+- ``value_i = (err_{i-1} OR null-pass) ? NULL : step_i.value``
+- ``err_i   = err_{i-1} OR step_i.invalid``   (first-error short-circuit,
   mirroring ``FilterChain._apply`` at ``src/filters/base.py:462-473``)
-- ``viols_i   = err_{i-1} ? viols_{i-1} : fired(step_i)``  (only the first
-  failing filter reports, like the reference's break-on-error)
+- ``fired   = OR_i (NOT err_{i-1} AND fires_i)``, where ``fires_i`` is the
+  OR of step ``i``'s null-guarded violation conditions, or its
+  ``invalid`` for a step whose conditions are its ``invalid`` or that
+  emits a ready ``violations_array`` (then the term is
+  ``err_i AND NOT err_{i-1}``, read off the bound masks)
+
+The violations are built once per chain, and only where the fired mask
+is set: ``fired ? concat(part_1, …, part_n) : []``, where ``part_i`` is
+step ``i``'s violations gated on ``NOT err_{i-1}`` (only the first
+failing filter reports, like the reference's break-on-error).  Valid
+rows — almost all of them in practice — evaluate the masks and the value
+only, never an ``array<struct>``; :func:`validate` derives ``_is_valid``
+from the fired masks alone.
 
 The mask is a *data dependency*, so Catalyst cannot reorder steps in a way
 that changes semantics, while still fusing the whole chain into one
 whole-stage-codegen projection (plus at most a few ArrowEvalPython stages
 for pandas kernels).
 
-Two compile modes:
+There is one fold (:func:`_fold`); its two entry points differ in how a
+step's ``(value, err)`` is bound for the next step:
 
-- :func:`attach_chain` — DataFrame-level; materialises intermediate steps
-  as temp columns (kept linear, Catalyst collapses the projections) and
-  supports Arrow pandas kernels via ``Step.pre``.
-- :func:`compile_chain_expr` — pure-expression; usable inside higher-order
-  function lambdas (``F.transform`` for ``FilterRepeater``); pandas
-  kernels are rejected with :class:`CompileError`.
+- :func:`attach_chain` — DataFrame-level; binds them to temp columns (kept
+  linear, Catalyst collapses the projections), materialises Arrow pandas
+  kernels (``Step.pre``) before the step that reads them, and guards the
+  violations with the fired mask.
+- :func:`compile_chain_expr` — pure-expression; binds them inline, so the
+  result is usable inside higher-order function lambdas (``F.transform``
+  for ``FilterRepeater``), inside structural combinators and on the
+  explode path.  Its violations are the unguarded
+  ``concat(part_1, …, part_n)`` (same value): without temp columns the
+  guard would repeat every violation condition in the expression tree.
+  Its parts keep ``filter(array(when…))`` (see :func:`_step_violations`).
+  Pandas kernels are collected in ``ChainResult.pre`` with
+  ``allow_pre=True`` and rejected with :class:`CompileError` otherwise.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -49,24 +70,58 @@ def _empty_viols() -> Column:
     return F.array().cast(_VIOL_ARRAY)
 
 
-def _fired_violations(step, err: Column, value: Column, key) -> Column:
-    """Array of violation structs fired by this step (empty if none)."""
+def _any(masks: list[Column]) -> Column:
+    return functools.reduce(operator.or_, masks) if masks else F.lit(False)
+
+
+def _step_violations(step, err: Column, value: Column, key, inline):
+    """``(fires, part)`` for one step, or ``None`` if it never reports;
+    ``inline`` when the chain is compiled without temp columns.
+
+    ``fires`` is True where the step reports a violation, ignoring the
+    chain's earlier errors — ``None`` when that is exactly the step's
+    ``invalid``; ``part`` is the array of violation structs it reports,
+    already empty where ``err`` (an earlier step failed) is set.
+    """
     if step.violations_array is not None:
         arr = step.violations_array
         if not step.handles_null:
             arr = F.when(value.isNull(), _empty_viols()).otherwise(arr)
-        return F.when(err, _empty_viols()).otherwise(
+        part = F.when(err, _empty_viols()).otherwise(
             F.coalesce(arr, _empty_viols())
         )
-    guards = []
+        # the fold reads such a step's invalid off this array
+        return None, part
+    conds = []
     for v in step.violations:
         cond = F.coalesce(v.cond, F.lit(False))
         if not step.handles_null:
             cond = value.isNotNull() & cond
-        guards.append(F.when(~err & cond, make_violation_col(key, v)))
-    if not guards:
-        return _empty_viols()
-    return F.filter(F.array(*guards), lambda x: x.isNotNull())
+        conds.append(cond)
+    if not conds:
+        return None
+    same = all(v.cond is step.invalid for v in step.violations)
+    fires = None if same else _any(conds)
+    # Bound chains use a concat of one-element arrays: ArrayFilter is a
+    # CodegenFallback and keeps its whole projection out of whole-stage
+    # codegen.  Inline chains keep filter(array(when…)): they sit inside
+    # structural steps whose value expressions can be huge (Int inlines
+    # to megabytes), which compile faster outside whole-stage codegen
+    # (a FilterMapper with an Int field: 107 s to collect with the
+    # concat, 65 s with the filter).
+    if inline:
+        guards = [
+            F.when(~err & c, make_violation_col(key, v))
+            for c, v in zip(conds, step.violations)
+        ]
+        return fires, F.filter(F.array(*guards), lambda x: x.isNotNull())
+    singles = [
+        F.when(~err & c, F.array(make_violation_col(key, v))).otherwise(
+            _empty_viols()
+        )
+        for c, v in zip(conds, step.violations)
+    ]
+    return fires, singles[0] if len(singles) == 1 else F.concat(*singles)
 
 
 def make_violation_col(key, v) -> Column:
@@ -91,6 +146,9 @@ class ChainResult:
     #: Arrow-kernel columns that must be materialised (in order) before
     #: ``value``/``violations`` — populated only with ``allow_pre=True``.
     pre: dict | None = None
+    #: True exactly where ``violations`` is non-empty, computed without
+    #: building them.
+    fired: Column | None = None
 
 
 def _step_invalid(step, value: Column) -> Column:
@@ -100,6 +158,84 @@ def _step_invalid(step, value: Column) -> Column:
     if not step.handles_null:
         inv = value.isNotNull() & inv
     return inv
+
+
+def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None) -> ChainResult:
+    """The chain step-fold shared by both compile modes.
+
+    ``on_pre(spec, step)`` receives every step with Arrow kernels before
+    the step's columns are used.  ``bind(**cols)`` returns, in order, the
+    columns later steps read in place of ``cols`` (temp-column
+    references), and the violations are then guarded by the fired mask.
+    Without it each step reads the previous step's expressions inline and
+    the violations stay unguarded (each part is already empty where it
+    must be): the guard would repeat every violation condition in the
+    tree, and nested chains' plans grow with each repeat (a
+    FilterRepeater of ``Required | Int | Max`` already analyses to a
+    66 MB plan string).
+    """
+
+    def bound(**cols):
+        return list(cols.values()) if bind is None else bind(**cols)
+
+    err = F.lit(False)
+    parts: list[Column] = []
+    fresh: list[Column] = []  # per step: it reports, no earlier step failed
+    partial_possible = False  # True once a keep_value_on_error step ran
+    for spec in as_chain(chain).specs:
+        step = spec.compile(value, dtype, ctx, key if isinstance(key, str) else "")
+        if step.pre:
+            on_pre(spec, step)
+        reported = _step_violations(step, err, value, key, bind is None)
+        if step.violations_array is None:
+            inv = _step_invalid(step, value)
+        else:
+            # a structural step's invalid is its array's non-emptiness:
+            # build the array once per row and read the mask off it (every
+            # use of inv below is ORed with err or taken where err is unset)
+            (part,) = bound(viol=reported[1])
+            reported, inv = (None, part), F.size(part) > 0
+        skip_null = F.lit(False) if step.handles_null else value.isNull()
+        # Chain break carries the FAILING step's output forward (the
+        # reference's FilterChain._apply, base.py:462-473, breaks and
+        # returns the last-applied filter's value — a structural
+        # combinator's PARTIAL output, not None).  Scalar steps replace
+        # with NULL on error, so the carry is only observable once a
+        # keep_value_on_error (structural) step has run; gating on that
+        # keeps scalar-only chains on the cheap formula (no extra
+        # reference to the previous value expression — measured ~40%
+        # chain-throughput cost when applied unconditionally).  When the
+        # step changes the column type the frozen value is
+        # unrepresentable and degrades to NULL.
+        if partial_possible and step.dtype == dtype:
+            own_nulled = skip_null if step.keep_value_on_error else (
+                skip_null | inv
+            )
+            own = F.when(own_nulled, null_of(step.dtype)).otherwise(step.value)
+            new_value = F.when(err, value).otherwise(own)
+        else:
+            nulled = err | skip_null if step.keep_value_on_error else (
+                err | skip_null | inv
+            )
+            new_value = F.when(nulled, null_of(step.dtype)).otherwise(step.value)
+        new_value, new_err = bound(val=new_value, err=err | inv)
+        if reported is not None:
+            fires, part = reported
+            parts.append(part)
+            # a step that reports exactly where it is invalid reports
+            # where the (bound) error mask turns on
+            fresh.append(new_err & ~err if fires is None else ~err & fires)
+        value, err, dtype = new_value, new_err, step.dtype
+        partial_possible = partial_possible or step.keep_value_on_error
+    fired = _any(fresh)
+    violations = (
+        _empty_viols() if not parts
+        else parts[0] if len(parts) == 1
+        else F.concat(*parts)
+    )
+    if bind is not None and parts:
+        violations = F.when(fired, violations).otherwise(_empty_viols())
+    return ChainResult(value=value, dtype=dtype, violations=violations, fired=fired)
 
 
 def compile_chain_expr(
@@ -118,50 +254,53 @@ def compile_chain_expr(
     materialise in order.  With ``allow_pre=False`` (inside higher-order
     function lambdas, where UDFs cannot run) kernels are a compile error.
     """
-    err = F.lit(False)
-    viols = _empty_viols()
     pre: dict = {}
-    partial_possible = False  # True once a keep_value_on_error step ran
-    for spec in as_chain(chain).specs:
-        step = spec.compile(value, dtype, ctx, key if isinstance(key, str) else "")
-        if step.pre:
-            if not allow_pre:
-                raise CompileError(
-                    f"{type(spec).__name__} needs an Arrow pandas kernel and "
-                    "cannot be used in pure-expression position (e.g. inside "
-                    "FilterRepeater over arrays); use the explode path instead"
-                )
-            pre.update(step.pre)
-        inv = _step_invalid(step, value)
-        fired = _fired_violations(step, err, value, key)
-        viols = F.when(err, viols).otherwise(F.concat(viols, fired))
-        skip_null = F.lit(False) if step.handles_null else value.isNull()
-        # Chain break carries the FAILING step's output forward (the
-        # reference's FilterChain._apply, base.py:462-473, breaks and
-        # returns the last-applied filter's value — a structural
-        # combinator's PARTIAL output, not None).  Scalar steps replace
-        # with NULL on error, so the carry is only observable once a
-        # keep_value_on_error (structural) step has run; gating on that
-        # keeps scalar-only chains on the cheap formula (no extra
-        # reference to the previous value expression — measured ~40%
-        # chain-throughput cost when applied unconditionally).  When the
-        # step changes the column type the frozen value is
-        # unrepresentable and degrades to NULL.
-        if partial_possible and step.dtype == dtype:
-            own_nulled = skip_null if step.keep_value_on_error else (
-                skip_null | inv
+
+    def on_pre(spec, step):
+        if not allow_pre:
+            raise CompileError(
+                f"{type(spec).__name__} needs an Arrow pandas kernel and "
+                "cannot be used in pure-expression position (e.g. inside "
+                "FilterRepeater over arrays); use the explode path instead"
             )
-            own = F.when(own_nulled, null_of(step.dtype)).otherwise(step.value)
-            value = F.when(err, value).otherwise(own)
-        else:
-            nulled = err | skip_null if step.keep_value_on_error else (
-                err | skip_null | inv
-            )
-            value = F.when(nulled, null_of(step.dtype)).otherwise(step.value)
-        err = err | inv
-        dtype = step.dtype
-        partial_possible = partial_possible or step.keep_value_on_error
-    return ChainResult(value=value, dtype=dtype, violations=viols, pre=pre)
+        pre.update(step.pre)
+
+    r = _fold(chain, value, dtype, ctx, key, on_pre=on_pre)
+    r.pre = pre
+    return r
+
+
+def _attach(df, col_name, chain, key, ctx, out_value=None, out_violations=None):
+    """:func:`attach_chain` plus the name of the chain's fired-mask column."""
+    if col_name not in df.columns:
+        raise CompileError(f"column {col_name!r} not found in DataFrame")
+    temps: list[str] = []
+
+    def on_pre(spec, step):
+        nonlocal df
+        # sequential: later kernels may reference earlier pre columns
+        for pname, pcol in step.pre.items():
+            df = df.withColumn(pname, pcol)
+        temps.extend(step.pre)
+
+    def bind(**cols):
+        nonlocal df
+        names = {ctx.name(tag): col for tag, col in cols.items()}
+        df = df.withColumns(names)
+        temps.extend(names)
+        return [F.col(n) for n in names]
+
+    r = _fold(
+        chain, F.col(col_name), df.schema[col_name].dataType, ctx, key,
+        on_pre=on_pre, bind=bind,
+    )
+    out_value = out_value or ctx.name("cleaned")
+    out_violations = out_violations or ctx.name("violset")
+    out_fired = ctx.name("fired")
+    df = df.withColumns(
+        {out_value: r.value, out_violations: r.violations, out_fired: r.fired}
+    )
+    return df.drop(*temps), out_value, out_violations, out_fired
 
 
 def attach_chain(
@@ -186,64 +325,11 @@ def attach_chain(
     Each step is materialised as temp columns so the expression tree stays
     linear; Catalyst collapses the stacked projections into one.
     """
-    ctx = ctx or Ctx()
-    key = key if key is not None else col_name
-    if col_name not in df.columns:
-        raise CompileError(f"column {col_name!r} not found in DataFrame")
-    dtype = df.schema[col_name].dataType
-
-    value = F.col(col_name)
-    err = F.lit(False)
-    viols = _empty_viols()
-    temps: list[str] = []
-    partial_possible = False
-
-    for spec in as_chain(chain).specs:
-        step = spec.compile(value, dtype, ctx, key)
-        if step.pre:
-            # sequential: later kernels may reference earlier pre columns
-            for pname, pcol in step.pre.items():
-                df = df.withColumn(pname, pcol)
-            temps.extend(step.pre)
-        inv = _step_invalid(step, value)
-        fired = _fired_violations(step, err, value, key)
-        new_viols = F.when(err, viols).otherwise(F.concat(viols, fired))
-        skip_null = F.lit(False) if step.handles_null else value.isNull()
-        # chain break carries the failing step's (partial) output when a
-        # keep_value_on_error step has run and the type allows — gated
-        # exactly like compile_chain_expr (scalar-only chains keep the
-        # cheap single-reference formula)
-        if partial_possible and step.dtype == dtype:
-            own_nulled = skip_null if step.keep_value_on_error else (
-                skip_null | inv
-            )
-            own = F.when(own_nulled, null_of(step.dtype)).otherwise(step.value)
-            new_value = F.when(err, value).otherwise(own)
-        else:
-            nulled = err | skip_null if step.keep_value_on_error else (
-                err | skip_null | inv
-            )
-            new_value = F.when(nulled, null_of(step.dtype)).otherwise(step.value)
-        new_err = err | inv
-        partial_possible = partial_possible or step.keep_value_on_error
-
-        v_name, e_name, w_name = (
-            ctx.name("val"),
-            ctx.name("err"),
-            ctx.name("viol"),
-        )
-        df = df.withColumns(
-            {v_name: new_value, e_name: new_err, w_name: new_viols}
-        )
-        temps.extend([v_name, e_name, w_name])
-        value, err, viols = F.col(v_name), F.col(e_name), F.col(w_name)
-        dtype = step.dtype
-
-    out_value = out_value or ctx.name("cleaned")
-    out_violations = out_violations or ctx.name("violset")
-    df = df.withColumns({out_value: value, out_violations: viols})
-    df = df.drop(*temps)
-    return df, out_value, out_violations
+    df, v, w, fired = _attach(
+        df, col_name, chain, col_name if key is None else key, ctx or Ctx(),
+        out_value, out_violations,
+    )
+    return df.drop(fired), v, w
 
 
 def _kernel_repeater_route(df, col_name, chain, ctx):
@@ -319,7 +405,10 @@ def validate(
     values (``replace=True``) or kept alongside as ``<col>__cleaned``.
     Adds ``violations_col`` (array of violation structs across all rules,
     first-error-per-chain) and ``valid_col`` (``is_valid`` ≡ no messages,
-    ``handlers.py:326-332``).
+    ``handlers.py:326-332``).  ``valid_col`` is ``NOT OR(fired masks)``
+    over the rules — no violation array is built for it — and
+    ``violations_col`` concatenates the rules' arrays only where it is
+    false, so valid rows never build one.
 
     Scale notes: no shuffle — pure projection; Column-expression kernels
     stay in whole-stage codegen; pandas kernels ride Arrow batches.
@@ -334,6 +423,7 @@ def validate(
     """
     ctx = Ctx()
     produced: list[tuple[str, str, str]] = []
+    fired: list[Column] = []
     for col_name, chain in rules.items():
         route = _kernel_repeater_route(df, col_name, chain, ctx)
         if route is not None:
@@ -375,11 +465,21 @@ def validate(
                 )
                 v, w = ctx.name("cleaned"), ctx.name("violset")
                 df = df.withColumns({v: val, w: viols})
+            # the explode path builds its array on every row anyway
+            f = F.size(F.col(w)) > 0
         else:
-            df, v, w = attach_chain(df, col_name, chain, ctx=ctx)
+            df, v, w, f = _attach(df, col_name, chain, col_name, ctx)
+            f = F.col(f)
         produced.append((col_name, v, w))
+        fired.append(f)
 
-    viols = F.concat(*[F.col(w) for _, _, w in produced]) if produced else _empty_viols()
+    invalid = _any(fired)
+    viols = (
+        F.when(invalid, F.concat(*[F.col(w) for _, _, w in produced]))
+        .otherwise(_empty_viols())
+        if produced
+        else _empty_viols()
+    )
     out_cols: list[Column] = []
     for c in df.columns:
         hit = next((p for p in produced if p[0] == c), None)
@@ -391,5 +491,5 @@ def validate(
         for col_name, v, _ in produced:
             out_cols.append(F.col(v).alias(f"{col_name}__cleaned"))
     out_cols.append(viols.alias(violations_col))
-    out_cols.append((F.size(viols) == 0).alias(valid_col))
+    out_cols.append((~invalid).alias(valid_col))
     return df.select(*out_cols)

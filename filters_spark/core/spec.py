@@ -99,7 +99,8 @@ class Step:
     #: Structural combinators (FilterMapper / FilterRepeater / FilterSwitch)
     #: emit fully-built ``array<struct<key,code,message>>`` columns with
     #: their own dotted keys; when set, the compiler uses this directly
-    #: instead of ``violations``.
+    #: instead of ``violations`` and reads the step's error mask off it
+    #: (non-empty ⇔ invalid), so ``invalid`` must agree with it.
     violations_array: Column | None = None
     #: Columns that must be materialised (projected) before ``value`` /
     #: ``invalid`` are evaluated — used for Arrow pandas kernels so the

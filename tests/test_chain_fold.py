@@ -1,0 +1,318 @@
+"""Randomized cross-check of the mask-first chain fold.
+
+``validate`` builds each chain's violation array only where the chain's
+fired mask is set and derives ``_is_valid`` from the masks alone.  This
+file keeps the earlier per-step fold — every step threads
+``viols_i = err ? viols : concat(viols, fired_i)`` and ``_is_valid`` is
+``size(concat(all chains)) == 0`` — as a reference implementation, and
+checks on seeded random chains that both give identical cleaned values,
+``_violations`` (order included) and ``_is_valid``.  The reference is
+also swapped in for the nested chains of the structural combinators and
+of the explode path, so the two sides share no fold code.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import random
+from unittest import mock
+
+import pytest
+from pyspark.sql import functions as F
+
+import filters_spark as fs
+from filters_spark.core.compiler import (
+    ChainResult,
+    _empty_viols,
+    _kernel_repeater_route,
+    _step_invalid,
+    make_violation_col,
+)
+from filters_spark.core.spec import CompileError, Ctx, as_chain, null_of
+
+# -- reference: the per-step violation fold ---------------------------------
+
+
+def _ref_fired(step, err, value, key):
+    if step.violations_array is not None:
+        arr = step.violations_array
+        if not step.handles_null:
+            arr = F.when(value.isNull(), _empty_viols()).otherwise(arr)
+        return F.when(err, _empty_viols()).otherwise(
+            F.coalesce(arr, _empty_viols())
+        )
+    guards = []
+    for v in step.violations:
+        cond = F.coalesce(v.cond, F.lit(False))
+        if not step.handles_null:
+            cond = value.isNotNull() & cond
+        guards.append(F.when(~err & cond, make_violation_col(key, v)))
+    if not guards:
+        return _empty_viols()
+    return F.filter(F.array(*guards), lambda x: x.isNotNull())
+
+
+def _ref_step(step, key, value, dtype, err, viols, partial_possible):
+    inv = _step_invalid(step, value)
+    fired = _ref_fired(step, err, value, key)
+    new_viols = F.when(err, viols).otherwise(F.concat(viols, fired))
+    skip_null = F.lit(False) if step.handles_null else value.isNull()
+    if partial_possible and step.dtype == dtype:
+        own_nulled = skip_null if step.keep_value_on_error else skip_null | inv
+        own = F.when(own_nulled, null_of(step.dtype)).otherwise(step.value)
+        new_value = F.when(err, value).otherwise(own)
+    else:
+        nulled = (
+            err | skip_null if step.keep_value_on_error
+            else err | skip_null | inv
+        )
+        new_value = F.when(nulled, null_of(step.dtype)).otherwise(step.value)
+    return new_value, err | inv, new_viols
+
+
+def ref_compile_chain_expr(chain, value, dtype, ctx, key, allow_pre=False):
+    err, viols, pre, partial_possible = F.lit(False), _empty_viols(), {}, False
+    for spec in as_chain(chain).specs:
+        step = spec.compile(value, dtype, ctx, key if isinstance(key, str) else "")
+        if step.pre:
+            if not allow_pre:
+                raise CompileError(f"{type(spec).__name__} needs a kernel")
+            pre.update(step.pre)
+        value, err, viols = _ref_step(
+            step, key, value, dtype, err, viols, partial_possible
+        )
+        dtype = step.dtype
+        partial_possible = partial_possible or step.keep_value_on_error
+    return ChainResult(value=value, dtype=dtype, violations=viols, pre=pre)
+
+
+def ref_attach_chain(df, col_name, chain, *, key, ctx):
+    value, dtype = F.col(col_name), df.schema[col_name].dataType
+    err, viols, temps, partial_possible = F.lit(False), _empty_viols(), [], False
+    for spec in as_chain(chain).specs:
+        step = spec.compile(value, dtype, ctx, key)
+        for pname, pcol in step.pre.items():
+            df = df.withColumn(pname, pcol)
+        temps.extend(step.pre)
+        cols = _ref_step(step, key, value, dtype, err, viols, partial_possible)
+        names = [ctx.name("val"), ctx.name("err"), ctx.name("viol")]
+        df = df.withColumns(dict(zip(names, cols)))
+        temps.extend(names)
+        value, err, viols = (F.col(n) for n in names)
+        dtype = step.dtype
+        partial_possible = partial_possible or step.keep_value_on_error
+    v, w = ctx.name("cleaned"), ctx.name("violset")
+    return df.withColumns({v: value, w: viols}).drop(*temps), v, w
+
+
+def _ref_validate(df, rules):
+    from filters_spark.engine.explode import explode_validate
+
+    ctx, produced = Ctx(), []
+    for col_name, chain in rules.items():
+        route = _kernel_repeater_route(df, col_name, chain, ctx)
+        if route is None:
+            df, v, w = ref_attach_chain(df, col_name, chain, key=col_name, ctx=ctx)
+            produced.append((col_name, v, w))
+            continue
+        prefix, rep, suffix = route
+        cur, w1 = col_name, None
+        if prefix is not None:
+            df, cur, w1 = ref_attach_chain(df, col_name, prefix, key=col_name, ctx=ctx)
+        df, v2, w2 = explode_validate(df, cur, rep.chain, key=col_name, ctx=ctx)
+        v, w = v2, w2
+        if w1 is not None or suffix is not None:
+            v3, w3 = v2, w2
+            if suffix is not None:
+                df, v3, w3 = ref_attach_chain(df, v2, suffix, key=col_name, ctx=ctx)
+            err1 = F.size(F.col(w1)) > 0 if w1 is not None else F.lit(False)
+            err2 = F.size(F.col(w2)) > 0
+            val = F.when(err1, F.col(cur)).when(err2, F.col(v2)).otherwise(F.col(v3))
+            viols = (
+                F.when(err1, F.col(w1) if w1 is not None else _empty_viols())
+                .when(err2, F.col(w2))
+                .otherwise(F.col(w3))
+            )
+            v, w = ctx.name("cleaned"), ctx.name("violset")
+            df = df.withColumns({v: val, w: viols})
+        produced.append((col_name, v, w))
+    viols = F.concat(*[F.col(w) for _, _, w in produced])
+    out = [
+        F.col(c) for c in df.columns
+        if c not in rules and not c.startswith(ctx.prefix + "_")
+    ]
+    out += [F.col(v).alias(c) for c, v, _ in produced]
+    return df.select(
+        *out, viols.alias("_violations"), (F.size(viols) == 0).alias("_is_valid")
+    )
+
+
+def ref_validate(df, rules):
+    """The reference fold end to end, nested chains included."""
+    with contextlib.ExitStack() as stack:
+        for target in (
+            "filters_spark.core.compiler.compile_chain_expr",
+            "filters_spark.engine.explode.compile_chain_expr",
+        ):
+            stack.enter_context(mock.patch(target, ref_compile_chain_expr))
+        return _ref_validate(df, rules)
+
+
+# -- seeded random chains ---------------------------------------------------
+
+CHOICES = ["user", "assistant", "tool", "User", "a"]
+
+
+def _str_op(r: random.Random):
+    return r.choice(
+        [
+            lambda: fs.Required(),
+            lambda: fs.NotEmpty(allow_none=r.random() < 0.5),
+            lambda: fs.Optional(default=r.choice(["dflt", "user", ""])),
+            lambda: fs.Choice(
+                r.sample(CHOICES, k=r.randint(1, 3)),
+                case_sensitive=r.random() < 0.5,
+            ),
+            lambda: fs.MaxLength(r.randint(0, 6), truncate=r.random() < 0.5),
+            lambda: fs.Strip(),
+            lambda: fs.Unicode(),
+        ]
+    )()
+
+
+def _str_chain(r, lo=1, hi=4, kernels=True):
+    ops, n = [], r.randint(lo, hi)
+    while len(ops) < n:
+        op = _str_op(r)
+        if kernels or not isinstance(op, fs.Unicode):
+            ops.append(op)
+    return fs.Chain(ops)
+
+
+def _int_chain(r):
+    ops = [
+        r.choice(
+            [
+                lambda: fs.Required(),
+                lambda: fs.Optional(default=r.randint(-1, 4)),
+                lambda: fs.Min(r.randint(-2, 5), exclusive=r.random() < 0.5),
+            ]
+        )()
+        for _ in range(r.randint(1, 3))
+    ]
+    return fs.Chain(ops)
+
+
+def _switch(r):
+    """FilterSwitch over a string column, dispatching on its length."""
+    return fs.FilterSwitch(
+        lambda v: F.length(v) > 2,
+        {True: _str_chain(r), False: _str_chain(r)},
+        default=_str_chain(r) if r.random() < 0.5 else None,
+    )
+
+
+def _mapper(r):
+    fmap = {"a": _str_chain(r), "b": _int_chain(r)}
+    if r.random() < 0.5:
+        fmap["z"] = _str_chain(r)  # missing from the struct
+    return fs.FilterMapper(
+        fmap,
+        allow_missing_keys=r.random() < 0.5,
+        allow_extra_keys=r.random() < 0.5,
+    )
+
+
+def _repeater(r, explode: bool):
+    """FilterRepeater over array<string>: a Unicode element chain needs
+    an Arrow kernel, which routes the rule through the explode path."""
+    inner = _str_chain(r, 0, 2, kernels=False)
+    if explode:
+        inner = inner | fs.Unicode()
+    chain = fs.FilterRepeater(inner)
+    if r.random() < 0.5:
+        chain = r.choice([fs.Required(), fs.NotEmpty()]) | chain
+    if r.random() < 0.5:
+        chain = chain | fs.MaxLength(r.randint(1, 3), truncate=r.random() < 0.5)
+    return as_chain(chain)
+
+
+def random_rules(seed: int) -> dict:
+    r = random.Random(seed)
+    s_chain = _str_chain(r)
+    if r.random() < 0.5:
+        s_chain = s_chain | _switch(r) if r.random() < 0.5 else _switch(r) | s_chain
+    rec = _mapper(r)
+    if r.random() < 0.5:
+        rec = fs.Required() | rec
+    return {
+        "s": s_chain,
+        "n": _int_chain(r),
+        "rec": rec,
+        "arr": _repeater(r, explode=seed % 2 == 1),
+    }
+
+
+STRINGS = [
+    None, "", "   ", "a", "user", " user ", "User", "assistant", "tool",
+    "x" * 9, "é", "\x00ab\x01", "a\r\nb", " tool ",
+]
+INTS = [None, -5, -2, 0, 1, 3, 100]
+
+
+def random_frame(spark, seed: int, n_rows: int = 48):
+    r = random.Random(1000 + seed)
+
+    def rec():
+        if r.random() < 0.15:
+            return None
+        return (r.choice(STRINGS), r.choice(INTS), r.choice(STRINGS))
+
+    def arr():
+        roll = r.random()
+        if roll < 0.1:
+            return None
+        if roll < 0.2:
+            return []
+        return [r.choice(STRINGS) for _ in range(r.randint(1, 4))]
+
+    rows = [
+        (i, r.choice(STRINGS), r.choice(INTS), rec(), arr())
+        for i in range(n_rows)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "id int, s string, n int, rec struct<a:string,b:int,extra:string>, "
+        "arr array<string>",
+    )
+
+
+def _rows(df):
+    cols = ["id", "s", "n", "rec", "arr", "_violations", "_is_valid"]
+    return [r.asDict(recursive=True) for r in df.select(cols).orderBy("id").collect()]
+
+
+def _failing(rows, col):
+    """Rows where rule ``col`` reported a violation."""
+    return {
+        row["id"]
+        for row in rows
+        for v in row["_violations"]
+        if v["key"] == col or v["key"].startswith(col + ".")
+    }
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_mask_first_fold_matches_per_step_fold(spark, seed):
+    df = random_frame(spark, seed)
+    rules = random_rules(seed)
+    got = _rows(fs.validate(df, rules))
+    assert got == _rows(ref_validate(df, rules)), rules
+    # one rule alone that both fails and passes rows, so that valid rows
+    # occur too
+    cols = list(rules)[seed % len(rules):] + list(rules)[: seed % len(rules)]
+    col = next(c for c in cols if 0 < len(_failing(got, c)) < len(got))
+    one = {col: rules[col]}
+    got = _rows(fs.validate(df, one))
+    assert got == _rows(ref_validate(df, one)), one
+    assert {row["_is_valid"] for row in got} == {True, False}, one

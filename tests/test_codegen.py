@@ -9,7 +9,9 @@ condition — both contexts where codegen cannot split expressions into
 sub-methods.  The fixes (norms below the exchanges; probe restriction as
 a broadcast join key instead of an ``isin`` filter) are pinned here by
 running with ``spark.sql.codegen.fallback=false``, which turns any
-codegen failure into a hard error.
+codegen failure into a hard error.  The same setting pins the chain
+projection of ``validate``: the job's default rules and a wide table of
+32 four-step string chains.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+import filters_spark as fs
 from filters_spark.pipeline.similarity import (
     cosine_topk,
     embedding_near_dups,
@@ -53,6 +56,43 @@ def no_codegen_fallback(spark):
     spark.conf.set("spark.sql.codegen.fallback", "false")
     yield
     spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
+def test_validate_default_rules_compiles(spark, no_codegen_fallback):
+    from filters_spark.data.transcripts import transcripts
+    from filters_spark.job import default_rules
+
+    out = fs.validate(transcripts(spark, n_convs=20), default_rules())
+    rows = out.select("_violations", "_is_valid").collect()
+    assert rows and all(r["_is_valid"] == (not r["_violations"]) for r in rows)
+
+
+def test_validate_wide_chains_compile(spark, no_codegen_fallback):
+    """32 string columns of a four-step chain in one projection stay
+    within the JVM's 64 KB method limit (no codegen failure)."""
+    n_cols = 32
+    names = [f"c{i}" for i in range(n_cols)]
+    values = [None, "", "  ok  ", "no", "toolongvalue", "yes"]
+    rows = [
+        tuple(values[(r + c) % len(values)] for c in range(n_cols))
+        for r in range(12)
+    ]
+    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in names))
+    chain = (
+        fs.Required()
+        | fs.Strip()
+        | fs.MaxLength(4, truncate=True)
+        | fs.Choice(("ok", "no", "tool", "yes"))
+    )
+    out = fs.validate(df, {c: chain for c in names}).collect()
+    # values[0] (NULL) and values[1] ("") fail Required; the rest clean to
+    # a valid choice ("toolongvalue" truncates to "tool")
+    want = [
+        sum((r + c) % len(values) < 2 for c in range(n_cols)) for r in range(12)
+    ]
+    assert [len(row["_violations"]) for row in out] == want
+    assert not any(row["_is_valid"] for row in out)
+    assert out[0]["c4"] == "tool" and out[0]["c2"] == "ok"
 
 
 def test_exact_near_dups_compiles(emb64, no_codegen_fallback):

@@ -62,3 +62,30 @@ def test_boundary_oracle_null_first_status(spark, tmp_path, name):
     con.close()
     assert not problems, problems
     assert n > 0
+
+
+@pytest.mark.parametrize("name", ("asof_join", "asof_join_skew"))
+def test_asof_oracle_null_value_at_max_event(spark, tmp_path, name):
+    """A NULL ``value`` on the tie group's max ``event_id`` is that
+    error's value on both engines: Spark's ``max_by`` keeps it, and the
+    oracle's ``arg_max`` over a one-field struct must not skip it."""
+    pd.DataFrame(
+        {
+            "event_id": [1, 2, 3, 4, 5, 6],
+            "ts": pd.to_datetime(
+                ["2024-01-01 00:00", "2024-01-01 00:00", "2024-01-01 00:05",
+                 "2024-01-01 00:00", "2024-01-01 00:00", "2024-01-01 00:05"]
+            ).astype("datetime64[us]"),
+            "user_id": [7, 7, 7, 10, 10, 10],
+            "event_type": ["error", "error", "click"] * 2,
+            "value": [1.5, None, 3.0, None, 2.5, 4.0],
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    n, problems = compare(spark, con, str(tmp_path), name)
+    con.close()
+    assert not problems, problems
+    assert n > 0

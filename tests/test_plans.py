@@ -51,6 +51,15 @@ def test_validate_is_shuffle_free_single_kernel(tdf):
     assert "*(" in plan
 
 
+def test_is_valid_builds_no_violation_arrays(tdf):
+    """Mask-first compile: ``_is_valid`` is read off the chains' error
+    and fired masks, so selecting it alone leaves none of the
+    violation-array plumbing (``ArrayFilter``, ``concat``) in the plan."""
+    plan = plan_of(fs.validate(tdf, RULES).select("_is_valid"))
+    assert "filter(" not in plan and "ArrayFilter" not in plan, plan
+    assert "concat(" not in plan, plan
+
+
 def test_column_pruning_reaches_parquet_scan(spark, tmp_path):
     """A chain over one column must not read the others (ReadSchema
     pruning through the compiled projection)."""
