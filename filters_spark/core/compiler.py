@@ -7,15 +7,17 @@ error mask and one *fired* mask, folding the steps in order:
 - ``err_i   = err_{i-1} OR step_i.invalid``   (first-error short-circuit,
   mirroring ``FilterChain._apply`` at ``src/filters/base.py:462-473``)
 - ``fired   = OR_i (NOT err_{i-1} AND fires_i)``, where ``fires_i`` is the
-  OR of step ``i``'s null-guarded violation conditions, or its
-  ``invalid`` for a step whose conditions are its ``invalid`` or that
-  emits a ready ``violations_array`` (then the term is
-  ``err_i AND NOT err_{i-1}``, read off the bound masks)
+  OR of step ``i``'s null-guarded violation conditions, or, for a
+  structural step that emits a ready ``violations_array``, its
+  ``invalid`` (then the term is ``err_i AND NOT err_{i-1}``, read off the
+  bound masks)
 
 The violations are built once per chain, and only where the fired mask
 is set: ``fired ? concat(part_1, …, part_n) : []``, where ``part_i`` is
 step ``i``'s violations gated on ``NOT err_{i-1}`` (only the first
-failing filter reports, like the reference's break-on-error).  Valid
+failing filter reports, like the reference's break-on-error), built as a
+``concat`` of one-element arrays so that no ``ArrayFilter`` (a codegen
+fallback) leaves the projection outside whole-stage codegen.  Valid
 rows — almost all of them in practice — evaluate the masks and the value
 only, never an ``array<struct>``; :func:`validate` derives ``_is_valid``
 from the fired masks alone.
@@ -38,7 +40,6 @@ step's ``(value, err)`` is bound for the next step:
   explode path.  Its violations are the unguarded
   ``concat(part_1, …, part_n)`` (same value): without temp columns the
   guard would repeat every violation condition in the expression tree.
-  Its parts keep ``filter(array(when…))`` (see :func:`_step_violations`).
   Pandas kernels are collected in ``ChainResult.pre`` with
   ``allow_pre=True`` and rejected with :class:`CompileError` otherwise.
 """
@@ -74,14 +75,14 @@ def _any(masks: list[Column]) -> Column:
     return functools.reduce(operator.or_, masks) if masks else F.lit(False)
 
 
-def _step_violations(step, err: Column, value: Column, key, inline):
-    """``(fires, part)`` for one step, or ``None`` if it never reports;
-    ``inline`` when the chain is compiled without temp columns.
+def _step_violations(step, err: Column, value: Column, key):
+    """``(fires, part)`` for one step, or ``None`` if it never reports.
 
     ``fires`` is True where the step reports a violation, ignoring the
-    chain's earlier errors — ``None`` when that is exactly the step's
-    ``invalid``; ``part`` is the array of violation structs it reports,
-    already empty where ``err`` (an earlier step failed) is set.
+    chain's earlier errors — ``None`` for a structural step, whose error
+    mask the fold reads off ``part``; ``part`` is the array of violation
+    structs it reports, already empty where ``err`` (an earlier step
+    failed) is set.
     """
     if step.violations_array is not None:
         arr = step.violations_array
@@ -90,7 +91,6 @@ def _step_violations(step, err: Column, value: Column, key, inline):
         part = F.when(err, _empty_viols()).otherwise(
             F.coalesce(arr, _empty_viols())
         )
-        # the fold reads such a step's invalid off this array
         return None, part
     conds = []
     for v in step.violations:
@@ -100,28 +100,16 @@ def _step_violations(step, err: Column, value: Column, key, inline):
         conds.append(cond)
     if not conds:
         return None
-    same = all(v.cond is step.invalid for v in step.violations)
-    fires = None if same else _any(conds)
-    # Bound chains use a concat of one-element arrays: ArrayFilter is a
-    # CodegenFallback and keeps its whole projection out of whole-stage
-    # codegen.  Inline chains keep filter(array(when…)): they sit inside
-    # structural steps whose value expressions can be huge (Int inlines
-    # to megabytes), which compile faster outside whole-stage codegen
-    # (a FilterMapper with an Int field: 107 s to collect with the
-    # concat, 65 s with the filter).
-    if inline:
-        guards = [
-            F.when(~err & c, make_violation_col(key, v))
-            for c, v in zip(conds, step.violations)
-        ]
-        return fires, F.filter(F.array(*guards), lambda x: x.isNotNull())
+    # a concat of one-element arrays, not filter(array(when…)):
+    # ArrayFilter is a CodegenFallback and keeps its whole projection out
+    # of whole-stage codegen
     singles = [
         F.when(~err & c, F.array(make_violation_col(key, v))).otherwise(
             _empty_viols()
         )
         for c, v in zip(conds, step.violations)
     ]
-    return fires, singles[0] if len(singles) == 1 else F.concat(*singles)
+    return _any(conds), singles[0] if len(singles) == 1 else F.concat(*singles)
 
 
 def make_violation_col(key, v) -> Column:
@@ -146,9 +134,6 @@ class ChainResult:
     #: Arrow-kernel columns that must be materialised (in order) before
     #: ``value``/``violations`` — populated only with ``allow_pre=True``.
     pre: dict | None = None
-    #: True exactly where ``violations`` is non-empty, computed without
-    #: building them.
-    fired: Column | None = None
 
 
 def _step_invalid(step, value: Column) -> Column:
@@ -160,8 +145,10 @@ def _step_invalid(step, value: Column) -> Column:
     return inv
 
 
-def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None) -> ChainResult:
-    """The chain step-fold shared by both compile modes.
+def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
+    """The chain step-fold shared by both compile modes; returns the
+    :class:`ChainResult` and the chain's fired mask (True exactly where
+    its violations are non-empty).
 
     ``on_pre(spec, step)`` receives every step with Arrow kernels before
     the step's columns are used.  ``bind(**cols)`` returns, in order, the
@@ -186,7 +173,7 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None) -> ChainResult:
         step = spec.compile(value, dtype, ctx, key if isinstance(key, str) else "")
         if step.pre:
             on_pre(spec, step)
-        reported = _step_violations(step, err, value, key, bind is None)
+        reported = _step_violations(step, err, value, key)
         if step.violations_array is None:
             inv = _step_invalid(step, value)
         else:
@@ -222,8 +209,8 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None) -> ChainResult:
         if reported is not None:
             fires, part = reported
             parts.append(part)
-            # a step that reports exactly where it is invalid reports
-            # where the (bound) error mask turns on
+            # a structural step reports exactly where the (bound) error
+            # mask turns on
             fresh.append(new_err & ~err if fires is None else ~err & fires)
         value, err, dtype = new_value, new_err, step.dtype
         partial_possible = partial_possible or step.keep_value_on_error
@@ -235,7 +222,7 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None) -> ChainResult:
     )
     if bind is not None and parts:
         violations = F.when(fired, violations).otherwise(_empty_viols())
-    return ChainResult(value=value, dtype=dtype, violations=violations, fired=fired)
+    return ChainResult(value=value, dtype=dtype, violations=violations), fired
 
 
 def compile_chain_expr(
@@ -265,13 +252,17 @@ def compile_chain_expr(
             )
         pre.update(step.pre)
 
-    r = _fold(chain, value, dtype, ctx, key, on_pre=on_pre)
+    r, _ = _fold(chain, value, dtype, ctx, key, on_pre=on_pre)
     r.pre = pre
     return r
 
 
-def _attach(df, col_name, chain, key, ctx, out_value=None, out_violations=None):
-    """:func:`attach_chain` plus the name of the chain's fired-mask column."""
+def _attach(
+    df, col_name, chain, key, ctx,
+    out_value=None, out_violations=None, out_fired=None,
+):
+    """:func:`attach_chain`; also attaches the chain's fired mask as
+    ``out_fired`` when that is given."""
     if col_name not in df.columns:
         raise CompileError(f"column {col_name!r} not found in DataFrame")
     temps: list[str] = []
@@ -290,17 +281,16 @@ def _attach(df, col_name, chain, key, ctx, out_value=None, out_violations=None):
         temps.extend(names)
         return [F.col(n) for n in names]
 
-    r = _fold(
+    r, fired = _fold(
         chain, F.col(col_name), df.schema[col_name].dataType, ctx, key,
         on_pre=on_pre, bind=bind,
     )
     out_value = out_value or ctx.name("cleaned")
     out_violations = out_violations or ctx.name("violset")
-    out_fired = ctx.name("fired")
-    df = df.withColumns(
-        {out_value: r.value, out_violations: r.violations, out_fired: r.fired}
-    )
-    return df.drop(*temps), out_value, out_violations, out_fired
+    cols = {out_value: r.value, out_violations: r.violations}
+    if out_fired is not None:
+        cols[out_fired] = fired
+    return df.withColumns(cols).drop(*temps), out_value, out_violations
 
 
 def attach_chain(
@@ -325,11 +315,10 @@ def attach_chain(
     Each step is materialised as temp columns so the expression tree stays
     linear; Catalyst collapses the stacked projections into one.
     """
-    df, v, w, fired = _attach(
+    return _attach(
         df, col_name, chain, col_name if key is None else key, ctx or Ctx(),
         out_value, out_violations,
     )
-    return df.drop(fired), v, w
 
 
 def _kernel_repeater_route(df, col_name, chain, ctx):
@@ -468,7 +457,8 @@ def validate(
             # the explode path builds its array on every row anyway
             f = F.size(F.col(w)) > 0
         else:
-            df, v, w, f = _attach(df, col_name, chain, col_name, ctx)
+            f = ctx.name("fired")
+            df, v, w = _attach(df, col_name, chain, col_name, ctx, out_fired=f)
             f = F.col(f)
         produced.append((col_name, v, w))
         fired.append(f)

@@ -60,6 +60,14 @@ def test_is_valid_builds_no_violation_arrays(tdf):
     assert "concat(" not in plan, plan
 
 
+def test_violations_build_without_array_filter(tdf):
+    """The chains' violation arrays are concats of one-element arrays:
+    ``ArrayFilter`` is a codegen fallback, and one in a chain keeps its
+    whole projection out of whole-stage codegen."""
+    plan = plan_of(fs.validate(tdf, RULES))
+    assert "filter(" not in plan and "ArrayFilter" not in plan, plan
+
+
 def test_column_pruning_reaches_parquet_scan(spark, tmp_path):
     """A chain over one column must not read the others (ReadSchema
     pruning through the compiled projection)."""
