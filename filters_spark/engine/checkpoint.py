@@ -32,35 +32,39 @@ from pyspark.sql import functions as F
 
 from filters_spark.engine.drift import entry_counts, profile_from_census
 from filters_spark.engine.stats import (
-    HIST_DIM,
-    bucket_distinct_sketches,
+    RAW_PREFIX,
+    bucket_stat_states,
     hist_bin,
     hist_entry,
     hist_vectors,
+    merge_stat_states,
+    stat_kinds,
+    stat_table,
 )
-from filters_spark.engine.suite import RAW_PREFIX, ValidationSuite
+from filters_spark.engine.suite import ValidationSuite
 
 #: manifest state-schema version.  v1 = the unversioned r4 format
 #: (verdict + metrics + optional sketches/histograms); v2 adds this
 #: field plus the suite fingerprint; v3 adds the per-bucket drift
-#: census.  Bump whenever the meaning or mergeability of stored state
-#: changes — resume REFUSES to merge entries from another version
-#: instead of silently mixing state.
-STATE_VERSION = 3
+#: census; v4 replaces the sketches and histograms with the per-bucket
+#: stat state and histogram census dimensions.  Bump whenever the
+#: meaning or mergeability of stored state changes — resume REFUSES to
+#: merge entries from another version instead of silently mixing state.
+STATE_VERSION = 4
 
-#: raw-copy prefixes of the sketch inputs and histogram bins that ride
-#: the chain pass into ``SuiteResult.keyed``
-SKETCH_PREFIX = RAW_PREFIX + "sketch_"
+#: raw-copy prefix of the histogram bins that ride the chain pass into
+#: ``SuiteResult.keyed``
 HIST_PREFIX = RAW_PREFIX + "hist_"
 
 
-def suite_fingerprint(suite: ValidationSuite) -> str:
-    """Stable digest of the suite config that determines what the stored
-    per-bucket state MEANS (rules, table rules, keys, bucket count,
-    stat/drift columns).  Specs without a stable ``__repr__`` fall back
-    to their class name, so the fingerprint can never false-refuse a
-    valid resume on object identity — it only catches real config
-    drift."""
+def suite_fingerprint(suite: ValidationSuite, state: dict) -> str:
+    """Stable digest of the config that determines what the stored
+    per-bucket state MEANS: the suite's (rules, table rules, keys,
+    bucket count, stat/drift columns) and the run's ``state`` spec
+    (resolved stat columns, histogram columns and grid).  Specs without
+    a stable ``__repr__`` fall back to their class name, so the
+    fingerprint can never false-refuse a valid resume on object identity
+    — it only catches real config drift."""
     import hashlib
 
     def sig(v) -> str:
@@ -77,6 +81,7 @@ def suite_fingerprint(suite: ValidationSuite) -> str:
             "stat_columns": suite.stat_columns,
             "drift_cols": suite.drift_cols,
             "length_col": suite.length_col,
+            "state": state,
         }
     )
     return hashlib.sha256(spec.encode()).hexdigest()[:16]
@@ -108,8 +113,9 @@ class CheckpointManifest:
                 raise RuntimeError(
                     f"checkpoint manifest {self.dir} bucket {b} was written "
                     f"with suite config {fp}, current config is "
-                    f"{fingerprint}; refusing to resume with changed rules/"
-                    "buckets — delete the manifest directory to re-validate"
+                    f"{fingerprint}; refusing to resume with changed rules, "
+                    "buckets or stat state — delete the manifest directory "
+                    "to re-validate"
                 )
 
     def _file(self, bucket: int) -> Path:
@@ -156,8 +162,8 @@ def run_resumable(
 
     Each group reads its input ONCE: the suite's chain pass fills its
     persisted narrow projection (``SuiteResult.keyed``), and the
-    group's verdicts, violations, drift census, sketches and histograms
-    are all aggregated from it.
+    group's verdicts, violations, drift census and stat state are all
+    aggregated from it.
 
     The resume predicate uses ``suite.bucket_fn`` — the SAME transform
     that keys the suite's verdicts — so selected rows and verdict buckets
@@ -174,43 +180,56 @@ def run_resumable(
     tables stay consistent with the manifest without a second full
     validation pass over the table.
 
-    ``sketch_cols`` enables ACCUMULATED SKETCH STATE (north rule): each
-    completed bucket's manifest entry carries a base64 Datasketches-HLL
-    sketch per listed column (the column, cast to string, rides the
-    chain pass and is aggregated by bucket from ``keyed``); the final
-    return includes ``distinct_estimates`` — the union of every
-    completed bucket's sketches across ALL runs, so a resumed job
-    reports table-wide distinct counts without rescanning the
-    partitions a previous run already validated.
+    Every manifest entry carries the bucket's STAT STATE (engine/stats.py:
+    counts, min/max/sum, HLL and KLL sketches of each of the suite's
+    stat columns, aggregated by bucket from the narrow stat inputs in
+    ``keyed``).  Once every bucket has committed, the states of all
+    completed buckets across ALL runs are merged and finished into the
+    returned ``stats`` — the same long table ``suite.run`` gives, with
+    count, null rate, min, max and avg exactly equal and distinct and
+    quantiles within the sketches' error — without rescanning the
+    partitions a previous run validated.  ``sketch_cols`` (stat columns)
+    adds their merged HLL estimates as ``distinct_estimates``.
 
-    ``hist_cols`` is the distribution twin of ``sketch_cols``: each
-    completed bucket's manifest entry carries a FIXED-GRID histogram
-    per listed column (string columns histogrammed by length —
-    the PSI drift input; numeric columns by value).  The bin index
-    rides the chain pass and is counted by bucket in the same
-    aggregation as the drift census below.  Fixed-grid
-    histograms merge by vector addition, so the resumed job's
-    table-wide ``length_histograms`` is EXACTLY what a single-shot run
-    over the full table would report — quantile summaries cannot make
-    that claim (merge-of-merges degrades).
+    Every manifest entry also carries the bucket's uncapped census
+    ``{dim: {key: count}}``: the counts the suite's current-side drift
+    profile is built from, plus, per ``hist_cols`` column, its
+    FIXED-GRID histogram bins (string columns by length, numeric
+    columns by value; ``hist_bins`` bins over ``hist_range``, the bin
+    riding the chain pass).  Counts merge by addition, so the returned
+    ``length_histograms`` is EXACTLY a single-shot run's.  ``baseline``
+    (optional) is the drift reference snapshot.  Groups run without it;
+    once every bucket has committed, the censuses of all completed
+    buckets are summed, folded and normalised exactly as the one-shot
+    profile is (:func:`profile_from_census`), and ``suite.drift`` runs
+    ONCE with that current side, so only the baseline is scanned.  The
+    result is returned as ``drift`` and gates ``passed`` exactly as the
+    one-shot ``suite.run`` does.
 
-    Every manifest entry carries the bucket's uncapped drift census
-    ``{dim: {key: count}}`` — the counts the suite's current-side drift
-    profile is built from — whether or not a ``baseline`` is passed.
-    ``baseline`` (optional) is the drift reference snapshot.  Groups run
-    without it; once every bucket has committed, the censuses of all
-    completed buckets are summed, folded and normalised exactly as the
-    one-shot profile is (:func:`profile_from_census`), and ``suite.drift``
-    runs ONCE with that current side, so only the baseline is scanned.
-    The result is returned as ``drift`` and gates ``passed`` exactly as
-    the one-shot ``suite.run`` does.
+    The stat columns and the histogram spec are part of the manifest's
+    fingerprint: resuming with other ones is refused, not merged.
 
     ``fail_after_buckets`` is a test hook: abort after N newly-completed
     buckets to simulate a killed job.
     """
     if not isinstance(manifest, CheckpointManifest):
         manifest = CheckpointManifest(manifest)
-    fingerprint = suite_fingerprint(suite)
+    kinds = stat_kinds(df, suite.stat_columns or df.columns)
+    unknown = set(sketch_cols or ()) - set(kinds)
+    if unknown:
+        raise ValueError(
+            f"sketch_cols {sorted(unknown)} are not stat columns of the "
+            f"suite ({list(kinds)})"
+        )
+    fingerprint = suite_fingerprint(
+        suite,
+        {
+            "stat_columns": list(kinds),
+            "hist": [sorted(hist_cols), hist_bins, list(hist_range)]
+            if hist_cols
+            else None,
+        },
+    )
     manifest.check_compatible(fingerprint)
     n = suite.n_buckets
     done = manifest.completed()
@@ -228,52 +247,36 @@ def run_resumable(
         # bucket_fn=iceberg_bucket_fn) this predicate prunes to exactly
         # these partitions.
         sub = df.where(conv_bucket.isin(group))
-        result, _ = suite._row_pass(
+        result = suite._row_pass(
             sub.withColumns(
                 {
-                    **{
-                        SKETCH_PREFIX + c: F.col(c).cast("string")
-                        for c in sketch_cols or ()
-                    },
-                    **{
-                        HIST_PREFIX + c: hist_bin(sub, c, hist_bins, *hist_range)
-                        for c in hist_cols or ()
-                    },
+                    HIST_PREFIX + c: hist_bin(sub, c, hist_bins, *hist_range)
+                    for c in hist_cols or ()
                 }
             )
         )
         try:
             # per-bucket state keyed by the RAW conv bucket — the same
-            # transform as the resume predicate above.  The drift census
-            # and the histogram bins are one count aggregation; it runs
-            # first and fills the cache from one branch (the verdict
+            # transform as the resume predicate above.  The census (drift
+            # dimensions and histogram bins) is one count aggregation; it
+            # runs first and fills the cache from one branch (the verdict
             # cascade reads the cache from two).
             keyed = result.keyed.withColumn(
                 "__b", suite.bucket_fn(F.col(RAW_PREFIX + suite.conv), n)
             )
-            counts = entry_counts(
-                keyed,
-                suite._drift_entries(keyed)
-                + [hist_entry(c, F.col(HIST_PREFIX + c)) for c in hist_cols or ()],
-                by=("__b",),
-            ).collect()
+            entries = suite._drift_entries(keyed) + [
+                hist_entry(c, F.col(HIST_PREFIX + c)) for c in hist_cols or ()
+            ]
             census: dict[int, dict[str, dict[str, int]]] = {}
-            for r in counts:
-                if not r["dim"].startswith(HIST_DIM):
-                    census.setdefault(r["__b"], {}).setdefault(r["dim"], {})[
-                        r["k"]
-                    ] = r["n"]
-            histograms = hist_vectors(counts, hist_bins)
-            sketches: dict[int, dict[str, str]] = {}
-            if sketch_cols:
-                sketches = bucket_distinct_sketches(
-                    keyed.select(
-                        "__b",
-                        *[F.col(SKETCH_PREFIX + c).alias(c) for c in sketch_cols],
-                    ),
-                    F.col("__b"),
-                    sketch_cols,
-                )
+            for r in (
+                entry_counts(keyed, entries, by=("__b",)).collect()
+                if entries
+                else ()
+            ):
+                census.setdefault(r["__b"], {}).setdefault(r["dim"], {})[
+                    r["k"]
+                ] = r["n"]
+            states = bucket_stat_states(keyed, kinds, "__b")
             verdicts = result.verdicts.collect()
             if output is not None:
                 out = output.rstrip("/")
@@ -311,26 +314,24 @@ def run_resumable(
                     "bucket_pass": True,
                 }
             row.pop("bucket", None)
-            payload = {
-                "state_version": STATE_VERSION,
-                "suite_fingerprint": fingerprint,
-                "verdict": row,
-                "census": census.get(b, {}),
-            }
-            if b in sketches:
-                payload["sketches"] = sketches[b]
-            if b in histograms:
-                payload["histograms"] = histograms[b]
-            manifest.mark(b, payload)
+            manifest.mark(
+                b,
+                {
+                    "state_version": STATE_VERSION,
+                    "suite_fingerprint": fingerprint,
+                    "verdict": row,
+                    "census": census.get(b, {}),
+                    "stats": states.get(b),
+                },
+            )
             newly += 1
             if fail_after_buckets is not None and newly >= fail_after_buckets:
                 return {"completed": len(done) + newly, "aborted": True}
 
-    # aggregate lineage across all manifest entries
+    # aggregate lineage and state across all manifest entries
     total = dict.fromkeys(counters, 0)
     passed = True
-    states: list[dict[str, str]] = []
-    hist_states: list[dict[str, list[int]]] = []
+    stat_states: list[str] = []
     census_sum: dict[str, dict[str, int]] = {}
     for b in manifest.completed():
         entry = manifest.read(b)
@@ -338,10 +339,8 @@ def run_resumable(
         for k in total:
             total[k] += int(v.get(k) or 0)
         passed = passed and bool(v.get("bucket_pass", True))
-        if entry.get("sketches"):
-            states.append(entry["sketches"])
-        if entry.get("histograms"):
-            hist_states.append(entry["histograms"])
+        if entry["stats"] is not None:
+            stat_states.append(entry["stats"])
         for dim, kn in entry["census"].items():
             acc = census_sum.setdefault(dim, {})
             for k, c in kn.items():
@@ -351,19 +350,23 @@ def run_resumable(
         drift = suite.drift(
             df, baseline, cur_profile=profile_from_census(spark, census_sum)
         )
+    stats = stat_table(merge_stat_states(df, kinds, stat_states), kinds)
     out = {
         "completed": len(manifest.completed()),
         "aborted": False,
         "passed": passed and not drift.get("drift_failed", False),
         **total,
         "drift": drift,
+        "stats": stats,
     }
-    if states:
-        from filters_spark.engine.stats import merge_distinct_sketches
-
-        out["distinct_estimates"] = merge_distinct_sketches(spark, states)
-    if hist_states:
-        from filters_spark.engine.stats import merge_length_histograms
-
-        out["length_histograms"] = merge_length_histograms(hist_states)
+    if sketch_cols:
+        out["distinct_estimates"] = {
+            r["column"]: r["value"]
+            for r in stats.where(
+                (F.col("metric") == "distinct")
+                & F.col("column").isin(list(sketch_cols))
+            ).collect()
+        }
+    if hist_cols:
+        out["length_histograms"] = hist_vectors(census_sum, hist_bins)
     return out

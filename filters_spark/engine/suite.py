@@ -14,12 +14,14 @@ Pipeline shape (what actually runs):
 3. Uniqueness + gaplessness — hash aggs keyed by (conv_id, turn_idx) /
    conv_id, rolled up to buckets, reading the PERSISTED narrow
    projection (raw-key copies), not a second input scan.
-4. Column stats — one agg pass over the input (HLL + approx quantiles).
+4. Column stats — one aggregation over the narrow stat inputs carried
+   in the persisted projection (engine/stats.py: the mergeable stat
+   state, finished into the long table).
 5. Drift — current side from the persisted raw copies (pre-bucketed
    lengths), baseline side one scan, driver-side KL/PSI.
 
-Input scans at 10^12 rows: the chain pass and the stats pass — every
-other stage reads the cached narrow projection.
+Input scans at 10^12 rows: one, the chain pass — every other stage
+reads the cached narrow projection.
 
 Buckets default to ``pmod(xxhash64(conv_id), n_buckets)``; pass
 ``bucket_fn=filters_spark.sources.iceberg.iceberg_bucket_fn(spark)`` on
@@ -45,17 +47,23 @@ from filters_spark.engine.drift import (
     profile_from_entries,
     psi_from_dicts,
 )
-from filters_spark.engine.stats import column_stats
+from filters_spark.engine.stats import (
+    RAW_PREFIX,
+    stat_aggs,
+    stat_inputs,
+    stat_kinds,
+    stat_table,
+)
 
 BUCKET_COL = "_bucket"
 
-#: raw-copy columns carried through the row pass so the uniqueness
-#: aggregation and the current-side drift profile read the narrow
-#: persisted projection instead of rescanning the input (chains REPLACE
-#: validated columns with cleaned values, so the raw key/drift values
-#: must ride along; they are small — two keys, the categorical drift
-#: columns, and a pre-computed length-bucket int, never the text)
-RAW_PREFIX = "__raw_"  # NOT "__fs_": validate() prunes its own temps by that prefix
+#: Raw copies (``RAW_PREFIX``) ride the row pass so the uniqueness
+#: aggregation, the current-side drift profile and the column stats
+#: read the narrow persisted projection instead of rescanning the input
+#: (chains REPLACE validated columns with cleaned values, so the raw
+#: values must ride along).  They are small — two keys, the categorical
+#: drift columns, a pre-computed length-bucket int and the narrow stat
+#: inputs (a string's length and hash), never the text.
 RULEF_COL = "__rule_fails"  # per-row count of failed table rules
 
 
@@ -129,6 +137,7 @@ class ValidationSuite:
             c for c in self.drift_cols if c in df.columns
         ]
         raws = {RAW_PREFIX + c: F.col(c) for c in dict.fromkeys(keep)}
+        raws.update(stat_inputs(df, self.stat_columns or df.columns))
         if self.length_col and self.length_col in df.columns:
             raws[RAW_PREFIX + "lenbucket"] = length_bucket(self.length_col)
         return raws
@@ -294,10 +303,7 @@ class ValidationSuite:
     # -- the job ----------------------------------------------------------
 
     def run(
-        self,
-        df: DataFrame,
-        baseline: DataFrame | None = None,
-        persist: bool = True,
+        self, df: DataFrame, baseline: DataFrame | None = None
     ) -> SuiteResult:
         """Run the whole suite.
 
@@ -308,37 +314,35 @@ class ValidationSuite:
         yield an empty current-side profile: KL ≡ 0.0, i.e. a drift
         check that silently always passes.
 
-        ``persist=True`` caches a NARROW projection of the row-validation
-        output — ``(conv, idx, bucket, _is_valid, _violations)`` only —
-        so verdicts and violation reporting don't re-execute the full
-        chain per action, while the wide cleaned rows stay a lazy
-        projection the caller streams to its own sink.  Persisting the
-        wide rows instead moves every cleaned text through the block
-        manager: at bench scale that single-box cache write dominated
-        wall time and capped core-scaling; on a cluster it would be a
-        second full materialisation.  Call ``result.unpersist()`` when
-        done.
+        The row pass caches a NARROW projection of the row-validation
+        output — ``(conv, idx, bucket, _is_valid, _violations)`` plus the
+        raw copies — so verdicts, violation reporting, column stats and
+        the drift profile don't re-execute the full chain per action,
+        while the wide cleaned rows stay a lazy projection the caller
+        streams to its own sink.  Persisting the wide rows instead moves
+        every cleaned text through the block manager: at bench scale
+        that single-box cache write dominated wall time and capped
+        core-scaling; on a cluster it would be a second full
+        materialisation.  Call ``result.unpersist()`` when done.
         """
-        result, agg_src = self._row_pass(df, persist)
-        result.stats = column_stats(df, self.stat_columns)
+        result = self._row_pass(df)
+        kinds = stat_kinds(df, self.stat_columns or df.columns)
+        result.stats = stat_table(result.keyed.agg(*stat_aggs(kinds)), kinds)
         if baseline is not None:
             result.metrics = self.drift(
                 df,
                 baseline,
                 cur_profile=profile_from_entries(
-                    agg_src, self._drift_entries(agg_src)
+                    result.keyed, self._drift_entries(result.keyed)
                 ),
             )
         return result
 
-    def _row_pass(
-        self, df: DataFrame, persist: bool = True
-    ) -> tuple[SuiteResult, DataFrame]:
+    def _row_pass(self, df: DataFrame) -> SuiteResult:
         """:meth:`run` without column stats and drift — the row pass,
-        verdicts and violations (``stats`` is ``None``) — plus the frame
-        those aggregate: the persisted narrow projection, or the lazy
-        rows with their raw copies.  ``run_resumable`` calls it per
-        bucket group, which needs neither stats nor drift."""
+        verdicts and violations over the persisted narrow projection
+        (``stats`` is ``None``).  ``run_resumable`` calls it per bucket
+        group and aggregates its own per-bucket state from ``keyed``."""
         from pyspark import StorageLevel
 
         missing = [c for c in self.drift_cols if c not in df.columns]
@@ -353,21 +357,18 @@ class ValidationSuite:
         rows = self.row_results(df)
         raw_cols = [c for c in rows.columns if c.startswith(RAW_PREFIX)]
         rule_cols = [RULEF_COL] if RULEF_COL in rows.columns else []
-        keyed = None
-        if persist:
-            keyed = rows.select(
-                self.conv,
-                self.idx,
-                BUCKET_COL,
-                "_is_valid",
-                "_violations",
-                *rule_cols,
-                *raw_cols,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        agg_src = keyed if keyed is not None else rows
-        verdicts = self.verdicts(df, agg_src)
+        keyed = rows.select(
+            self.conv,
+            self.idx,
+            BUCKET_COL,
+            "_is_valid",
+            "_violations",
+            *rule_cols,
+            *raw_cols,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        verdicts = self.verdicts(df, keyed)
         violations = (
-            agg_src.select(
+            keyed.select(
                 self.conv,
                 self.idx,
                 BUCKET_COL,
@@ -381,15 +382,12 @@ class ValidationSuite:
                 F.col("v.message").alias("message"),
             )
         )
-        return (
-            SuiteResult(
-                rows=rows.drop(*raw_cols, *rule_cols),
-                verdicts=verdicts,
-                stats=None,
-                violations=violations,
-                keyed=keyed,
-            ),
-            agg_src,
+        return SuiteResult(
+            rows=rows.drop(*raw_cols, *rule_cols),
+            verdicts=verdicts,
+            stats=None,
+            violations=violations,
+            keyed=keyed,
         )
 
 

@@ -17,7 +17,9 @@ Reads the transcripts input, runs the ValidationSuite (row chains +
 stats + uniqueness + referential + drift), writes
 ``verdicts/ violations/ stats/`` parquet under ``--output``, commits the
 per-bucket checkpoint manifest as it goes (resume = rerun the same
-command), and prints one summary JSON line on stdout.
+command), and prints one summary JSON line on stdout.  Either path reads
+the input once: the column stats come from the stat inputs carried in
+the chain pass (resumed: from the manifest's merged per-bucket states).
 """
 
 from __future__ import annotations
@@ -73,9 +75,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--buckets-per-job", type=int, default=8)
     p.add_argument(
         "--sketch-cols",
-        help="comma-separated columns whose per-bucket HLL sketch state "
-        "is checkpointed in the manifest and unioned on resume "
-        "(accumulated sketch state; needs --manifest)",
+        help="comma-separated stat columns whose HLL distinct estimates, "
+        "unioned from the per-bucket stat state in the manifest, go in "
+        "the summary line (accumulated sketch state; needs --manifest)",
     )
     p.add_argument(
         "--hist-cols",
@@ -147,10 +149,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.manifest:
         # run_resumable writes verdicts/violations per bucket group as it
         # goes (dynamic partition overwrite keyed by bucket), reading each
-        # group's input once, and computes drift from the summed
-        # per-bucket censuses plus one baseline scan, so the only extra
-        # input read here is the stats scan — the validation chains never
-        # run a second time.
+        # group's input once; drift comes from the summed per-bucket
+        # censuses plus one baseline scan, and the stats table from the
+        # merged per-bucket stat states, so no input row is read twice.
         summary = run_resumable(
             df,
             suite,
@@ -166,11 +167,7 @@ def main(argv: list[str] | None = None) -> int:
             ),
             hist_bins=args.hist_bins,
         )
-        from filters_spark.engine.stats import column_stats
-
-        column_stats(df, suite.stat_columns).write.mode("overwrite").parquet(
-            f"{out}/stats"
-        )
+        summary.pop("stats").write.mode("overwrite").parquet(f"{out}/stats")
     else:
         result = suite.run(df, baseline=baseline)
         # computed once: the collected rows are written back as they are

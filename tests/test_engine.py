@@ -22,6 +22,7 @@ from filters_spark.engine import (
     salted_agg,
 )
 from filters_spark.engine.drift import length_histogram
+from filters_spark.engine.stats import hist_vectors
 from filters_spark.engine.uniqueness import uniqueness_report
 
 N_CONVS = 300
@@ -299,11 +300,44 @@ def test_text_equality_oracle(tdf):
             assert r["text"] == expect or r["text"] == expect.strip()
 
 
+def _raw_bucket_states(df, suite):
+    """``{bucket: state JSON}`` computed directly on the raw input (the
+    suite's stat columns, keyed by its bucket)."""
+    from filters_spark.engine.stats import (
+        bucket_stat_states, stat_inputs, stat_kinds,
+    )
+
+    cols = suite.stat_columns or df.columns
+    narrow = df.select(
+        suite.bucket_fn(F.col(suite.conv), suite.n_buckets).alias("__b"),
+        *[e.alias(c) for c, e in stat_inputs(df, cols).items()],
+    )
+    return bucket_stat_states(narrow, stat_kinds(df, cols), "__b")
+
+
+def _stats_of(df, suite, states):
+    """``{(column, metric): (value, value_str)}`` of merged states."""
+    from filters_spark.engine.stats import (
+        merge_stat_states, stat_kinds, stat_table,
+    )
+
+    kinds = stat_kinds(df, suite.stat_columns or df.columns)
+    return _table(stat_table(merge_stat_states(df, kinds, states), kinds))
+
+
+def _table(stats):
+    return {
+        (r["column"], r["metric"]): (r["value"], r["value_str"])
+        for r in stats.collect()
+    }
+
+
 def test_checkpoint_sketch_state_accumulates(tmp_path, tdf, baseline):
     """Accumulated sketch state (north rule): per-bucket HLL sketches
-    ride the manifest; a killed-then-resumed job unions sketches from
-    BOTH runs into table-wide distinct estimates without rescanning the
-    first run's buckets."""
+    ride the manifest's stat state; a killed-then-resumed job unions
+    sketches from BOTH runs into table-wide distinct estimates without
+    rescanning the first run's buckets, and they equal the union of the
+    per-bucket states computed directly on the raw input."""
     suite = ValidationSuite(RULES, n_buckets=8)
     manifest = CheckpointManifest(tmp_path / "msk")
     partial = run_resumable(
@@ -326,8 +360,23 @@ def test_checkpoint_sketch_state_accumulates(tmp_path, tdf, baseline):
     )
     assert abs(est["conv_id"] - exact_conv) / exact_conv < 0.05
     assert est["role"] == pytest.approx(exact_role, abs=1)
-    # the sketches really are in the manifest (resumability evidence)
-    assert all("sketches" in manifest.read(b) for b in manifest.completed())
+    # the sketches really are in the manifest (resumability evidence):
+    # each bucket's state reads the distinct counts of the state taken
+    # directly on its raw rows, and the estimates are their union's
+    raw = _raw_bucket_states(tdf, suite)
+    assert set(raw) == manifest.completed()
+    for b in raw:
+        got = _stats_of(tdf, suite, [manifest.read(b)["stats"]])
+        want = _stats_of(tdf, suite, [raw[b]])
+        assert {k: v for k, v in got.items() if k[1] == "distinct"} == {
+            k: v for k, v in want.items() if k[1] == "distinct"
+        }
+    whole = _stats_of(tdf, suite, list(raw.values()))
+    assert est == {c: whole[(c, "distinct")][0] for c in ("conv_id", "role")}
+    # estimates come off the stat state, so sketch columns must be in it
+    narrow = ValidationSuite(RULES, n_buckets=8, stat_columns=["role"])
+    with pytest.raises(ValueError, match="not stat columns"):
+        run_resumable(tdf, narrow, tmp_path / "mx", sketch_cols=["conv_id"])
 
 
 def test_checkpoint_resume(tmp_path, tdf, baseline):
@@ -491,19 +540,16 @@ def test_checkpoint_drift_once_gates_passed(tmp_path, spark, tdf, baseline):
 
 
 def test_checkpoint_state_from_one_read(tmp_path, spark, tdf, baseline):
-    """A resumed run's per-bucket sketches and histograms come from the
+    """A resumed run's per-bucket stat state and histograms come from the
     chain pass, yet equal the state computed directly on the raw input;
-    every entry carries the bucket's drift census (state version 3)."""
-    import base64
+    every entry carries the bucket's census (state version 4), and a
+    manifest written by state version 3 is refused."""
+    import json as _json
 
     from filters_spark.engine.checkpoint import STATE_VERSION
-    from filters_spark.engine.stats import (
-        bucket_distinct_sketches,
-        bucket_length_histograms,
-        merge_distinct_sketches,
-    )
+    from filters_spark.engine.stats import bucket_length_histograms
 
-    assert STATE_VERSION == 3
+    assert STATE_VERSION == 4
     suite = ValidationSuite(RULES, n_buckets=8)
     manifest = CheckpointManifest(tmp_path / "ms")
     kw = dict(
@@ -518,22 +564,32 @@ def test_checkpoint_state_from_one_read(tmp_path, spark, tdf, baseline):
     assert final["completed"] == 8
 
     bucket = suite.bucket_fn(F.col("conv_id"), 8)
-    sketches = bucket_distinct_sketches(tdf, bucket, ["conv_id", "text"])
+    raw = _raw_bucket_states(tdf, suite)
     hists = bucket_length_histograms(
         tdf, bucket, ["text", "turn_idx"], bins=16, lo=0.0, hi=512.0
     )
-    assert set(sketches) == set(hists) == set(range(8))
+    assert set(raw) == set(hists) == set(range(8))
     for b in range(8):
         entry = manifest.read(b)
         assert entry["state_version"] == STATE_VERSION
-        assert entry["histograms"] == hists[b]
-        assert merge_distinct_sketches(
-            spark, [entry["sketches"]]
-        ) == merge_distinct_sketches(spark, [sketches[b]])
-        assert set(entry["sketches"]) == {"conv_id", "text"}
-        assert all(base64.b64decode(v) for v in entry["sketches"].values())
         census = entry["census"]
-        assert set(census) == {"cat:role", "cat:tool", "len:text"}
+        assert hist_vectors(census, 16) == hists[b]
+        # apart from the KLL sketch (randomised compaction) the states
+        # agree exactly; its quantiles lie within the bucket's range
+        got = _stats_of(tdf, suite, [entry["stats"]])
+        want = _stats_of(tdf, suite, [raw[b]])
+        assert got.keys() == want.keys()
+        for (c, m), v in got.items():
+            q = m.rsplit("_", 1)[-1]
+            if q[0] == "p" and q[1:].isdigit():
+                lab = m[: -len(q)]
+                lo, hi = want[(c, lab + "min")][0], want[(c, lab + "max")][0]
+                assert lo <= v[0] <= hi, (c, m)
+            else:
+                assert v == want[(c, m)], (c, m)
+        assert set(census) == {
+            "cat:role", "cat:tool", "len:text", "hist:text", "hist:turn_idx"
+        }
         assert all(
             sum(census[d].values()) == entry["verdict"]["n_rows"]
             for d in census
@@ -549,12 +605,19 @@ def test_checkpoint_state_from_one_read(tmp_path, spark, tdf, baseline):
             summed[k] = summed.get(k, 0) + n
     assert summed == roles
 
+    # an entry written by state version 3 is refused
+    p = manifest._file(0)
+    p.write_text(_json.dumps(dict(manifest.read(0), state_version=3)))
+    with pytest.raises(RuntimeError, match="state version 3"):
+        run_resumable(tdf, suite, manifest, **kw)
+
 
 def test_checkpoint_reads_each_input_row_once(tmp_path, spark, tdf, baseline):
-    """A full resumable run — with a baseline, sketches and histograms —
-    reads each input row once: a non-deterministic counting filter on
-    the input sees every row exactly one time (the bucket predicate
-    cannot move below it, so one group covers all buckets)."""
+    """A full resumable run — with a baseline, sketches, histograms and
+    its stats table — reads each input row once: a non-deterministic
+    counting filter on the input sees every row exactly one time (the
+    bucket predicate cannot move below it, so one group covers all
+    buckets)."""
     seen = spark.sparkContext.accumulator(0)
 
     def count_row(_):
@@ -571,7 +634,133 @@ def test_checkpoint_reads_each_input_row_once(tmp_path, spark, tdf, baseline):
         hist_cols=["text"],
     )
     assert out["completed"] == 8 and out["drift"]
+    # the stats table is built from the manifest's merged states, inside
+    # the same counted read
+    stats = _table(out["stats"])
+    assert stats[("conv_id", "count")][0] == tdf.count()
     assert seen.value == tdf.count()
+
+
+@pytest.mark.parametrize(
+    "first, resumed",
+    [
+        (dict(hist_cols=["text"], hist_bins=16),
+         dict(hist_cols=["text"], hist_bins=32)),
+        ({}, dict(hist_cols=["text"])),
+    ],
+    ids=["hist_bins_changed", "hist_cols_added"],
+)
+def test_checkpoint_refuses_changed_state_spec(tmp_path, tdf, first, resumed):
+    """The state spec is part of the manifest fingerprint: a resume that
+    changes ``hist_bins``, or adds ``hist_cols``, is refused instead of
+    merging state that covers part of the table or another grid."""
+    suite = ValidationSuite(RULES, n_buckets=8)
+    manifest = CheckpointManifest(tmp_path / "m")
+    partial = run_resumable(
+        tdf, suite, manifest, buckets_per_job=2, fail_after_buckets=2, **first
+    )
+    assert partial["aborted"]
+    with pytest.raises(RuntimeError, match="suite config"):
+        run_resumable(tdf, suite, manifest, **resumed)
+    assert len(manifest.completed()) == 2
+
+
+#: test bound on KLL quantile rank error: twice the 1.33% that k = 200
+#: gives one quantile at 99% confidence, since compaction is randomised
+KLL_RANK_TOL = 2 * 0.0133
+
+
+def test_stats_high_cardinality_exact_and_sketch_bounds(tmp_path, spark):
+    """Tens of thousands of distinct strings with a wide spread of
+    lengths: one-shot ``column_stats``, the suite's stats and a
+    killed-then-resumed run's stats all equal the exact count,
+    null_rate, min, max, avg and timestamp min/max, and read distinct
+    counts and quantiles within the HLL and KLL error stated in
+    engine/stats.py."""
+    import bisect
+
+    idx = F.col("id")
+    hc = spark.range(40_000).select(
+        F.format_string("c%05d", (idx / 8).cast("long")).alias("conv_id"),
+        (idx % 8).cast("int").alias("turn_idx"),
+        F.when(
+            idx % 17 != 0,
+            F.concat(
+                F.repeat(F.lit("x"), ((idx * 7919) % 1500).cast("int")),
+                idx.cast("string"),
+            ),
+        ).alias("text"),
+        F.when(
+            idx % 23 != 0,
+            F.timestamp_micros(F.lit(1_767_225_600_000_000) + idx * 1_000_003),
+        ).alias("ts"),
+        ((idx * 31) % 9973 / 4).cast("decimal(12,2)").alias("amt"),
+    ).cache()
+    measure = {
+        "conv_id": F.length("conv_id"),
+        "turn_idx": F.col("turn_idx"),
+        "text": F.length("text"),
+        "amt": F.col("amt"),
+    }
+    cols = [*measure, "ts"]
+    agg = hc.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.count(c).alias(f"{c}_nn") for c in cols],
+        *[F.count_distinct(c).alias(f"{c}_d") for c in cols],
+        *[F.min(v).alias(f"{c}_min") for c, v in measure.items()],
+        *[F.max(v).alias(f"{c}_max") for c, v in measure.items()],
+        *[F.sum(v).alias(f"{c}_sum") for c, v in measure.items()],
+        F.min("ts").cast("string").alias("ts_min"),
+        F.max("ts").cast("string").alias("ts_max"),
+    ).first()
+    n = agg["n"]
+    assert agg["text_d"] > 30_000
+    exact = {
+        ("ts", "min"): (None, agg["ts_min"]),
+        ("ts", "max"): (None, agg["ts_max"]),
+    }
+    for c in cols:
+        exact[(c, "count")] = (float(n), None)
+        exact[(c, "null_rate")] = ((n - agg[f"{c}_nn"]) / n, None)
+    values = {}
+    for c, v in measure.items():
+        lab = "len_" if c in ("conv_id", "text") else ""
+        nn = agg[f"{c}_nn"]
+        exact[(c, lab + "min")] = (float(agg[f"{c}_min"]), None)
+        exact[(c, lab + "max")] = (float(agg[f"{c}_max"]), None)
+        exact[(c, lab + "avg")] = (float(agg[f"{c}_sum"]) / nn, None)
+        values[c] = sorted(
+            float(r[0]) for r in hc.select(v).dropna().collect()
+        )
+
+    suite = ValidationSuite(
+        {"text": fs.Required() | fs.MaxLength(1000)},
+        n_buckets=8, drift_cols=(), length_col=None,
+    )
+    result = suite.run(hc)
+    suite_stats = _table(result.stats)
+    result.unpersist()
+    manifest = CheckpointManifest(tmp_path / "mhc")
+    assert run_resumable(
+        hc, suite, manifest, buckets_per_job=2, fail_after_buckets=3
+    )["aborted"]
+    resumed = run_resumable(hc, suite, manifest, buckets_per_job=4)
+    assert resumed["completed"] == 8
+
+    one_shot = _table(column_stats(hc))
+    for got in (one_shot, suite_stats, _table(resumed["stats"])):
+        assert {k: got[k] for k in exact} == exact
+        for c in cols:
+            rel = abs(got[(c, "distinct")][0] - agg[f"{c}_d"]) / agg[f"{c}_d"]
+            assert rel < 3 * 0.05, (c, rel)
+        for c, vals in values.items():
+            lab = "len_" if c in ("conv_id", "text") else ""
+            for q in (0.25, 0.5, 0.75, 0.95):
+                v = got[(c, f"{lab}p{int(q * 100)}")][0]
+                lo = bisect.bisect_left(vals, v) / len(vals)
+                hi = bisect.bisect_right(vals, v) / len(vals)
+                assert lo - KLL_RANK_TOL <= q <= hi + KLL_RANK_TOL, (c, q, v)
+    hc.unpersist()
 
 
 def test_dict_divergences_sum_in_sorted_key_order():
@@ -707,7 +896,9 @@ def test_checkpoint_histogram_state_merges_exactly(tmp_path, tdf, baseline):
     )[0]
     assert got == whole  # exact, not approximate
     assert sum(got["text"]) == tdf.where(F.col("text").isNotNull()).count()
-    assert all("histograms" in manifest.read(b) for b in manifest.completed())
+    assert all(
+        "hist:text" in manifest.read(b)["census"] for b in manifest.completed()
+    )
 
 
 def test_psi_from_histograms_matches_dict_psi():
