@@ -402,13 +402,14 @@ def validate(
     Scale notes: no shuffle — pure projection; Column-expression kernels
     stay in whole-stage codegen; pandas kernels ride Arrow batches.
     Exception: a rule containing one ``FilterRepeater(inner)`` over an
-    array column where ``inner`` needs an Arrow kernel (kernels cannot
-    run inside higher-order-function lambdas) is routed through the
-    explode path automatically — specs before/after the repeater compile
-    as ordinary projection segments with the chain's first-error break
-    preserved across the segment joins; that one rule costs a
-    per-row-id hash aggregation (see ``engine/explode.py``); everything
-    else stays a projection.
+    array or map column where ``inner`` needs an Arrow kernel (kernels
+    cannot run inside higher-order-function lambdas) is routed through
+    the explode route automatically, with the repeater itself, so its
+    element keys and ``restrict_keys`` are the lambda route's — specs
+    before/after the repeater compile as ordinary projection segments
+    with the chain's first-error break preserved across the segment
+    joins; that one rule costs a per-row-id hash aggregation (see
+    ``engine/explode.py``); everything else stays a projection.
     """
     ctx = Ctx()
     produced: list[tuple[str, str, str]] = []
@@ -416,7 +417,7 @@ def validate(
     for col_name, chain in rules.items():
         route = _kernel_repeater_route(df, col_name, chain, ctx)
         if route is not None:
-            from filters_spark.engine.explode import explode_validate
+            from filters_spark.engine.explode import explode_repeater
 
             prefix, rep, suffix = route
             cur, w1 = col_name, None
@@ -424,9 +425,7 @@ def validate(
                 df, cur, w1 = attach_chain(
                     df, col_name, prefix, key=col_name, ctx=ctx
                 )
-            df, v2, w2 = explode_validate(
-                df, cur, rep.chain, key=col_name, ctx=ctx
-            )
+            df, v2, w2 = explode_repeater(df, cur, rep, key=col_name, ctx=ctx)
             v, w = v2, w2
             if w1 is not None or suffix is not None:
                 if suffix is not None:

@@ -30,7 +30,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from filters_spark.engine.drift import entry_counts, profile_from_census
+from filters_spark.engine.drift import collect_census, profile_from_census
 from filters_spark.engine.stats import (
     RAW_PREFIX,
     bucket_stat_states,
@@ -41,7 +41,7 @@ from filters_spark.engine.stats import (
     stat_kinds,
     stat_table,
 )
-from filters_spark.engine.suite import ValidationSuite
+from filters_spark.engine.suite import BUCKET_COL, ValidationSuite
 
 #: manifest state-schema version.  v1 = the unversioned r4 format
 #: (verdict + metrics + optional sketches/histograms); v2 adds this
@@ -256,27 +256,18 @@ def run_resumable(
             )
         )
         try:
-            # per-bucket state keyed by the RAW conv bucket — the same
-            # transform as the resume predicate above.  The census (drift
-            # dimensions and histogram bins) is one count aggregation; it
-            # runs first and fills the cache from one branch (the verdict
-            # cascade reads the cache from two).
-            keyed = result.keyed.withColumn(
-                "__b", suite.bucket_fn(F.col(RAW_PREFIX + suite.conv), n)
-            )
+            # per-bucket state keyed by the row pass's bucket, which is
+            # the RAW conv key's — the same transform as the resume
+            # predicate above.  The census (drift dimensions and histogram
+            # bins) is one count aggregation; it runs first and fills the
+            # cache from one branch (the verdict cascade reads the cache
+            # from two).
+            keyed = result.keyed
             entries = suite._drift_entries(keyed) + [
                 hist_entry(c, F.col(HIST_PREFIX + c)) for c in hist_cols or ()
             ]
-            census: dict[int, dict[str, dict[str, int]]] = {}
-            for r in (
-                entry_counts(keyed, entries, by=("__b",)).collect()
-                if entries
-                else ()
-            ):
-                census.setdefault(r["__b"], {}).setdefault(r["dim"], {})[
-                    r["k"]
-                ] = r["n"]
-            states = bucket_stat_states(keyed, kinds, "__b")
+            census = collect_census(keyed, entries, BUCKET_COL)
+            states = bucket_stat_states(keyed, kinds, BUCKET_COL)
             verdicts = result.verdicts.collect()
             if output is not None:
                 out = output.rstrip("/")

@@ -319,6 +319,18 @@ def entry_counts(df: DataFrame, entries: list, by: tuple = ()) -> DataFrame:
     )
 
 
+def collect_census(df: DataFrame, entries: list, by: str | None = None) -> dict:
+    """:func:`entry_counts` collected as ``{dim: {key: n}}``, or, with a
+    ``by`` column, as ``{by value: {dim: {key: n}}}``."""
+    census: dict = {}
+    if not entries:
+        return census
+    for r in entry_counts(df, entries, by=(by,) if by else ()).collect():
+        acc = census.setdefault(r[by], {}) if by else census
+        acc.setdefault(r["dim"], {})[r["k"]] = r["n"]
+    return census
+
+
 def _normalise(rows) -> dict[str, dict[str, float]]:
     """``{dim: {key: n / total_of_dim}}`` from ``(dim, k, n)`` rows."""
     totals: dict[str, int] = {}

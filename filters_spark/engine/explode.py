@@ -1,36 +1,45 @@
-"""Explode-path array validation: per-element chains that need Arrow
+"""Explode route of ``FilterRepeater``: element chains that need Arrow
 kernels (SURVEY.md §2.7, FilterRepeater general path).
 
 ``FilterRepeater`` compiles to ``F.transform`` lambdas — pure JVM, the
 fast path — but Python UDFs cannot run inside higher-order-function
-lambdas, so chains containing Arrow kernels (``Unicode``, ``CaseFold``,
-``MaxBytes`` truncation, ...) validate arrays via:
+lambdas, so a repeater whose element chain contains Arrow kernels
+(``Unicode``, ``CaseFold``, ``MaxBytes`` truncation, ...) validates its
+column here, with one core for arrays and maps:
 
-    posexplode_outer (carrying the row payload) → compiled per-element
-    chain (ONE Arrow batch pass over all elements of all rows) →
-    re-assemble ordered by position (hash agg keyed by a synthetic row
-    id).
+    posexplode_outer of the elements (an array as it is, a map through
+    ``map_entries``) carrying the row payload → the repeater's own
+    per-element rule (``FilterRepeater.element_key`` / ``element``: the
+    element key and ``restrict_keys``), its kernels materialised once
+    (ONE Arrow batch pass over all elements of all rows) → one hash
+    aggregation keyed by a synthetic row id that collects the element
+    results and orders them by position → ``FilterRepeater.assemble``
+    (an ordered array, or ``map_from_entries``).
+
+So the cleaned values and the violations — ordered by position, a
+map's ``unexpected`` keys after the entries' own violations — are the
+ones the lambda route gives.
 
 Single-lineage, single-pass: the row's other columns ride through the
 explode as ONE conditional struct (built only on the first exploded row
 of each input row) and come back via a map-side-combined ``first()`` in
-the same aggregation that rebuilds the array — so there is no self-join
-and no persist.  The synthetic ``monotonically_increasing_id`` row id is
-produced and consumed inside one plan branch, which removes the
-cross-branch id-mismatch hazard a join design would have; what it does
-NOT remove (ADVICE r2) is the retry sensitivity inherited from
+the same aggregation that rebuilds the column — so there is no
+self-join and no persist.  The synthetic ``monotonically_increasing_id``
+row id is produced and consumed inside one plan branch, which removes
+the cross-branch id-mismatch hazard a join design would have; what it
+does NOT remove (ADVICE r2) is the retry sensitivity inherited from
 nondeterministic expressions: if the INPUT lineage is itself
 order-nondeterministic (reads an upstream shuffle, ``coalesce`` over a
 race-y union, ...), a shuffle-fetch-failure retry may regenerate
 different ids for recomputed map tasks and split/merge rows
-incorrectly.  Call sites must hand this function deterministic lineage
+incorrectly.  Call sites must hand this route deterministic lineage
 (file scans, cached/checkpointed frames — what ``validate`` sees in
 practice); persist or ``localCheckpoint`` the input first otherwise.
 
-Scale shape: explode multiplies rows by mean array length inside the map
-task only; the shuffle carries one pre-merged row per input row (partial
-aggregation collapses elements and payload in-task because a row's
-elements are adjacent in the scan partition).
+Scale shape: explode multiplies rows by mean column length inside the
+map task only; the shuffle carries one pre-merged row per input row
+(partial aggregation collapses elements and payload in-task because a
+row's elements are adjacent in the scan partition).
 """
 
 from __future__ import annotations
@@ -40,9 +49,88 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from filters_spark.core.compiler import compile_chain_expr
-from filters_spark.core.spec import VIOLATION_SCHEMA, Chain, CompileError, Ctx
+from filters_spark.core.spec import CompileError, Ctx
+from filters_spark.operators.structural import FilterRepeater
 
 _RID = "__fs_rid"
+
+
+def explode_repeater(
+    df: DataFrame,
+    col_name: str,
+    rep: FilterRepeater,
+    *,
+    key: str,
+    ctx: Ctx,
+    out_value: str | None = None,
+    out_violations: str | None = None,
+) -> tuple[DataFrame, str, str]:
+    """Validate the array or map column ``col_name`` with the repeater
+    ``rep`` (Arrow kernels allowed in its element chain); returns
+    ``(df, value_col, violations_col)`` like ``attach_chain``.  A NULL
+    column stays NULL, an empty one empty, both without violations."""
+    dtype = df.schema[col_name].dataType
+    is_map = isinstance(dtype, T.MapType)
+    if not (is_map or isinstance(dtype, T.ArrayType)):
+        raise CompileError(
+            f"explode_validate needs an array or map column, got {dtype}"
+        )
+    payload_cols = list(df.columns)
+    exploded = df.withColumn(_RID, F.monotonically_increasing_id()).select(
+        *payload_cols,
+        _RID,
+        F.posexplode_outer(
+            F.map_entries(col_name) if is_map else F.col(col_name)
+        ).alias("__fs_pos", "__fs_e"),
+    )
+    pos, e = F.col("__fs_pos"), F.col("__fs_e")
+    k = e["key"] if is_map else pos
+    elem_key = rep.element_key(key, k)
+    r = compile_chain_expr(
+        rep.chain,
+        e["value"] if is_map else e,
+        dtype.valueType if is_map else dtype.elementType,
+        ctx,
+        elem_key,
+        allow_pre=True,
+    )
+    for pname, pcol in r.pre.items():
+        exploded = exploded.withColumn(pname, pcol)
+
+    # posexplode_outer emits pos 0 for a row's first element and one row
+    # with pos NULL for an empty or NULL column: exactly one exploded row
+    # per input row carries the payload, and the pos-NULL row carries no
+    # element (collect_list skips its NULL)
+    per_elem = exploded.select(
+        _RID,
+        F.when(pos.isNull() | (pos == 0), F.struct(*payload_cols)).alias(
+            "__fs_row"
+        ),
+        F.when(
+            pos.isNotNull(),
+            F.struct(pos.alias("p"), *rep.element(r, k, elem_key, is_map)),
+        ).alias("__fs_elem"),
+    )
+    # ordered by position alone, whatever the collect order; comparing
+    # whole structs would also fail on unorderable (map) element values
+    by_pos = F.array_sort(
+        F.collect_list("__fs_elem"),
+        lambda a, b: F.signum(a["p"] - b["p"]).cast("int"),
+    )
+    assembled = per_elem.groupBy(_RID).agg(
+        F.first("__fs_row", ignorenulls=True).alias("__fs_row"),
+        by_pos.alias("__fs_elems"),
+    )
+    value, viols = rep.assemble(F.col("__fs_elems"), is_map)
+    row = F.col("__fs_row")
+    out_value = out_value or ctx.name("cleaned")
+    out_violations = out_violations or ctx.name("violset")
+    out = assembled.select(
+        *[row[c].alias(c) for c in payload_cols],
+        F.when(row[col_name].isNotNull(), value).alias(out_value),
+        viols.alias(out_violations),
+    )
+    return out, out_value, out_violations
 
 
 def explode_validate(
@@ -54,227 +142,24 @@ def explode_validate(
     ctx: Ctx | None = None,
     out_value: str | None = None,
     out_violations: str | None = None,
-    persist_input: bool = False,
 ) -> tuple[DataFrame, str, str]:
-    """Validate every element of an array column with an arbitrary chain
-    (Arrow kernels allowed).
+    """Validate every element of an array column (every value of a map
+    column) with an arbitrary chain (Arrow kernels allowed): the
+    explode route of ``FilterRepeater(chain)``.
 
     Returns ``(df, value_col, violations_col)`` like ``attach_chain``:
-    the cleaned array has invalid elements nulled IN PLACE (reference
+    the cleaned column has invalid elements nulled IN PLACE (reference
     FilterRepeater semantics, complex.py:113-129), violations carry
-    ``col.pos`` dotted keys, empty arrays stay empty, NULL arrays pass
-    through as NULL.
-
-    ``persist_input`` is accepted for back-compatibility and ignored:
-    the current single-lineage plan has no self-join, so there is no
-    cross-branch row-id consistency to pin with a cache.
+    ``key.pos`` / ``key.mapkey`` dotted keys (``key`` defaults to the
+    column name; under the root key ``""`` the bare index or map key),
+    empty columns stay empty, NULL columns pass through as NULL.
     """
-    del persist_input  # no longer needed — single lineage, no join
-    ctx = ctx or Ctx()
-    key = key if key is not None else col_name
-    dtype = df.schema[col_name].dataType
-    if isinstance(dtype, T.MapType):
-        return _explode_validate_map(
-            df, col_name, chain, key=key, ctx=ctx,
-            out_value=out_value, out_violations=out_violations,
-        )
-    if not isinstance(dtype, T.ArrayType):
-        raise CompileError(
-            f"explode_validate needs an array or map column, got {dtype}"
-        )
-    elem_t = dtype.elementType
-
-    out_value = out_value or ctx.name("cleaned")
-    out_violations = out_violations or ctx.name("violset")
-
-    payload_cols = list(df.columns)
-    base = df.withColumn(_RID, F.monotonically_increasing_id())
-    exploded = base.select(
-        *payload_cols,
-        _RID,
-        F.col(col_name).isNull().alias("__fs_isnull"),
-        F.posexplode_outer(col_name).alias("__fs_pos", "__fs_elem"),
+    return explode_repeater(
+        df,
+        col_name,
+        FilterRepeater(chain),
+        key=col_name if key is None else key,
+        ctx=ctx or Ctx(),
+        out_value=out_value,
+        out_violations=out_violations,
     )
-
-    elem_key = F.concat_ws(".", F.lit(key), F.col("__fs_pos").cast("string"))
-    r = compile_chain_expr(
-        chain if isinstance(chain, Chain) else Chain([chain]),
-        F.col("__fs_elem"),
-        elem_t,
-        ctx,
-        elem_key,
-        allow_pre=True,
-    )
-    for pname, pcol in (r.pre or {}).items():
-        exploded = exploded.withColumn(pname, pcol)
-
-    # the row payload travels ONCE per input row: posexplode_outer emits
-    # pos 0 for the first element and pos NULL for empty/NULL arrays, so
-    # exactly one exploded row per input row builds the struct
-    first_of_row = F.col("__fs_pos").isNull() | (F.col("__fs_pos") == 0)
-    # pos NULL = the synthetic row posexplode_outer emits for empty/NULL
-    # arrays: there is no element there, so no violations may fire (a
-    # Required inside the chain would otherwise hit the fake NULL elem)
-    per_elem = exploded.select(
-        _RID,
-        F.when(
-            first_of_row, F.struct(*[F.col(c) for c in payload_cols])
-        ).alias("__fs_row"),
-        "__fs_isnull",
-        "__fs_pos",
-        r.value.alias("__fs_val"),
-        F.when(
-            F.col("__fs_pos").isNull(),
-            F.array().cast(T.ArrayType(VIOLATION_SCHEMA)),
-        )
-        .otherwise(r.violations)
-        .alias("__fs_viols"),
-    )
-
-    # order-stable re-assembly: sort_array on struct(pos, ...) sorts by
-    # the leading field, so collect_list order doesn't matter
-    assembled = per_elem.groupBy(_RID).agg(
-        F.first("__fs_row", ignorenulls=True).alias("__fs_row"),
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("__fs_pos").alias("p"),
-                        F.col("__fs_val").alias("v"),
-                    )
-                )
-            ),
-            lambda s: s["v"],
-        ).alias("__fs_arr"),
-        F.flatten(F.collect_list("__fs_viols")).alias(out_violations),
-        F.first("__fs_isnull").alias("__fs_isnull"),
-        F.count("__fs_pos").alias("__fs_n"),
-    )
-    # NULL input array -> NULL; empty array -> empty (posexplode_outer
-    # emits one row with pos NULL for both, disambiguate via isnull)
-    cleaned = (
-        F.when(F.col("__fs_isnull"), F.lit(None).cast(T.ArrayType(r.dtype)))
-        .when(F.col("__fs_n") == 0, F.array().cast(T.ArrayType(r.dtype)))
-        .otherwise(F.col("__fs_arr"))
-    )
-    viols = F.when(
-        F.col(out_violations).isNull(),
-        F.array().cast(T.ArrayType(VIOLATION_SCHEMA)),
-    ).otherwise(F.col(out_violations))
-    out = assembled.select(
-        *[F.col("__fs_row")[c].alias(c) for c in payload_cols],
-        cleaned.alias(out_value),
-        viols.alias(out_violations),
-    )
-    return out, out_value, out_violations
-
-
-def _explode_validate_map(
-    df: DataFrame,
-    col_name: str,
-    chain,
-    *,
-    key: str,
-    ctx: Ctx,
-    out_value: str | None = None,
-    out_violations: str | None = None,
-) -> tuple[DataFrame, str, str]:
-    """Map variant of :func:`explode_validate`: the chain (Arrow kernels
-    allowed) runs over every map VALUE; violation keys carry the map key
-    (``col.mapkey`` dotted path — reference FilterRepeater over mappings,
-    complex.py:97-129).  Same single-lineage shape as the array path:
-    explode ``map_entries`` carrying the row payload, one hash agg keyed
-    by a synthetic row id, ``map_from_entries`` re-assembly (maps are
-    unordered, so no position bookkeeping is needed)."""
-    dtype = df.schema[col_name].dataType
-    val_t = dtype.valueType
-
-    out_value = out_value or ctx.name("cleaned")
-    out_violations = out_violations or ctx.name("violset")
-
-    payload_cols = list(df.columns)
-    base = df.withColumn(_RID, F.monotonically_increasing_id())
-    exploded = base.select(
-        *payload_cols,
-        _RID,
-        F.col(col_name).isNull().alias("__fs_isnull"),
-        F.posexplode_outer(F.map_entries(F.col(col_name))).alias(
-            "__fs_pos", "__fs_e"
-        ),
-    )
-
-    entry_key = F.concat_ws(
-        ".", F.lit(key), F.col("__fs_e.key").cast("string")
-    )
-    r = compile_chain_expr(
-        chain if isinstance(chain, Chain) else Chain([chain]),
-        F.col("__fs_e.value"),
-        val_t,
-        ctx,
-        entry_key,
-        allow_pre=True,
-    )
-    for pname, pcol in (r.pre or {}).items():
-        exploded = exploded.withColumn(pname, pcol)
-
-    first_of_row = F.col("__fs_pos").isNull() | (F.col("__fs_pos") == 0)
-    per_entry = exploded.select(
-        _RID,
-        F.when(
-            first_of_row, F.struct(*[F.col(c) for c in payload_cols])
-        ).alias("__fs_row"),
-        "__fs_isnull",
-        F.col("__fs_e.key").alias("__fs_k"),
-        r.value.alias("__fs_val"),
-        F.when(
-            F.col("__fs_e").isNull(),
-            F.array().cast(T.ArrayType(VIOLATION_SCHEMA)),
-        )
-        .otherwise(r.violations)
-        .alias("__fs_viols"),
-    )
-
-    assembled = per_entry.groupBy(_RID).agg(
-        F.first("__fs_row", ignorenulls=True).alias("__fs_row"),
-        F.map_from_entries(
-            F.filter(
-                F.collect_list(
-                    F.struct(
-                        F.col("__fs_k").alias("key"),
-                        F.col("__fs_val").alias("value"),
-                    )
-                ),
-                lambda s: s["key"].isNotNull(),
-            )
-        ).alias("__fs_map"),
-        F.flatten(F.collect_list("__fs_viols")).alias(out_violations),
-        F.first("__fs_isnull").alias("__fs_isnull"),
-        F.count("__fs_k").alias("__fs_n"),
-    )
-    out_t = T.MapType(dtype.keyType, r.dtype)
-    cleaned = (
-        F.when(F.col("__fs_isnull"), F.lit(None).cast(out_t))
-        .when(F.col("__fs_n") == 0, F.map_from_entries(
-            F.array().cast(
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("key", dtype.keyType),
-                            T.StructField("value", r.dtype),
-                        ]
-                    )
-                )
-            )
-        ))
-        .otherwise(F.col("__fs_map").cast(out_t))
-    )
-    viols = F.when(
-        F.col(out_violations).isNull(),
-        F.array().cast(T.ArrayType(VIOLATION_SCHEMA)),
-    ).otherwise(F.col(out_violations))
-    out = assembled.select(
-        *[F.col("__fs_row")[c].alias(c) for c in payload_cols],
-        cleaned.alias(out_value),
-        viols.alias(out_violations),
-    )
-    return out, out_value, out_violations

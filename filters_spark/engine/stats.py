@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from filters_spark.engine.drift import entry_counts
+from filters_spark.engine.drift import collect_census
 
 #: prefix of the narrow stat inputs and of the other raw copies riding
 #: the suite's row pass (NOT "__fs_": validate() prunes its own temps
@@ -318,14 +318,8 @@ def bucket_length_histograms(
     resumable run keeps in its per-bucket census.  One hash aggregation
     keyed by ``(bucket, column, bin)``."""
     entries = [hist_entry(c, hist_bin(df, c, bins, lo, hi)) for c in columns]
-    census: dict[int, dict[str, dict[str, int]]] = {}
-    for r in entry_counts(
-        df.withColumn("__b", bucket_col), entries, by=("__b",)
-    ).collect():
-        census.setdefault(int(r["__b"]), {}).setdefault(r["dim"], {})[
-            r["k"]
-        ] = r["n"]
-    return {b: hist_vectors(c, bins) for b, c in census.items()}
+    census = collect_census(df.withColumn("__b", bucket_col), entries, "__b")
+    return {int(b): hist_vectors(c, bins) for b, c in census.items()}
 
 
 def robust_outliers(

@@ -6,8 +6,10 @@ structured violation rows.
 Pipeline shape (what actually runs):
 
 1. ONE projection pass compiles all row chains (``validate``), carries
-   tiny RAW copies of the key/drift columns, and tags each row with its
-   conv-bucket — no shuffle.
+   tiny RAW copies of the key/drift columns, and tags each row with the
+   bucket of its RAW conv key (the key the uniqueness rollup and the
+   checkpoint's resume predicate use; a chain may clean or null the
+   key) — no shuffle.
 2. Per-bucket verdict aggregation — hash agg keyed by bucket
    (``n_buckets`` groups; map-side combine reduces each task's output to
    ``n_buckets`` rows before the shuffle).
@@ -40,11 +42,12 @@ from pyspark.sql import functions as F
 from filters_spark.core.compiler import validate
 from filters_spark.engine.drift import (
     cat_entry,
+    collect_census,
     dist_profile,
     kl_from_dicts,
     len_entry,
     length_bucket,
-    profile_from_entries,
+    profile_from_census,
     psi_from_dicts,
 )
 from filters_spark.engine.stats import (
@@ -73,7 +76,7 @@ def bucket_of(conv_col, n_buckets: int):
 
 @dataclass
 class SuiteResult:
-    rows: DataFrame  # cleaned rows + _violations + _is_valid + _bucket (lazy)
+    rows: DataFrame  # cleaned rows + _bucket + _violations + _is_valid (lazy)
     verdicts: DataFrame  # per-bucket pass/fail + counters
     stats: DataFrame | None  # long-format column stats
     violations: DataFrame  # exploded violation rows (key, code, message)
@@ -144,6 +147,8 @@ class ValidationSuite:
 
     def row_results(self, df: DataFrame) -> DataFrame:
         extra = self._raw_copy_cols(df)
+        # the bucket of the RAW key, taken before the chains run
+        extra[BUCKET_COL] = self.bucket_fn(F.col(self.conv), self.n_buckets)
         if self.table_rules:
             from filters_spark.engine.rules import _fail, _pred
 
@@ -155,10 +160,7 @@ class ValidationSuite:
                 f = _fail(_pred(expr), null_fails=True).cast("int")
                 fails = f if fails is None else fails + f
             extra[RULEF_COL] = fails
-        rows = validate(df.withColumns(extra), self.rules)
-        return rows.withColumn(
-            BUCKET_COL, self.bucket_fn(F.col(self.conv), self.n_buckets)
-        )
+        return validate(df.withColumns(extra), self.rules)
 
     def verdicts(self, df: DataFrame, rows: DataFrame) -> DataFrame:
         """Per-bucket verdict: row validity + uniqueness + gaplessness.
@@ -329,12 +331,13 @@ class ValidationSuite:
         kinds = stat_kinds(df, self.stat_columns or df.columns)
         result.stats = stat_table(result.keyed.agg(*stat_aggs(kinds)), kinds)
         if baseline is not None:
+            census = collect_census(
+                result.keyed, self._drift_entries(result.keyed)
+            )
             result.metrics = self.drift(
                 df,
                 baseline,
-                cur_profile=profile_from_entries(
-                    result.keyed, self._drift_entries(result.keyed)
-                ),
+                cur_profile=profile_from_census(df.sparkSession, census),
             )
         return result
 

@@ -515,13 +515,21 @@ class FilterRepeater(BaseSpec):
     violation keys carry the element index / map key
     (``test/test_filter_repeater.py:44-49``).
 
-    Compiled as ``F.transform`` with the chain in pure-expression form —
-    fully JVM-side for column-expressible chains.  Chains containing
-    Arrow kernels cannot run inside a lambda; use the explode path
-    (``filters_spark.engine.explode_validate``) for those.
+    The repeater's rule for one element (:meth:`element_key`,
+    :meth:`element`) and the rebuild of the column from the ordered
+    element results (:meth:`assemble`) are shared by its two routes:
+
+    - ``compile`` runs the chain inside an ``F.transform`` lambda, fully
+      JVM-side for column-expressible chains;
+    - an element chain with Arrow kernels cannot run inside a lambda, so
+      ``validate`` sends the repeater through the explode route
+      (``filters_spark.engine.explode``) instead.
+
+    Both give the same cleaned values and the same violations, in
+    element order, ``restrict_keys`` included.
     """
 
-    templates = {CODE_EXTRA_KEY: 'Unexpected key "{actual_key}".'}
+    templates = {CODE_EXTRA_KEY: MSG_EXTRA}
 
     def __init__(self, chain=None, restrict_keys=None, filter_chain=None) -> None:
         # `filter_chain` mirrors the reference keyword (complex.py:110)
@@ -536,119 +544,92 @@ class FilterRepeater(BaseSpec):
         self.chain = as_chain(chain)
         self.restrict_keys = set(restrict_keys) if restrict_keys else None
 
-    def compile(self, value, dtype, ctx, key) -> Step:
-        if isinstance(dtype, T.ArrayType):
-            return self._compile_array(value, dtype, ctx, key)
-        if isinstance(dtype, T.MapType):
-            return self._compile_map(value, dtype, ctx, key)
-        raise CompileError(f"FilterRepeater needs array/map, got {dtype}")
+    @staticmethod
+    def element_key(key: str, k: Column) -> Column:
+        """Violation key of the element at index or map key ``k``."""
+        ks = k.cast("string")
+        return ks if key == "" else F.concat_ws(".", F.lit(key), ks)
 
-    def _compile_array(self, value, dtype, ctx, key) -> Step:
-        elem_t = dtype.elementType
-        chain = self.chain
-        restrict = self.restrict_keys
-
-        def per_element(x, i):
-            elem_key = (
-                i.cast("string")
-                if key == ""
-                else F.concat_ws(".", F.lit(key), i.cast("string"))
+    def element(self, r, k: Column, elem_key: Column, is_map: bool) -> list:
+        """Fields of one element's result struct, from the element
+        chain's result ``r``: ``v`` (cleaned value), ``w`` (violations)
+        and, for a map, ``k`` (its key).  Under ``restrict_keys`` an
+        array element outside the set is NULL and reports ``unexpected``
+        in place; a map entry outside it gets a NULL ``k`` (dropped by
+        :meth:`assemble`) and reports in ``x``, after every entry's own
+        violations (``complex.py:97-112``)."""
+        v, w = r.value, r.violations
+        if self.restrict_keys is None:
+            fields = [v.alias("v"), w.alias("w")]
+            return [k.alias("k"), *fields] if is_map else fields
+        keys = list(self.restrict_keys)
+        allowed = k.isin(keys if is_map else [int(x) for x in keys])
+        unexpected = F.array(
+            F.struct(
+                elem_key.alias("key"),
+                F.lit(CODE_EXTRA_KEY).alias("code"),
+                F.format_string(
+                    MSG_EXTRA.format(actual_key="%s"), k.cast("string")
+                ).alias("message"),
             )
-            r = _chain_expr(chain, x, elem_t, ctx, elem_key)
-            v, w = r.value, r.violations
-            if restrict is not None:
-                allowed = i.isin([int(k) for k in restrict])
-                unexpected = F.array(
-                    F.struct(
-                        elem_key.alias("key"),
-                        F.lit(CODE_EXTRA_KEY).alias("code"),
-                        F.format_string(
-                            'Unexpected key "%s".', i.cast("string")
-                        ).alias("message"),
-                    )
-                )
-                v = F.when(allowed, v)
-                w = F.when(allowed, w).otherwise(unexpected)
-            return F.struct(v.alias("v"), w.alias("w"))
-
-        res = F.transform(value, per_element)
-        values = F.transform(res, lambda s: s["v"])
-        viols = F.flatten(F.transform(res, lambda s: s["w"]))
-        out_t = T.ArrayType(
-            _chain_expr(chain, F.lit(None).cast(elem_t), elem_t, Ctx_probe(), key).dtype
         )
+        if not is_map:
+            return [
+                F.when(allowed, v).alias("v"),
+                F.when(allowed, w).otherwise(unexpected).alias("w"),
+            ]
+        return [
+            F.when(allowed, k).alias("k"),
+            v.alias("v"),
+            F.when(allowed, w).otherwise(_empty_viols()).alias("w"),
+            F.when(allowed, _empty_viols()).otherwise(unexpected).alias("x"),
+        ]
+
+    def assemble(self, elems: Column, is_map: bool) -> tuple[Column, Column]:
+        """``(cleaned column, violations)`` from the array of
+        :meth:`element` structs, in element order."""
+        viols = F.flatten(F.transform(elems, lambda s: s["w"]))
+        if not is_map:
+            return F.transform(elems, lambda s: s["v"]), viols
+        if self.restrict_keys is not None:
+            viols = F.concat(
+                viols, F.flatten(F.transform(elems, lambda s: s["x"]))
+            )
+            elems = F.filter(elems, lambda s: s["k"].isNotNull())
+        entries = F.transform(elems, lambda s: F.struct(s["k"], s["v"]))
+        return F.map_from_entries(entries), viols
+
+    def compile(self, value, dtype, ctx, key) -> Step:
+        is_map = isinstance(dtype, T.MapType)
+        if not (is_map or isinstance(dtype, T.ArrayType)):
+            raise CompileError(f"FilterRepeater needs array/map, got {dtype}")
+        elem_t = dtype.valueType if is_map else dtype.elementType
+        out_t: list = []  # the element chain's output type
+
+        def per_element(e, k):
+            elem_key = self.element_key(key, k)
+            r = _chain_expr(self.chain, e, elem_t, ctx, elem_key)
+            out_t.append(r.dtype)
+            return F.struct(*self.element(r, k, elem_key, is_map))
+
+        if is_map:
+            elems = F.transform(
+                F.map_entries(value), lambda e: per_element(e["value"], e["key"])
+            )
+        else:
+            elems = F.transform(value, per_element)
+        values, viols = self.assemble(elems, is_map)
         return Step(
             value=values,
-            dtype=out_t,
+            dtype=(
+                T.MapType(dtype.keyType, out_t[0])
+                if is_map
+                else T.ArrayType(out_t[0])
+            ),
             invalid=F.size(viols) > 0,
             violations_array=viols,
             keep_value_on_error=True,
         )
-
-    def _compile_map(self, value, dtype, ctx, key) -> Step:
-        val_t = dtype.valueType
-        chain = self.chain
-        restrict = self.restrict_keys
-
-        if restrict is not None:
-            # restricted map keys → 'unexpected' violation + key dropped
-            # (complex.py:97-112)
-            extra = F.filter(
-                F.map_keys(value), lambda k: ~k.isin(list(restrict))
-            )
-            extra_viols = F.transform(
-                extra,
-                lambda k: F.struct(
-                    (
-                        k.cast("string")
-                        if key == ""
-                        else F.concat_ws(".", F.lit(key), k)
-                    ).alias("key"),
-                    F.lit(CODE_EXTRA_KEY).alias("code"),
-                    F.format_string('Unexpected key "%s".', k).alias("message"),
-                ),
-            )
-            value = F.map_filter(value, lambda k, v: k.isin(list(restrict)))
-        else:
-            extra_viols = _empty_viols()
-
-        entries = F.map_entries(value)
-
-        def per_entry(e):
-            entry_key = (
-                e["key"].cast("string")
-                if key == ""
-                else F.concat_ws(".", F.lit(key), e["key"])
-            )
-            r = _chain_expr(chain, e["value"], val_t, ctx, entry_key)
-            return F.struct(
-                e["key"].alias("k"), r.value.alias("v"), r.violations.alias("w")
-            )
-
-        res = F.transform(entries, per_entry)
-        out_elem = _chain_expr(
-            chain, F.lit(None).cast(val_t), val_t, Ctx_probe(), key
-        ).dtype
-        new_map = F.map_from_entries(
-            F.transform(res, lambda s: F.struct(s["k"], s["v"]))
-        )
-        viols = F.concat(
-            F.flatten(F.transform(res, lambda s: s["w"])), extra_viols
-        )
-        return Step(
-            value=new_map,
-            dtype=T.MapType(dtype.keyType, out_elem),
-            invalid=F.size(viols) > 0,
-            violations_array=viols,
-            keep_value_on_error=True,
-        )
-
-
-def Ctx_probe():
-    """Throwaway Ctx for dtype probing (names are never materialised)."""
-    from filters_spark.core.spec import Ctx
-
-    return Ctx(prefix="__probe")
 
 
 class FilterMapper(BaseSpec):

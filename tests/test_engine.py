@@ -868,6 +868,117 @@ def test_resume_rejects_mismatched_bucket_fn(tmp_path, tdf, baseline):
     assert final["completed"] == 8 and final["n_rows"] == tdf.count()
 
 
+def _convs_with_empty_key(spark):
+    """4 conversations of 3 turns; one has ``conv_id = ""``, which the
+    job's ``Required`` rule cleans to NULL."""
+    rows = [
+        (cid, i, "user" if i % 2 == 0 else "assistant", f"turn {i} of {cid!r}",
+         None)
+        for cid in ("", "conv-a", "conv-b", "conv-c")
+        for i in range(3)
+    ]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string",
+    )
+
+
+def test_buckets_come_from_the_raw_key(tmp_path, spark):
+    """Rows are bucketed by their RAW conv key, the key of the uniqueness
+    rollup and of the resume predicate: a chain that nulls the key must
+    not move its rows to NULL's bucket."""
+    from filters_spark.job import default_rules
+
+    df = _convs_with_empty_key(spark)
+    suite = ValidationSuite(default_rules(), n_buckets=8)
+    result = suite.run(df)
+    verdicts = result.verdicts.collect()
+    result.unpersist()
+    raw_buckets = {
+        r["b"] for r in df.select(
+            suite.bucket_fn(F.col("conv_id"), 8).alias("b")
+        ).collect()
+    }
+    assert {r["bucket"] for r in verdicts} == raw_buckets
+    assert all(r["n_convs"] is not None for r in verdicts), verdicts
+    one_shot = {
+        k: sum(r[k] for r in verdicts)
+        for k in ("n_rows", "n_invalid", "dup_keys", "gappy_convs")
+    }
+    assert one_shot == {
+        "n_rows": 12, "n_invalid": 3, "dup_keys": 0, "gappy_convs": 0
+    }
+    manifest = CheckpointManifest(tmp_path / "m")
+    partial = run_resumable(
+        df, suite, manifest, buckets_per_job=2, fail_after_buckets=3
+    )
+    assert partial["aborted"]
+    final = run_resumable(df, suite, manifest, buckets_per_job=2)
+    assert {k: final[k] for k in one_shot} == one_shot
+    assert final["passed"] == all(r["bucket_pass"] for r in verdicts)
+
+
+def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
+    """``python -m filters_spark.job`` (in a subprocess: ``main`` stops
+    its session) over an input with an empty ``conv_id``: the one-shot
+    and the ``--manifest`` run exit 0 with the same verdict rows and
+    counters, and a rerun on the complete manifest validates no
+    group."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    src = str(tmp_path / "input")
+    _convs_with_empty_key(spark).write.parquet(src)
+    env = {
+        **os.environ,
+        "PYTHONPATH": str(Path(__file__).resolve().parent.parent),
+        "PYSPARK_SUBMIT_ARGS": "--master local[2] --driver-memory 1g "
+        "--conf spark.ui.enabled=false pyspark-shell",
+        "SPARK_LOCAL_DIRS": str(tmp_path),
+    }
+
+    def start(out, *extra):
+        log = tmp_path / f"{out}.log"
+        p = subprocess.Popen(
+            [sys.executable, "-m", "filters_spark.job", "--input", src,
+             "--output", str(tmp_path / out), "--n-buckets", "8",
+             "--buckets-per-job", "4", *extra],
+            env=env, stdout=subprocess.PIPE, stderr=log.open("w"), text=True,
+        )
+        return p, log
+
+    def summary(job):
+        p, log = job
+        stdout, _ = p.communicate(timeout=300)
+        assert p.returncode == 0, log.read_text()[-3000:]
+        return json.loads(stdout.strip().splitlines()[-1])
+
+    def verdicts(out):
+        frame = spark.read.parquet(str(tmp_path / out / "verdicts"))
+        return sorted(
+            tuple(sorted(r.asDict().items())) for r in frame.collect()
+        )
+
+    manifest = tmp_path / "manifest"
+    # the two first runs are independent: run them side by side
+    procs = start("one"), start("res", "--manifest", str(manifest))
+    one_shot, resumed = (summary(p) for p in procs)
+    keys = ("n_rows", "n_invalid", "dup_keys", "gappy_convs", "passed")
+    assert {k: resumed[k] for k in keys} == {k: one_shot[k] for k in keys}
+    assert one_shot["n_rows"] == 12 and one_shot["n_invalid"] == 3
+    assert verdicts("res") == verdicts("one")
+    entries = {p.name: p.read_text() for p in manifest.glob("bucket_*.json")}
+    assert len(entries) == 8
+    rerun = summary(start("res", "--manifest", str(manifest)))
+    assert {k: rerun[k] for k in keys} == {k: one_shot[k] for k in keys}
+    assert {
+        p.name: p.read_text() for p in manifest.glob("bucket_*.json")
+    } == entries
+
+
 def test_checkpoint_histogram_state_merges_exactly(tmp_path, tdf, baseline):
     """Fixed-grid histogram state (the PSI drift input) rides the
     manifest and merges by vector addition: a killed-then-resumed job's

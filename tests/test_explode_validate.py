@@ -179,3 +179,74 @@ def test_explode_validate_map_values(spark):
     res = fs.validate(df, {"m": fs.FilterRepeater(chain)})
     got = {r["rid"]: r["m"] for r in res.collect()}
     assert got[0] == {"a": "café", "b": "x\ny"} and got[3] is None
+
+
+@pytest.fixture(scope="module")
+def nfc_df(spark):
+    # NFC, printable text: Unicode() leaves every value as it is, so the
+    # kernel chain and its kernel-free twin clean to the same values
+    return spark.createDataFrame(
+        [
+            (0, ["a", "b", "c"], {"a": "x", "b": "", "c": "z"}),
+            (1, ["", "q", "café"], {"b": "y", "d": "", "a": ""}),
+            (2, [], {}),
+            (3, None, None),
+        ],
+        "rid long, texts array<string>, m map<string,string>",
+    ).cache()
+
+
+def _rows(out, v, w):
+    return {
+        r["rid"]: (r[v], [(x["key"], x["code"], x["message"]) for x in r[w]])
+        for r in out.collect()
+    }
+
+
+@pytest.mark.parametrize("key", ["column", "root"])
+@pytest.mark.parametrize("required", [False, True], ids=["bare", "required"])
+@pytest.mark.parametrize(
+    "col,restrict",
+    [("texts", [0, 2]), ("texts", None), ("m", ["a", "b"]), ("m", None)],
+    ids=["array_restrict", "array", "map_restrict", "map"],
+)
+def test_kernel_repeater_matches_lambda_route(nfc_df, col, restrict, required, key):
+    """A repeater whose element chain needs an Arrow kernel (explode
+    route) gives the cleaned values and the ordered violation lists of
+    the same repeater over its kernel-free twin (``F.transform`` lambda
+    route): element keys, ``restrict_keys`` and order included."""
+    from filters_spark.core.compiler import attach_chain
+    from filters_spark.core.spec import Ctx
+    from filters_spark.engine.explode import explode_repeater
+
+    def rep(normalize):
+        chain = fs.Unicode(normalize=normalize)
+        if required:
+            chain = fs.Required() | chain
+        return fs.FilterRepeater(chain, restrict_keys=restrict)
+
+    if key == "column":
+        kernel = _rows(fs.validate(nfc_df, {col: rep(True)}), col, "_violations")
+        lam = _rows(fs.validate(nfc_df, {col: rep(False)}), col, "_violations")
+    else:
+        if restrict is None:
+            out = explode_validate(nfc_df, col, rep(True).chain, key="")
+        else:
+            out = explode_repeater(nfc_df, col, rep(True), key="", ctx=Ctx())
+        kernel = _rows(*out)
+        lam = _rows(*attach_chain(nfc_df, col, rep(False), key=""))
+    assert kernel == lam
+
+
+def test_explode_route_orders_map_elements(spark):
+    """The explode route orders elements by position alone, so elements
+    of an unorderable type (maps) rebuild in place instead of failing
+    analysis on a whole-struct sort."""
+    df = spark.createDataFrame(
+        [(0, [{"k": "a"}, {"k": "b"}, {"j": "c"}]), (1, None)],
+        "rid long, ms array<map<string,string>>",
+    )
+    out = fs.validate(df, {"ms": fs.FilterRepeater(fs.Call(lambda m: m))})
+    rows = {r["rid"]: r for r in out.collect()}
+    assert rows[0]["ms"] == [{"k": "a"}, {"k": "b"}, {"j": "c"}]
+    assert rows[0]["_violations"] == [] and rows[1]["ms"] is None
