@@ -32,8 +32,11 @@ step's ``(value, err)`` is bound for the next step:
 
 - :func:`attach_chain` — DataFrame-level; binds them to temp columns (kept
   linear, Catalyst collapses the projections), materialises Arrow pandas
-  kernels (``Step.pre``) before the step that reads them, and guards the
-  violations with the fired mask.
+  kernels (``Step.pre``) before the step that reads them, runs a step's
+  DataFrame rewrite (``Step.rewrite``: a ``FilterRepeater`` whose element
+  chain needs a kernel, on the explode route) in its place in the fold,
+  and guards the violations with the fired mask.  :func:`validate`
+  compiles every rule through it.
 - :func:`compile_chain_expr` — pure-expression; binds them inline, so the
   result is usable inside higher-order function lambdas (``F.transform``
   for ``FilterRepeater``), inside structural combinators and on the
@@ -41,7 +44,12 @@ step's ``(value, err)`` is bound for the next step:
   ``concat(part_1, …, part_n)`` (same value): without temp columns the
   guard would repeat every violation condition in the expression tree.
   Pandas kernels are collected in ``ChainResult.pre`` with
-  ``allow_pre=True`` and rejected with :class:`CompileError` otherwise.
+  ``allow_pre=True`` and rejected with :class:`CompileError` otherwise;
+  a DataFrame rewrite is always a :class:`CompileError`.
+
+The chain's key passes unchanged to every step: a column name (``""`` at
+the root), or a Column inside a ``FilterRepeater`` lambda, from which
+structural steps build their children's dotted keys.
 """
 
 from __future__ import annotations
@@ -150,10 +158,11 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
     :class:`ChainResult` and the chain's fired mask (True exactly where
     its violations are non-empty).
 
-    ``on_pre(spec, step)`` receives every step with Arrow kernels before
-    the step's columns are used.  ``bind(**cols)`` returns, in order, the
-    columns later steps read in place of ``cols`` (temp-column
-    references), and the violations are then guarded by the fired mask.
+    ``on_pre(spec, step)`` receives every step with Arrow kernels or a
+    DataFrame rewrite before the step's columns are used.
+    ``bind(**cols)`` returns, in order, the columns later steps read in
+    place of ``cols`` (temp-column references), and the violations are
+    then guarded by the fired mask.
     Without it each step reads the previous step's expressions inline and
     the violations stay unguarded (each part is already empty where it
     must be): the guard would repeat every violation condition in the
@@ -170,8 +179,8 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
     fresh: list[Column] = []  # per step: it reports, no earlier step failed
     partial_possible = False  # True once a keep_value_on_error step ran
     for spec in as_chain(chain).specs:
-        step = spec.compile(value, dtype, ctx, key if isinstance(key, str) else "")
-        if step.pre:
+        step = spec.compile(value, dtype, ctx, key)
+        if step.pre or step.rewrite is not None:
             on_pre(spec, step)
         reported = _step_violations(step, err, value, key)
         if step.violations_array is None:
@@ -236,19 +245,27 @@ def compile_chain_expr(
     """Expression-level compile (no temp columns of its own).
 
     With ``allow_pre=True`` (struct-field chains inside FilterMapper /
-    FilterSwitch — ordinary expressions, not lambdas), Arrow-kernel
-    columns are accumulated in ``ChainResult.pre`` for the caller to
-    materialise in order.  With ``allow_pre=False`` (inside higher-order
-    function lambdas, where UDFs cannot run) kernels are a compile error.
+    FilterSwitch, the explode route, and a FilterRepeater's element chain,
+    whose ``pre`` picks the repeater's route), Arrow-kernel columns are
+    accumulated in ``ChainResult.pre`` for the caller to materialise in
+    order.  With ``allow_pre=False`` kernels are a compile error.  A step
+    with a DataFrame rewrite (a kernel ``FilterRepeater``) is a compile
+    error in both: no expression can host it.
     """
     pre: dict = {}
 
     def on_pre(spec, step):
+        if step.rewrite is not None:
+            raise CompileError(
+                f"{spec!r}: a FilterRepeater whose element chain needs an "
+                "Arrow kernel runs only at the top of a rule chain "
+                "(validate / attach_chain), not inside a FilterRepeater, "
+                "FilterMapper or FilterSwitch"
+            )
         if not allow_pre:
             raise CompileError(
                 f"{type(spec).__name__} needs an Arrow pandas kernel and "
-                "cannot be used in pure-expression position (e.g. inside "
-                "FilterRepeater over arrays); use the explode path instead"
+                "cannot be used in pure-expression position"
             )
         pre.update(step.pre)
 
@@ -269,6 +286,16 @@ def _attach(
 
     def on_pre(spec, step):
         nonlocal df
+        if step.rewrite is not None:
+            if df.isStreaming:
+                # the explode route re-assembles rows in a grouped
+                # aggregation, which an append-mode stream cannot host
+                raise CompileError(
+                    f"{spec!r}: a FilterRepeater whose element chain needs "
+                    "an Arrow kernel cannot validate a streaming DataFrame"
+                )
+            df, names = step.rewrite(df)
+            temps.extend(names)
         # sequential: later kernels may reference earlier pre columns
         for pname, pcol in step.pre.items():
             df = df.withColumn(pname, pcol)
@@ -313,70 +340,15 @@ def attach_chain(
     several).
 
     Each step is materialised as temp columns so the expression tree stays
-    linear; Catalyst collapses the stacked projections into one.
+    linear; Catalyst collapses the stacked projections into one.  A
+    ``FilterRepeater`` whose element chain needs an Arrow kernel runs the
+    explode route (``engine/explode.py``) as its step, anywhere in the
+    chain and any number of times; not on a streaming DataFrame.
     """
     return _attach(
         df, col_name, chain, col_name if key is None else key, ctx or Ctx(),
         out_value, out_violations,
     )
-
-
-def _kernel_repeater_route(df, col_name, chain, ctx):
-    """Detect chains that must route through the explode path: exactly
-    one FilterRepeater whose element chain needs an Arrow kernel
-    (kernels cannot run inside ``F.transform`` lambdas).
-
-    The repeater may sit anywhere in the chain (ADVICE r2: composed
-    chains like ``Required() | FilterRepeater(Unicode())`` must compose
-    like the reference's) — returns ``(prefix_chain, repeater,
-    suffix_chain)`` with the surrounding segments (either may be
-    ``None``), or ``None`` when the normal projection compile covers the
-    chain (no repeater, pure-expression repeater, or non-array input)."""
-    from filters_spark.operators.structural import FilterRepeater
-
-    specs = as_chain(chain).specs
-    reps = [i for i, s in enumerate(specs) if isinstance(s, FilterRepeater)]
-    if len(reps) != 1 or col_name not in df.columns:
-        return None
-    if df.isStreaming:
-        # the explode path re-assembles via a grouped aggregation, which
-        # a streaming plan cannot host in append mode — keep the clear
-        # compile error instead of a confusing runtime one
-        return None
-    i = reps[0]
-    # thread the dtype through the prefix segment (presence/structural
-    # steps may change it); any prefix compile error surfaces later via
-    # the normal path, so bail quietly here
-    dtype = df.schema[col_name].dataType
-    probe = Ctx(prefix="__probe")
-    value = F.col(col_name)
-    try:
-        for s in specs[:i]:
-            st = s.compile(value, dtype, probe, col_name)
-            value, dtype = st.value, st.dtype
-    except CompileError:
-        return None
-    if isinstance(dtype, T.ArrayType):
-        elem_t = dtype.elementType
-    elif isinstance(dtype, T.MapType):
-        elem_t = dtype.valueType
-    else:
-        return None
-    try:
-        compile_chain_expr(
-            specs[i].chain,
-            F.lit(None).cast(elem_t),
-            elem_t,
-            probe,
-            col_name,
-            allow_pre=False,
-        )
-        return None  # pure-expression chain: the F.transform path is fine
-    except CompileError:
-        pass
-    prefix = Chain(specs[:i]) if i else None
-    suffix = Chain(specs[i + 1 :]) if i + 1 < len(specs) else None
-    return prefix, specs[i], suffix
 
 
 def validate(
@@ -401,66 +373,20 @@ def validate(
 
     Scale notes: no shuffle — pure projection; Column-expression kernels
     stay in whole-stage codegen; pandas kernels ride Arrow batches.
-    Exception: a rule containing one ``FilterRepeater(inner)`` over an
-    array or map column where ``inner`` needs an Arrow kernel (kernels
-    cannot run inside higher-order-function lambdas) is routed through
-    the explode route automatically, with the repeater itself, so its
-    element keys and ``restrict_keys`` are the lambda route's — specs
-    before/after the repeater compile as ordinary projection segments
-    with the chain's first-error break preserved across the segment
-    joins; that one rule costs a per-row-id hash aggregation (see
-    ``engine/explode.py``); everything else stays a projection.
+    Exception: a ``FilterRepeater`` whose element chain needs an Arrow
+    kernel (kernels cannot run inside higher-order-function lambdas) is
+    one step of its rule's fold that runs the explode route
+    (``engine/explode.py``); each such repeater costs a per-row-id hash
+    aggregation, and everything else stays a projection.
     """
     ctx = Ctx()
     produced: list[tuple[str, str, str]] = []
     fired: list[Column] = []
     for col_name, chain in rules.items():
-        route = _kernel_repeater_route(df, col_name, chain, ctx)
-        if route is not None:
-            from filters_spark.engine.explode import explode_repeater
-
-            prefix, rep, suffix = route
-            cur, w1 = col_name, None
-            if prefix is not None:
-                df, cur, w1 = attach_chain(
-                    df, col_name, prefix, key=col_name, ctx=ctx
-                )
-            df, v2, w2 = explode_repeater(df, cur, rep, key=col_name, ctx=ctx)
-            v, w = v2, w2
-            if w1 is not None or suffix is not None:
-                if suffix is not None:
-                    df, v3, w3 = attach_chain(
-                        df, v2, suffix, key=col_name, ctx=ctx
-                    )
-                else:
-                    v3, w3 = v2, w2
-                # first-error break across the three segments: a failing
-                # segment freezes its own value/violations, later
-                # segments are suppressed (base.py:462-473 semantics)
-                err1 = (
-                    F.size(F.col(w1)) > 0 if w1 is not None else F.lit(False)
-                )
-                err2 = F.size(F.col(w2)) > 0
-                val = (
-                    F.when(err1, F.col(cur))
-                    .when(err2, F.col(v2))
-                    .otherwise(F.col(v3))
-                )
-                viols = (
-                    F.when(err1, F.col(w1) if w1 is not None else _empty_viols())
-                    .when(err2, F.col(w2))
-                    .otherwise(F.col(w3))
-                )
-                v, w = ctx.name("cleaned"), ctx.name("violset")
-                df = df.withColumns({v: val, w: viols})
-            # the explode path builds its array on every row anyway
-            f = F.size(F.col(w)) > 0
-        else:
-            f = ctx.name("fired")
-            df, v, w = _attach(df, col_name, chain, col_name, ctx, out_fired=f)
-            f = F.col(f)
+        f = ctx.name("fired")
+        df, v, w = _attach(df, col_name, chain, col_name, ctx, out_fired=f)
+        fired.append(F.col(f))
         produced.append((col_name, v, w))
-        fired.append(f)
 
     invalid = _any(fired)
     viols = (

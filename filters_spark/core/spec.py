@@ -106,6 +106,11 @@ class Step:
     #: ``invalid`` are evaluated — used for Arrow pandas kernels so the
     #: UDF runs exactly once per row-batch.
     pre: dict[str, Column] = field(default_factory=dict)
+    #: DataFrame rewrite ``df -> (df, temp column names)`` that writes the
+    #: columns ``value`` / ``violations_array`` read; run before them,
+    #: like ``pre``, and only at the top of a rule chain (a kernel
+    #: ``FilterRepeater``'s explode route).
+    rewrite: typing.Callable | None = None
     #: True if this spec inspects/replaces null inputs (Required,
     #: NotEmpty(allow_none=False), Optional) — the only exceptions to the
     #: None-passes rule (simple.py:971-984, :729-733, :856-858).

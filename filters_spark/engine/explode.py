@@ -5,7 +5,11 @@ kernels (SURVEY.md §2.7, FilterRepeater general path).
 fast path — but Python UDFs cannot run inside higher-order-function
 lambdas, so a repeater whose element chain contains Arrow kernels
 (``Unicode``, ``CaseFold``, ``MaxBytes`` truncation, ...) validates its
-column here, with one core for arrays and maps:
+column here, with one core for arrays and maps.  ``FilterRepeater.compile``
+returns such a repeater as a step whose DataFrame rewrite
+(``Step.rewrite``) calls :func:`explode_repeater`; the chain fold of
+``validate`` / ``attach_chain`` runs it in its place in the rule chain.
+:func:`explode_validate` calls it directly.  The route:
 
     posexplode_outer of the elements (an array as it is, a map through
     ``map_entries``) carrying the row payload → the repeater's own
@@ -35,6 +39,8 @@ different ids for recomputed map tasks and split/merge rows
 incorrectly.  Call sites must hand this route deterministic lineage
 (file scans, cached/checkpointed frames — what ``validate`` sees in
 practice); persist or ``localCheckpoint`` the input first otherwise.
+A second kernel repeater in the same ``validate`` call reads the first
+one's aggregation output, so that hazard applies to it.
 
 Scale shape: explode multiplies rows by mean column length inside the
 map task only; the shuffle carries one pre-merged row per input row

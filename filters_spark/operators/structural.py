@@ -49,11 +49,36 @@ def _empty_viols() -> Column:
     return F.array().cast(_VIOL_ARRAY)
 
 
-def _chain_expr(chain, value, dtype, ctx, key, allow_pre=False):
+def _key_col(key) -> Column:
+    """A violation key as a Column: ``key`` is a name, or a Column
+    inside a ``FilterRepeater`` lambda."""
+    return key if isinstance(key, Column) else F.lit(key)
+
+
+def _sub_key(key, name: str):
+    """Dotted key of the child ``name`` under ``key`` (a Column if
+    ``key`` is one)."""
+    if isinstance(key, Column):
+        return F.concat_ws(".", key, F.lit(name))
+    return f"{key}.{name}" if key else name
+
+
+def _keyed_viol(key, code: str, message: Column) -> Column:
+    """One-element violation array."""
+    return F.array(
+        F.struct(
+            _key_col(key).alias("key"),
+            F.lit(code).alias("code"),
+            message.alias("message"),
+        )
+    )
+
+
+def _chain_expr(chain, value, dtype, ctx, key):
     # local import to avoid a circular module dependency
     from filters_spark.core.compiler import compile_chain_expr
 
-    return compile_chain_expr(chain, value, dtype, ctx, key, allow_pre=allow_pre)
+    return compile_chain_expr(chain, value, dtype, ctx, key, allow_pre=True)
 
 
 # -- Type / Array -----------------------------------------------------------
@@ -336,7 +361,7 @@ class ByteArray(BaseSpec):
                     lambda x, i: F.when(
                         x < 0,
                         F.struct(
-                            F.concat_ws(".", F.lit(key), i.cast("string")).alias("key"),
+                            FilterRepeater.element_key(key, i).alias("key"),
                             F.lit("too_small").alias("code"),
                             F.lit("Value is too small (must be >= 0).").alias(
                                 "message"
@@ -345,7 +370,7 @@ class ByteArray(BaseSpec):
                     ).when(
                         x > 255,
                         F.struct(
-                            F.concat_ws(".", F.lit(key), i.cast("string")).alias("key"),
+                            FilterRepeater.element_key(key, i).alias("key"),
                             F.lit("too_big").alias("code"),
                             F.lit("Value is too large (must be <= 255).").alias(
                                 "message"
@@ -453,7 +478,7 @@ class FilterSwitch(BaseSpec):
         out_dtype = None
         pre: dict = {}
         for case_key, chain in self.cases.items():
-            r = _chain_expr(chain, value, dtype, ctx, key, allow_pre=True)
+            r = _chain_expr(chain, value, dtype, ctx, key)
             if r.pre:
                 pre.update(r.pre)
             if out_dtype is None:
@@ -465,9 +490,7 @@ class FilterSwitch(BaseSpec):
                 )
             results.append((case_key, r))
         if self.default is not None:
-            default_r = _chain_expr(
-                self.default, value, dtype, ctx, key, allow_pre=True
-            )
+            default_r = _chain_expr(self.default, value, dtype, ctx, key)
             if default_r.pre:
                 pre.update(default_r.pre)
             default_value = default_r.value
@@ -475,14 +498,10 @@ class FilterSwitch(BaseSpec):
         else:
             choices = str(sorted(map(str, self.cases.keys())))
             default_value = null_of(out_dtype)
-            default_viols = F.array(
-                F.struct(
-                    F.lit(key).alias("key"),
-                    F.lit("not_valid_choice").alias("code"),
-                    F.lit(
-                        self.render("not_valid_choice", choices=choices)
-                    ).alias("message"),
-                )
+            default_viols = _keyed_viol(
+                key,
+                "not_valid_choice",
+                F.lit(self.render("not_valid_choice", choices=choices)),
             )
         val_expr, viol_expr = None, None
         for case_key, r in results:
@@ -517,13 +536,18 @@ class FilterRepeater(BaseSpec):
 
     The repeater's rule for one element (:meth:`element_key`,
     :meth:`element`) and the rebuild of the column from the ordered
-    element results (:meth:`assemble`) are shared by its two routes:
+    element results (:meth:`assemble`) are shared by its two routes,
+    which ``compile`` picks from the element chain:
 
-    - ``compile`` runs the chain inside an ``F.transform`` lambda, fully
-      JVM-side for column-expressible chains;
+    - column-expressible chains run inside an ``F.transform`` lambda,
+      fully JVM-side, in any position;
     - an element chain with Arrow kernels cannot run inside a lambda, so
-      ``validate`` sends the repeater through the explode route
-      (``filters_spark.engine.explode``) instead.
+      the step instead carries a DataFrame rewrite (``Step.rewrite``)
+      that runs the explode route (``filters_spark.engine.explode``).
+      The chain fold of ``validate`` / ``attach_chain`` runs it in its
+      place, so such repeaters compose with any steps around them; an
+      expression (a lambda, ``FilterMapper``, ``FilterSwitch``) cannot
+      host it and raises :class:`CompileError`.
 
     Both give the same cleaned values and the same violations, in
     element order, ``restrict_keys`` included.
@@ -545,10 +569,13 @@ class FilterRepeater(BaseSpec):
         self.restrict_keys = set(restrict_keys) if restrict_keys else None
 
     @staticmethod
-    def element_key(key: str, k: Column) -> Column:
-        """Violation key of the element at index or map key ``k``."""
+    def element_key(key, k: Column) -> Column:
+        """Violation key of the element at index or map key ``k`` under
+        ``key`` (a name, or a Column inside an enclosing lambda)."""
         ks = k.cast("string")
-        return ks if key == "" else F.concat_ws(".", F.lit(key), ks)
+        if isinstance(key, str) and key == "":
+            return ks
+        return F.concat_ws(".", _key_col(key), ks)
 
     def element(self, r, k: Column, elem_key: Column, is_map: bool) -> list:
         """Fields of one element's result struct, from the element
@@ -564,14 +591,10 @@ class FilterRepeater(BaseSpec):
             return [k.alias("k"), *fields] if is_map else fields
         keys = list(self.restrict_keys)
         allowed = k.isin(keys if is_map else [int(x) for x in keys])
-        unexpected = F.array(
-            F.struct(
-                elem_key.alias("key"),
-                F.lit(CODE_EXTRA_KEY).alias("code"),
-                F.format_string(
-                    MSG_EXTRA.format(actual_key="%s"), k.cast("string")
-                ).alias("message"),
-            )
+        unexpected = _keyed_viol(
+            elem_key,
+            CODE_EXTRA_KEY,
+            F.format_string(MSG_EXTRA.format(actual_key="%s"), k.cast("string")),
         )
         if not is_map:
             return [
@@ -604,12 +627,12 @@ class FilterRepeater(BaseSpec):
         if not (is_map or isinstance(dtype, T.ArrayType)):
             raise CompileError(f"FilterRepeater needs array/map, got {dtype}")
         elem_t = dtype.valueType if is_map else dtype.elementType
-        out_t: list = []  # the element chain's output type
+        results: list = []  # the element chain's compiled result
 
         def per_element(e, k):
             elem_key = self.element_key(key, k)
             r = _chain_expr(self.chain, e, elem_t, ctx, elem_key)
-            out_t.append(r.dtype)
+            results.append(r)
             return F.struct(*self.element(r, k, elem_key, is_map))
 
         if is_map:
@@ -618,16 +641,34 @@ class FilterRepeater(BaseSpec):
             )
         else:
             elems = F.transform(value, per_element)
-        values, viols = self.assemble(elems, is_map)
+        (r,) = results
+        out_t = (
+            T.MapType(dtype.keyType, r.dtype) if is_map else T.ArrayType(r.dtype)
+        )
+        if r.pre:
+            # kernels cannot run in the lambda: the explode route writes
+            # the step's columns
+            v, w = ctx.name("cleaned"), ctx.name("violset")
+
+            def rewrite(df):
+                from filters_spark.engine.explode import explode_repeater
+
+                src = ctx.name("repeated")
+                df = df.withColumn(src, value)
+                df, _, _ = explode_repeater(
+                    df, src, self, key=key, ctx=ctx, out_value=v, out_violations=w
+                )
+                return df, [src, v, w]
+
+            values, viols = F.col(v), F.col(w)
+        else:
+            (values, viols), rewrite = self.assemble(elems, is_map), None
         return Step(
             value=values,
-            dtype=(
-                T.MapType(dtype.keyType, out_t[0])
-                if is_map
-                else T.ArrayType(out_t[0])
-            ),
+            dtype=out_t,
             invalid=F.size(viols) > 0,
             violations_array=viols,
+            rewrite=rewrite,
             keep_value_on_error=True,
         )
 
@@ -675,22 +716,17 @@ class FilterMapper(BaseSpec):
         pre: dict = {}
 
         for k, chain in self.filter_map.items():
-            sub_key = f"{key}.{k}" if key else k
+            sub_key = _sub_key(key, k)
             if k in dtype.names:
                 field_t = dtype[k].dataType
                 field_v = value[k]
             else:
                 if not self._allowed(self.allow_missing_keys, k):
+                    message = F.format_string(
+                        MSG_MISSING.format(key="%s"), _key_col(sub_key)
+                    )
                     viol_arrays.append(
-                        F.array(
-                            F.struct(
-                                F.lit(sub_key).alias("key"),
-                                F.lit(CODE_MISSING_KEY).alias("code"),
-                                F.lit(MSG_MISSING.format(key=sub_key)).alias(
-                                    "message"
-                                ),
-                            )
-                        )
+                        _keyed_viol(sub_key, CODE_MISSING_KEY, message)
                     )
                     out_cols.append(F.lit(None).cast("string").alias(k))
                     out_fields.append(T.StructField(k, T.StringType()))
@@ -703,7 +739,7 @@ class FilterMapper(BaseSpec):
                 out_cols.append(field_v.alias(k))
                 out_fields.append(T.StructField(k, field_t))
                 continue
-            r = _chain_expr(chain, field_v, field_t, ctx, sub_key, allow_pre=True)
+            r = _chain_expr(chain, field_v, field_t, ctx, sub_key)
             if r.pre:
                 pre.update(r.pre)
             out_cols.append(r.value.alias(k))
@@ -712,21 +748,13 @@ class FilterMapper(BaseSpec):
 
         extras = [n for n in dtype.names if n not in self.filter_map]
         for k in sorted(extras):
-            sub_key = f"{key}.{k}" if key else k
             if self._allowed(self.allow_extra_keys, k):
                 out_cols.append(value[k].alias(k))
                 out_fields.append(T.StructField(k, dtype[k].dataType))
             else:
+                message = F.lit(MSG_EXTRA.format(actual_key=k))
                 viol_arrays.append(
-                    F.array(
-                        F.struct(
-                            F.lit(sub_key).alias("key"),
-                            F.lit(CODE_EXTRA_KEY).alias("code"),
-                            F.lit(MSG_EXTRA.format(actual_key=k)).alias(
-                                "message"
-                            ),
-                        )
-                    )
+                    _keyed_viol(_sub_key(key, k), CODE_EXTRA_KEY, message)
                 )
 
         viols = (

@@ -19,16 +19,17 @@ from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import filters_spark as fs
 from filters_spark.core.compiler import (
     ChainResult,
     _empty_viols,
-    _kernel_repeater_route,
     _step_invalid,
+    compile_chain_expr,
     make_violation_col,
 )
-from filters_spark.core.spec import CompileError, Ctx, as_chain, null_of
+from filters_spark.core.spec import Chain, CompileError, Ctx, as_chain, null_of
 
 # -- reference: the per-step violation fold ---------------------------------
 
@@ -103,6 +104,64 @@ def ref_attach_chain(df, col_name, chain, *, key, ctx):
         partial_possible = partial_possible or step.keep_value_on_error
     v, w = ctx.name("cleaned"), ctx.name("violset")
     return df.withColumns({v: value, w: viols}).drop(*temps), v, w
+
+
+def _kernel_repeater_route(df, col_name, chain, ctx):
+    """Detect chains that must route through the explode path: exactly
+    one FilterRepeater whose element chain needs an Arrow kernel
+    (kernels cannot run inside ``F.transform`` lambdas).
+
+    The repeater may sit anywhere in the chain (ADVICE r2: composed
+    chains like ``Required() | FilterRepeater(Unicode())`` must compose
+    like the reference's) — returns ``(prefix_chain, repeater,
+    suffix_chain)`` with the surrounding segments (either may be
+    ``None``), or ``None`` when the normal projection compile covers the
+    chain (no repeater, pure-expression repeater, or non-array input)."""
+    from filters_spark.operators.structural import FilterRepeater
+
+    specs = as_chain(chain).specs
+    reps = [i for i, s in enumerate(specs) if isinstance(s, FilterRepeater)]
+    if len(reps) != 1 or col_name not in df.columns:
+        return None
+    if df.isStreaming:
+        # the explode path re-assembles via a grouped aggregation, which
+        # a streaming plan cannot host in append mode — keep the clear
+        # compile error instead of a confusing runtime one
+        return None
+    i = reps[0]
+    # thread the dtype through the prefix segment (presence/structural
+    # steps may change it); any prefix compile error surfaces later via
+    # the normal path, so bail quietly here
+    dtype = df.schema[col_name].dataType
+    probe = Ctx(prefix="__probe")
+    value = F.col(col_name)
+    try:
+        for s in specs[:i]:
+            st = s.compile(value, dtype, probe, col_name)
+            value, dtype = st.value, st.dtype
+    except CompileError:
+        return None
+    if isinstance(dtype, T.ArrayType):
+        elem_t = dtype.elementType
+    elif isinstance(dtype, T.MapType):
+        elem_t = dtype.valueType
+    else:
+        return None
+    try:
+        compile_chain_expr(
+            specs[i].chain,
+            F.lit(None).cast(elem_t),
+            elem_t,
+            probe,
+            col_name,
+            allow_pre=False,
+        )
+        return None  # pure-expression chain: the F.transform path is fine
+    except CompileError:
+        pass
+    prefix = Chain(specs[:i]) if i else None
+    suffix = Chain(specs[i + 1 :]) if i + 1 < len(specs) else None
+    return prefix, specs[i], suffix
 
 
 def _ref_validate(df, rules):

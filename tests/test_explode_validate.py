@@ -203,18 +203,21 @@ def _rows(out, v, w):
     }
 
 
-@pytest.mark.parametrize("key", ["column", "root"])
+@pytest.mark.parametrize("route", ["column", "root", "attach", "two"])
 @pytest.mark.parametrize("required", [False, True], ids=["bare", "required"])
 @pytest.mark.parametrize(
     "col,restrict",
     [("texts", [0, 2]), ("texts", None), ("m", ["a", "b"]), ("m", None)],
     ids=["array_restrict", "array", "map_restrict", "map"],
 )
-def test_kernel_repeater_matches_lambda_route(nfc_df, col, restrict, required, key):
+def test_kernel_repeater_matches_lambda_route(nfc_df, col, restrict, required, route):
     """A repeater whose element chain needs an Arrow kernel (explode
     route) gives the cleaned values and the ordered violation lists of
     the same repeater over its kernel-free twin (``F.transform`` lambda
-    route): element keys, ``restrict_keys`` and order included."""
+    route): element keys, ``restrict_keys`` and order included.  Routes:
+    ``validate`` under the column name, ``explode_validate`` /
+    ``explode_repeater`` and ``attach_chain`` under the root key, and a
+    ``validate`` chain of two such repeaters."""
     from filters_spark.core.compiler import attach_chain
     from filters_spark.core.spec import Ctx
     from filters_spark.engine.explode import explode_repeater
@@ -225,9 +228,16 @@ def test_kernel_repeater_matches_lambda_route(nfc_df, col, restrict, required, k
             chain = fs.Required() | chain
         return fs.FilterRepeater(chain, restrict_keys=restrict)
 
-    if key == "column":
+    if route == "column":
         kernel = _rows(fs.validate(nfc_df, {col: rep(True)}), col, "_violations")
         lam = _rows(fs.validate(nfc_df, {col: rep(False)}), col, "_violations")
+    elif route == "two":
+        twice = {n: {col: rep(n) | rep(n)} for n in (True, False)}
+        kernel = _rows(fs.validate(nfc_df, twice[True]), col, "_violations")
+        lam = _rows(fs.validate(nfc_df, twice[False]), col, "_violations")
+    elif route == "attach":
+        kernel = _rows(*attach_chain(nfc_df, col, rep(True), key=""))
+        lam = _rows(*attach_chain(nfc_df, col, rep(False), key=""))
     else:
         if restrict is None:
             out = explode_validate(nfc_df, col, rep(True).chain, key="")
@@ -250,3 +260,27 @@ def test_explode_route_orders_map_elements(spark):
     rows = {r["rid"]: r for r in out.collect()}
     assert rows[0]["ms"] == [{"k": "a"}, {"k": "b"}, {"j": "c"}]
     assert rows[0]["_violations"] == [] and rows[1]["ms"] is None
+
+
+def test_kernel_repeater_inside_an_expression_is_a_compile_error(arr_df):
+    """A kernel repeater's explode route rewrites the DataFrame, which no
+    expression (a FilterMapper field, a lambda) can host."""
+    from filters_spark.core.spec import CompileError
+
+    df = arr_df.select(F.struct(F.col("texts").alias("xs")).alias("s"))
+    rule = {"s": fs.FilterMapper({"xs": fs.FilterRepeater(fs.Unicode())})}
+    with pytest.raises(CompileError, match="top of a rule chain"):
+        fs.validate(df, rule)
+
+
+def test_kernel_repeater_on_a_stream_is_a_compile_error(spark):
+    """The explode route re-assembles rows in a grouped aggregation,
+    which an append-mode stream cannot host: compiling it fails before
+    any query starts."""
+    from filters_spark.core.spec import CompileError
+
+    stream = spark.readStream.format("rate").load().select(
+        F.array(F.col("value").cast("string")).alias("texts")
+    )
+    with pytest.raises(CompileError, match="streaming"):
+        fs.validate(stream, {"texts": fs.FilterRepeater(fs.Unicode())})

@@ -340,3 +340,40 @@ def test_int_and_decimal_overflow_is_invalid_not_crash(spark):
     }
     assert got3[0] == (None, ["not_numeric"])
     assert got3[1] == (5, [])
+
+
+@pytest.mark.parametrize(
+    "col,rule,key",
+    [
+        ("a", fs.FilterRepeater(fs.FilterRepeater(fs.Max(100))), "a.0.1"),
+        ("t", fs.FilterRepeater(fs.FilterMapper({"n": fs.Max(100)})), "t.0.n"),
+        (
+            "t",
+            fs.FilterRepeater(fs.FilterSwitch("n", {7: fs.Required()})),
+            "t.0",
+        ),
+        (
+            "t",
+            fs.FilterRepeater(
+                fs.FilterMapper({"n": None, "z": None}, allow_missing_keys=False)
+            ),
+            "t.0.z",
+        ),
+        ("s", fs.FilterMapper({"xs": fs.FilterRepeater(fs.Max(100))}), "s.xs.1"),
+    ],
+    ids=["repeater_in_repeater", "mapper_in_repeater", "switch_in_repeater",
+         "missing_in_repeater", "repeater_in_mapper"],
+)
+def test_nested_structural_keys_keep_their_parent_key(spark, col, rule, key):
+    """A structural step nested in a FilterRepeater builds its children's
+    keys, and the messages that name them, from the element key
+    (``a.0.1``), not from an empty one."""
+    df = spark.createDataFrame(
+        [([[1, 500], [7]], [{"n": 500}], {"xs": [3, 500]})],
+        "a array<array<int>>, t array<struct<n:int>>, s struct<xs:array<int>>",
+    )
+    (row,) = fs.validate(df, {col: rule}).collect()
+    assert [v["key"] for v in row["_violations"]] == [key]
+    for v in row["_violations"]:
+        if v["code"] == "missing":
+            assert v["message"] == f"{key} is required."
