@@ -176,8 +176,9 @@ class Type(BaseSpec):
             ok_spark += _TYPE_MAP.get(py_t, ())
         if ok_spark and not isinstance(dtype, ok_spark):
             incoming = _SPARK_TO_PY.get(type(dtype), object)
+            what = f"column {key!r}" if isinstance(key, str) else "an element"
             raise CompileError(
-                f"column {key!r} has Spark type {dtype}, which cannot hold "
+                f"{what} has Spark type {dtype}, which cannot hold "
                 f"{self.get_allowed_type_names(aliased=False)} (Type filter "
                 f"would reject every row: "
                 f"{self.render_wrong_type(incoming)})"

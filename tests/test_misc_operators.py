@@ -377,3 +377,15 @@ def test_nested_structural_keys_keep_their_parent_key(spark, col, rule, key):
     for v in row["_violations"]:
         if v["code"] == "missing":
             assert v["message"] == f"{key} is required."
+
+
+def test_bytearray_root_key_is_the_bare_index(spark):
+    """Under the root key ``""`` ByteArray keys an out-of-range byte by
+    its bare index, as FilterRepeater does (``1``, not ``.1``)."""
+    from filters_spark.core.compiler import attach_chain
+
+    df = spark.createDataFrame([([1, 300, -2],)], "a array<int>")
+    out, _, w = attach_chain(df, "a", fs.ByteArray(), key="")
+    assert [(v["key"], v["code"]) for v in out.collect()[0][w]] == [
+        ("1", "too_big"), ("2", "too_small")
+    ]
