@@ -159,12 +159,10 @@ def bench_queries(
         "sessionize",
         "sessionize_skew",
         "interval_join_mixed",
-        # new r5 surface: fastText scoring (Arrow mapInPandas), corpus-
-        # fit quality score, violation-value reporting, and one REAL
-        # Structured Streaming job driven to completion (its wall
-        # includes stream startup/teardown — that is the honest cost)
-        "lang_id_fasttext",
-        "classify_fasttext",
+        # new r5 surface: corpus-fit quality score, violation-value
+        # reporting, and one REAL Structured Streaming job driven to
+        # completion (its wall includes stream startup/teardown — that
+        # is the honest cost)
         "unigram_logprob",
         "violation_values",
         "streaming_sessionize",

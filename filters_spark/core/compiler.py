@@ -63,21 +63,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from filters_spark.core.spec import (
-    VIOLATION_SCHEMA,
     BaseSpec,
     Chain,
     CompileError,
     Ctx,
+    _empty_viols,
     as_chain,
     null_of,
 )
-
-_VIOL_ARRAY = T.ArrayType(VIOLATION_SCHEMA)
-
-
-def _empty_viols() -> Column:
-    return F.array().cast(_VIOL_ARRAY)
-
 
 def _any(masks: list[Column]) -> Column:
     return functools.reduce(operator.or_, masks) if masks else F.lit(False)

@@ -41,6 +41,13 @@ VIOLATION_SCHEMA = T.StructType(
     ]
 )
 
+_VIOL_ARRAY = T.ArrayType(VIOLATION_SCHEMA)
+
+
+def _empty_viols() -> Column:
+    return F.array().cast(_VIOL_ARRAY)
+
+
 CODE_EXCEPTION = "exception"  # base.py:69
 MSG_EXCEPTION = "An error occurred while processing this value."  # base.py:72
 

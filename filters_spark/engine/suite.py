@@ -162,7 +162,7 @@ class ValidationSuite:
             extra[RULEF_COL] = fails
         return validate(df.withColumns(extra), self.rules)
 
-    def verdicts(self, df: DataFrame, rows: DataFrame) -> DataFrame:
+    def verdicts(self, rows: DataFrame) -> DataFrame:
         """Per-bucket verdict: row validity + uniqueness + gaplessness.
 
         Uniqueness and gaplessness derive from ONE aggregation cascade
@@ -369,7 +369,7 @@ class ValidationSuite:
             *rule_cols,
             *raw_cols,
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        verdicts = self.verdicts(df, keyed)
+        verdicts = self.verdicts(keyed)
         violations = (
             keyed.select(
                 self.conv,

@@ -99,7 +99,10 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if not args.manifest and (args.sketch_cols or args.hist_cols):
+        parser.error("--sketch-cols and --hist-cols need --manifest")
     spark = (
         SparkSession.builder.appName("filters_spark_validation")
         .config("spark.sql.adaptive.enabled", "true")

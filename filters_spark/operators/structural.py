@@ -26,11 +26,11 @@ from filters_spark.core.arrow import scalar_kernel
 from filters_spark.core.spec import (
     CODE_EXCEPTION,
     MSG_EXCEPTION,
-    VIOLATION_SCHEMA,
     BaseSpec,
     CompileError,
     Step,
     Violation,
+    _empty_viols,
     as_chain,
     null_of,
 )
@@ -41,13 +41,6 @@ CODE_WRONG_TYPE = "wrong_type"  # base.py:546
 
 MSG_MISSING = "{key} is required."
 MSG_EXTRA = 'Unexpected key "{actual_key}".'
-
-_VIOL_ARRAY = T.ArrayType(VIOLATION_SCHEMA)
-
-
-def _empty_viols() -> Column:
-    return F.array().cast(_VIOL_ARRAY)
-
 
 def _key_col(key) -> Column:
     """A violation key as a Column: ``key`` is a name, or a Column

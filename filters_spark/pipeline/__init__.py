@@ -61,10 +61,8 @@ from filters_spark.pipeline.similarity import (
     srp_topk,
 )
 from filters_spark.pipeline.textstats import (
-    classify_fasttext,
     fingerprint,
     lang_id,
-    lang_id_fasttext,
     pmi_collocations,
     quality_score,
     tfidf_top_terms,
@@ -76,9 +74,6 @@ from filters_spark.pipeline.multimodal import (
     MEDIA_META_SCHEMA,
     attach_media_meta,
     byte_features,
-    decode_media,
-    resize_media,
-    sample_frames,
 )
 from filters_spark.pipeline.tokenize import (
     bpe_encode,
@@ -103,7 +98,6 @@ __all__ = [
     "byte_features",
     "cosine_sim",
     "cosine_topk",
-    "decode_media",
     "dedup_groups",
     "dedup_resolve",
     "deterministic_sample",
@@ -119,8 +113,6 @@ __all__ = [
     "interval_join",
     "jaccard_pairs",
     "lang_id",
-    "lang_id_fasttext",
-    "classify_fasttext",
     "minhash_lsh_pairs",
     "minhash_signatures",
     "ngram_overlap",
@@ -128,7 +120,6 @@ __all__ = [
     "redact_pii",
     "release",
     "remove_repeated_spans",
-    "sample_frames",
     "repeated_spans",
     "ivf_assign",
     "ivf_centroids",
@@ -138,7 +129,6 @@ __all__ = [
     "pack_sequences",
     "pmi_collocations",
     "repetition_stats",
-    "resize_media",
     "sessionize",
     "shard_column",
     "simhash",

@@ -1,40 +1,24 @@
-"""Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
+"""Constraint checks on binary media columns, with no codec.
 
-Design for image/audio/video at 100 TB: media rides as an opaque
-``BinaryType`` column (or an object-store URI for payloads beyond the
-row-group sweet spot) next to a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched pandas
-functions over ``mapInPandas`` so bytes cross the JVM↔Python boundary
-once per batch, never per row.
+Media rides as an opaque ``BinaryType`` column next to a typed metadata
+struct.  What is checked is the container, never the pixels or samples:
 
-Container HEADERS are parsed for real (:func:`parse_media_header` —
-pure-stdlib ``struct`` parsing of PNG / JPEG / GIF / BMP / WAV / MP4
-signatures and dimension fields; no PIL/ffmpeg needed), and every
-common image/audio container is DECODED for real, pure stdlib+numpy:
-PNG down to pixels (:func:`decode_png_pixels` — ``zlib`` inflate +
-per-scanline defilter + Adam7 deinterlace, color types 0/2/3/4/6),
-GIF down to pixels (:func:`decode_gif_pixels` — variable-width LZW +
-color-table expansion + 4-pass deinterlace), JPEG down to pixels
-(:func:`decode_jpeg_pixels` — canonical Huffman entropy decode,
-dequant, matrix IDCT, chroma upsample, YCbCr→RGB; BOTH baseline and
-full progressive incl. successive approximation and EOB runs), BMP
-(:func:`decode_bmp_pixels`) and WAV down to samples
-(:func:`decode_wav_samples` — PCM 8/16/24/32 + float32/64), so
-``decode_media``'s feature vector holds actual luminance statistics
-for full images and actual RMS/zero-crossing statistics for WAVs.
-Video: :func:`sample_frames` demuxes real frame BYTES via the MP4
-sample tables or the RIFF-AVI ``movi`` walk, and MJPEG frames (AVI
-``MJPG``, QuickTime ``jpeg``) decode to PIXELS through the JPEG
-decoder — only *inter-frame* codec pixel decode (H.264 etc.) stays out
-of scope (no codec libs in this container).  ``strict=True`` raises
-only for genuinely unknown bytes.
+- :func:`attach_media_meta` adds ``media_meta`` (media type sniffed from
+  the magic bytes, byte length, md5 digest) as pure JVM expressions, so
+  it runs at scan speed;
+- :func:`parse_media_header` reads a container header with stdlib
+  ``struct`` (PNG / JPEG / GIF / BMP / WAV / RIFF-AVI / MP4-MOV) and
+  returns its media type, dimensions and frame count, or ``None`` for
+  bytes it does not recognise;
+- :func:`byte_features` computes a byte-value histogram per payload in
+  one ``mapInPandas`` pass, a cheap near-duplicate or corruption signal.
+
+Pixel or sample decoding and model inference are out of scope.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -44,17 +28,8 @@ from pyspark.sql import types as T
 
 __all__ = [
     "MEDIA_META_SCHEMA",
-    "DECODED_SCHEMA",
     "attach_media_meta",
     "parse_media_header",
-    "decode_png_pixels",
-    "decode_gif_pixels",
-    "decode_jpeg_pixels",
-    "decode_bmp_pixels",
-    "decode_wav_samples",
-    "decode_media",
-    "resize_media",
-    "sample_frames",
     "byte_features",
 ]
 
@@ -64,18 +39,6 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("media_type", T.StringType()),  # image|audio|video|unknown
         T.StructField("byte_len", T.LongType()),
         T.StructField("digest", T.StringType()),  # md5 hex of payload
-    ]
-)
-
-#: decode output schema (fixed regardless of codec)
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.DoubleType())),
     ]
 )
 
@@ -133,8 +96,12 @@ def parse_media_header(
     - **WAV** (RIFF/WAVE): chunk walk; ``width`` reports channels,
       ``height`` the sample rate, ``n_frames`` the sample-frame count
       from the data chunk (documented mapping onto the fixed schema).
-    - **MP4/MOV** (ftyp): recognised as ``video``; dimensions need a
-      moov/tkhd demux, out of header-parse scope → zeros.
+    - **RIFF-AVI**: ``avih`` width/height and total frames, or the
+      count of stream-0 frame chunks when ``avih`` reports none
+      (:func:`_avi_info`).
+    - **MP4/MOV** (ftyp): the first video track's ``tkhd`` size and
+      ``stsz`` sample count (:func:`_mp4_video_meta`); zeros when there
+      is no ``moov``.
     """
     p = payload
     if p.startswith(b"\x89PNG\r\n\x1a\n") and len(p) >= 24 and p[12:16] == b"IHDR":
@@ -168,7 +135,7 @@ def parse_media_header(
         info = _avi_info(p)
         if info is None:
             return None
-        w, h, nf, _handler, _frames = info
+        w, h, nf = info
         return "video", w, h, nf
     if p.startswith(b"RIFF") and p[8:12] == b"WAVE":
         i, channels, rate, block_align, data_size = 12, 0, 0, 0, 0
@@ -190,24 +157,18 @@ def parse_media_header(
 
 
 def _avi_info(p: bytes):
-    """REAL RIFF-AVI parse — pure stdlib ``struct``, no demux library
-    (OpenDML/AVI RIFF spec): walks the chunk tree, reads ``avih``
-    (dwTotalFrames at +16, dwWidth/dwHeight at +32/+36), the first
-    ``vids`` stream's ``strh`` fccHandler, and collects the stream-0
-    video frame chunks (``00dc``/``00db``, including ones nested in
-    ``rec `` grouping lists) as absolute ``(offset, size)`` ranges.
+    """RIFF-AVI header parse — pure stdlib ``struct`` (OpenDML/AVI RIFF
+    spec): walks the chunk tree, reads ``avih`` (dwTotalFrames at +16,
+    dwWidth/dwHeight at +32/+36) and counts the stream-0 video frame
+    chunks (``00dc``/``00db``, including ones nested in ``rec ``
+    grouping lists).
 
-    Returns ``(width, height, n_frames, handler, frames)`` or ``None``
-    when the payload is not a RIFF-AVI.  For MJPEG AVIs each frame
-    chunk is a complete JPEG bitstream — :func:`decode_jpeg_pixels`
-    decodes it directly (the round-3 "video pixel decode" gap, closed
-    for the one codec that is stdlib-tractable)."""
+    Returns ``(width, height, n_frames)`` — ``n_frames`` falls back to
+    the chunk count when ``avih`` reports 0 — or ``None`` when the
+    payload is not a RIFF-AVI or has neither frames nor dimensions."""
     if not (p.startswith(b"RIFF") and p[8:12] == b"AVI "):
         return None
-    width = height = total = 0
-    handler = b""
-    frames: list[tuple[int, int]] = []
-    in_vids = False
+    width = height = total = n_chunks = 0
     # iterative walk: (start, end, in_movi) frames of LIST bodies
     stack = [(12, len(p), False)]
     while stack:
@@ -232,20 +193,15 @@ def _avi_info(p: bytes):
                 width, height = struct.unpack(
                     "<II", p[body + 32 : body + 40]
                 )
-            elif cid == b"strh" and size >= 8:
-                if p[body : body + 4] == b"vids" and not in_vids:
-                    handler = p[body + 4 : body + 8]
-                    in_vids = True
             elif in_movi and cid[:2] == b"00" and cid[2:4] in (
                 b"dc",
                 b"db",
             ):
-                frames.append((body, size))
+                n_chunks += 1
             i = bend + (size & 1)  # chunks are word-aligned
-    if not frames and not (width or height):
+    if not n_chunks and not (width or height):
         return None
-    frames.sort()  # stack pops lists LIFO; file order is authoritative
-    return width, height, (total or len(frames)), handler, frames
+    return width, height, (total or n_chunks)
 
 
 _MP4_CONTAINERS = frozenset(
@@ -273,102 +229,6 @@ def _mp4_boxes(p: bytes, start: int, end: int):
             return  # corrupt/truncated: stop the walk
         yield btype, body, i + size
         i += size
-
-
-def _mp4_sample_table(p: bytes):
-    """REAL ISO-BMFF sample-table walk for the first video track: parse
-    ``stsz`` (per-sample sizes), ``stsc`` (sample→chunk runs) and
-    ``stco``/``co64`` (chunk offsets) and resolve every sample to its
-    absolute ``(offset, size)`` byte range in the file (ISO 14496-12
-    §8.7).  Returns a list of ``(offset, size)`` per sample, or ``None``
-    when any table is missing/corrupt.  This is the demuxer's addressing
-    half — frame BYTES come out for real; only codec decode is out of
-    scope here."""
-    best = None
-
-    def walk_trak(b0: int, b1: int):
-        nonlocal best
-        handler = b""
-        sizes = None
-        stsc = None
-        offsets = None
-        stack = [(b0, b1)]
-        while stack:
-            s0, s1 = stack.pop()
-            for btype, c0, c1 in _mp4_boxes(p, s0, s1):
-                if btype in _MP4_CONTAINERS:
-                    stack.append((c0, c1))
-                elif btype == b"hdlr" and c1 - c0 >= 12:
-                    handler = p[c0 + 8 : c0 + 12]
-                elif btype == b"stsz" and c1 - c0 >= 12:
-                    fixed, count = struct.unpack(
-                        ">II", p[c0 + 4 : c0 + 12]
-                    )
-                    if fixed:
-                        sizes = [fixed] * count
-                    else:
-                        if c1 - c0 < 12 + 4 * count:
-                            return
-                        sizes = list(
-                            struct.unpack(
-                                f">{count}I", p[c0 + 12 : c0 + 12 + 4 * count]
-                            )
-                        )
-                elif btype == b"stsc" and c1 - c0 >= 8:
-                    (n,) = struct.unpack(">I", p[c0 + 4 : c0 + 8])
-                    if c1 - c0 < 8 + 12 * n:
-                        return
-                    stsc = [
-                        struct.unpack(
-                            ">III", p[c0 + 8 + 12 * i : c0 + 20 + 12 * i]
-                        )
-                        for i in range(n)
-                    ]
-                elif btype in (b"stco", b"co64") and c1 - c0 >= 8:
-                    (n,) = struct.unpack(">I", p[c0 + 4 : c0 + 8])
-                    width = 4 if btype == b"stco" else 8
-                    if c1 - c0 < 8 + width * n:
-                        return
-                    fmt = ">" + ("I" if width == 4 else "Q") * n
-                    offsets = list(
-                        struct.unpack(
-                            fmt, p[c0 + 8 : c0 + 8 + width * n]
-                        )
-                    )
-        if sizes is None or stsc is None or offsets is None or not stsc:
-            return
-        # expand stsc runs: entry (first_chunk, samples_per_chunk, _)
-        # applies through the next entry's first_chunk - 1
-        table = []
-        sample = 0
-        n_chunks = len(offsets)
-        for i, (first, per, _desc) in enumerate(stsc):
-            last = (
-                stsc[i + 1][0] - 1 if i + 1 < len(stsc) else n_chunks
-            )
-            for chunk in range(first, last + 1):
-                if chunk > n_chunks:
-                    break
-                off = offsets[chunk - 1]
-                for _ in range(per):
-                    if sample >= len(sizes):
-                        break
-                    table.append((off, sizes[sample]))
-                    off += sizes[sample]
-                    sample += 1
-        if sample < len(sizes):
-            return  # tables disagree: refuse rather than mis-slice
-        if handler == b"vide" or best is None:
-            best = (handler, table)
-
-    for btype, b0, b1 in _mp4_boxes(p, 0, len(p)):
-        if btype == b"moov":
-            for ctype, c0, c1 in _mp4_boxes(p, b0, b1):
-                if ctype == b"trak":
-                    walk_trak(c0, c1)
-    if best is None:
-        return None
-    return best[1]
 
 
 def _mp4_video_meta(p: bytes) -> tuple[int, int, int]:
@@ -417,1240 +277,6 @@ def _mp4_video_meta(p: bytes) -> tuple[int, int, int]:
         if w and h:
             return w, h, frames
     return 0, 0, 0
-
-
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color type → samples/px
-
-
-def _png_defilter(raw: bytes, offset: int, w: int, h: int, ch: int):
-    """Defilter ``h`` scanlines of ``w`` pixels starting at ``offset``
-    (PNG spec §9: None / Sub / Up / Average / Paeth).  Returns
-    ``(rows, next_offset)`` with ``rows`` shaped ``(h, w*ch)``, or
-    ``None`` on truncation / unknown filter.  The prior-scanline
-    dependency forces the row loop; each filter is vectorised across
-    the row via numpy."""
-    import numpy as np
-
-    stride = w * ch
-    if len(raw) < offset + h * (stride + 1):
-        return None
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for r in range(h):
-        base = offset + r * (stride + 1)
-        ftype = raw[base]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=base + 1
-        ).astype(np.int32)
-        if ftype == 0:
-            cur = line
-        elif ftype == 1:  # Sub: left neighbour, sequential in x
-            cur = line.copy()
-            for x in range(ch, stride):
-                cur[x] = (cur[x] + cur[x - ch]) & 0xFF
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
-        elif ftype == 3:  # Average
-            cur = line.copy()
-            for x in range(stride):
-                left = cur[x - ch] if x >= ch else 0
-                cur[x] = (cur[x] + ((left + int(prev[x])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            cur = line.copy()
-            for x in range(stride):
-                a = int(cur[x - ch]) if x >= ch else 0
-                b = int(prev[x])
-                c = int(prev[x - ch]) if x >= ch else 0
-                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                cur[x] = (cur[x] + pred) & 0xFF
-        else:
-            return None
-        out[r] = cur.astype(np.uint8)
-        prev = out[r]
-    return out, offset + h * (stride + 1)
-
-
-#: Adam7 pass grid: (x0, y0, dx, dy) per pass (PNG spec §8.2)
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def decode_png_pixels(payload: bytes):
-    """FULL pure-stdlib PNG pixel decode (no PIL): ``zlib`` inflate of
-    the concatenated IDAT stream + per-scanline defilter (None / Sub /
-    Up / Average / Paeth, PNG spec §9), palette expansion via PLTE,
-    Adam7 deinterlace (each pass is its own filtered sub-image
-    scattered onto the output grid, spec §8.2).
-
-    Supports 8-bit samples, color types 0 (grey), 2 (RGB), 3 (palette),
-    4 (grey+alpha), 6 (RGBA), interlace methods 0 and 1.  Returns an
-    ``(height, width, channels)`` uint8 numpy array, or ``None`` when
-    the payload is not such a PNG (truncated, 16-bit, corrupt) —
-    callers fall back to header-only metadata.
-    """
-    import numpy as np
-
-    p = payload
-    if not (p.startswith(b"\x89PNG\r\n\x1a\n") and len(p) >= 33):
-        return None
-    try:
-        w, h, bit_depth, color, _comp, _filt, interlace = struct.unpack(
-            ">IIBBBBB", p[16:29]
-        )
-        if bit_depth != 8 or interlace > 1 or color not in _PNG_CHANNELS:
-            return None
-        if w == 0 or h == 0 or w * h > 64_000_000:  # 64 MP sanity bound
-            return None
-        # chunk walk: concatenate IDAT, grab PLTE for palette images
-        idat, plte, i = [], None, 8
-        while i + 8 <= len(p):
-            (size,) = struct.unpack(">I", p[i : i + 4])
-            cid = p[i + 4 : i + 8]
-            body = p[i + 8 : i + 8 + size]
-            if len(body) < size:
-                return None
-            if cid == b"IDAT":
-                idat.append(body)
-            elif cid == b"PLTE":
-                plte = body
-            elif cid == b"IEND":
-                break
-            i += 12 + size  # size + id + crc
-        if not idat or (color == 3 and (plte is None or len(plte) % 3)):
-            return None
-        raw = zlib.decompress(b"".join(idat))
-        ch = _PNG_CHANNELS[color]
-        if interlace == 0:
-            if len(raw) != h * (w * ch + 1):
-                return None
-            got = _png_defilter(raw, 0, w, h, ch)
-            if got is None:
-                return None
-            px = got[0].reshape(h, w, ch)
-        else:  # Adam7: 7 independently-filtered sub-images
-            px = np.zeros((h, w, ch), dtype=np.uint8)
-            offset = 0
-            for x0, y0, dx, dy in _ADAM7:
-                pw = (w - x0 + dx - 1) // dx
-                ph = (h - y0 + dy - 1) // dy
-                if pw == 0 or ph == 0:
-                    continue
-                got = _png_defilter(raw, offset, pw, ph, ch)
-                if got is None:
-                    return None
-                rows, offset = got
-                sub = rows.reshape(ph, pw, ch)
-                px[y0::dy, x0::dx] = sub
-            if offset != len(raw):
-                return None
-        if color == 3:
-            pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-            idx = px[:, :, 0]
-            if int(idx.max(initial=0)) >= pal.shape[0]:
-                return None
-            px = pal[idx]
-        return px
-    except (struct.error, zlib.error, ValueError):
-        return None
-
-
-def _lzw_decode(data: bytes, min_code_size: int, max_pixels: int):
-    """GIF-flavour LZW decode (GIF89a spec appendix F): LSB-first
-    variable-width codes, clear/end codes, dictionary grows to 12 bits.
-    Returns the index stream as a list, or ``None`` on a corrupt
-    stream."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    width = min_code_size + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    out = bytearray()
-    prev = None
-    acc = bits = pos = 0
-    n = len(data)
-    while True:
-        while bits < width:
-            if pos >= n:
-                return None  # ran out before the end code
-            acc |= data[pos] << bits
-            bits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        bits -= width
-        if code == clear:
-            table = list(base)
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if code < len(table) and (code < clear or code > end):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            return None
-        out += entry
-        if len(out) > max_pixels:
-            return None
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-        prev = entry
-    return bytes(out)
-
-
-def decode_gif_pixels(payload: bytes):
-    """REAL GIF pixel decode — pure-stdlib LZW (variable-width codes,
-    clear/end handling, dictionary growth) + color-table expansion +
-    4-pass deinterlace for the FIRST image frame.  Returns an
-    ``(height, width, 3)`` uint8 RGB array, or ``None`` for non-GIF /
-    truncated / corrupt payloads (callers fall back to header-only
-    metadata)."""
-    import numpy as np
-
-    p = payload
-    if p[:6] not in (b"GIF87a", b"GIF89a") or len(p) < 13:
-        return None
-    try:
-        packed = p[10]
-        i = 13
-        gct = None
-        if packed & 0x80:
-            size = 3 * (2 << (packed & 0x07))
-            gct = p[i : i + size]
-            if len(gct) < size:
-                return None
-            i += size
-        while i < len(p):
-            b0 = p[i]
-            if b0 == 0x21:  # extension: label + sub-blocks
-                i += 2
-                while i < len(p) and p[i] != 0:
-                    i += 1 + p[i]
-                i += 1
-            elif b0 == 0x2C:  # image descriptor
-                _l, _t, w, h = struct.unpack("<HHHH", p[i + 1 : i + 9])
-                ipacked = p[i + 9]
-                i += 10
-                ct = gct
-                if ipacked & 0x80:  # local color table
-                    size = 3 * (2 << (ipacked & 0x07))
-                    ct = p[i : i + size]
-                    if len(ct) < size:
-                        return None
-                    i += size
-                if ct is None:
-                    return None
-                interlaced = bool(ipacked & 0x40)
-                if w == 0 or h == 0 or w * h > 64_000_000:
-                    return None
-                min_code = p[i]
-                i += 1
-                data = bytearray()
-                while i < len(p) and p[i] != 0:
-                    ln = p[i]
-                    block = p[i + 1 : i + 1 + ln]
-                    if len(block) < ln:
-                        return None
-                    data += block
-                    i += 1 + ln
-                if not (2 <= min_code <= 8):
-                    return None
-                idx = _lzw_decode(bytes(data), min_code, w * h)
-                if idx is None or len(idx) < w * h:
-                    return None
-                arr = np.frombuffer(idx[: w * h], dtype=np.uint8)
-                pal = np.frombuffer(ct, dtype=np.uint8).reshape(-1, 3)
-                if int(arr.max(initial=0)) >= pal.shape[0]:
-                    return None
-                img = pal[arr].reshape(h, w, 3)
-                if interlaced:
-                    # GIF 4-pass interlace (89a spec appendix E): the
-                    # stream carries rows 0,8,.. then 4,12,.. then
-                    # 2,6,.. then 1,3,..; stream row i IS display row
-                    # order[i]
-                    order = (
-                        list(range(0, h, 8))
-                        + list(range(4, h, 8))
-                        + list(range(2, h, 4))
-                        + list(range(1, h, 2))
-                    )
-                    out = np.empty_like(img)
-                    out[order] = img
-                    img = out
-                return img
-            elif b0 == 0x3B:  # trailer
-                return None
-            else:
-                return None
-        return None
-    except (struct.error, ValueError, IndexError):
-        return None
-
-
-#: JPEG zig-zag order: index k in the entropy stream → natural (row-major)
-#: coefficient position (ITU T.81 figure 5)
-_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-
-def _huff_table(counts, symbols):
-    """Canonical JPEG Huffman table (ITU T.81 annex C): symbols are
-    assigned consecutive codes within each length, code doubles moving
-    to the next length.  Returns ``{(length, code): symbol}``."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-class _JpegBits:
-    """MSB-first bit reader over one entropy-coded segment (stuffing
-    already stripped)."""
-
-    __slots__ = ("d", "pos", "bit")
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        if self.pos >= len(self.d):
-            raise ValueError("entropy stream exhausted")
-        b = (self.d[self.pos] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1
-        return b
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-
-def _huff_decode(br: _JpegBits, table) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code")
-
-
-def _extend(v: int, s: int) -> int:
-    """DC/AC magnitude decode (T.81 F.2.2.1): ``s``-bit value ``v`` maps
-    to the negative branch when its top bit is 0."""
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _jpeg_entropy_segments(p: bytes, i: int):
-    """Collect one scan's entropy-coded data starting at ``i``: strip
-    0xFF00 byte stuffing, split at RSTn markers.  Returns
-    ``(segments, j)`` with ``j`` positioned at the terminating
-    marker."""
-    segments, cur = [], bytearray()
-    while i < len(p):
-        b0 = p[i]
-        if b0 != 0xFF:
-            cur.append(b0)
-            i += 1
-            continue
-        m = p[i + 1] if i + 1 < len(p) else 0xD9
-        if m == 0x00:
-            cur.append(0xFF)
-            i += 2
-        elif 0xD0 <= m <= 0xD7:
-            segments.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:
-            break
-    segments.append(bytes(cur))
-    return segments, i
-
-
-def _jpeg_refine_nonzero(br: _JpegBits, coef, k: int, p1: int) -> None:
-    """AC successive-approximation correction bit for a nonzero-history
-    coefficient (T.81 G.1.2.3 / libjpeg decode_mcu_AC_refine): a 1-bit
-    appends the next magnitude bit toward larger magnitude, once."""
-    if br.read_bit() and (coef[k] & p1) == 0:
-        coef[k] += p1 if coef[k] > 0 else -p1
-
-
-def _jpeg_ac_first(br, coef, ac_t, ss, se, al, eobrun):
-    """AC first scan for one block's band (T.81 G.1.2.2): run-lengths,
-    ZRL, and end-of-band runs (EOBRUN covers this and following
-    blocks).  Returns the new eobrun."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _huff_decode(br, ac_t)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r == 15:
-                k += 16  # ZRL
-                continue
-            return (1 << r) - 1 + (br.receive(r) if r else 0)
-        k += r
-        if k > se:
-            raise ValueError("AC run past band end")
-        coef[k] = _extend(br.receive(s), s) << al
-        k += 1
-    return 0
-
-
-def _jpeg_ac_refine(br, coef, ac_t, ss, se, al, eobrun):
-    """AC refinement scan for one block's band (T.81 G.1.2.3): every
-    nonzero-history coefficient passed consumes a correction bit; new
-    coefficients arrive as ±1<<Al after skipping ``r`` zero-history
-    positions; EOB runs correct the rest of the band.  Returns the new
-    eobrun."""
-    p1 = 1 << al
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = _huff_decode(br, ac_t)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r < 15:
-                    eobrun = (1 << r) + (br.receive(r) if r else 0)
-                    break  # tail loop corrects the rest of the band
-                newval = 0  # ZRL: skip 16 zero-history positions
-            else:
-                if s != 1:
-                    raise ValueError("AC refine size must be 1")
-                newval = p1 if br.read_bit() else -p1
-            while k <= se:
-                if coef[k] != 0:
-                    _jpeg_refine_nonzero(br, coef, k, p1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if s and k <= se:
-                coef[k] = newval
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if coef[k] != 0:
-                _jpeg_refine_nonzero(br, coef, k, p1)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def decode_jpeg_pixels(payload: bytes, max_pixels: int = 16_000_000):
-    """REAL JPEG pixel decode — pure stdlib + numpy, no codec library:
-    marker parse (DQT / DHT / SOF / DRI / multi-scan SOS), canonical
-    Huffman entropy decode with byte-unstuffing and restart-marker
-    handling, dequantise + de-zigzag, 8x8 IDCT as two matrix products,
-    nearest-neighbour chroma upsample, JFIF YCbCr→RGB.
-
-    Baseline/extended-sequential (SOF0/SOF1) decodes in one pass; FULL
-    progressive (SOF2, T.81 annex G) accumulates coefficients across
-    scans — spectral selection, successive approximation (DC and AC
-    first + refinement scans), EOB runs, interleaved DC scans,
-    per-scan Huffman table redefinition, restart intervals in both
-    modes.  8-bit samples, 1 or 3 components, any sampling factors.
-    Returns ``(height, width, 3)`` uint8 RGB (grayscale replicated),
-    or ``None`` for arithmetic-coded / lossless / truncated / corrupt
-    payloads — callers fall back to header-only metadata.
-    ``max_pixels`` bounds the pure-Python entropy-decode cost per
-    payload; swap in a codec library for pixel-heavy corpora.
-    """
-    import numpy as np
-
-    p = payload
-    if not p.startswith(b"\xff\xd8"):
-        return None
-    try:
-        qt = {}
-        huff = {}  # (class, id) -> table; scans snapshot it at SOS
-        restart = 0
-        frame = None
-        scans = []
-        i = 2
-        while i + 2 <= len(p):
-            if p[i] != 0xFF:
-                return None
-            m = p[i + 1]
-            if m == 0xFF:
-                i += 1
-                continue
-            if m == 0xD9:  # EOI
-                break
-            if m == 0x01 or 0xD0 <= m <= 0xD8:
-                i += 2
-                continue
-            if i + 4 > len(p):
-                return None
-            (seg,) = struct.unpack(">H", p[i + 2 : i + 4])
-            body = p[i + 4 : i + 2 + seg]
-            if len(body) != seg - 2:
-                return None
-            if m == 0xDB:  # DQT: one or more tables, 8- or 16-bit
-                j = 0
-                while j < len(body):
-                    prec, tid = body[j] >> 4, body[j] & 15
-                    j += 1
-                    if prec:
-                        vals = struct.unpack(">64H", body[j : j + 128])
-                        j += 128
-                    else:
-                        vals = struct.unpack("64B", body[j : j + 64])
-                        j += 64
-                    qt[tid] = vals
-            elif m == 0xC4:  # DHT: one or more tables
-                j = 0
-                while j + 17 <= len(body):
-                    cls, tid = body[j] >> 4, body[j] & 15
-                    counts = body[j + 1 : j + 17]
-                    n = sum(counts)
-                    syms = body[j + 17 : j + 17 + n]
-                    if len(syms) < n:
-                        return None
-                    huff[(cls, tid)] = _huff_table(counts, syms)
-                    j += 17 + n
-            elif m in (0xC0, 0xC1, 0xC2):  # baseline / ext-seq / prog
-                prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-                if prec != 8 or nc not in (1, 3):
-                    return None
-                comps = []
-                for c in range(nc):
-                    cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                frame = (w, h, comps, m == 0xC2)
-            elif m in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                       0xCD, 0xCE, 0xCF):
-                return None  # lossless / arithmetic
-            elif m == 0xDD:
-                (restart,) = struct.unpack(">H", body[:2])
-            elif m == 0xDA:  # SOS: components, band, approximation
-                ns = body[0]
-                sc = []
-                for c in range(ns):
-                    cs, tabs = body[1 + 2 * c : 3 + 2 * c]
-                    sc.append((cs, tabs >> 4, tabs & 15))
-                ss, se, a = body[1 + 2 * ns : 4 + 2 * ns]
-                segments, j = _jpeg_entropy_segments(p, i + 2 + seg)
-                scans.append(
-                    (sc, ss, se, a >> 4, a & 15, segments, restart,
-                     dict(huff))
-                )
-                i = j
-                continue
-            i += 2 + seg
-        if frame is None or not scans:
-            return None
-        w, h, comps, progressive = frame
-        if w == 0 or h == 0 or w * h > max_pixels:
-            return None
-
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcux = -(-w // (8 * hmax))
-        mcuy = -(-h // (8 * vmax))
-        # dequant matrices in natural order
-        deq = []
-        for cid, ch, cv, tq in comps:
-            if tq not in qt or ch < 1 or cv < 1:
-                return None
-            q = np.empty(64, dtype=np.float64)
-            for k in range(64):
-                q[_ZIGZAG[k]] = qt[tq][k]
-            deq.append(q.reshape(8, 8))
-
-        # IDCT basis: spatial = M @ F @ M.T
-        xs = np.arange(8)
-        M = np.cos((2 * xs[:, None] + 1) * xs[None, :] * np.pi / 16) / 2.0
-        M[:, 0] /= np.sqrt(2.0)
-
-        if not progressive:
-            planes = [
-                np.zeros((mcuy * cv * 8, mcux * ch * 8), dtype=np.float64)
-                for _cid, ch, cv, _tq in comps
-            ]
-            sc, _ss, _se, _ah, _al, segments, s_restart, snap = scans[0]
-            for cs, td, ta in sc:
-                if (0, td) not in snap or (1, ta) not in snap:
-                    return None
-            n_mcu = mcux * mcuy
-            per_seg = s_restart if s_restart else n_mcu
-            mcu = 0
-            for seg_bytes in segments:
-                if mcu >= n_mcu:
-                    break
-                br = _JpegBits(seg_bytes)
-                pred = [0] * len(comps)
-                for _ in range(min(per_seg, n_mcu - mcu)):
-                    my, mx = divmod(mcu, mcux)
-                    for ci, (cid, ch, cv, _tq) in enumerate(comps):
-                        s_entry = next(
-                            (s for s in sc if s[0] == cid), None
-                        )
-                        if s_entry is None:
-                            return None
-                        dc_t = snap[(0, s_entry[1])]
-                        ac_t = snap[(1, s_entry[2])]
-                        for by in range(cv):
-                            for bx in range(ch):
-                                coef = np.zeros((8, 8), dtype=np.float64)
-                                s = _huff_decode(br, dc_t)
-                                pred[ci] += _extend(br.receive(s), s)
-                                coef[0, 0] = pred[ci]
-                                k = 1
-                                while k < 64:
-                                    rs = _huff_decode(br, ac_t)
-                                    r, s = rs >> 4, rs & 15
-                                    if s == 0:
-                                        if r == 15:
-                                            k += 16
-                                            continue
-                                        break  # EOB
-                                    k += r
-                                    if k > 63:
-                                        return None
-                                    nat = _ZIGZAG[k]
-                                    coef[nat // 8, nat % 8] = _extend(
-                                        br.receive(s), s
-                                    )
-                                    k += 1
-                                block = (
-                                    M @ (coef * deq[ci]) @ M.T + 128.0
-                                )
-                                y0 = (my * cv + by) * 8
-                                x0 = (mx * ch + bx) * 8
-                                planes[ci][y0 : y0 + 8, x0 : x0 + 8] = (
-                                    block
-                                )
-                    mcu += 1
-            if mcu < n_mcu:
-                return None
-        else:
-            # progressive: accumulate zigzag-ordered coefficients per
-            # component across scans, then one IDCT pass
-            coefs = [
-                np.zeros((mcuy * cv, mcux * ch, 64), dtype=np.int32)
-                for _cid, ch, cv, _tq in comps
-            ]
-            by_id = {c[0]: ci for ci, c in enumerate(comps)}
-            for sc, ss, se, ah, al, segments, s_restart, snap in scans:
-                idxs = [by_id.get(cs) for cs, _td, _ta in sc]
-                if None in idxs:
-                    return None
-                if ss == 0:
-                    # DC scan (may be interleaved); se must be 0
-                    if se != 0:
-                        return None
-                    if len(sc) > 1:
-                        units = mcux * mcuy
-                    else:
-                        ci = idxs[0]
-                        _cid, chs, cvs, _tq = comps[ci]
-                        bw = -(-(-(-w * chs // hmax)) // 8)
-                        bh = -(-(-(-h * cvs // vmax)) // 8)
-                        units = bw * bh
-                else:
-                    if len(sc) != 1 or ah > 13 or al > 13:
-                        return None
-                    ci = idxs[0]
-                    _cid, chs, cvs, _tq = comps[ci]
-                    bw = -(-(-(-w * chs // hmax)) // 8)
-                    bh = -(-(-(-h * cvs // vmax)) // 8)
-                    units = bw * bh
-                    ac_t = snap.get((1, sc[0][2]))
-                    if ah == 0 and ac_t is None:
-                        return None
-                    if ah > 0 and ac_t is None:
-                        return None
-                per_seg = s_restart if s_restart else units
-                unit = 0
-                for seg_bytes in segments:
-                    if unit >= units:
-                        break
-                    br = _JpegBits(seg_bytes)
-                    pred = [0] * len(comps)
-                    eobrun = 0
-                    for _ in range(min(per_seg, units - unit)):
-                        if ss == 0 and len(sc) > 1:
-                            my, mx = divmod(unit, mcux)
-                            for pos, (cs, td, _ta) in enumerate(sc):
-                                ci = idxs[pos]
-                                _cid, chs, cvs, _tq = comps[ci]
-                                for by in range(cvs):
-                                    for bx in range(chs):
-                                        blk = coefs[ci][
-                                            my * cvs + by, mx * chs + bx
-                                        ]
-                                        if ah == 0:
-                                            t = _huff_decode(
-                                                br, snap[(0, td)]
-                                            )
-                                            pred[ci] += _extend(
-                                                br.receive(t), t
-                                            )
-                                            blk[0] = pred[ci] << al
-                                        else:
-                                            blk[0] |= (
-                                                br.read_bit() << al
-                                            )
-                        else:
-                            ci = idxs[0]
-                            _cid, chs, cvs, _tq = comps[ci]
-                            bw = -(-(-(-w * chs // hmax)) // 8)
-                            byy, bxx = divmod(unit, bw)
-                            blk = coefs[ci][byy, bxx]
-                            if ss == 0:
-                                td = sc[0][1]
-                                if ah == 0:
-                                    t = _huff_decode(br, snap[(0, td)])
-                                    pred[ci] += _extend(
-                                        br.receive(t), t
-                                    )
-                                    blk[0] = pred[ci] << al
-                                else:
-                                    blk[0] |= br.read_bit() << al
-                            elif ah == 0:
-                                eobrun = _jpeg_ac_first(
-                                    br, blk, ac_t, ss, se, al, eobrun
-                                )
-                            else:
-                                eobrun = _jpeg_ac_refine(
-                                    br, blk, ac_t, ss, se, al, eobrun
-                                )
-                        unit += 1
-                if unit < units:
-                    return None
-            # de-zigzag + dequant + IDCT, all blocks per component
-            inv = np.empty(64, dtype=np.int64)
-            for k in range(64):
-                inv[_ZIGZAG[k]] = k
-            planes = []
-            for ci, (_cid, ch, cv, _tq) in enumerate(comps):
-                nat = coefs[ci][:, :, inv].astype(np.float64).reshape(
-                    coefs[ci].shape[0], coefs[ci].shape[1], 8, 8
-                ) * deq[ci]
-                spatial = (
-                    np.einsum("iu,abuv,jv->abij", M, nat, M) + 128.0
-                )
-                pl = spatial.transpose(0, 2, 1, 3).reshape(
-                    coefs[ci].shape[0] * 8, coefs[ci].shape[1] * 8
-                )
-                planes.append(pl)
-
-        # upsample each component to full resolution and crop
-        full = []
-        for ci, (_cid, ch, cv, _tq) in enumerate(comps):
-            pl = planes[ci]
-            if ch != hmax or cv != vmax:
-                pl = np.repeat(
-                    np.repeat(pl, vmax // cv, axis=0), hmax // ch, axis=1
-                )
-            full.append(pl[:h, :w])
-        if len(full) == 1:
-            g = np.clip(np.rint(full[0]), 0, 255).astype(np.uint8)
-            return np.stack([g, g, g], axis=2)
-        y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-        r = y + 1.402 * cr
-        g = y - 0.344136 * cb - 0.714136 * cr
-        b = y + 1.772 * cb
-        rgb = np.stack([r, g, b], axis=2)
-        return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-    except (struct.error, ValueError, IndexError):
-        return None
-
-
-def decode_bmp_pixels(payload: bytes):
-    """REAL BMP pixel decode for the dominant uncompressed shapes:
-    BITMAPINFOHEADER(+), BI_RGB, 24- or 32-bit.  Rows are stored
-    bottom-up (negative height = top-down) and padded to 4 bytes; pixel
-    order is BGR(A) → returned as ``(height, width, 3)`` uint8 RGB.
-    ``None`` for palette / RLE / OS2-header / truncated payloads."""
-    import numpy as np
-
-    p = payload
-    if not p.startswith(b"BM") or len(p) < 54:
-        return None
-    try:
-        (data_off,) = struct.unpack("<I", p[10:14])
-        (hdr_size,) = struct.unpack("<I", p[14:18])
-        if hdr_size < 40:  # BITMAPCOREHEADER/OS2: out of scope
-            return None
-        w, h_raw = struct.unpack("<ii", p[18:26])
-        planes, bpp = struct.unpack("<HH", p[26:30])
-        (compression,) = struct.unpack("<I", p[30:34])
-        if planes != 1 or compression != 0 or bpp not in (24, 32):
-            return None
-        top_down = h_raw < 0
-        h = abs(h_raw)
-        if w <= 0 or h == 0 or w * h > 64_000_000:
-            return None
-        ch = bpp // 8
-        stride = (w * ch + 3) & ~3  # rows pad to 4 bytes
-        if len(p) < data_off + stride * h:
-            return None
-        rows = np.frombuffer(
-            p, dtype=np.uint8, count=stride * h, offset=data_off
-        ).reshape(h, stride)
-        px = rows[:, : w * ch].reshape(h, w, ch)
-        if not top_down:
-            px = px[::-1]
-        return px[:, :, 2::-1]  # BGR(A) -> RGB
-    except (struct.error, ValueError):
-        return None
-
-
-def decode_wav_samples(payload: bytes):
-    """REAL WAV sample decode — the data chunk is raw little-endian
-    samples, so plain ``numpy`` suffices (no codec library).  Handles
-    the common uncompressed shapes: PCM 8-bit (unsigned), 16-bit,
-    24-bit and 32-bit (format tag 1) and IEEE float32/float64 (tag 3),
-    each normalised onto the int16 grid so downstream features are
-    format-independent.  Returns ``(samples: (frames, channels) int16
-    array, sample_rate)``, or ``None`` for non-WAV / compressed /
-    truncated payloads (callers fall back to header-only metadata)."""
-    import numpy as np
-
-    p = payload
-    if not (p.startswith(b"RIFF") and p[8:12] == b"WAVE"):
-        return None
-    try:
-        i, channels, rate, bits, fmt_tag, data = 12, 0, 0, 0, 0, None
-        while i + 8 <= len(p):
-            cid = p[i : i + 4]
-            (size,) = struct.unpack("<I", p[i + 4 : i + 8])
-            body = p[i + 8 : i + 8 + size]
-            if len(body) < size:
-                return None
-            if cid == b"fmt " and size >= 16:
-                fmt_tag, channels, rate = struct.unpack("<HHI", body[:8])
-                (bits,) = struct.unpack("<H", body[14:16])
-            elif cid == b"data":
-                data = body
-            i += 8 + size + (size & 1)
-        if not channels or data is None:
-            return None
-        if fmt_tag == 1 and bits == 16:
-            width = 2
-            n = len(data) // (width * channels) * channels
-            if n == 0:
-                return None
-            samples = np.frombuffer(data, dtype="<i2", count=n)
-        elif fmt_tag == 1 and bits == 8:  # unsigned, midpoint 128
-            n = len(data) // channels * channels
-            if n == 0:
-                return None
-            raw = np.frombuffer(data, dtype=np.uint8, count=n)
-            samples = ((raw.astype(np.int16) - 128) << 8)
-        elif fmt_tag == 1 and bits == 24:
-            width = 3
-            n = len(data) // (width * channels) * channels
-            if n == 0:
-                return None
-            b = np.frombuffer(
-                data, dtype=np.uint8, count=n * 3
-            ).reshape(-1, 3).astype(np.int32)
-            v = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
-            v = np.where(v >= 1 << 23, v - (1 << 24), v)
-            samples = (v >> 8).astype(np.int16)
-        elif fmt_tag == 1 and bits == 32:
-            width = 4
-            n = len(data) // (width * channels) * channels
-            if n == 0:
-                return None
-            v = np.frombuffer(data, dtype="<i4", count=n)
-            samples = (v >> 16).astype(np.int16)
-        elif fmt_tag == 3 and bits in (32, 64):
-            width = bits // 8
-            n = len(data) // (width * channels) * channels
-            if n == 0:
-                return None
-            f = np.frombuffer(
-                data, dtype="<f4" if bits == 32 else "<f8", count=n
-            )
-            samples = np.clip(
-                np.rint(f.astype(np.float64) * 32767.0), -32768, 32767
-            ).astype(np.int16)
-        else:
-            return None
-        return samples.reshape(-1, channels), rate
-    except (struct.error, ValueError):
-        return None
-
-
-_SNIFF = (
-    (b"\x89PNG", "image"),
-    (b"\xff\xd8\xff", "image"),
-    (b"GIF8", "image"),
-    (b"BM", "image"),
-    (b"RIFF", "audio"),
-)
-
-
-def _fake_decode(payload: bytes) -> tuple[str, int, int, int]:
-    """Decode stand-in: REAL header parse first; truncated-but-
-    recognisable containers keep their magic-sniffed type with
-    digest-derived deterministic dims; genuinely unknown bytes get type
-    ``unknown`` (the only case ``strict=True`` rejects).  A full codec
-    would replace only this fallback."""
-    parsed = parse_media_header(payload)
-    if parsed is not None:
-        return parsed
-    mt = "unknown"
-    if payload.startswith(b"RIFF") and payload[8:12] == b"AVI ":
-        mt = "video"  # truncated AVI: keep the container type
-    else:
-        for magic, kind in _SNIFF:
-            if payload.startswith(magic):
-                mt = kind
-                break
-    if mt == "unknown" and len(payload) >= 12 and payload[4:8] == b"ftyp":
-        mt = "video"
-    h = hashlib.md5(payload).digest()
-    width = 16 + h[0] % 64
-    height = 16 + h[1] % 64
-    n_frames = 1 if mt == "image" else 1 + h[2] % 30
-    return mt, width, height, n_frames
-
-
-def _video_frame_table(payload: bytes):
-    """Per-frame ``(offset, size)`` table for a video container: AVI
-    ``movi`` chunks or the ISO-BMFF sample table.  ``None`` when the
-    payload is neither or carries no resolvable frame index."""
-    if payload.startswith(b"RIFF") and payload[8:12] == b"AVI ":
-        info = _avi_info(payload)
-        return info[4] if info and info[4] else None
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        return _mp4_sample_table(payload)
-    return None
-
-
-def _video_first_jpeg(payload: bytes):
-    """First video frame's bytes when they are a JPEG bitstream — the
-    MJPEG case (AVI ``MJPG`` ``00dc`` chunks; QuickTime/MP4 ``jpeg``
-    sample entries), detected by the frame's own SOI marker rather than
-    by trusting the declared fourcc.  ``None`` for inter-frame codecs
-    (H.264 etc.), whose pixel decode stays the documented stub."""
-    table = _video_frame_table(payload)
-    if not table:
-        return None
-    off, size = table[0]
-    body = payload[off : off + size]
-    if len(body) == size and body.startswith(b"\xff\xd8"):
-        return body
-    return None
-
-
-def decode_media(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "id",
-    feature_dim: int = 8,
-    strict: bool = False,
-    batch_hint: int | None = None,
-) -> DataFrame:
-    """Decode + feature-extract binary payloads via ``mapInPandas``.
-
-    One Arrow batch in, one out; the per-batch loop is over *payloads in
-    a batch* (unavoidable for codecs), not a Python-per-row UDF call.
-    Output schema is :data:`DECODED_SCHEMA`.  ``strict=True`` raises
-    ``NotImplementedError`` on unknown containers (the stub marker);
-    otherwise they pass through as ``media_type='unknown'``.
-
-    Decode depth by container: full PNG / GIF / baseline-JPEG images
-    are REALLY decoded (:func:`decode_png_pixels`,
-    :func:`decode_gif_pixels`, :func:`decode_jpeg_pixels` — pure
-    stdlib+numpy) and the feature vector holds actual pixel statistics
-    (luminance mean, std, then an L1-normalised luminance histogram
-    over the remaining ``feature_dim - 2`` slots); PCM16 WAVs decode to
-    samples with RMS/zero-crossing/level-histogram features; MJPEG
-    videos (AVI ``MJPG`` / QuickTime ``jpeg``) decode their first
-    frame's pixels through the same JPEG decoder.  Everything else —
-    inter-frame video codecs, header-only or undecodable images —
-    reports header-parsed dimensions with the digest-derived feature
-    fallback.
-
-    Scale notes: decode is CPU-bound and embarrassingly parallel — size
-    partitions by payload bytes (``spark.sql.files.maxPartitionBytes``),
-    and ``repartition`` beforehand if payload sizes are skewed so one
-    task doesn't hold the long tail of 4K videos.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                mt, w, hgt, nf = _fake_decode(payload)
-                if mt == "unknown" and strict:
-                    raise NotImplementedError(
-                        "no codec available in this environment for "
-                        "unknown container (stubbed decode)"
-                    )
-                feature = None
-                if mt == "audio":
-                    dec = decode_wav_samples(payload)
-                    if dec is not None:
-                        samples, _rate = dec
-                        mono = samples.astype(np.float64).mean(axis=1)
-                        rms = float(np.sqrt((mono**2).mean())) / 32768.0
-                        zcr = (
-                            float((np.diff(np.signbit(mono)) != 0).sum())
-                            / max(len(mono) - 1, 1)
-                            if len(mono) > 1
-                            else 0.0
-                        )
-                        feature = [rms, zcr]
-                        nbins = feature_dim - len(feature)
-                        if nbins > 0:
-                            hist, _ = np.histogram(
-                                np.abs(mono),
-                                bins=nbins,
-                                range=(0.0, 32768.0),
-                            )
-                            feature += (
-                                hist / max(int(hist.sum()), 1)
-                            ).tolist()
-                        feature = feature[:feature_dim]
-                px = None
-                if mt == "image":
-                    px = decode_png_pixels(payload)
-                    if px is None:
-                        px = decode_gif_pixels(payload)
-                    if px is None:
-                        px = decode_jpeg_pixels(payload)
-                    if px is None:
-                        px = decode_bmp_pixels(payload)
-                elif mt == "video":
-                    # MJPEG: the representative (first) frame is a
-                    # complete JPEG — decode it for REAL pixel features;
-                    # inter-frame codecs fall through to the fallback
-                    fb = _video_first_jpeg(payload)
-                    if fb is not None:
-                        px = decode_jpeg_pixels(fb)
-                if px is not None:
-                    hgt, w = int(px.shape[0]), int(px.shape[1])
-                    if px.shape[2] >= 3:
-                        lum = (
-                            0.299 * px[:, :, 0]
-                            + 0.587 * px[:, :, 1]
-                            + 0.114 * px[:, :, 2]
-                        )
-                    else:
-                        lum = px[:, :, 0].astype(np.float64)
-                    feature = [float(lum.mean()) / 255.0,
-                               float(lum.std()) / 255.0]
-                    nbins = feature_dim - len(feature)
-                    if nbins > 0:
-                        hist, _ = np.histogram(
-                            lum, bins=nbins, range=(0.0, 256.0)
-                        )
-                        feature += (hist / max(int(hist.sum()), 1)).tolist()
-                    feature = feature[:feature_dim]
-                if feature is None:
-                    dig = hashlib.md5(payload).digest()
-                    feature = [
-                        dig[i % len(dig)] / 255.0
-                        for i in range(feature_dim)
-                    ]
-                rows.append((int(rid), mt, w, hgt, nf, feature))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECODED_SCHEMA.fields]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, DECODED_SCHEMA)
-
-
-#: sample_frames output schema
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("size", T.IntegerType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame,
-    k: int = 8,
-    payload_col: str = "payload",
-    id_col: str = "id",
-) -> DataFrame:
-    """Uniformly sample up to ``k`` frames per MP4/MOV/AVI payload and
-    extract their REAL encoded bytes — a pure-stdlib demux via the
-    ISO-BMFF sample tables (``stsz`` sizes, ``stsc`` sample→chunk runs,
-    ``stco``/``co64`` chunk offsets) or the RIFF-AVI ``movi`` chunk
-    walk (:func:`_avi_info`), no ffmpeg.  For MJPEG payloads the
-    emitted ``frame_bytes`` are complete JPEGs,
-    directly decodable with :func:`decode_jpeg_pixels`.
-
-    Frame ``i`` of ``k`` picks sample ``floor(i * n / k)`` (first frame
-    always included).  Output rows: ``(id, frame_idx, n_frames, offset,
-    size, frame_bytes)`` where ``frame_bytes`` is the sample's byte
-    range sliced from the payload — the codec bitstream (e.g. H.264
-    AUs), ready for a decoder UDF downstream; decoding those bytes to
-    pixels is the ONLY stubbed step in this container.  Payloads
-    without a resolvable sample table (bare ftyp probes, fragmented
-    MP4) produce no rows.
-
-    Scale notes: same shape as :func:`decode_media` — one Arrow batch
-    in/out, work proportional to bytes actually sliced; per-payload
-    table walk is O(samples) integer arithmetic.
-    """
-    if k < 1:
-        raise ValueError("k must be >= 1")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                table = _video_frame_table(payload)
-                if not table:
-                    continue
-                n = len(table)
-                picks = sorted({i * n // k for i in range(min(k, n))})
-                for fi in picks:
-                    off, size = table[fi]
-                    body = payload[off : off + size]
-                    if len(body) < size:
-                        continue  # truncated payload: skip that frame
-                    rows.append((int(rid), fi, n, off, size, body))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAMES_SCHEMA.fields]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, FRAMES_SCHEMA)
-
-
-#: resize_media output schema
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("src_width", T.IntegerType()),
-        T.StructField("src_height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("pixels", T.BinaryType()),  # row-major RGB u8
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    payload_col: str = "payload",
-    id_col: str = "id",
-) -> DataFrame:
-    """Decode + REAL nearest-neighbour resize of image payloads to a
-    fixed ``(target_h, target_w)`` RGB raster — the standard
-    make-every-image-the-model-input-size step, as one Arrow-batched
-    ``mapInPandas`` pass over the pure-stdlib decoders (PNG / GIF /
-    baseline JPEG).
-
-    Output: ``(id, src_width, src_height, width, height, pixels)``
-    where ``pixels`` is the row-major ``height*width*3`` uint8 buffer
-    (a fixed-size binary column parquet stores efficiently; reshape
-    with ``np.frombuffer(...).reshape(h, w, 3)``).  Undecodable
-    payloads are dropped (they carry no raster to resize) — run
-    :func:`decode_media` first if you need per-row disposition.
-
-    Scale notes: identical to :func:`decode_media` — CPU-bound,
-    embarrassingly parallel, bytes cross JVM↔Python once per batch;
-    repartition by payload bytes when sizes are skewed.
-    """
-    if target_w < 1 or target_h < 1:
-        raise ValueError("target dimensions must be positive")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                px = decode_png_pixels(payload)
-                if px is None:
-                    px = decode_gif_pixels(payload)
-                if px is None:
-                    px = decode_jpeg_pixels(payload)
-                if px is None:
-                    px = decode_bmp_pixels(payload)
-                if px is None:
-                    continue
-                h, w = int(px.shape[0]), int(px.shape[1])
-                if px.shape[2] == 1:
-                    px = np.repeat(px, 3, axis=2)
-                elif px.shape[2] == 2:  # grey+alpha -> replicate grey
-                    px = np.repeat(px[:, :, :1], 3, axis=2)
-                elif px.shape[2] > 3:
-                    px = px[:, :, :3]
-                # nearest-neighbour index maps (pixel centers)
-                ys = ((np.arange(target_h) + 0.5) * h / target_h).astype(
-                    np.int64
-                ).clip(0, h - 1)
-                xs = ((np.arange(target_w) + 0.5) * w / target_w).astype(
-                    np.int64
-                ).clip(0, w - 1)
-                resized = px[ys][:, xs]
-                rows.append(
-                    (
-                        int(rid),
-                        w,
-                        h,
-                        target_w,
-                        target_h,
-                        resized.tobytes(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, RESIZED_SCHEMA)
 
 
 def byte_features(

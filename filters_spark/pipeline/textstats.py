@@ -20,8 +20,6 @@ __all__ = [
     "token_entropy",
     "quality_score",
     "lang_id",
-    "lang_id_fasttext",
-    "classify_fasttext",
     "unigram_logprob",
     "fingerprint",
     "tfidf_top_terms",
@@ -176,31 +174,19 @@ def lang_id(
     text_col: str = "text",
     id_col: str = "doc_id",
     profiles: dict[str, tuple[str, ...]] | None = None,
-    model: str | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Stopword-profile language ID: ``(id, lang_pred, lang_hits)``.
 
     ``keep_cols`` carries extra input columns through (single-scan
-    chaining, as in :func:`quality_score`; not supported on the
-    fastText route).
+    chaining, as in :func:`quality_score`).
 
     Counts distinct-token hits against each language's stopword profile;
     prediction = language with the most hits (ties broken
     lexicographically, zero hits → 'und').  Pure expressions — the
     profiles are literal arrays, ``array_intersect`` does the matching.
-    This deterministic heuristic (with its exact SQL oracle) is the
-    DEFAULT; pass ``model=`` with a path to a public fastText language-ID
-    model (e.g. lid.176.ftz) to route through
-    :func:`lang_id_fasttext` instead — output schema becomes
-    ``(id, lang_pred, lang_conf)``.
+    The heuristic is deterministic and has an exact SQL oracle.
     """
-    if model is not None:
-        if keep_cols:
-            raise ValueError(
-                "keep_cols is not supported with the fastText model route"
-            )
-        return lang_id_fasttext(df, model, text_col, id_col)
     profiles = profiles or STOPWORDS
     toks = F.array_distinct(_tokens(F.col(text_col)))
     hits = {
@@ -223,56 +209,6 @@ def lang_id(
         pred.alias("lang_pred"),
         best.cast("long").alias("lang_hits"),
         *[F.col(c) for c in keep_cols],
-    )
-
-
-def lang_id_fasttext(
-    df: DataFrame,
-    model_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """fastText language ID: ``(id, lang_pred, lang_conf)``.
-
-    The model file must be readable at ``model_path`` on every executor
-    (ship it with ``spark.sparkContext.addFile`` / ``--files`` or a
-    shared filesystem); it is loaded once per Python worker (module
-    cache), and prediction runs one Arrow batch at a time through
-    ``mapInPandas`` — never per row.  Uses the ``fasttext`` package when
-    installed; otherwise falls back to the engine's pure-Python reader
-    for the public fastText binary format
-    (:mod:`filters_spark.pipeline.fasttext_io` — non-quantized
-    supervised softmax models, word n-grams supported, character
-    n-grams/.ftz/hs-loss raise with guidance), so the operator works
-    out of the box for small classifiers and test fixtures."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        try:
-            import fasttext
-        except ModuleNotFoundError:
-            fasttext = None
-        m = _ft_model(fasttext, model_path)
-        for pdf in batches:
-            texts = [
-                (t or "").replace("\n", " ") for t in pdf[text_col]
-            ]
-            labels, probs = m.predict(texts)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "lang_pred": [
-                        (ls[0].replace("__label__", "") if ls else "und")
-                        for ls in labels
-                    ],
-                    "lang_conf": [float(ps[0]) if len(ps) else 0.0 for ps in probs],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, "id long, lang_pred string, lang_conf double"
     )
 
 
@@ -337,78 +273,6 @@ def unigram_logprob(
             F.col("__s").cast("double") / F.col("n_tokens") / F.lit(grid)
         ).alias("avg_logp"),
     )
-
-
-def classify_fasttext(
-    df: DataFrame,
-    model_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 1,
-) -> DataFrame:
-    """General supervised fastText classification — the web-data
-    QUALITY-CLASSIFIER pattern (GPT-3/CCNet-style: score every document
-    against a small supervised model, keep the high-scoring tail).
-
-    Returns ``(id, rank, label, conf)`` with the top-``k`` labels per
-    document, rank 1 = best.  Same execution shape as
-    :func:`lang_id_fasttext` (one model load per Python worker,
-    Arrow-batched ``mapInPandas``, never per row; the pure-Python
-    binary-format loader takes over when the ``fasttext`` package is
-    absent).  At 100 TB this is a stateless projection: no shuffle, the
-    model broadcast is the only distributed cost, and the scan fuses
-    with any downstream keep-filter on ``conf``.
-    """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        try:
-            import fasttext
-        except ModuleNotFoundError:
-            fasttext = None
-        m = _ft_model(fasttext, model_path)
-        for pdf in batches:
-            texts = [(t or "").replace("\n", " ") for t in pdf[text_col]]
-            labels, probs = m.predict(texts, k=k)
-            ids, ranks, labs, confs = [], [], [], []
-            for i, (ls, ps) in enumerate(zip(labels, probs)):
-                for r, (lb, p) in enumerate(zip(ls, ps), start=1):
-                    ids.append(int(pdf[id_col].iloc[i]))
-                    ranks.append(r)
-                    labs.append(lb.replace("__label__", ""))
-                    confs.append(float(p))
-            yield pd.DataFrame(
-                {"id": ids, "rank": ranks, "label": labs, "conf": confs}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, "id long, rank int, label string, conf double"
-    )
-
-
-_FT_MODELS: dict = {}
-
-
-def _ft_model(fasttext_mod, path: str):
-    """Per-worker model cache — fastText load is ~100 ms + model-size
-    RAM; one instance serves every batch the worker processes.  With no
-    ``fasttext`` package, the engine's pure-Python loader for the public
-    binary format takes over (same ``predict`` shape)."""
-    key = (fasttext_mod is not None, path)
-    m = _FT_MODELS.get(key)
-    if m is None:
-        if fasttext_mod is not None:
-            m = fasttext_mod.load_model(path)
-        else:
-            from filters_spark.pipeline.fasttext_io import (
-                FastTextSupervisedModel,
-            )
-
-            m = FastTextSupervisedModel.load(path)
-        _FT_MODELS[key] = m
-    return m
 
 
 def tfidf_top_terms(

@@ -979,6 +979,18 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
     } == entries
 
 
+@pytest.mark.parametrize("flag", ("--sketch-cols", "--hist-cols"))
+def test_job_cli_refuses_state_cols_without_manifest(flag):
+    """``--sketch-cols`` and ``--hist-cols`` are per-bucket manifest
+    state: a one-shot run refuses them (exit 2) before any Spark
+    session is built, instead of ignoring them."""
+    from filters_spark.job import main
+
+    with pytest.raises(SystemExit) as exc_info:
+        main(["--synthetic", "10", "--output", "/nonexistent", flag, "text"])
+    assert exc_info.value.code == 2
+
+
 def test_checkpoint_histogram_state_merges_exactly(tmp_path, tdf, baseline):
     """Fixed-grid histogram state (the PSI drift input) rides the
     manifest and merges by vector addition: a killed-then-resumed job's

@@ -28,6 +28,14 @@ QUERIES = (
 )
 
 
+def test_every_query_has_an_oracle():
+    """The registry pairs each driver query with one DuckDB oracle and
+    nothing else: no query without an oracle, no oracle without a
+    query, and no exemption list."""
+    assert set(e.queries()) == set(e.oracle_sql())
+    assert e._NO_ORACLE == ()
+
+
 @pytest.fixture(scope="module")
 def con():
     c = connect(e.DEFAULT_SF_DIR)

@@ -120,7 +120,7 @@ def test_verdicts_single_keyed_shuffle(tdf):
     try:
         suite = ValidationSuite(RULES, n_buckets=8)
         rows = suite.row_results(tdf)
-        v = suite.verdicts(tdf, rows)
+        v = suite.verdicts(rows)
         plan = plan_of(v)
         import re
 
