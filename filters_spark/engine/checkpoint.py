@@ -41,7 +41,11 @@ from filters_spark.engine.stats import (
     stat_kinds,
     stat_table,
 )
-from filters_spark.engine.suite import BUCKET_COL, ValidationSuite
+from filters_spark.engine.suite import (
+    BUCKET_COL,
+    ValidationSuite,
+    verdict_totals,
+)
 
 #: manifest state-schema version.  v1 = the unversioned r4 format
 #: (verdict + metrics + optional sketches/histograms); v2 adds this
@@ -235,9 +239,9 @@ def run_resumable(
     done = manifest.completed()
     todo = [b for b in range(n) if b not in done]
     newly = 0
-    counters = ("n_rows", "n_invalid", "dup_keys", "gappy_convs") + (
-        ("rule_fails",) if suite.table_rules else ()
-    )
+    # the verdict of a bucket the predicate matched no row of
+    empty = verdict_totals([], suite.table_rules)
+    empty["bucket_pass"] = empty.pop("passed")
     conv_bucket = suite.bucket_fn(F.col(suite.conv), n)
     spark = df.sparkSession
 
@@ -295,15 +299,10 @@ def run_resumable(
                 "disagree (mixed bucket transforms?)"
             )
         for b in group:
-            row = verdict_rows.get(b)
-            if row is None:
-                # No verdict for a requested bucket ⇒ the predicate
-                # matched zero rows for it ⇒ genuinely empty (same
-                # transform on both sides, checked above).
-                row = {
-                    **dict.fromkeys(counters + ("surplus_rows", "n_convs"), 0),
-                    "bucket_pass": True,
-                }
+            # No verdict for a requested bucket ⇒ the predicate matched
+            # zero rows for it ⇒ genuinely empty (same transform on both
+            # sides, checked above).
+            row = verdict_rows.get(b, empty)
             row.pop("bucket", None)
             manifest.mark(
                 b,
@@ -320,18 +319,10 @@ def run_resumable(
                 return {"completed": len(done) + newly, "aborted": True}
 
     # aggregate lineage and state across all manifest entries
-    total = dict.fromkeys(counters, 0)
-    passed = True
-    stat_states: list[str] = []
+    entries = [manifest.read(b) for b in manifest.completed()]
+    stat_states = [e["stats"] for e in entries if e["stats"] is not None]
     census_sum: dict[str, dict[str, int]] = {}
-    for b in manifest.completed():
-        entry = manifest.read(b)
-        v = entry["verdict"]
-        for k in total:
-            total[k] += int(v.get(k) or 0)
-        passed = passed and bool(v.get("bucket_pass", True))
-        if entry["stats"] is not None:
-            stat_states.append(entry["stats"])
+    for entry in entries:
         for dim, kn in entry["census"].items():
             acc = census_sum.setdefault(dim, {})
             for k, c in kn.items():
@@ -343,13 +334,13 @@ def run_resumable(
         )
     stats = stat_table(merge_stat_states(df, kinds, stat_states), kinds)
     out = {
-        "completed": len(manifest.completed()),
+        "completed": len(entries),
         "aborted": False,
-        "passed": passed and not drift.get("drift_failed", False),
-        **total,
+        **verdict_totals([e["verdict"] for e in entries], suite.table_rules),
         "drift": drift,
         "stats": stats,
     }
+    out["passed"] &= not drift.get("drift_failed", False)
     if sketch_cols:
         out["distinct_estimates"] = {
             r["column"]: r["value"]

@@ -401,6 +401,49 @@ def robust_outliers(
     )
 
 
+def _trend(
+    df: DataFrame,
+    ts: str,
+    bucket: str,
+    trailing: int,
+    value: str,
+    aggs: list,
+    derived: tuple = (),
+) -> DataFrame:
+    """The shared core of the trend gates: ONE aggregation keyed by
+    ``date_trunc(bucket, ts)`` over the rows with a timestamp (``aggs``,
+    then the ``derived`` columns over them), plus ``trailing_median``,
+    the exact interpolated ``percentile(value, 0.5)`` of the previous
+    ``trailing`` buckets (null for the first bucket)."""
+    from pyspark.sql import Window
+
+    counts = (
+        df.where(F.col(ts).isNotNull())
+        .groupBy(F.date_trunc(bucket, F.col(ts)).alias("bucket"))
+        .agg(*aggs)
+    )
+    w = Window.orderBy("bucket").rowsBetween(-int(trailing), -1)
+    return counts.select("*", *derived).select(
+        "*",
+        F.expr(f"percentile({value}, 0.5)").over(w).alias("trailing_median"),
+    )
+
+
+def _ratio_band(trend: DataFrame, value: str, factor: float) -> DataFrame:
+    """``ratio = value / trailing_median`` and ``is_anomaly`` when it
+    falls outside ``[1/factor, factor]`` (never with no history)."""
+    ratio = F.col(value) / F.col("trailing_median")
+    return trend.select(
+        "*",
+        ratio.alias("ratio"),
+        F.coalesce(
+            (ratio > F.lit(float(factor)))
+            | (ratio < F.lit(1.0 / float(factor))),
+            F.lit(False),
+        ).alias("is_anomaly"),
+    )
+
+
 def volume_anomaly(
     df: DataFrame,
     ts: str = "ts",
@@ -432,32 +475,8 @@ def volume_anomaly(
     deliberately-bounded single-partition shape as the KS CDF window.
     Null timestamps are dropped (they are presence drift).
     """
-    from pyspark.sql import Window
-
-    counts = (
-        df.where(F.col(ts).isNotNull())
-        .groupBy(F.date_trunc(bucket, F.col(ts)).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.orderBy("bucket").rowsBetween(-int(trailing), -1)
-    med = F.expr("percentile(n, 0.5)").over(w)
-    out = counts.select(
-        "bucket",
-        F.col("n").cast("long").alias("n"),
-        med.alias("trailing_median"),
-    )
-    ratio = F.col("n") / F.col("trailing_median")
-    return out.select(
-        "bucket",
-        "n",
-        "trailing_median",
-        ratio.alias("ratio"),
-        F.coalesce(
-            (ratio > F.lit(float(factor)))
-            | (ratio < F.lit(1.0 / float(factor))),
-            F.lit(False),
-        ).alias("is_anomaly"),
-    )
+    out = _trend(df, ts, bucket, trailing, "n", [F.count(F.lit(1)).alias("n")])
+    return _ratio_band(out, "n", factor)
 
 
 def embedding_sanity(
@@ -660,28 +679,15 @@ def null_rate_anomaly(
     deliberately-bounded single-partition window as
     ``volume_anomaly``.  Null timestamps are dropped (unbucketable).
     """
-    from pyspark.sql import Window
-
-    counts = (
-        df.where(F.col(ts).isNotNull())
-        .groupBy(F.date_trunc(bucket, F.col(ts)).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col(col).isNull(), F.lit(1)).otherwise(F.lit(0))
-            ).alias("n_null"),
-        )
-    )
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.when(F.col(col).isNull(), F.lit(1)).otherwise(F.lit(0))
+        ).alias("n_null"),
+    ]
     rate = F.col("n_null").cast("double") / F.col("n")
-    w = Window.orderBy("bucket").rowsBetween(-int(trailing), -1)
-    out = counts.select(
-        "bucket",
-        F.col("n").cast("long").alias("n"),
-        F.col("n_null").cast("long").alias("n_null"),
-        rate.alias("null_rate"),
-    ).select(
-        "*",
-        F.expr("percentile(null_rate, 0.5)").over(w).alias("trailing_median"),
+    out = _trend(
+        df, ts, bucket, trailing, "null_rate", aggs, (rate.alias("null_rate"),)
     )
     diff = F.abs(F.col("null_rate") - F.col("trailing_median"))
     return out.select(
@@ -726,35 +732,12 @@ def distinct_anomaly(
     the #buckets-row aggregate only.  Null values do not count toward
     the cardinality; null timestamps are dropped.
     """
-    from pyspark.sql import Window
-
     nd = (
         F.count_distinct(F.col(col))
         if exact
         else F.approx_count_distinct(F.col(col), float(rsd))
     )
-    counts = (
-        df.where(F.col(ts).isNotNull())
-        .groupBy(F.date_trunc(bucket, F.col(ts)).alias("bucket"))
-        .agg(nd.alias("n_distinct"))
+    out = _trend(
+        df, ts, bucket, trailing, "n_distinct", [nd.alias("n_distinct")]
     )
-    w = Window.orderBy("bucket").rowsBetween(-int(trailing), -1)
-    out = counts.select(
-        "bucket",
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-    ).select(
-        "*",
-        F.expr("percentile(n_distinct, 0.5)")
-        .over(w)
-        .alias("trailing_median"),
-    )
-    ratio = F.col("n_distinct") / F.col("trailing_median")
-    return out.select(
-        "*",
-        ratio.alias("ratio"),
-        F.coalesce(
-            (ratio > F.lit(float(factor)))
-            | (ratio < F.lit(1.0 / float(factor))),
-            F.lit(False),
-        ).alias("is_anomaly"),
-    )
+    return _ratio_band(out, "n_distinct", factor)

@@ -10,16 +10,15 @@ Pipeline shape (what actually runs):
    bucket of its RAW conv key (the key the uniqueness rollup and the
    checkpoint's resume predicate use; a chain may clean or null the
    key) — no shuffle.
-2. Per-bucket verdict aggregation — hash agg keyed by bucket
-   (``n_buckets`` groups; map-side combine reduces each task's output to
-   ``n_buckets`` rows before the shuffle).
-3. Uniqueness + gaplessness — hash aggs keyed by (conv_id, turn_idx) /
-   conv_id, rolled up to buckets, reading the PERSISTED narrow
-   projection (raw-key copies), not a second input scan.
-4. Column stats — one aggregation over the narrow stat inputs carried
+2. Per-bucket verdicts — ONE aggregation cascade, hash aggs keyed by
+   (conv_id, turn_idx), then conv_id, then bucket, reading the
+   PERSISTED narrow projection (raw-key copies), not a second input
+   scan.  Each level carries the validity counters (rows, invalid rows,
+   table-rule fails) beside the uniqueness and gaplessness counters.
+3. Column stats — one aggregation over the narrow stat inputs carried
    in the persisted projection (engine/stats.py: the mergeable stat
    state, finished into the long table).
-5. Drift — current side from the persisted raw copies (pre-bucketed
+4. Drift — current side from the persisted raw copies (pre-bucketed
    lengths), baseline side one scan, driver-side KL/PSI.
 
 Input scans at 10^12 rows: one, the chain pass — every other stage
@@ -72,6 +71,20 @@ RULEF_COL = "__rule_fails"  # per-row count of failed table rules
 
 def bucket_of(conv_col, n_buckets: int):
     return F.pmod(F.xxhash64(conv_col), F.lit(n_buckets)).cast("int")
+
+
+def verdict_totals(verdicts: list, table_rules: dict | None) -> dict:
+    """The job summary's verdict counters, summed over ``verdicts``
+    (Spark ``Row``s or manifest dicts), with ``rule_fails`` when the
+    suite has ``table_rules``, and ``passed`` when every bucket passed.
+    Over no rows it is an empty bucket's verdict: zero counters, passed."""
+    counters = ("n_rows", "n_invalid", "dup_keys", "gappy_convs") + (
+        ("rule_fails",) if table_rules else ()
+    )
+    return {
+        **{k: sum(v[k] for v in verdicts) for k in counters},
+        "passed": all(v["bucket_pass"] for v in verdicts),
+    }
 
 
 @dataclass
@@ -154,7 +167,7 @@ class ValidationSuite:
 
             # evaluated on the RAW input projection (chains may null or
             # clean the very columns the rules reference); one int per
-            # row, summed per bucket in verdicts()
+            # row, summed up the verdicts() cascade
             fails: Column | None = None
             for expr in self.table_rules.values():
                 f = _fail(_pred(expr), null_fails=True).cast("int")
@@ -165,36 +178,37 @@ class ValidationSuite:
     def verdicts(self, rows: DataFrame) -> DataFrame:
         """Per-bucket verdict: row validity + uniqueness + gaplessness.
 
-        Uniqueness and gaplessness derive from ONE aggregation cascade
-        over the RAW key copies carried in ``rows`` — ``(conv, idx)``
-        counts → per-conversation stats (dup counters AND gapless flags
-        computed together) → bucket rollup — so the big keyed shuffle
-        runs exactly once AND reads the narrow persisted projection
-        instead of rescanning the input (chains replace validated
-        columns, so cleaned keys could be nulled; the ``__raw_`` copies
-        preserve the raw-key contract without a second scan).
+        Every counter derives from ONE aggregation cascade over the RAW
+        key copies carried in ``rows`` — ``(conv, idx)`` counts →
+        per-conversation stats (dup counters AND gapless flags computed
+        together) → bucket rollup — so the big keyed shuffle runs
+        exactly once AND reads the narrow persisted projection instead
+        of rescanning the input (chains replace validated columns, so
+        cleaned keys could be nulled; the ``__raw_`` copies preserve the
+        raw-key contract without a second scan).  The validity counters
+        (rows, invalid rows, table-rule fails) are summed up the same
+        three levels, so no aggregation keyed by bucket alone and no
+        join; the ``(conv, idx)`` key stays close to unique even inside
+        a hot conversation, so they need no skew handling.
         (An earlier design aggregated dups and gaplessness as two
         branches over the shared pre-agg, counting on exchange reuse;
         measured plans showed Spark does NOT dedupe those exchanges, so
         the cascade makes single-execution structural instead of
         optimizer-dependent.)
         """
-        with_rules = RULEF_COL in rows.columns
-        validity_aggs = [
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(~F.col("_is_valid"), 1).otherwise(0)).alias(
-                "n_invalid"
-            ),
-        ]
-        if with_rules:
-            validity_aggs.append(F.sum(RULEF_COL).alias("rule_fails"))
-        validity = rows.groupBy(BUCKET_COL).agg(*validity_aggs)
+        rule = ["rule_fails"] if RULEF_COL in rows.columns else []
         raw_src = rows.select(
             F.col(RAW_PREFIX + self.conv).alias(self.conv),
             F.col(RAW_PREFIX + self.idx).alias(self.idx),
+            "_is_valid",
+            *(F.col(RULEF_COL).alias(c) for c in rule),
         )
         level1 = raw_src.groupBy(self.conv, self.idx).agg(
-            F.count(F.lit(1)).alias("cnt")
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.when(~F.col("_is_valid"), 1).otherwise(0)).alias(
+                "n_invalid"
+            ),
+            *(F.sum(c).alias(c) for c in rule),
         )
         conv_stats = level1.groupBy(self.conv).agg(
             F.count(F.lit(1)).alias("distinct_turns"),
@@ -206,43 +220,33 @@ class ValidationSuite:
             F.sum(
                 F.greatest(F.col("cnt") - 1, F.lit(0))
             ).alias("surplus_rows"),
+            F.sum("cnt").alias("n_rows"),
+            *(F.sum(c).alias(c) for c in ["n_invalid", *rule]),
         )
-        keyed = (
-            conv_stats.select(
-                F.col(self.conv),
-                "dup_keys",
-                "surplus_rows",
-                (
-                    (F.col("min_idx") == 0)
-                    & (F.col("max_idx") == F.col("distinct_turns") - 1)
-                ).alias("is_gapless"),
-            )
-            .groupBy(self.bucket_fn(F.col(self.conv), self.n_buckets).alias(BUCKET_COL))
-            .agg(
-                F.sum("dup_keys").alias("dup_keys"),
-                F.sum("surplus_rows").alias("surplus_rows"),
-                F.count(F.lit(1)).alias("n_convs"),
-                F.sum(F.when(~F.col("is_gapless"), 1).otherwise(0)).alias(
-                    "gappy_convs"
-                ),
-            )
+        is_gapless = (F.col("min_idx") == 0) & (
+            F.col("max_idx") == F.col("distinct_turns") - 1
         )
-        v = validity.join(keyed, BUCKET_COL, "left").fillna(
-            0, subset=["dup_keys", "surplus_rows", "gappy_convs"]
+        summed = ["n_rows", "n_invalid", *rule, "dup_keys", "surplus_rows"]
+        v = conv_stats.groupBy(
+            self.bucket_fn(F.col(self.conv), self.n_buckets).alias(BUCKET_COL)
+        ).agg(
+            *(F.sum(c).alias(c) for c in summed),
+            F.count(F.lit(1)).alias("n_convs"),
+            F.sum(F.when(~is_gapless, 1).otherwise(0)).alias("gappy_convs"),
         )
         bucket_pass = (
             (F.col("n_invalid") / F.col("n_rows") <= self.max_invalid_rate)
             & (F.col("dup_keys") == 0)
             & (F.col("gappy_convs") == 0)
         )
-        if with_rules:
+        if rule:
             bucket_pass = bucket_pass & (F.col("rule_fails") == 0)
         return v.select(
             F.col(BUCKET_COL).alias("bucket"),
             "n_rows",
             "n_invalid",
             (F.col("n_invalid") / F.col("n_rows")).alias("invalid_rate"),
-            *(["rule_fails"] if with_rules else []),
+            *rule,
             "dup_keys",
             "surplus_rows",
             "n_convs",

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 import filters_spark as fs
 from filters_spark.engine.checkpoint import CheckpointManifest, run_resumable
-from filters_spark.engine.suite import ValidationSuite
+from filters_spark.engine.suite import ValidationSuite, verdict_totals
 
 
 def default_rules() -> dict:
@@ -53,6 +53,22 @@ def load_table(spark: SparkSession, ref: str, fmt: str) -> DataFrame:
     if fmt == "iceberg":
         return spark.read.table(ref)
     return spark.read.parquet(ref)
+
+
+def table_rules_arg(text: str) -> dict:
+    """``--table-rules``: a JSON object of name -> SQL predicate."""
+    try:
+        rules = json.loads(text)
+    except json.JSONDecodeError as e:
+        raise argparse.ArgumentTypeError(f"not valid JSON ({e})") from None
+    if not (
+        isinstance(rules, dict)
+        and all(isinstance(v, str) for v in rules.values())
+    ):
+        raise argparse.ArgumentTypeError(
+            "must be a JSON object of name -> SQL predicate"
+        )
+    return rules
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -89,6 +105,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--hist-bins", type=int, default=32)
     p.add_argument(
         "--table-rules",
+        type=table_rules_arg,
         help="JSON object of named TABLE-level boolean SQL predicates "
         '(cross-field invariants, e.g. {"tool_on_assistant": '
         "\"tool IS NULL OR role = 'assistant'\"}); evaluated on the "
@@ -103,6 +120,8 @@ def main(argv: list[str] | None = None) -> int:
     args = parser.parse_args(argv)
     if not args.manifest and (args.sketch_cols or args.hist_cols):
         parser.error("--sketch-cols and --hist-cols need --manifest")
+    if not (args.synthetic or args.input):
+        parser.error("either --input or --synthetic is required")
     spark = (
         SparkSession.builder.appName("filters_spark_validation")
         .config("spark.sql.adaptive.enabled", "true")
@@ -119,9 +138,6 @@ def main(argv: list[str] | None = None) -> int:
         df = transcripts(spark, n_convs=args.synthetic)
         baseline = transcripts_baseline(spark, n_convs=args.synthetic // 4)
     else:
-        if not args.input:
-            print("either --input or --synthetic is required", file=sys.stderr)
-            return 2
         df = load_table(spark, args.input, args.format)
         baseline = (
             load_table(spark, args.baseline, args.format)
@@ -129,23 +145,13 @@ def main(argv: list[str] | None = None) -> int:
             else None
         )
 
-    table_rules = json.loads(args.table_rules) if args.table_rules else None
-    if table_rules is not None and not (
-        isinstance(table_rules, dict)
-        and all(isinstance(v, str) for v in table_rules.values())
-    ):
-        print(
-            "--table-rules must be a JSON object of name -> SQL predicate",
-            file=sys.stderr,
-        )
-        return 2
     suite = ValidationSuite(
         default_rules(),
         conv=args.conv_col,
         idx=args.idx_col,
         n_buckets=args.n_buckets,
         max_invalid_rate=args.max_invalid_rate,
-        table_rules=table_rules,
+        table_rules=args.table_rules,
     )
 
     out = args.output.rstrip("/")
@@ -179,18 +185,9 @@ def main(argv: list[str] | None = None) -> int:
         verdicts = result.verdicts.collect()
         summary = {
             "completed": len(verdicts),
-            "n_rows": sum(r["n_rows"] for r in verdicts),
-            "n_invalid": sum(r["n_invalid"] for r in verdicts),
-            "dup_keys": sum(r["dup_keys"] for r in verdicts),
-            "gappy_convs": sum(r["gappy_convs"] for r in verdicts),
-            **(
-                {"rule_fails": sum(r["rule_fails"] for r in verdicts)}
-                if table_rules
-                else {}
-            ),
-            "passed": all(r["bucket_pass"] for r in verdicts)
-            and not result.metrics.get("drift_failed", False),
+            **verdict_totals(verdicts, args.table_rules),
         }
+        summary["passed"] &= not result.metrics.get("drift_failed", False)
         spark.createDataFrame(verdicts, result.verdicts.schema).write.mode(
             "overwrite"
         ).parquet(f"{out}/verdicts")

@@ -62,7 +62,11 @@ def attach_media_meta(
             & (F.substring(p, 9, 4) == F.lit(b"AVI ")),
             F.lit("video"),
         )
-        .when(F.startswith(p, F.lit(b"RIFF")), F.lit("audio"))
+        .when(
+            F.startswith(p, F.lit(b"RIFF"))
+            & (F.substring(p, 9, 4) == F.lit(b"WAVE")),
+            F.lit("audio"),
+        )
         .when(
             F.startswith(F.substring(p, 5, 4), F.lit(b"ftyp")), F.lit("video")
         )

@@ -918,6 +918,82 @@ def test_buckets_come_from_the_raw_key(tmp_path, spark):
     assert final["passed"] == all(r["bucket_pass"] for r in verdicts)
 
 
+def test_verdicts_match_python_on_dirty_keys(spark):
+    """Every verdict column of every bucket equals a pure-Python
+    computation over the raw rows, on keys no clean frame has: duplicate
+    keys, gaps, a NULL and an empty conv_id (``Required`` nulls the
+    latter), a NULL turn_idx, a negative turn_idx and a failing table
+    rule.  Buckets come from ``suite.bucket_fn`` of the raw key."""
+    from collections import Counter, defaultdict
+
+    turns = {
+        "a": [0, 1, 1, 2],  # one duplicate key
+        "b": [0, 2],  # gap
+        None: [0, 1],  # NULL conv_id: invalid, still one conversation
+        "": [0, 1, 2],  # Required nulls it: invalid
+        "c": [0, None, 1],  # NULL turn_idx counts as a distinct turn
+        "d": [-1, 0],  # Min(0) fails, and a gap
+        "e": [0, 0, 0, 1],  # two surplus rows of one key
+        **{f"f{i}": [0, 1] for i in range(8)},
+    }
+    raw = [
+        (c, i, "user" if i == 0 and c == "e" else "assistant",
+         "search" if c in ("e", "b") else None, f"{c} {i}")
+        for c, idxs in turns.items()
+        for i in idxs
+    ]
+    df = spark.createDataFrame(
+        raw, "conv_id string, turn_idx int, role string, tool string, "
+        "text string",
+    )
+    table_rules = {"tool_on_assistant": "tool IS NULL OR role = 'assistant'"}
+    suite = ValidationSuite(
+        {"conv_id": fs.Required(), "turn_idx": fs.Min(0)},
+        n_buckets=4, table_rules=table_rules,
+    )
+    result = suite.run(df)
+    got = {r["bucket"]: tuple(r) for r in result.verdicts.collect()}
+    result.unpersist()
+
+    bucketed = df.select(
+        "*", suite.bucket_fn(F.col("conv_id"), 4).alias("b")
+    ).collect()
+    rows, convs = defaultdict(list), defaultdict(Counter)
+    for r in bucketed:
+        rows[r["b"]].append(r)
+        convs[r["b"], r["conv_id"]][r["turn_idx"]] += 1
+    expected = {}
+    for b, rs in rows.items():
+        n_invalid = sum(
+            r["conv_id"] in (None, "")
+            or (r["turn_idx"] is not None and r["turn_idx"] < 0)
+            for r in rs
+        )
+        rule_fails = sum(
+            not (r["tool"] is None or r["role"] == "assistant") for r in rs
+        )
+        keys = [k for (cb, _), k in convs.items() if cb == b]
+        dup_keys = sum(n > 1 for k in keys for n in k.values())
+        surplus = sum(n - 1 for k in keys for n in k.values())
+        gappy = 0
+        for k in keys:
+            idxs = [i for i in k if i is not None]
+            gappy += bool(idxs) and not (
+                min(idxs) == 0 and max(idxs) == len(k) - 1
+            )
+        rate = n_invalid / len(rs)
+        expected[b] = (
+            b, len(rs), n_invalid, rate, rule_fails, dup_keys, surplus,
+            len(keys), gappy,
+            rate <= 0.05 and dup_keys == 0 and gappy == 0 and rule_fails == 0,
+        )
+    assert got == expected
+    # the frame reaches every kind of fault the verdict counts
+    assert all(
+        sum(v[i] for v in expected.values()) > 0 for i in (2, 4, 5, 6, 8)
+    )
+
+
 def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
     """``python -m filters_spark.job`` (in a subprocess: ``main`` stops
     its session) over an input with an empty ``conv_id``: the one-shot
@@ -979,15 +1055,29 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
     } == entries
 
 
-@pytest.mark.parametrize("flag", ("--sketch-cols", "--hist-cols"))
-def test_job_cli_refuses_state_cols_without_manifest(flag):
-    """``--sketch-cols`` and ``--hist-cols`` are per-bucket manifest
-    state: a one-shot run refuses them (exit 2) before any Spark
-    session is built, instead of ignoring them."""
+@pytest.mark.parametrize(
+    "argv",
+    (
+        pytest.param(["--synthetic", "10", "--sketch-cols", "text"],
+                     id="--sketch-cols"),
+        pytest.param(["--synthetic", "10", "--hist-cols", "text"],
+                     id="--hist-cols"),
+        pytest.param([], id="no-input"),
+        pytest.param(["--synthetic", "10", "--table-rules", "[1]"],
+                     id="table-rules-not-object"),
+        pytest.param(["--synthetic", "10", "--table-rules", "{"],
+                     id="table-rules-bad-json"),
+    ),
+)
+def test_job_cli_refuses_state_cols_without_manifest(argv):
+    """A bad command line is refused (exit 2) before any Spark session
+    is built: ``--sketch-cols`` and ``--hist-cols`` (per-bucket manifest
+    state) without ``--manifest``, neither ``--input`` nor
+    ``--synthetic``, and ``--table-rules`` that is not a JSON object."""
     from filters_spark.job import main
 
     with pytest.raises(SystemExit) as exc_info:
-        main(["--synthetic", "10", "--output", "/nonexistent", flag, "text"])
+        main(["--output", "/nonexistent", *argv])
     assert exc_info.value.code == 2
 
 
@@ -1575,8 +1665,8 @@ def test_embedding_sanity(spark):
 
 def test_suite_table_rules_in_verdicts(tdf):
     """table_rules= folds cross-field invariants into the SAME suite
-    pass: per-bucket rule_fails counts ride the existing validity
-    aggregation (no extra scan) and gate bucket_pass."""
+    pass: per-bucket rule_fails counts are summed up the verdict
+    cascade (no extra scan or aggregation) and gate bucket_pass."""
     table_rules = {
         "tool_only_on_assistant": "tool IS NULL OR role = 'assistant'",
         "idx_nonneg": "turn_idx >= 0",

@@ -1438,7 +1438,7 @@ def test_avi_header_and_media_meta(spark):
     """RIFF-AVI header parse: dimensions and frame count from ``avih``,
     the counted ``00dc`` chunks when ``avih`` reports none, and ``None``
     with neither frames nor dimensions; ``attach_media_meta`` classifies
-    AVI as video on the JVM side."""
+    AVI as video, WAVE as audio and WebP as unknown on the JVM side."""
     from pyspark.sql import types as T
 
     from filters_spark.pipeline.multimodal import (
@@ -1465,14 +1465,17 @@ def test_avi_header_and_media_meta(spark):
         ]
     )
 
-    # JVM-side classification: AVI is video, WAVE stays audio
+    # JVM-side classification: AVI is video, WAVE stays audio, any other
+    # RIFF form (WebP) is unknown, as parse_media_header has it
     wav = b"RIFF" + b"\x24\x00\x00\x00" + b"WAVE" + b"\x00" * 24
-    mdf = spark.createDataFrame([(1, avi), (2, wav)], schema)
+    webp = b"RIFF" + b"\x1a\x00\x00\x00" + b"WEBPVP8 " + b"\x00" * 18
+    assert parse_media_header(webp) is None
+    mdf = spark.createDataFrame([(1, avi), (2, wav), (3, webp)], schema)
     got = {
         r["id"]: r["media_meta"]["media_type"]
         for r in attach_media_meta(mdf).collect()
     }
-    assert got == {1: "video", 2: "audio"}
+    assert got == {1: "video", 2: "audio", 3: "unknown"}
 
 
 def test_ivf_assign_keep_vec_single_projection_no_join(emb):
