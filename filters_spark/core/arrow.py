@@ -8,7 +8,10 @@ Those compile to **one Arrow-batched pandas UDF per step** returning a
 
 Never row-at-a-time Python UDFs: all kernels are ``pandas_udf`` (Arrow
 batch transfer), and the compiler materialises each kernel call once per
-chain so it is evaluated exactly once per batch.
+chain so it is evaluated exactly once per batch.  A kernel in the
+element chain of a ``FilterRepeater`` runs once over all elements of
+the row's array: :func:`call_kernel` turns it into one array-in /
+array-out UDF, and the repeater's lambda reads its element by index.
 """
 
 from __future__ import annotations
@@ -16,7 +19,9 @@ from __future__ import annotations
 from typing import Callable
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column
+from pyspark.sql.classic.column import _to_seq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -70,24 +75,59 @@ def elementwise(f: Callable):
     return run
 
 
-def make_struct_kernel(
+def _transform(array: Column, body: Column, variables: tuple) -> Column:
+    """``transform(array, (x, i) -> body)`` over the lambda variables of
+    an enclosing ``F.transform`` call, so that ``body`` — built inside
+    that call — evaluates the same per element here."""
+    sc = SparkContext._active_spark_context
+    utils = sc._jvm.PythonSQLUtils
+    fn = utils.lambdaFunction(body._jc, _to_seq(sc, [v._jc for v in variables]))
+    return Column(utils.fn("transform", _to_seq(sc, [array._jc, fn])))
+
+
+def call_kernel(
+    ctx,
+    tag: str,
     batch_fn: Callable[[pd.Series], pd.DataFrame],
     value_type: T.DataType,
-) -> Callable[[Column], Column]:
-    """Wrap a batch function into a pandas_udf producing
-    ``struct<value, code>``."""
+    arg: Column,
+) -> tuple[Column, dict[str, Column]]:
+    """One Arrow kernel call of a compiled step: ``(res, pre)``, where
+    ``pre`` (the step's ``pre``) materialises the kernel as a temp
+    column and ``res`` is the ``struct<value, code>`` the step reads.
+
+    Inside a ``FilterRepeater`` lambda (``ctx.elements``) the temp column
+    is ONE array-in / array-out UDF over every element's ``arg``, and
+    ``res`` is its element at the lambda's index: the kernel never runs
+    inside the lambda, and the repeater stays one projection.
+    """
+    name = ctx.name(tag)
     schema = kernel_schema(value_type)
+    if not ctx.elements:
 
-    @pandas_udf(schema)
-    def k(s: pd.Series) -> pd.DataFrame:
-        out = batch_fn(s)
-        return out
+        @pandas_udf(schema)
+        def k(s: pd.Series) -> pd.DataFrame:
+            return batch_fn(s)
 
-    return k
+        return F.col(name), {name: k(arg)}
+    array, variables = ctx.elements[-1]
 
+    @pandas_udf(T.ArrayType(schema))
+    def ks(s: pd.Series) -> pd.Series:
+        # batch_fn over all elements of the batch's arrays in one call,
+        # then each array its elements' records (a NULL array NULL)
+        flat = [x for xs in s if xs is not None for x in xs]
+        res = batch_fn(pd.Series(flat, dtype=None if flat else object))
+        # NaN / NaT are NULL, as Arrow reads them in a batch_fn's frame
+        vals, codes = (
+            res[c].astype(object).where(res[c].notna(), None).tolist()
+            for c in ("value", "code")
+        )
+        records = [{"value": v, "code": c} for v, c in zip(vals, codes)]
+        out, at = [], 0
+        for xs in s:
+            out.append(None if xs is None else records[at : at + len(xs)])
+            at += 0 if xs is None else len(xs)
+        return pd.Series(out, dtype=object)
 
-def scalar_kernel(
-    f: Callable, value_type: T.DataType
-) -> Callable[[Column], Column]:
-    """Shorthand: elementwise scalar fn → struct kernel."""
-    return make_struct_kernel(elementwise(f), value_type)
+    return F.col(name)[variables[1]], {name: ks(_transform(array, arg, variables))}

@@ -32,20 +32,20 @@ step's ``(value, err)`` is bound for the next step:
 
 - :func:`attach_chain` — DataFrame-level; binds them to temp columns (kept
   linear, Catalyst collapses the projections), materialises Arrow pandas
-  kernels (``Step.pre``) before the step that reads them, runs a step's
-  DataFrame rewrite (``Step.rewrite``: a ``FilterRepeater`` whose element
-  chain needs a kernel, on the explode route) in its place in the fold,
-  and guards the violations with the fired mask.  :func:`validate`
-  compiles every rule through it.
+  kernels (``Step.pre``) before the step that reads them, and guards the
+  violations with the fired mask.  :func:`validate` compiles every rule
+  through it.
 - :func:`compile_chain_expr` — pure-expression; binds them inline, so the
   result is usable inside higher-order function lambdas (``F.transform``
-  for ``FilterRepeater``), inside structural combinators and on the
-  explode path.  Its violations are the unguarded
-  ``concat(part_1, …, part_n)`` (same value): without temp columns the
-  guard would repeat every violation condition in the expression tree.
-  Pandas kernels are collected in ``ChainResult.pre`` with
-  ``allow_pre=True`` and rejected with :class:`CompileError` otherwise;
-  a DataFrame rewrite is always a :class:`CompileError`.
+  for ``FilterRepeater``) and inside structural combinators.  Its
+  violations are the unguarded ``concat(part_1, …, part_n)`` (same
+  value): without temp columns the guard would repeat every violation
+  condition in the expression tree.  Pandas kernels are collected in
+  ``ChainResult.pre`` with ``allow_pre=True`` and rejected with
+  :class:`CompileError` otherwise.  A kernel inside a ``FilterRepeater``
+  lambda is collected the same way: it reads its element of an
+  array-in / array-out kernel column (``core/arrow.py``), so every
+  chain, kernel repeaters included, is one projection.
 
 The chain's key passes unchanged to every step: a column name (``""`` at
 the root), or a Column inside a ``FilterRepeater`` lambda, from which
@@ -151,8 +151,8 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
     :class:`ChainResult` and the chain's fired mask (True exactly where
     its violations are non-empty).
 
-    ``on_pre(spec, step)`` receives every step with Arrow kernels or a
-    DataFrame rewrite before the step's columns are used.
+    ``on_pre(spec, step)`` receives every step with Arrow kernels before
+    the step's columns are used.
     ``bind(**cols)`` returns, in order, the columns later steps read in
     place of ``cols`` (temp-column references), and the violations are
     then guarded by the fired mask.
@@ -173,7 +173,7 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
     partial_possible = False  # True once a keep_value_on_error step ran
     for spec in as_chain(chain).specs:
         step = spec.compile(value, dtype, ctx, key)
-        if step.pre or step.rewrite is not None:
+        if step.pre:
             on_pre(spec, step)
         reported = _step_violations(step, err, value, key)
         if step.violations_array is None:
@@ -237,24 +237,14 @@ def compile_chain_expr(
 ) -> ChainResult:
     """Expression-level compile (no temp columns of its own).
 
-    With ``allow_pre=True`` (struct-field chains inside FilterMapper /
-    FilterSwitch, the explode route, and a FilterRepeater's element chain,
-    whose ``pre`` picks the repeater's route), Arrow-kernel columns are
+    With ``allow_pre=True`` (the chains of FilterMapper / FilterSwitch
+    fields and of a FilterRepeater's elements), Arrow-kernel columns are
     accumulated in ``ChainResult.pre`` for the caller to materialise in
-    order.  With ``allow_pre=False`` kernels are a compile error.  A step
-    with a DataFrame rewrite (a kernel ``FilterRepeater``) is a compile
-    error in both: no expression can host it.
+    order.  With ``allow_pre=False`` kernels are a compile error.
     """
     pre: dict = {}
 
     def on_pre(spec, step):
-        if step.rewrite is not None:
-            raise CompileError(
-                f"{spec!r}: a FilterRepeater whose element chain needs an "
-                "Arrow kernel runs only at the top of a rule chain "
-                "(validate / attach_chain), not inside a FilterRepeater, "
-                "FilterMapper or FilterSwitch"
-            )
         if not allow_pre:
             raise CompileError(
                 f"{type(spec).__name__} needs an Arrow pandas kernel and "
@@ -279,16 +269,6 @@ def _attach(
 
     def on_pre(spec, step):
         nonlocal df
-        if step.rewrite is not None:
-            if df.isStreaming:
-                # the explode route re-assembles rows in a grouped
-                # aggregation, which an append-mode stream cannot host
-                raise CompileError(
-                    f"{spec!r}: a FilterRepeater whose element chain needs "
-                    "an Arrow kernel cannot validate a streaming DataFrame"
-                )
-            df, names = step.rewrite(df)
-            temps.extend(names)
         # sequential: later kernels may reference earlier pre columns
         for pname, pcol in step.pre.items():
             df = df.withColumn(pname, pcol)
@@ -333,10 +313,7 @@ def attach_chain(
     several).
 
     Each step is materialised as temp columns so the expression tree stays
-    linear; Catalyst collapses the stacked projections into one.  A
-    ``FilterRepeater`` whose element chain needs an Arrow kernel runs the
-    explode route (``engine/explode.py``) as its step, anywhere in the
-    chain and any number of times; not on a streaming DataFrame.
+    linear; Catalyst collapses the stacked projections into one.
     """
     return _attach(
         df, col_name, chain, col_name if key is None else key, ctx or Ctx(),
@@ -364,13 +341,10 @@ def validate(
     ``violations_col`` concatenates the rules' arrays only where it is
     false, so valid rows never build one.
 
-    Scale notes: no shuffle — pure projection; Column-expression kernels
-    stay in whole-stage codegen; pandas kernels ride Arrow batches.
-    Exception: a ``FilterRepeater`` whose element chain needs an Arrow
-    kernel (kernels cannot run inside higher-order-function lambdas) is
-    one step of its rule's fold that runs the explode route
-    (``engine/explode.py``); each such repeater costs a per-row-id hash
-    aggregation, and everything else stays a projection.
+    Scale notes: no shuffle — pure projection, whatever the rules;
+    Column-expression kernels stay in whole-stage codegen; pandas kernels
+    ride Arrow batches, a ``FilterRepeater``'s element kernels as one
+    array-in / array-out UDF per kernel over the row's elements.
     """
     ctx = Ctx()
     produced: list[tuple[str, str, str]] = []

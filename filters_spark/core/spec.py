@@ -61,11 +61,17 @@ class CompileError(ValueError):
 
 
 class Ctx:
-    """Per-compilation context: unique temp-column names."""
+    """Per-compilation context: unique temp-column names, and the
+    ``FilterRepeater`` lambdas being compiled."""
 
     def __init__(self, prefix: str = "__fs") -> None:
         self._counter = itertools.count()
         self.prefix = prefix
+        #: ``(array, (x, i))`` per enclosing ``FilterRepeater`` lambda,
+        #: innermost last: the array it transforms and its variables,
+        #: so a kernel step reads its element of an array kernel
+        #: (:func:`filters_spark.core.arrow.call_kernel`)
+        self.elements: list[tuple[Column, tuple[Column, Column]]] = []
 
     def name(self, tag: str) -> str:
         return f"{self.prefix}_{tag}_{next(self._counter)}"
@@ -113,11 +119,6 @@ class Step:
     #: ``invalid`` are evaluated — used for Arrow pandas kernels so the
     #: UDF runs exactly once per row-batch.
     pre: dict[str, Column] = field(default_factory=dict)
-    #: DataFrame rewrite ``df -> (df, temp column names)`` that writes the
-    #: columns ``value`` / ``violations_array`` read; run before them,
-    #: like ``pre``, and only at the top of a rule chain (a kernel
-    #: ``FilterRepeater``'s explode route).
-    rewrite: typing.Callable | None = None
     #: True if this spec inspects/replaces null inputs (Required,
     #: NotEmpty(allow_none=False), Optional) — the only exceptions to the
     #: None-passes rule (simple.py:971-984, :729-733, :856-858).

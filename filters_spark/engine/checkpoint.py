@@ -30,6 +30,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from filters_spark.core.spec import BaseSpec, SpecMeta, resolve
 from filters_spark.engine.drift import collect_census, profile_from_census
 from filters_spark.engine.stats import (
     RAW_PREFIX,
@@ -61,23 +62,42 @@ STATE_VERSION = 4
 HIST_PREFIX = RAW_PREFIX + "hist_"
 
 
+def _sig(v):
+    """A stable signature of a rule value: a spec (a spec class, macro
+    or chain resolved first) by its class and instance attributes,
+    recursing into specs, chains, dicts, sequences and sorted sets; a
+    function or type by its qualified name; anything else by its
+    ``repr``, or its class name where that shows an object address (so
+    the fingerprint can never false-refuse a valid resume on object
+    identity).  ``repr`` alone drops parameters (``MaxLength(2000,
+    truncate=True)`` prints ``MaxLength(2000)``)."""
+    if isinstance(v, (BaseSpec, SpecMeta)):
+        v = resolve(v)
+        return [type(v).__qualname__, {k: _sig(x) for k, x in sorted(vars(v).items())}]
+    if isinstance(v, dict):
+        return [[_sig(k), _sig(x)] for k, x in v.items()]
+    if isinstance(v, (list, tuple)):
+        return [_sig(x) for x in v]
+    if isinstance(v, (set, frozenset)):
+        return sorted((_sig(x) for x in v), key=repr)
+    if callable(v) and hasattr(v, "__qualname__"):
+        return f"{v.__module__}.{v.__qualname__}"
+    r = repr(v)
+    return type(v).__name__ if " at 0x" in r else r
+
+
 def suite_fingerprint(suite: ValidationSuite, state: dict) -> str:
     """Stable digest of the config that determines what the stored
     per-bucket state MEANS: the suite's (rules, table rules, keys,
     bucket count, stat/drift columns) and the run's ``state`` spec
-    (resolved stat columns, histogram columns and grid).  Specs without
-    a stable ``__repr__`` fall back to their class name, so the
-    fingerprint can never false-refuse a valid resume on object identity
-    — it only catches real config drift."""
+    (resolved stat columns, histogram columns and grid).  Each rule is
+    signed by :func:`_sig`, so a changed parameter anywhere in it is
+    config drift."""
     import hashlib
-
-    def sig(v) -> str:
-        r = repr(v)
-        return type(v).__name__ if " object at 0x" in r else r
 
     spec = repr(
         {
-            "rules": {k: sig(v) for k, v in sorted(suite.rules.items())},
+            "rules": {k: _sig(v) for k, v in sorted(suite.rules.items())},
             "table_rules": sorted((suite.table_rules or {}).items()),
             "conv": suite.conv,
             "idx": suite.idx,
@@ -216,6 +236,9 @@ def run_resumable(
     ``fail_after_buckets`` is a test hook: abort after N newly-completed
     buckets to simulate a killed job.
     """
+    for name, v in (("buckets_per_job", buckets_per_job), ("hist_bins", hist_bins)):
+        if v < 1:
+            raise ValueError(f"{name} must be a positive int, got {v}")
     if not isinstance(manifest, CheckpointManifest):
         manifest = CheckpointManifest(manifest)
     kinds = stat_kinds(df, suite.stat_columns or df.columns)

@@ -124,6 +124,8 @@ class ValidationSuite:
         bucket_fn=None,
         table_rules: dict | None = None,
     ) -> None:
+        if n_buckets < 1:
+            raise ValueError(f"n_buckets must be a positive int, got {n_buckets}")
         self.rules = rules
         #: named TABLE-level boolean predicates (engine/rules.py) —
         #: cross-field invariants evaluated on the RAW input row

@@ -71,6 +71,17 @@ def table_rules_arg(text: str) -> dict:
     return rules
 
 
+def positive_int(text: str) -> int:
+    """``--n-buckets``, ``--buckets-per-job``, ``--hist-bins``: 1 or more."""
+    try:
+        n = int(text)
+    except ValueError:
+        raise argparse.ArgumentTypeError(f"not an int: {text!r}") from None
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be 1 or more, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="filters_spark.job")
     p.add_argument("--input", help="transcripts parquet path / iceberg table")
@@ -86,9 +97,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--manifest", help="checkpoint manifest dir (enables resume)")
     p.add_argument("--conv-col", default="conv_id")
     p.add_argument("--idx-col", default="turn_idx")
-    p.add_argument("--n-buckets", type=int, default=64)
+    p.add_argument("--n-buckets", type=positive_int, default=64)
     p.add_argument("--max-invalid-rate", type=float, default=0.05)
-    p.add_argument("--buckets-per-job", type=int, default=8)
+    p.add_argument("--buckets-per-job", type=positive_int, default=8)
     p.add_argument(
         "--sketch-cols",
         help="comma-separated stat columns whose HLL distinct estimates, "
@@ -102,7 +113,7 @@ def build_parser() -> argparse.ArgumentParser:
         "are checkpointed in the manifest and vector-added on resume; "
         "EXACTLY equal to a single-shot run (needs --manifest)",
     )
-    p.add_argument("--hist-bins", type=int, default=32)
+    p.add_argument("--hist-bins", type=positive_int, default=32)
     p.add_argument(
         "--table-rules",
         type=table_rules_arg,

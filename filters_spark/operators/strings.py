@@ -26,7 +26,7 @@ try:
 except ImportError:  # pragma: no cover
     _regex_lib = None
 
-from filters_spark.core.arrow import scalar_kernel
+from filters_spark.core.arrow import call_kernel, elementwise
 from filters_spark.core.spec import (
     CODE_EXCEPTION,
     MSG_EXCEPTION,
@@ -64,9 +64,10 @@ def _kernel_step(
     spec, value: Column, ctx, out_type: T.DataType, scalar_fn, code_messages: dict
 ) -> Step:
     """Build a Step around one Arrow kernel producing struct<value,code>."""
-    name = ctx.name("k" + type(spec).__name__.lower())
-    k = scalar_kernel(scalar_fn, out_type)
-    res = F.col(name)
+    res, pre = call_kernel(
+        ctx, "k" + type(spec).__name__.lower(), elementwise(scalar_fn), out_type,
+        value,
+    )
     code = res["code"]
     violations = [
         Violation(code == F.lit(c), F.lit(c), F.lit(m))
@@ -84,7 +85,7 @@ def _kernel_step(
         dtype=out_type,
         invalid=code.isNotNull(),
         violations=violations,
-        pre={name: k(value)},
+        pre=pre,
     )
 
 
@@ -184,17 +185,15 @@ class Unicode(BaseSpec):
         if isinstance(dtype, T.StringType) and self.normalize:
             # str input can't hit wrong_encoding/exception → code is
             # always null; violations list may stay (never fires)
-            from filters_spark.core.arrow import make_struct_kernel
-
-            name = ctx.name("kunicode")
-            k = make_struct_kernel(self._string_batch, T.StringType())
-            res = F.col(name)
+            res, pre = call_kernel(
+                ctx, "kunicode", self._string_batch, T.StringType(), value
+            )
             return Step(
                 value=res["value"],
                 dtype=T.StringType(),
                 invalid=res["code"].isNotNull(),
                 violations=[],
-                pre={name: k(value)},
+                pre=pre,
             )
         return _kernel_step(
             self,
@@ -513,12 +512,15 @@ class Choice(BaseSpec):
             ):
                 lookup_key = F.lower(value)
             else:
-                name = ctx.name("kchoicefold")
                 # exact casefold via kernel (rare path)
-                kc = scalar_kernel(lambda x: (x.casefold(), None), T.StringType())
-                lookup_key = F.col(name)["value"]
-                pre = {name: kc(value)}
-                return self._finish(lookup_key, value, dtype, pre)
+                res, pre = call_kernel(
+                    ctx,
+                    "kchoicefold",
+                    elementwise(lambda x: (x.casefold(), None)),
+                    T.StringType(),
+                    value,
+                )
+                return self._finish(res["value"], value, dtype, pre)
         return self._finish(lookup_key, value, dtype, {})
 
     def _finish(self, lookup_key, value, dtype, pre) -> Step:

@@ -6,9 +6,9 @@ static ``StructType`` / ``ArrayType`` / ``MapType`` columns:
 
 - ``FilterMapper``  → per-field chains over struct fields; missing/extra
   key policy is *static* against the schema (``complex.py:158-344``).
-- ``FilterRepeater`` → ``F.transform`` with the chain compiled as a pure
-  element-level expression; per-index dotted violation keys
-  (``complex.py:16-155``).
+- ``FilterRepeater`` → ``F.transform`` with the chain compiled as an
+  element-level expression (its Arrow kernels as array UDFs read by
+  index); per-index dotted violation keys (``complex.py:16-155``).
 - ``FilterSwitch``  → ``CASE WHEN`` dispatch (``complex.py:347-390``).
 - ``NamedTuple``    → struct with exact fields (``complex.py:393-481``).
 """
@@ -22,7 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from filters_spark.core.arrow import scalar_kernel
+from filters_spark.core.arrow import call_kernel, elementwise
 from filters_spark.core.spec import (
     CODE_EXCEPTION,
     MSG_EXCEPTION,
@@ -375,17 +375,19 @@ class ByteArray(BaseSpec):
                 lambda v: v.isNotNull(),
             )
             inv = F.size(viols) > 0
-            name = ctx.name("kbytearray")
-            pack = scalar_kernel(
-                lambda xs: (bytes(int(i) for i in xs), None), T.BinaryType()
+            packed, pre = call_kernel(
+                ctx,
+                "kbytearray",
+                elementwise(lambda xs: (bytes(int(i) for i in xs), None)),
+                T.BinaryType(),
+                value,
             )
-            packed = F.col(name)["value"]
             return Step(
-                value=F.when(inv, F.lit(None)).otherwise(packed),
+                value=F.when(inv, F.lit(None)).otherwise(packed["value"]),
                 dtype=T.BinaryType(),
                 invalid=inv,
                 violations_array=viols,
-                pre={name: pack(value)},
+                pre=pre,
             )
         raise CompileError(f"ByteArray cannot coerce column type {dtype}")
 
@@ -422,29 +424,26 @@ class Call(BaseSpec):
         self.out_type = out_type
 
     def compile(self, value, dtype, ctx, key) -> Step:
-        out_t = self.out_type or dtype
         fn, args, kwargs = self.fn, self.args, self.kwargs
-        return _call_kernel_step(self, value, ctx, out_t, fn, args, kwargs)
-
-
-def _call_kernel_step(spec, value, ctx, out_t, fn, args, kwargs) -> Step:
-    name = ctx.name("kcall")
-    k = scalar_kernel(lambda x: (fn(x, *args, **kwargs), None), out_t)
-    res = F.col(name)
-    code = res["code"]
-    return Step(
-        value=res["value"],
-        dtype=out_t,
-        invalid=code.isNotNull(),
-        violations=[
-            Violation(
-                code == F.lit(CODE_EXCEPTION),
-                F.lit(CODE_EXCEPTION),
-                F.lit(MSG_EXCEPTION),
-            )
-        ],
-        pre={name: k(value)},
-    )
+        out_t = self.out_type or dtype
+        res, pre = call_kernel(
+            ctx, "kcall", elementwise(lambda x: (fn(x, *args, **kwargs), None)),
+            out_t, value,
+        )
+        code = res["code"]
+        return Step(
+            value=res["value"],
+            dtype=out_t,
+            invalid=code.isNotNull(),
+            violations=[
+                Violation(
+                    code == F.lit(CODE_EXCEPTION),
+                    F.lit(CODE_EXCEPTION),
+                    F.lit(MSG_EXCEPTION),
+                )
+            ],
+            pre=pre,
+        )
 
 
 # -- combinators -------------------------------------------------------------
@@ -528,23 +527,18 @@ class FilterRepeater(BaseSpec):
     violation keys carry the element index / map key
     (``test/test_filter_repeater.py:44-49``).
 
-    The repeater's rule for one element (:meth:`element_key`,
-    :meth:`element`) and the rebuild of the column from the ordered
-    element results (:meth:`assemble`) are shared by its two routes,
-    which ``compile`` picks from the element chain:
-
-    - column-expressible chains run inside an ``F.transform`` lambda,
-      fully JVM-side, in any position;
-    - an element chain with Arrow kernels cannot run inside a lambda, so
-      the step instead carries a DataFrame rewrite (``Step.rewrite``)
-      that runs the explode route (``filters_spark.engine.explode``).
-      The chain fold of ``validate`` / ``attach_chain`` runs it in its
-      place, so such repeaters compose with any steps around them; an
-      expression (a lambda, ``FilterMapper``, ``FilterSwitch``) cannot
-      host it and raises :class:`CompileError`.
-
-    Both give the same cleaned values and the same violations, in
-    element order, ``restrict_keys`` included.
+    Compiles to an ``F.transform`` lambda over the elements (a map's
+    through ``map_entries``) that applies the repeater's rule for one
+    element (:meth:`element_key`, :meth:`element`), and rebuilds the
+    column from the ordered element results (:meth:`assemble`), in any
+    position.  An Arrow kernel in the element chain cannot run inside
+    the lambda: it runs as one array-in / array-out pandas UDF over all
+    of the row's elements, materialised before the step, and the lambda
+    reads element ``i`` of its output
+    (:func:`filters_spark.core.arrow.call_kernel`).  So a kernel
+    repeater is one projection too — in ``validate``, on a stream, as a
+    ``FilterMapper`` / ``FilterSwitch`` field — except two repeater
+    levels deep, a :class:`CompileError`.
     """
 
     templates = {CODE_EXTRA_KEY: MSG_EXTRA}
@@ -621,48 +615,38 @@ class FilterRepeater(BaseSpec):
         if not (is_map or isinstance(dtype, T.ArrayType)):
             raise CompileError(f"FilterRepeater needs array/map, got {dtype}")
         elem_t = dtype.valueType if is_map else dtype.elementType
+        array = F.map_entries(value) if is_map else value
         results: list = []  # the element chain's compiled result
 
-        def per_element(e, k):
+        def per_element(e, i):
+            elem, k = (e["value"], e["key"]) if is_map else (e, i)
             elem_key = self.element_key(key, k)
-            r = _chain_expr(self.chain, e, elem_t, ctx, elem_key)
+            ctx.elements.append((array, (e, i)))
+            try:
+                r = _chain_expr(self.chain, elem, elem_t, ctx, elem_key)
+            finally:
+                ctx.elements.pop()
             results.append(r)
             return F.struct(*self.element(r, k, elem_key, is_map))
 
-        if is_map:
-            elems = F.transform(
-                F.map_entries(value), lambda e: per_element(e["value"], e["key"])
-            )
-        else:
-            elems = F.transform(value, per_element)
+        values, viols = self.assemble(F.transform(array, per_element), is_map)
         (r,) = results
+        if r.pre and ctx.elements:
+            # the kernel's input array would read the enclosing lambda's
+            # variable outside that lambda
+            raise CompileError(
+                "a FilterRepeater whose element chain needs an Arrow kernel "
+                "cannot run inside another FilterRepeater"
+            )
         out_t = (
             T.MapType(dtype.keyType, r.dtype) if is_map else T.ArrayType(r.dtype)
         )
-        if r.pre:
-            # kernels cannot run in the lambda: the explode route writes
-            # the step's columns
-            v, w = ctx.name("cleaned"), ctx.name("violset")
-
-            def rewrite(df):
-                from filters_spark.engine.explode import explode_repeater
-
-                src = ctx.name("repeated")
-                df = df.withColumn(src, value)
-                df, _, _ = explode_repeater(
-                    df, src, self, key=key, ctx=ctx, out_value=v, out_violations=w
-                )
-                return df, [src, v, w]
-
-            values, viols = F.col(v), F.col(w)
-        else:
-            (values, viols), rewrite = self.assemble(elems, is_map), None
         return Step(
             value=values,
             dtype=out_t,
             invalid=F.size(viols) > 0,
             violations_array=viols,
-            rewrite=rewrite,
+            pre=r.pre,
             keep_value_on_error=True,
         )
 

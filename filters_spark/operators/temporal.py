@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from filters_spark.core.spec import BaseSpec, CompileError, Step, Violation
-from filters_spark.core.arrow import scalar_kernel
+from filters_spark.core.arrow import call_kernel, elementwise
 from filters_spark.core.spec import CODE_EXCEPTION, MSG_EXCEPTION
 
 CODE_NOT_DATETIME = "not_datetime"  # simple.py:260
@@ -158,9 +158,10 @@ class Datetime(BaseSpec):
         if not isinstance(dtype, T.StringType):
             raise CompileError(f"Datetime cannot parse column type {dtype}")
         if not self.strict:
-            name = ctx.name("kdatetime")
-            k = scalar_kernel(self._scalar, self._kernel_type)
-            res = F.col(name)
+            res, pre = call_kernel(
+                ctx, "kdatetime", elementwise(self._scalar), self._kernel_type,
+                value,
+            )
             code = res["code"]
             return Step(
                 value=res["value"],
@@ -178,7 +179,7 @@ class Datetime(BaseSpec):
                         F.lit(MSG_EXCEPTION),
                     ),
                 ],
-                pre={name: k(value)},
+                pre=pre,
             )
         parsed = self._parse_string(value)
         inv = parsed.isNull()

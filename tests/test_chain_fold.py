@@ -7,13 +7,19 @@ file keeps the earlier per-step fold — every step threads
 ``size(concat(all chains)) == 0`` — as a reference implementation, and
 checks on seeded random chains that both give identical cleaned values,
 ``_violations`` (order included) and ``_is_valid``.  The reference is
-also swapped in for the nested chains of the structural combinators and
-of the explode path, so the two sides share no fold code.
+also swapped in for the nested chains of the structural combinators, so
+the two sides share no fold code.
+
+A ``FilterRepeater`` whose element chain needs an Arrow kernel compiles,
+in ``validate``, to one projection: each element kernel is an
+array-in / array-out UDF read by index inside the ``F.transform``
+lambda.  The reference validates such a repeater on an independent
+route instead: it explodes the column's elements, runs the element chain
+over them as rows, and regroups them by a row id.
 """
 
 from __future__ import annotations
 
-import contextlib
 import random
 from unittest import mock
 
@@ -164,9 +170,82 @@ def _kernel_repeater_route(df, col_name, chain, ctx):
     return prefix, specs[i], suffix
 
 
-def _ref_validate(df, rules):
-    from filters_spark.engine.explode import explode_validate
+_RID = "__fs_rid"
 
+
+def ref_explode_repeater(df, col_name, rep, *, key, ctx):
+    """Validate the array or map column ``col_name`` with the repeater
+    ``rep`` (Arrow kernels allowed in its element chain) on the explode
+    route; returns ``(df, value_col, violations_col)`` like
+    ``attach_chain``.
+
+    posexplode_outer of the elements (an array as it is, a map through
+    ``map_entries``) carrying the row as one payload struct → the
+    repeater's own per-element rule (``FilterRepeater.element_key`` /
+    ``element``), its kernels materialised over the exploded rows → one
+    aggregation keyed by a ``monotonically_increasing_id`` row id that
+    collects the element results and orders them by position →
+    ``FilterRepeater.assemble``.  A NULL column stays NULL, an empty one
+    empty, both without violations."""
+    dtype = df.schema[col_name].dataType
+    is_map = isinstance(dtype, T.MapType)
+    payload_cols = list(df.columns)
+    exploded = df.withColumn(_RID, F.monotonically_increasing_id()).select(
+        *payload_cols,
+        _RID,
+        F.posexplode_outer(
+            F.map_entries(col_name) if is_map else F.col(col_name)
+        ).alias("__fs_pos", "__fs_e"),
+    )
+    pos, e = F.col("__fs_pos"), F.col("__fs_e")
+    k = e["key"] if is_map else pos
+    elem_key = rep.element_key(key, k)
+    r = ref_compile_chain_expr(
+        rep.chain,
+        e["value"] if is_map else e,
+        dtype.valueType if is_map else dtype.elementType,
+        ctx,
+        elem_key,
+        allow_pre=True,
+    )
+    for pname, pcol in r.pre.items():
+        exploded = exploded.withColumn(pname, pcol)
+    # posexplode_outer emits pos 0 for a row's first element and one row
+    # with pos NULL for an empty or NULL column: exactly one exploded row
+    # per input row carries the payload, and the pos-NULL row carries no
+    # element (collect_list skips its NULL)
+    per_elem = exploded.select(
+        _RID,
+        F.when(pos.isNull() | (pos == 0), F.struct(*payload_cols)).alias(
+            "__fs_row"
+        ),
+        F.when(
+            pos.isNotNull(),
+            F.struct(pos.alias("p"), *rep.element(r, k, elem_key, is_map)),
+        ).alias("__fs_elem"),
+    )
+    # ordered by position alone: comparing whole structs would fail on
+    # unorderable (map) element values
+    by_pos = F.array_sort(
+        F.collect_list("__fs_elem"),
+        lambda a, b: F.signum(a["p"] - b["p"]).cast("int"),
+    )
+    assembled = per_elem.groupBy(_RID).agg(
+        F.first("__fs_row", ignorenulls=True).alias("__fs_row"),
+        by_pos.alias("__fs_elems"),
+    )
+    value, viols = rep.assemble(F.col("__fs_elems"), is_map)
+    row = F.col("__fs_row")
+    out_value, out_violations = ctx.name("cleaned"), ctx.name("violset")
+    out = assembled.select(
+        *[row[c].alias(c) for c in payload_cols],
+        F.when(row[col_name].isNotNull(), value).alias(out_value),
+        viols.alias(out_violations),
+    )
+    return out, out_value, out_violations
+
+
+def _ref_validate(df, rules):
     ctx, produced = Ctx(), []
     for col_name, chain in rules.items():
         route = _kernel_repeater_route(df, col_name, chain, ctx)
@@ -178,7 +257,7 @@ def _ref_validate(df, rules):
         cur, w1 = col_name, None
         if prefix is not None:
             df, cur, w1 = ref_attach_chain(df, col_name, prefix, key=col_name, ctx=ctx)
-        df, v2, w2 = explode_validate(df, cur, rep.chain, key=col_name, ctx=ctx)
+        df, v2, w2 = ref_explode_repeater(df, cur, rep, key=col_name, ctx=ctx)
         v, w = v2, w2
         if w1 is not None or suffix is not None:
             v3, w3 = v2, w2
@@ -208,12 +287,9 @@ def _ref_validate(df, rules):
 
 def ref_validate(df, rules):
     """The reference fold end to end, nested chains included."""
-    with contextlib.ExitStack() as stack:
-        for target in (
-            "filters_spark.core.compiler.compile_chain_expr",
-            "filters_spark.engine.explode.compile_chain_expr",
-        ):
-            stack.enter_context(mock.patch(target, ref_compile_chain_expr))
+    with mock.patch(
+        "filters_spark.core.compiler.compile_chain_expr", ref_compile_chain_expr
+    ):
         return _ref_validate(df, rules)
 
 
@@ -284,7 +360,8 @@ def _mapper(r):
 
 def _repeater(r, explode: bool):
     """FilterRepeater over array<string>: a Unicode element chain needs
-    an Arrow kernel, which routes the rule through the explode path."""
+    an Arrow kernel, which the reference validates on its explode
+    route."""
     inner = _str_chain(r, 0, 2, kernels=False)
     if explode:
         inner = inner | fs.Unicode()

@@ -427,6 +427,37 @@ def test_violations_with_values_joins_back_offending_values(tdf):
     }
 
 
+@pytest.mark.parametrize(
+    "before,after",
+    (
+        (lambda: fs.MaxLength(2000), lambda: fs.MaxLength(2000, truncate=True)),
+        (lambda: fs.Unicode(), lambda: fs.Unicode(normalize=False)),
+        (lambda: fs.FilterRepeater(fs.Min(0)), lambda: fs.FilterRepeater(fs.Min(5))),
+        (
+            lambda: fs.FilterMapper({"a": fs.Min(0)}),
+            lambda: fs.FilterMapper({"a": fs.Min(5)}),
+        ),
+    ),
+    ids=["truncate", "normalize", "repeater", "mapper"],
+)
+def test_checkpoint_refuses_rule_parameter_changes(tmp_path, before, after):
+    """The fingerprint signs every parameter of a rule, also those its
+    ``repr`` leaves out: a resume with the changed rule is refused, one
+    with an equal rule (a new instance) is not."""
+    from filters_spark.engine.checkpoint import STATE_VERSION, suite_fingerprint
+
+    def fingerprint(rule):
+        return suite_fingerprint(ValidationSuite({"x": rule()}), {})
+
+    manifest = CheckpointManifest(tmp_path / "m")
+    manifest.mark(
+        0, {"state_version": STATE_VERSION, "suite_fingerprint": fingerprint(before)}
+    )
+    manifest.check_compatible(fingerprint(before))
+    with pytest.raises(RuntimeError, match="suite config"):
+        manifest.check_compatible(fingerprint(after))
+
+
 def test_checkpoint_refuses_incompatible_state(tmp_path, tdf, baseline):
     """Resume must REFUSE to merge manifest entries written by another
     state-schema version or another suite config — silently blending
@@ -1067,17 +1098,24 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
                      id="table-rules-not-object"),
         pytest.param(["--synthetic", "10", "--table-rules", "{"],
                      id="table-rules-bad-json"),
+        pytest.param(["--synthetic", "10", "--n-buckets", "0"],
+                     id="n-buckets-0"),
+        pytest.param(["--synthetic", "10", "--buckets-per-job", "0"],
+                     id="buckets-per-job-0"),
+        pytest.param(["--synthetic", "10", "--hist-bins", "0"],
+                     id="hist-bins-0"),
     ),
 )
-def test_job_cli_refuses_state_cols_without_manifest(argv):
+def test_job_cli_refuses_state_cols_without_manifest(argv, tmp_path):
     """A bad command line is refused (exit 2) before any Spark session
     is built: ``--sketch-cols`` and ``--hist-cols`` (per-bucket manifest
     state) without ``--manifest``, neither ``--input`` nor
-    ``--synthetic``, and ``--table-rules`` that is not a JSON object."""
+    ``--synthetic``, ``--table-rules`` that is not a JSON object, and a
+    bucket count, bucket group size or histogram bin count below 1."""
     from filters_spark.job import main
 
     with pytest.raises(SystemExit) as exc_info:
-        main(["--output", "/nonexistent", *argv])
+        main(["--output", str(tmp_path / "out"), *argv])
     assert exc_info.value.code == 2
 
 

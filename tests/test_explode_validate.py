@@ -1,4 +1,9 @@
-"""Explode-path array validation (kernel chains over array elements)."""
+"""FilterRepeater element chains that need Arrow kernels.
+
+Such a repeater compiles to one projection like any other: each element
+kernel runs as one array-in / array-out pandas UDF over the row's
+elements, and the ``F.transform`` lambda reads its element by index.
+"""
 
 from __future__ import annotations
 
@@ -7,7 +12,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import filters_spark as fs
-from filters_spark.engine import explode_validate
+from filters_spark.core.compiler import attach_chain
+from filters_spark.core.spec import CompileError
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +36,7 @@ def arr_df(spark):
 
 def test_kernel_chain_over_array(arr_df):
     chain = fs.Required() | fs.Unicode()  # Unicode = Arrow kernel
-    out, v, w = explode_validate(arr_df, "texts", chain)
+    out, v, w = attach_chain(arr_df, "texts", fs.FilterRepeater(chain))
     rows = {r["rid"]: r for r in out.collect()}
     # NFD element normalises to the NFC form, in place, order kept
     assert rows[0][v] == ["café", "café", "plain"]
@@ -45,10 +51,10 @@ def test_kernel_chain_over_array(arr_df):
 
 
 def test_pure_expression_chain_matches_repeater(arr_df, spark):
-    # same chain through both paths must agree where both apply
+    # attach_chain and validate give the same repeater results
     df = arr_df.where(F.col("texts").isNotNull())
     chain = fs.MinLength(2)
-    out, v, w = explode_validate(df, "texts", chain)
+    out, v, w = attach_chain(df, "texts", fs.FilterRepeater(chain))
     exploded = {r["rid"]: (r[v], sorted((x["key"], x["code"]) for x in r[w]))
                 for r in out.collect()}
     rep = fs.validate(df, {"texts": fs.FilterRepeater(chain)})
@@ -63,22 +69,21 @@ def test_pure_expression_chain_matches_repeater(arr_df, spark):
 
 
 def test_rejects_non_array(arr_df):
-    from filters_spark.core.spec import CompileError
-
     with pytest.raises(CompileError):
-        explode_validate(arr_df, "rid", fs.Min(0))
+        attach_chain(arr_df, "rid", fs.FilterRepeater(fs.Min(0)))
 
 
-def test_single_pass_plan_no_join_no_persist(arr_df):
-    """The explode path must be single-lineage: no self-join, no
-    InMemoryRelation introduced by explode_validate itself (VERDICT r1
-    item 8)."""
-    chain = fs.Required() | fs.Unicode()
-    out, v, w = explode_validate(arr_df.unpersist(), "texts", chain)
+def test_kernel_repeater_plan_is_one_projection(spark):
+    """A kernel repeater compiles to a projection: no shuffle, no
+    aggregation, no synthetic row id, no join or persist, and ONE
+    ArrowEvalPython for its one kernel."""
+    df = spark.createDataFrame([(0, ["a", "b"]), (1, None)], "rid long, texts array<string>")
+    out = fs.validate(df, {"texts": fs.FilterRepeater(fs.Required() | fs.Unicode())})
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
-    assert "InMemoryTableScan" not in plan, plan
-    arr_df.cache()
+    for absent in ("Exchange", "Aggregate", "monotonically_increasing_id",
+                   "Join", "InMemoryTableScan"):
+        assert absent not in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_chain_break_returns_partial_array(arr_df, spark):
@@ -100,9 +105,8 @@ def test_chain_break_returns_partial_array(arr_df, spark):
 
 
 def test_validate_autoroutes_kernel_repeater(arr_df, spark):
-    """validate() with a rule that is exactly FilterRepeater(kernel
-    chain) over an array column routes through the explode path instead
-    of raising CompileError (UX parity: the reference repeater takes any
+    """validate() takes a FilterRepeater over a kernel chain instead of
+    raising CompileError (UX parity: the reference repeater takes any
     chain)."""
     rules = {"texts": fs.FilterRepeater(fs.Required() | fs.Unicode())}
     out = fs.validate(arr_df, rules)
@@ -113,7 +117,7 @@ def test_validate_autoroutes_kernel_repeater(arr_df, spark):
     ]
     assert rows[3]["texts"] is None
     assert rows[1]["_is_valid"] is False and rows[4]["_is_valid"] is True
-    # pure-expression repeaters must STILL take the transform path
+    # pure-expression repeaters run no kernel
     pure = fs.validate(arr_df, {"texts": fs.FilterRepeater(fs.MinLength(2))})
     plan = pure._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "HashAggregate" not in plan
@@ -168,14 +172,14 @@ def test_explode_validate_map_values(spark):
         "rid long, m map<string,string>",
     )
     chain = fs.Required() | fs.Unicode()
-    out, v, w = explode_validate(df, "m", chain)
+    out, v, w = attach_chain(df, "m", fs.FilterRepeater(chain))
     rows = {r["rid"]: r for r in out.collect()}
     assert rows[0][v] == {"a": "café", "b": "x\ny"}
     assert rows[1][v] == {"a": "ok", "b": None}
     assert [(x["key"], x["code"]) for x in rows[1][w]] == [("m.b", "empty")]
     assert rows[2][v] == {} and rows[2][w] == []
     assert rows[3][v] is None and rows[3][w] == []
-    # auto-route through validate() too
+    # through validate() too
     res = fs.validate(df, {"m": fs.FilterRepeater(chain)})
     got = {r["rid"]: r["m"] for r in res.collect()}
     assert got[0] == {"a": "café", "b": "x\ny"} and got[3] is None
@@ -203,6 +207,13 @@ def _rows(out, v, w):
     }
 
 
+def _rep(normalize, required=False, restrict=None):
+    chain = fs.Unicode(normalize=normalize)
+    if required:
+        chain = fs.Required() | chain
+    return fs.FilterRepeater(chain, restrict_keys=restrict)
+
+
 @pytest.mark.parametrize("route", ["column", "root", "attach", "two"])
 @pytest.mark.parametrize("required", [False, True], ids=["bare", "required"])
 @pytest.mark.parametrize(
@@ -211,47 +222,29 @@ def _rows(out, v, w):
     ids=["array_restrict", "array", "map_restrict", "map"],
 )
 def test_kernel_repeater_matches_lambda_route(nfc_df, col, restrict, required, route):
-    """A repeater whose element chain needs an Arrow kernel (explode
-    route) gives the cleaned values and the ordered violation lists of
-    the same repeater over its kernel-free twin (``F.transform`` lambda
-    route): element keys, ``restrict_keys`` and order included.  Routes:
-    ``validate`` under the column name, ``explode_validate`` /
-    ``explode_repeater`` and ``attach_chain`` under the root key, and a
-    ``validate`` chain of two such repeaters."""
-    from filters_spark.core.compiler import attach_chain
-    from filters_spark.core.spec import Ctx
-    from filters_spark.engine.explode import explode_repeater
+    """A repeater whose element chain needs an Arrow kernel gives the
+    cleaned values and the ordered violation lists of the same repeater
+    over its kernel-free twin (no kernel at all): element keys,
+    ``restrict_keys`` and order included.  Routes: ``validate`` under the
+    column name, ``attach_chain`` under the root key and under the
+    column name, and a ``validate`` chain of two such repeaters."""
 
-    def rep(normalize):
-        chain = fs.Unicode(normalize=normalize)
-        if required:
-            chain = fs.Required() | chain
-        return fs.FilterRepeater(chain, restrict_keys=restrict)
+    def rules(normalize):
+        rep = _rep(normalize, required, restrict)
+        return {col: rep | _rep(normalize, required, restrict) if route == "two" else rep}
 
-    if route == "column":
-        kernel = _rows(fs.validate(nfc_df, {col: rep(True)}), col, "_violations")
-        lam = _rows(fs.validate(nfc_df, {col: rep(False)}), col, "_violations")
-    elif route == "two":
-        twice = {n: {col: rep(n) | rep(n)} for n in (True, False)}
-        kernel = _rows(fs.validate(nfc_df, twice[True]), col, "_violations")
-        lam = _rows(fs.validate(nfc_df, twice[False]), col, "_violations")
-    elif route == "attach":
-        kernel = _rows(*attach_chain(nfc_df, col, rep(True), key=""))
-        lam = _rows(*attach_chain(nfc_df, col, rep(False), key=""))
-    else:
-        if restrict is None:
-            out = explode_validate(nfc_df, col, rep(True).chain, key="")
-        else:
-            out = explode_repeater(nfc_df, col, rep(True), key="", ctx=Ctx())
-        kernel = _rows(*out)
-        lam = _rows(*attach_chain(nfc_df, col, rep(False), key=""))
-    assert kernel == lam
+    def run(normalize):
+        if route in ("column", "two"):
+            return _rows(fs.validate(nfc_df, rules(normalize)), col, "_violations")
+        key = "" if route == "root" else None
+        return _rows(*attach_chain(nfc_df, col, rules(normalize)[col], key=key))
+
+    assert run(True) == run(False)
 
 
 def test_explode_route_orders_map_elements(spark):
-    """The explode route orders elements by position alone, so elements
-    of an unorderable type (maps) rebuild in place instead of failing
-    analysis on a whole-struct sort."""
+    """A kernel over elements of an unorderable type (maps) rebuilds them
+    in place, in order."""
     df = spark.createDataFrame(
         [(0, [{"k": "a"}, {"k": "b"}, {"j": "c"}]), (1, None)],
         "rid long, ms array<map<string,string>>",
@@ -262,25 +255,76 @@ def test_explode_route_orders_map_elements(spark):
     assert rows[0]["_violations"] == [] and rows[1]["ms"] is None
 
 
-def test_kernel_repeater_inside_an_expression_is_a_compile_error(arr_df):
-    """A kernel repeater's explode route rewrites the DataFrame, which no
-    expression (a FilterMapper field, a lambda) can host."""
-    from filters_spark.core.spec import CompileError
-
-    df = arr_df.select(F.struct(F.col("texts").alias("xs")).alias("s"))
-    rule = {"s": fs.FilterMapper({"xs": fs.FilterRepeater(fs.Unicode())})}
-    with pytest.raises(CompileError, match="top of a rule chain"):
-        fs.validate(df, rule)
-
-
-def test_kernel_repeater_on_a_stream_is_a_compile_error(spark):
-    """The explode route re-assembles rows in a grouped aggregation,
-    which an append-mode stream cannot host: compiling it fails before
-    any query starts."""
-    from filters_spark.core.spec import CompileError
-
-    stream = spark.readStream.format("rate").load().select(
-        F.array(F.col("value").cast("string")).alias("texts")
+@pytest.mark.parametrize("field", ["texts", "m"])
+def test_kernel_repeater_as_a_mapper_field_matches_lambda_route(nfc_df, field):
+    """A kernel repeater as a FilterMapper field or a FilterSwitch case
+    (an expression, with no DataFrame step of its own) gives what its
+    kernel-free twin gives."""
+    df = nfc_df.select(
+        "rid", F.struct(F.col(field).alias("xs"), F.col("rid").alias("n")).alias("s")
     )
-    with pytest.raises(CompileError, match="streaming"):
-        fs.validate(stream, {"texts": fs.FilterRepeater(fs.Unicode())})
+    restrict, first = ([0, 2], "0") if field == "texts" else (["a", "b"], "a")
+
+    def run(normalize):
+        rep = _rep(normalize, required=True, restrict=restrict)
+        out = fs.validate(df, {"s": fs.FilterMapper({"xs": rep, "n": fs.Max(2)})})
+        return _rows(out, "s", "_violations")
+
+    kernel = run(True)
+    assert kernel == run(False)
+    assert kernel[1][1][0] == (f"s.xs.{first}", "empty", "This value is required.")
+
+    def switch(normalize):
+        rep = _rep(normalize, required=True, restrict=restrict)
+        rule = fs.FilterSwitch(lambda v: F.size(v) > 0, {True: rep}, default=rep)
+        return _rows(fs.validate(nfc_df, {field: rule}), field, "_violations")
+
+    assert switch(True) == switch(False)
+
+
+def test_kernel_repeater_two_levels_deep_is_a_compile_error(spark):
+    """An element kernel of a repeater inside a repeater would read the
+    outer lambda's variable outside that lambda."""
+    df = spark.createDataFrame([(0, [["a"]])], "rid long, a array<array<string>>")
+    with pytest.raises(CompileError, match="inside another FilterRepeater"):
+        fs.validate(df, {"a": fs.FilterRepeater(fs.FilterRepeater(fs.Unicode()))})
+    # kernel-free, the same nesting compiles
+    fs.validate(df, {"a": fs.FilterRepeater(fs.FilterRepeater(fs.Strip()))})
+
+
+def test_kernel_repeater_on_a_stream_matches_batch(spark, tmp_path):
+    """A kernel repeater validates a streaming frame: one availableNow
+    batch into a memory sink gives what the batch run gives."""
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [
+            (0, ["café", "x\r\ny"], {"a": "café"}),
+            (1, ["", "ok"], {"b": ""}),
+            (2, [], {}),
+            (3, None, None),
+        ],
+        "rid long, texts array<string>, m map<string,string>",
+    ).coalesce(1).write.parquet(str(src))
+    rules = {
+        "texts": fs.FilterRepeater(fs.Required() | fs.Unicode()),
+        "m": fs.FilterRepeater(fs.Required() | fs.Unicode()),
+    }
+    df = spark.read.parquet(str(src))
+    batch = fs.validate(df, rules)
+    stream = fs.validate(spark.readStream.schema(df.schema).parquet(str(src)), rules)
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("kernel_repeater_stream")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = spark.table("kernel_repeater_stream")
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.select(
+            "rid", "texts", F.map_entries("m"), "_violations", "_is_valid"
+        ).collect())
+
+    assert rows(got) == rows(batch)
+    assert len(rows(got)) == 4

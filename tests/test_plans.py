@@ -100,6 +100,35 @@ def test_predicate_pushdown_reaches_parquet_scan(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(turn_idx), GreaterThan(turn_idx,3)]" in plan
 
 
+def test_bucket_predicate_reaches_scan_below_kernel_repeater(spark, tmp_path):
+    """A ``_bucket IN (group)`` filter over the suite's row pass sits on
+    the parquet scan, below the Arrow kernel of a ``FilterRepeater``
+    element chain: the row pass is a projection, so one bucket group
+    reads only its own rows (what building the row pass once per job
+    and selecting each group by its buckets needs)."""
+    from filters_spark.engine.suite import BUCKET_COL
+
+    rows = [(f"c{i % 9}", i % 4, [f"t{i}", "", "café"]) for i in range(40)]
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, texts array<string>"
+    ).write.parquet(str(tmp_path / "t3"))
+    df = spark.read.parquet(str(tmp_path / "t3"))
+    suite = ValidationSuite(
+        {"texts": fs.FilterRepeater(fs.Required() | fs.Unicode())},
+        n_buckets=8, drift_cols=(), length_col=None,
+    )
+    out = suite.row_results(df).where(F.col(BUCKET_COL).isin([1, 5]))
+    lines = plan_of(out).splitlines()
+    kernel = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
+    bucket = next(
+        i for i, l in enumerate(lines) if "Filter" in l and "xxhash64" in l
+    )
+    scan = next(i for i, l in enumerate(lines) if "FileScan parquet" in l)
+    assert kernel < bucket < scan, "\n".join(lines)
+    # nothing but the columnar-to-row bridge between filter and scan
+    assert all("ColumnarToRow" in l for l in lines[bucket + 1 : scan]), lines
+
+
 def test_orphans_broadcast_anti_join(spark, tdf):
     parent = spark.range(10).select(
         F.format_string("conv-%010d", F.col("id")).alias("conv_id")
