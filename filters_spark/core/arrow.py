@@ -7,11 +7,13 @@ Those compile to **one Arrow-batched pandas UDF per step** returning a
 ``struct<value, code>``; everything else stays in whole-stage codegen.
 
 Never row-at-a-time Python UDFs: all kernels are ``pandas_udf`` (Arrow
-batch transfer), and the compiler materialises each kernel call once per
-chain so it is evaluated exactly once per batch.  A kernel in the
-element chain of a ``FilterRepeater`` runs once over all elements of
-the row's array: :func:`call_kernel` turns it into one array-in /
-array-out UDF, and the repeater's lambda reads its element by index.
+batch transfer).  :func:`call_kernel` binds each kernel call like any
+compiled value (:meth:`Ctx.bind <filters_spark.core.spec.Ctx.bind>`), so
+the compiler materialises it once per chain and it is evaluated exactly
+once per batch.  A kernel in the element chain of a ``FilterRepeater``
+is bound outside the lambda and runs once over all elements of the
+row's array, as one array-in / array-out UDF whose element the lambda
+reads by index.
 """
 
 from __future__ import annotations
@@ -19,14 +21,11 @@ from __future__ import annotations
 from typing import Callable
 
 import pandas as pd
-from pyspark import SparkContext
 from pyspark.sql import Column
-from pyspark.sql.classic.column import _to_seq
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from filters_spark.core.spec import CODE_EXCEPTION
+from filters_spark.core.spec import CODE_EXCEPTION, CompileError, _transform
 
 
 def kernel_schema(value_type: T.DataType) -> T.StructType:
@@ -75,16 +74,6 @@ def elementwise(f: Callable):
     return run
 
 
-def _transform(array: Column, body: Column, variables: tuple) -> Column:
-    """``transform(array, (x, i) -> body)`` over the lambda variables of
-    an enclosing ``F.transform`` call, so that ``body`` — built inside
-    that call — evaluates the same per element here."""
-    sc = SparkContext._active_spark_context
-    utils = sc._jvm.PythonSQLUtils
-    fn = utils.lambdaFunction(body._jc, _to_seq(sc, [v._jc for v in variables]))
-    return Column(utils.fn("transform", _to_seq(sc, [array._jc, fn])))
-
-
 def call_kernel(
     ctx,
     tag: str,
@@ -92,16 +81,18 @@ def call_kernel(
     value_type: T.DataType,
     arg: Column,
 ) -> tuple[Column, dict[str, Column]]:
-    """One Arrow kernel call of a compiled step: ``(res, pre)``, where
-    ``pre`` (the step's ``pre``) materialises the kernel as a temp
+    """One Arrow kernel call of a compiled step, bound by
+    :meth:`Ctx.bind <filters_spark.core.spec.Ctx.bind>`: ``(res, pre)``,
+    where ``pre`` (the step's ``pre``) materialises the kernel as a temp
     column and ``res`` is the ``struct<value, code>`` the step reads.
 
-    Inside a ``FilterRepeater`` lambda (``ctx.elements``) the temp column
-    is ONE array-in / array-out UDF over every element's ``arg``, and
-    ``res`` is its element at the lambda's index: the kernel never runs
-    inside the lambda, and the repeater stays one projection.
+    A kernel never runs inside a ``FilterRepeater`` lambda.  Inside one
+    (``ctx.elements``) the temp column is bound outside it: ONE array-in /
+    array-out UDF over every element's ``arg``, of which ``res`` reads the
+    lambda's index, so the repeater stays one projection.  Two lambdas
+    deep its input would read the outer lambda's variable outside that
+    lambda, a :class:`CompileError`.
     """
-    name = ctx.name(tag)
     schema = kernel_schema(value_type)
     if not ctx.elements:
 
@@ -109,8 +100,12 @@ def call_kernel(
         def k(s: pd.Series) -> pd.DataFrame:
             return batch_fn(s)
 
-        return F.col(name), {name: k(arg)}
-    array, variables = ctx.elements[-1]
+        return ctx.bind(tag, k(arg))
+    if len(ctx.elements) > 1:
+        raise CompileError(
+            "a FilterRepeater whose element chain needs an Arrow kernel "
+            "cannot run inside another FilterRepeater"
+        )
 
     @pandas_udf(T.ArrayType(schema))
     def ks(s: pd.Series) -> pd.Series:
@@ -130,4 +125,11 @@ def call_kernel(
             at += 0 if xs is None else len(xs)
         return pd.Series(out, dtype=object)
 
-    return F.col(name)[variables[1]], {name: ks(_transform(array, arg, variables))}
+    # bound at the top of the chain, outside the lambda
+    lambdas, ctx.elements = ctx.elements, []
+    ((array, variables),) = lambdas
+    try:
+        res, pre = ctx.bind(tag, ks(_transform(array, arg, variables)))
+    finally:
+        ctx.elements = lambdas
+    return res[variables[1]], pre

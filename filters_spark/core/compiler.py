@@ -27,25 +27,25 @@ that changes semantics, while still fusing the whole chain into one
 whole-stage-codegen projection (plus at most a few ArrowEvalPython stages
 for pandas kernels).
 
-There is one fold (:func:`_fold`); its two entry points differ in how a
-step's ``(value, err)`` is bound for the next step:
+There is one fold (:func:`_fold`), and one way to bind a value in it:
+:meth:`Ctx.bind <filters_spark.core.spec.Ctx.bind>`.  Each step's value
+and error mask (and a structural step's violation array) are bound once,
+so later steps read column references and the plan grows linearly with
+the steps, and the violations are guarded by the fired mask.  A binding
+is a temp column: at the top of a chain the value itself, inside
+``FilterRepeater`` lambdas the value per element (one ``transform`` per
+enclosing lambda) read by the lambdas' indices.  Steps bind their own
+intermediates (an Arrow kernel's output, a numeric coercion's normalised
+string and cast) the same way and hand them over in ``Step.pre``.  The
+fold returns every binding in order in ``ChainResult.pre``:
 
-- :func:`attach_chain` — DataFrame-level; binds them to temp columns (kept
-  linear, Catalyst collapses the projections), materialises Arrow pandas
-  kernels (``Step.pre``) before the step that reads them, and guards the
-  violations with the fired mask.  :func:`validate` compiles every rule
-  through it.
-- :func:`compile_chain_expr` — pure-expression; binds them inline, so the
-  result is usable inside higher-order function lambdas (``F.transform``
-  for ``FilterRepeater``) and inside structural combinators.  Its
-  violations are the unguarded ``concat(part_1, …, part_n)`` (same
-  value): without temp columns the guard would repeat every violation
-  condition in the expression tree.  Pandas kernels are collected in
-  ``ChainResult.pre`` with ``allow_pre=True`` and rejected with
-  :class:`CompileError` otherwise.  A kernel inside a ``FilterRepeater``
-  lambda is collected the same way: it reads its element of an
-  array-in / array-out kernel column (``core/arrow.py``), so every
-  chain, kernel repeaters included, is one projection.
+- :func:`attach_chain` — DataFrame-level; materialises them as temp
+  columns before the chain's output (Catalyst collapses the stacked
+  projections).  :func:`validate` compiles every rule through it.
+- :func:`compile_chain_expr` — expression-level, for the chains nested
+  in structural combinators (``FilterMapper`` / ``FilterSwitch`` fields,
+  a ``FilterRepeater``'s elements); the combinator passes them up as its
+  step's ``pre``.  So every chain, nested or not, is one projection.
 
 The chain's key passes unchanged to every step: a column name (``""`` at
 the root), or a Column inside a ``FilterRepeater`` lambda, from which
@@ -132,9 +132,9 @@ class ChainResult:
     value: Column
     dtype: T.DataType
     violations: Column  # array<struct<key,code,message>>
-    #: Arrow-kernel columns that must be materialised (in order) before
-    #: ``value``/``violations`` — populated only with ``allow_pre=True``.
-    pre: dict | None = None
+    #: the chain's bindings (:meth:`Ctx.bind`), to be materialised in
+    #: order before ``value``/``violations`` are read
+    pre: dict[str, Column]
 
 
 def _step_invalid(step, value: Column) -> Column:
@@ -146,26 +146,16 @@ def _step_invalid(step, value: Column) -> Column:
     return inv
 
 
-def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
-    """The chain step-fold shared by both compile modes; returns the
+def _fold(chain, value, dtype, ctx, key):
+    """The chain step-fold of both entry points; returns the
     :class:`ChainResult` and the chain's fired mask (True exactly where
-    its violations are non-empty).
+    its violations are non-empty)."""
+    pre: dict[str, Column] = {}
 
-    ``on_pre(spec, step)`` receives every step with Arrow kernels before
-    the step's columns are used.
-    ``bind(**cols)`` returns, in order, the columns later steps read in
-    place of ``cols`` (temp-column references), and the violations are
-    then guarded by the fired mask.
-    Without it each step reads the previous step's expressions inline and
-    the violations stay unguarded (each part is already empty where it
-    must be): the guard would repeat every violation condition in the
-    tree, and nested chains' plans grow with each repeat (a
-    FilterRepeater of ``Required | Int | Max`` already analyses to a
-    66 MB plan string).
-    """
-
-    def bound(**cols):
-        return list(cols.values()) if bind is None else bind(**cols)
+    def bind(tag, col):
+        ref, p = ctx.bind(tag, col)
+        pre.update(p)
+        return ref
 
     err = F.lit(False)
     parts: list[Column] = []
@@ -173,8 +163,7 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
     partial_possible = False  # True once a keep_value_on_error step ran
     for spec in as_chain(chain).specs:
         step = spec.compile(value, dtype, ctx, key)
-        if step.pre:
-            on_pre(spec, step)
+        pre.update(step.pre)
         reported = _step_violations(step, err, value, key)
         if step.violations_array is None:
             inv = _step_invalid(step, value)
@@ -182,7 +171,7 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
             # a structural step's invalid is its array's non-emptiness:
             # build the array once per row and read the mask off it (every
             # use of inv below is ORed with err or taken where err is unset)
-            (part,) = bound(viol=reported[1])
+            part = bind("viol", reported[1])
             reported, inv = (None, part), F.size(part) > 0
         skip_null = F.lit(False) if step.handles_null else value.isNull()
         # Chain break carries the FAILING step's output forward (the
@@ -207,7 +196,7 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
                 err | skip_null | inv
             )
             new_value = F.when(nulled, null_of(step.dtype)).otherwise(step.value)
-        new_value, new_err = bound(val=new_value, err=err | inv)
+        new_value, new_err = bind("val", new_value), bind("err", err | inv)
         if reported is not None:
             fires, part = reported
             parts.append(part)
@@ -222,9 +211,9 @@ def _fold(chain, value, dtype, ctx, key, *, on_pre, bind=None):
         else parts[0] if len(parts) == 1
         else F.concat(*parts)
     )
-    if bind is not None and parts:
+    if parts:
         violations = F.when(fired, violations).otherwise(_empty_viols())
-    return ChainResult(value=value, dtype=dtype, violations=violations), fired
+    return ChainResult(value, dtype, violations, pre), fired
 
 
 def compile_chain_expr(
@@ -233,28 +222,12 @@ def compile_chain_expr(
     dtype: T.DataType,
     ctx: Ctx,
     key: str | Column,
-    allow_pre: bool = False,
 ) -> ChainResult:
-    """Expression-level compile (no temp columns of its own).
-
-    With ``allow_pre=True`` (the chains of FilterMapper / FilterSwitch
-    fields and of a FilterRepeater's elements), Arrow-kernel columns are
-    accumulated in ``ChainResult.pre`` for the caller to materialise in
-    order.  With ``allow_pre=False`` kernels are a compile error.
-    """
-    pre: dict = {}
-
-    def on_pre(spec, step):
-        if not allow_pre:
-            raise CompileError(
-                f"{type(spec).__name__} needs an Arrow pandas kernel and "
-                "cannot be used in pure-expression position"
-            )
-        pre.update(step.pre)
-
-    r, _ = _fold(chain, value, dtype, ctx, key, on_pre=on_pre)
-    r.pre = pre
-    return r
+    """Expression-level compile: the chain's value and violations over
+    its bindings, which the caller materialises in order from
+    ``ChainResult.pre`` (a structural combinator passes them up as its
+    step's ``pre``)."""
+    return _fold(chain, value, dtype, ctx, key)[0]
 
 
 def _attach(
@@ -265,32 +238,18 @@ def _attach(
     ``out_fired`` when that is given."""
     if col_name not in df.columns:
         raise CompileError(f"column {col_name!r} not found in DataFrame")
-    temps: list[str] = []
-
-    def on_pre(spec, step):
-        nonlocal df
-        # sequential: later kernels may reference earlier pre columns
-        for pname, pcol in step.pre.items():
-            df = df.withColumn(pname, pcol)
-        temps.extend(step.pre)
-
-    def bind(**cols):
-        nonlocal df
-        names = {ctx.name(tag): col for tag, col in cols.items()}
-        df = df.withColumns(names)
-        temps.extend(names)
-        return [F.col(n) for n in names]
-
     r, fired = _fold(
-        chain, F.col(col_name), df.schema[col_name].dataType, ctx, key,
-        on_pre=on_pre, bind=bind,
+        chain, F.col(col_name), df.schema[col_name].dataType, ctx, key
     )
+    # sequential: later bindings read earlier ones
+    for name, col in r.pre.items():
+        df = df.withColumn(name, col)
     out_value = out_value or ctx.name("cleaned")
     out_violations = out_violations or ctx.name("violset")
     cols = {out_value: r.value, out_violations: r.violations}
     if out_fired is not None:
         cols[out_fired] = fired
-    return df.withColumns(cols).drop(*temps), out_value, out_violations
+    return df.withColumns(cols).drop(*r.pre), out_value, out_violations
 
 
 def attach_chain(
@@ -312,8 +271,8 @@ def attach_chain(
     violations (usually 0 or 1 element; structural combinators may emit
     several).
 
-    Each step is materialised as temp columns so the expression tree stays
-    linear; Catalyst collapses the stacked projections into one.
+    Each binding is materialised as a temp column so the expression tree
+    stays linear; Catalyst collapses the stacked projections.
     """
     return _attach(
         df, col_name, chain, col_name if key is None else key, ctx or Ctx(),

@@ -27,7 +27,9 @@ import itertools
 import typing
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import Column
+from pyspark.sql.classic.column import _to_seq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,21 +62,48 @@ class CompileError(ValueError):
     """
 
 
+def _transform(array: Column, body: Column, variables: tuple) -> Column:
+    """``transform(array, (x, i) -> body)`` over the lambda variables of
+    an enclosing ``F.transform`` call, so that ``body`` — built inside
+    that call — evaluates the same per element here."""
+    sc = SparkContext._active_spark_context
+    utils = sc._jvm.PythonSQLUtils
+    fn = utils.lambdaFunction(body._jc, _to_seq(sc, [v._jc for v in variables]))
+    return Column(utils.fn("transform", _to_seq(sc, [array._jc, fn])))
+
+
 class Ctx:
-    """Per-compilation context: unique temp-column names, and the
-    ``FilterRepeater`` lambdas being compiled."""
+    """Per-compilation context: unique temp-column names, the
+    ``FilterRepeater`` lambdas being compiled, and :meth:`bind`."""
 
     def __init__(self, prefix: str = "__fs") -> None:
         self._counter = itertools.count()
         self.prefix = prefix
         #: ``(array, (x, i))`` per enclosing ``FilterRepeater`` lambda,
-        #: innermost last: the array it transforms and its variables,
-        #: so a kernel step reads its element of an array kernel
-        #: (:func:`filters_spark.core.arrow.call_kernel`)
+        #: innermost last: the array it transforms and its variables
         self.elements: list[tuple[Column, tuple[Column, Column]]] = []
 
     def name(self, tag: str) -> str:
         return f"{self.prefix}_{tag}_{next(self._counter)}"
+
+    def bind(self, tag: str, col: Column) -> tuple[Column, dict[str, Column]]:
+        """Bind a compiled value once: ``(ref, pre)``, where ``pre`` names
+        the temp column that holds ``col`` and ``ref`` reads it.
+
+        At the top of a chain the temp column is ``col`` and ``ref`` is
+        ``F.col(name)``.  Inside ``FilterRepeater`` lambdas it is ``col``
+        evaluated per element, wrapped in one ``transform`` per enclosing
+        lambda (outermost outside), and ``ref`` reads the current element,
+        ``F.col(name)[i1][i2]…``.  Whoever compiles the chain materialises
+        ``pre`` in order before any ``ref`` is read, so every later use of
+        the value is a column reference, never a copy of ``col``."""
+        name = self.name(tag)
+        ref = F.col(name)
+        for array, variables in reversed(self.elements):
+            col = _transform(array, col, variables)
+        for _, (_, i) in self.elements:
+            ref = ref[i]
+        return ref, {name: col}
 
 
 @dataclass
@@ -115,9 +144,10 @@ class Step:
     #: instead of ``violations`` and reads the step's error mask off it
     #: (non-empty ⇔ invalid), so ``invalid`` must agree with it.
     violations_array: Column | None = None
-    #: Columns that must be materialised (projected) before ``value`` /
-    #: ``invalid`` are evaluated — used for Arrow pandas kernels so the
-    #: UDF runs exactly once per row-batch.
+    #: The step's bindings (:meth:`Ctx.bind`), materialised in order
+    #: before ``value`` / ``invalid`` are evaluated: an Arrow kernel's
+    #: output (so the UDF runs once per row-batch), a value the step
+    #: reads more than once, a nested chain's bindings.
     pre: dict[str, Column] = field(default_factory=dict)
     #: True if this spec inspects/replaces null inputs (Required,
     #: NotEmpty(allow_none=False), Optional) — the only exceptions to the

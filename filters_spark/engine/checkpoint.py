@@ -21,10 +21,12 @@ their manifest entry — per-bucket exactly-once, per-row at-least-once.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
 import time
+import types
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -62,26 +64,49 @@ STATE_VERSION = 4
 HIST_PREFIX = RAW_PREFIX + "hist_"
 
 
-def _sig(v):
+def _sig(v, _enclosing=()):
     """A stable signature of a rule value: a spec (a spec class, macro
     or chain resolved first) by its class and instance attributes,
     recursing into specs, chains, dicts, sequences and sorted sets; a
-    function or type by its qualified name; anything else by its
-    ``repr``, or its class name where that shows an object address (so
-    the fingerprint can never false-refuse a valid resume on object
-    identity).  ``repr`` alone drops parameters (``MaxLength(2000,
-    truncate=True)`` prints ``MaxLength(2000)``)."""
+    callable by what defines it — a function by its qualified name, its
+    code (bytecode, names and constants, nested code objects included)
+    and the signatures of its defaults and closure cells, a ``partial``
+    by its function, args and keywords, a type or builtin by its
+    qualified name, any other callable by its class and attributes;
+    anything else by its ``repr``, or its class name where that shows an
+    object address.  Nothing is signed by ``id()`` or ``hash()``, so the
+    same source signs the same in every process and a valid resume is
+    never refused on object identity.  ``repr`` alone drops parameters
+    (``MaxLength(2000, truncate=True)`` prints ``MaxLength(2000)``)."""
     if isinstance(v, (BaseSpec, SpecMeta)):
         v = resolve(v)
         return [type(v).__qualname__, {k: _sig(x) for k, x in sorted(vars(v).items())}]
     if isinstance(v, dict):
         return [[_sig(k), _sig(x)] for k, x in v.items()]
     if isinstance(v, (list, tuple)):
-        return [_sig(x) for x in v]
+        return [_sig(x, _enclosing) for x in v]
     if isinstance(v, (set, frozenset)):
         return sorted((_sig(x) for x in v), key=repr)
+    if isinstance(v, functools.partial):
+        return ["partial", _sig(v.func), _sig(v.args), _sig(v.keywords)]
+    if isinstance(v, types.CodeType):
+        return [v.co_code.hex(), v.co_names, _sig(v.co_consts)]
+    if isinstance(v, types.CellType):
+        try:
+            return _sig(v.cell_contents, _enclosing)
+        except ValueError:  # an empty cell
+            return None
+    # a function that a closure cell leads back to signs by its name
+    if isinstance(v, types.FunctionType) and all(v is not f for f in _enclosing):
+        return [
+            f"{v.__module__}.{v.__qualname__}", _sig(v.__code__),
+            _sig(v.__defaults__), _sig(v.__kwdefaults__),
+            _sig(v.__closure__ or (), (*_enclosing, v)),
+        ]
     if callable(v) and hasattr(v, "__qualname__"):
         return f"{v.__module__}.{v.__qualname__}"
+    if callable(v) and hasattr(v, "__dict__"):
+        return [type(v).__qualname__, _sig(vars(v))]
     r = repr(v)
     return type(v).__name__ if " at 0x" in r else r
 

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from filters_spark.core.spec import (
     BaseSpec,
     CompileError,
+    Ctx,
     Step,
     Violation,
 )
@@ -131,12 +132,16 @@ def _sticky_truncate(s: Column) -> Column:
 def coerce_decimal(
     value: Column,
     dtype: T.DataType,
+    ctx: Ctx,
     scale: int = DEFAULT_SCALE,
     sticky_guard: bool = False,
-) -> tuple[Column, Column, Column]:
+) -> tuple[Column, Column, Column, Column | None, dict]:
     """Shared Decimal coercion: returns ``(casted, not_numeric_cond,
-    not_finite_cond)``.  Mirrors ``number.py:63-95``: parse failure →
-    ``not_numeric``; NaN/±Inf → ``not_finite``.
+    not_finite_cond, text, pre)``.  Mirrors ``number.py:63-95``: parse
+    failure → ``not_numeric``; NaN/±Inf → ``not_finite``.  A string
+    input's normalised text (:func:`_py_numeric_string`; ``text``, else
+    None) and its cast are each bound once (:meth:`Ctx.bind`, the
+    bindings in ``pre``), so the conditions read them as references.
 
     ``sticky_guard`` applies :func:`_sticky_truncate` to string inputs —
     set it when (and only when) the caller re-rounds HALF_EVEN at a
@@ -149,15 +154,11 @@ def coerce_decimal(
         # CAST_OVERFLOW that kills the job (deep-fuzz-found in r5 via
         # the float branch; same hazard here)
         casted = value.try_cast(target)
-        return (
-            casted,
-            value.isNotNull() & casted.isNull(),
-            F.lit(False),
-        )
+        return casted, value.isNotNull() & casted.isNull(), F.lit(False), None, {}
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return value.cast(target), F.lit(False), F.lit(False)
+        return value.cast(target), F.lit(False), F.lit(False), None, {}
     if isinstance(dtype, T.BooleanType):
-        return value.cast("int").cast(target), F.lit(False), F.lit(False)
+        return value.cast("int").cast(target), F.lit(False), F.lit(False), None, {}
     if isinstance(dtype, (T.FloatType, T.DoubleType)):
         non_finite = F.isnan(value) | (F.abs(value) == F.lit(float("inf")))
         # try_cast: doubles beyond ~1e20 cannot fit DECIMAL(38, 18) —
@@ -165,19 +166,17 @@ def coerce_decimal(
         casted = F.when(non_finite, F.lit(None)).otherwise(value).try_cast(
             target
         )
-        return (
-            casted,
-            value.isNotNull() & ~non_finite & casted.isNull(),
-            non_finite,
-        )
+        not_numeric = value.isNotNull() & ~non_finite & casted.isNull()
+        return casted, not_numeric, non_finite, None, {}
     if isinstance(dtype, T.StringType):
-        s = _py_numeric_string(value)
-        if sticky_guard:
-            s = _sticky_truncate(s)
-        casted = s.try_cast(target)
-        non_finite = F.lower(s).rlike(_NON_FINITE_RE)
+        text, pre = ctx.bind("numtext", _py_numeric_string(value))
+        s = _sticky_truncate(text) if sticky_guard else text
+        casted, pre_cast = ctx.bind("numcast", s.try_cast(target))
+        # the sticky rewrite only touches plain digit strings, which are
+        # never non-finite
+        non_finite = F.lower(text).rlike(_NON_FINITE_RE)
         not_numeric = casted.isNull() & ~non_finite
-        return casted, not_numeric, non_finite
+        return casted, not_numeric, non_finite, text, {**pre, **pre_cast}
     raise CompileError(f"cannot interpret column of type {dtype} as Decimal")
 
 
@@ -225,9 +224,10 @@ class Decimal(BaseSpec):
         # the bround below would then double-round (advisor-found:
         # '1.0149999999999999995' @2 → 1.02 vs reference 1.01); the
         # sticky 18th digit makes the bround exact for out_scale ≤ 17.
-        casted, not_numeric, non_finite = coerce_decimal(
+        casted, not_numeric, non_finite, _, pre = coerce_decimal(
             value,
             dtype,
+            ctx,
             self.scale,
             sticky_guard=self.max_precision is not None and out_scale <= 17,
         )
@@ -247,6 +247,7 @@ class Decimal(BaseSpec):
                 Violation(not_numeric, F.lit(CODE_INVALID), F.lit(MSG_NUMERIC)),
                 Violation(non_finite, F.lit(CODE_NON_FINITE), F.lit(MSG_NUMERIC)),
             ],
+            pre=pre,
         )
 
     def __repr__(self):
@@ -286,8 +287,8 @@ class Int(BaseSpec):
         # sticky_guard: integer-ness is a scale-0 grid question, so the
         # sticky 18th digit makes it exact for arbitrary-length strings
         # ('5.' + 19 zeros + '1' must be not_int, not a false integral 5)
-        casted, not_numeric, non_finite = coerce_decimal(
-            value, dtype, sticky_guard=True
+        casted, not_numeric, non_finite, text, pre = coerce_decimal(
+            value, dtype, ctx, sticky_guard=True
         )
         fractional = (casted % 1) != 0
         # Strings that failed the bounded cast but have plain numeric
@@ -296,13 +297,12 @@ class Int(BaseSpec):
         # not_int (exact reference parity); integral syntax → too_big /
         # too_small by sign (the documented 64-bit deviation, DEVIATIONS
         # #6).  Exponent forms that overflow stay not_numeric (residue).
-        if isinstance(dtype, T.StringType):
-            norm = _py_numeric_string(value)
-            int_syn = not_numeric & norm.rlike(r"^[+-]?\d+(\.0*)?$")
-            frac_syn = not_numeric & norm.rlike(
+        if text is not None:
+            int_syn = not_numeric & text.rlike(r"^[+-]?\d+(\.0*)?$")
+            frac_syn = not_numeric & text.rlike(
                 r"^[+-]?(\d+\.\d*[1-9]\d*|\.\d*[1-9]\d*)$"
             )
-            neg = F.substring(norm, 1, 1) == "-"
+            neg = F.substring(text, 1, 1) == "-"
             over_syn = int_syn & ~neg
             under_syn = int_syn & neg
             not_numeric = not_numeric & ~int_syn & ~frac_syn
@@ -340,6 +340,7 @@ class Int(BaseSpec):
                     F.lit(self.render(CODE_TOO_SMALL)),
                 ),
             ],
+            pre=pre,
         )
 
 
@@ -496,7 +497,7 @@ class Round(BaseSpec):
         self.result_type = result_type
 
     def compile(self, value, dtype, ctx, key) -> Step:
-        casted, not_numeric, non_finite = coerce_decimal(value, dtype)
+        casted, not_numeric, non_finite, _, pre = coerce_decimal(value, dtype, ctx)
         n = F.lit(self.to_nearest)
         scaled = casted / n
         rounded = _round_expr(scaled, self.rounding)
@@ -520,6 +521,7 @@ class Round(BaseSpec):
                 Violation(not_numeric, F.lit(CODE_INVALID), F.lit(MSG_NUMERIC)),
                 Violation(non_finite, F.lit(CODE_NON_FINITE), F.lit(MSG_NUMERIC)),
             ],
+            pre=pre,
         )
 
     def __repr__(self):

@@ -71,7 +71,7 @@ def _chain_expr(chain, value, dtype, ctx, key):
     # local import to avoid a circular module dependency
     from filters_spark.core.compiler import compile_chain_expr
 
-    return compile_chain_expr(chain, value, dtype, ctx, key, allow_pre=True)
+    return compile_chain_expr(chain, value, dtype, ctx, key)
 
 
 # -- Type / Array -----------------------------------------------------------
@@ -349,27 +349,20 @@ class ByteArray(BaseSpec):
             dtype.elementType,
             (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
         ):
+            def viol(i, code: str, message: str) -> Column:
+                return F.struct(
+                    FilterRepeater.element_key(key, i).alias("key"),
+                    F.lit(code).alias("code"),
+                    F.lit(message).alias("message"),
+                )
+
+            small = "Value is too small (must be >= 0)."
+            big = "Value is too large (must be <= 255)."
             viols = F.filter(
                 F.transform(
                     value,
-                    lambda x, i: F.when(
-                        x < 0,
-                        F.struct(
-                            FilterRepeater.element_key(key, i).alias("key"),
-                            F.lit("too_small").alias("code"),
-                            F.lit("Value is too small (must be >= 0).").alias(
-                                "message"
-                            ),
-                        ),
-                    ).when(
-                        x > 255,
-                        F.struct(
-                            FilterRepeater.element_key(key, i).alias("key"),
-                            F.lit("too_big").alias("code"),
-                            F.lit("Value is too large (must be <= 255).").alias(
-                                "message"
-                            ),
-                        ),
+                    lambda x, i: F.when(x < 0, viol(i, "too_small", small)).when(
+                        x > 255, viol(i, "too_big", big)
                     ),
                 ),
                 lambda v: v.isNotNull(),
@@ -472,8 +465,7 @@ class FilterSwitch(BaseSpec):
         pre: dict = {}
         for case_key, chain in self.cases.items():
             r = _chain_expr(chain, value, dtype, ctx, key)
-            if r.pre:
-                pre.update(r.pre)
+            pre.update(r.pre)
             if out_dtype is None:
                 out_dtype = r.dtype
             elif str(out_dtype) != str(r.dtype):
@@ -484,8 +476,7 @@ class FilterSwitch(BaseSpec):
             results.append((case_key, r))
         if self.default is not None:
             default_r = _chain_expr(self.default, value, dtype, ctx, key)
-            if default_r.pre:
-                pre.update(default_r.pre)
+            pre.update(default_r.pre)
             default_value = default_r.value
             default_viols = default_r.violations
         else:
@@ -529,16 +520,18 @@ class FilterRepeater(BaseSpec):
 
     Compiles to an ``F.transform`` lambda over the elements (a map's
     through ``map_entries``) that applies the repeater's rule for one
-    element (:meth:`element_key`, :meth:`element`), and rebuilds the
-    column from the ordered element results (:meth:`assemble`), in any
-    position.  An Arrow kernel in the element chain cannot run inside
-    the lambda: it runs as one array-in / array-out pandas UDF over all
-    of the row's elements, materialised before the step, and the lambda
-    reads element ``i`` of its output
-    (:func:`filters_spark.core.arrow.call_kernel`).  So a kernel
-    repeater is one projection too — in ``validate``, on a stream, as a
-    ``FilterMapper`` / ``FilterSwitch`` field — except two repeater
-    levels deep, a :class:`CompileError`.
+    element (:meth:`element_key`, :meth:`element`), bound once as the
+    array of element results, from which :meth:`assemble` rebuilds the
+    column and its ordered violations, in any position.  The element
+    chain binds its values inside the lambda like any chain
+    (:meth:`Ctx.bind <filters_spark.core.spec.Ctx.bind>`): each binding is
+    a temp column computed per element outside the lambda and read by
+    index inside it, so the plan grows linearly with the steps, and an
+    Arrow kernel runs as one array-in / array-out pandas UDF over all of
+    the row's elements (:func:`filters_spark.core.arrow.call_kernel`).
+    A repeater is one projection — in ``validate``, on a stream, as a
+    ``FilterMapper`` / ``FilterSwitch`` field — except a kernel two
+    repeater levels deep, a :class:`CompileError`.
     """
 
     templates = {CODE_EXTRA_KEY: MSG_EXTRA}
@@ -597,7 +590,7 @@ class FilterRepeater(BaseSpec):
         ]
 
     def assemble(self, elems: Column, is_map: bool) -> tuple[Column, Column]:
-        """``(cleaned column, violations)`` from the array of
+        """``(cleaned column, violations)`` from the (bound) array of
         :meth:`element` structs, in element order."""
         viols = F.flatten(F.transform(elems, lambda s: s["w"]))
         if not is_map:
@@ -629,15 +622,9 @@ class FilterRepeater(BaseSpec):
             results.append(r)
             return F.struct(*self.element(r, k, elem_key, is_map))
 
-        values, viols = self.assemble(F.transform(array, per_element), is_map)
+        elems, pre = ctx.bind("elems", F.transform(array, per_element))
+        values, viols = self.assemble(elems, is_map)
         (r,) = results
-        if r.pre and ctx.elements:
-            # the kernel's input array would read the enclosing lambda's
-            # variable outside that lambda
-            raise CompileError(
-                "a FilterRepeater whose element chain needs an Arrow kernel "
-                "cannot run inside another FilterRepeater"
-            )
         out_t = (
             T.MapType(dtype.keyType, r.dtype) if is_map else T.ArrayType(r.dtype)
         )
@@ -646,7 +633,7 @@ class FilterRepeater(BaseSpec):
             dtype=out_t,
             invalid=F.size(viols) > 0,
             violations_array=viols,
-            pre=r.pre,
+            pre={**r.pre, **pre},
             keep_value_on_error=True,
         )
 
@@ -718,8 +705,7 @@ class FilterMapper(BaseSpec):
                 out_fields.append(T.StructField(k, field_t))
                 continue
             r = _chain_expr(chain, field_v, field_t, ctx, sub_key)
-            if r.pre:
-                pre.update(r.pre)
+            pre.update(r.pre)
             out_cols.append(r.value.alias(k))
             out_fields.append(T.StructField(k, r.dtype))
             viol_arrays.append(r.violations)

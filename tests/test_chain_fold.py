@@ -10,12 +10,17 @@ checks on seeded random chains that both give identical cleaned values,
 also swapped in for the nested chains of the structural combinators, so
 the two sides share no fold code.
 
-A ``FilterRepeater`` whose element chain needs an Arrow kernel compiles,
-in ``validate``, to one projection: each element kernel is an
-array-in / array-out UDF read by index inside the ``F.transform``
-lambda.  The reference validates such a repeater on an independent
-route instead: it explodes the column's elements, runs the element chain
-over them as rows, and regroups them by a row id.
+A ``FilterRepeater`` compiles, in ``validate``, to one projection: its
+element chain's values are bound per element outside the ``F.transform``
+lambda and read by index inside it, an Arrow kernel as one array-in /
+array-out UDF.  The reference validates every repeater on an
+independent route instead: it explodes the column's elements, runs the
+element chain over them as rows, and regroups them by a row id.
+
+Numeric coercion (``Int`` / ``Decimal`` over strings, which bind their
+normalised text and cast) is cross-checked in the three positions a
+chain can take: at the top of a rule, as a ``FilterMapper`` field and as
+a ``FilterRepeater``'s element chain.
 """
 
 from __future__ import annotations
@@ -32,7 +37,6 @@ from filters_spark.core.compiler import (
     ChainResult,
     _empty_viols,
     _step_invalid,
-    compile_chain_expr,
     make_violation_col,
 )
 from filters_spark.core.spec import Chain, CompileError, Ctx, as_chain, null_of
@@ -77,14 +81,11 @@ def _ref_step(step, key, value, dtype, err, viols, partial_possible):
     return new_value, err | inv, new_viols
 
 
-def ref_compile_chain_expr(chain, value, dtype, ctx, key, allow_pre=False):
+def ref_compile_chain_expr(chain, value, dtype, ctx, key):
     err, viols, pre, partial_possible = F.lit(False), _empty_viols(), {}, False
     for spec in as_chain(chain).specs:
         step = spec.compile(value, dtype, ctx, key if isinstance(key, str) else "")
-        if step.pre:
-            if not allow_pre:
-                raise CompileError(f"{type(spec).__name__} needs a kernel")
-            pre.update(step.pre)
+        pre.update(step.pre)
         value, err, viols = _ref_step(
             step, key, value, dtype, err, viols, partial_possible
         )
@@ -112,17 +113,15 @@ def ref_attach_chain(df, col_name, chain, *, key, ctx):
     return df.withColumns({v: value, w: viols}).drop(*temps), v, w
 
 
-def _kernel_repeater_route(df, col_name, chain, ctx):
-    """Detect chains that must route through the explode path: exactly
-    one FilterRepeater whose element chain needs an Arrow kernel
-    (kernels cannot run inside ``F.transform`` lambdas).
+def _repeater_route(df, col_name, chain):
+    """Detect chains the reference validates on the explode route:
+    exactly one FilterRepeater, over an array or map.
 
     The repeater may sit anywhere in the chain (ADVICE r2: composed
     chains like ``Required() | FilterRepeater(Unicode())`` must compose
     like the reference's) — returns ``(prefix_chain, repeater,
     suffix_chain)`` with the surrounding segments (either may be
-    ``None``), or ``None`` when the normal projection compile covers the
-    chain (no repeater, pure-expression repeater, or non-array input)."""
+    ``None``), or ``None`` when the chain has no repeater to explode."""
     from filters_spark.operators.structural import FilterRepeater
 
     specs = as_chain(chain).specs
@@ -131,8 +130,7 @@ def _kernel_repeater_route(df, col_name, chain, ctx):
         return None
     if df.isStreaming:
         # the explode path re-assembles via a grouped aggregation, which
-        # a streaming plan cannot host in append mode — keep the clear
-        # compile error instead of a confusing runtime one
+        # a streaming plan cannot host in append mode
         return None
     i = reps[0]
     # thread the dtype through the prefix segment (presence/structural
@@ -147,24 +145,8 @@ def _kernel_repeater_route(df, col_name, chain, ctx):
             value, dtype = st.value, st.dtype
     except CompileError:
         return None
-    if isinstance(dtype, T.ArrayType):
-        elem_t = dtype.elementType
-    elif isinstance(dtype, T.MapType):
-        elem_t = dtype.valueType
-    else:
+    if not isinstance(dtype, (T.ArrayType, T.MapType)):
         return None
-    try:
-        compile_chain_expr(
-            specs[i].chain,
-            F.lit(None).cast(elem_t),
-            elem_t,
-            probe,
-            col_name,
-            allow_pre=False,
-        )
-        return None  # pure-expression chain: the F.transform path is fine
-    except CompileError:
-        pass
     prefix = Chain(specs[:i]) if i else None
     suffix = Chain(specs[i + 1 :]) if i + 1 < len(specs) else None
     return prefix, specs[i], suffix
@@ -206,7 +188,6 @@ def ref_explode_repeater(df, col_name, rep, *, key, ctx):
         dtype.valueType if is_map else dtype.elementType,
         ctx,
         elem_key,
-        allow_pre=True,
     )
     for pname, pcol in r.pre.items():
         exploded = exploded.withColumn(pname, pcol)
@@ -248,7 +229,7 @@ def ref_explode_repeater(df, col_name, rep, *, key, ctx):
 def _ref_validate(df, rules):
     ctx, produced = Ctx(), []
     for col_name, chain in rules.items():
-        route = _kernel_repeater_route(df, col_name, chain, ctx)
+        route = _repeater_route(df, col_name, chain)
         if route is None:
             df, v, w = ref_attach_chain(df, col_name, chain, key=col_name, ctx=ctx)
             produced.append((col_name, v, w))
@@ -359,9 +340,8 @@ def _mapper(r):
 
 
 def _repeater(r, explode: bool):
-    """FilterRepeater over array<string>: a Unicode element chain needs
-    an Arrow kernel, which the reference validates on its explode
-    route."""
+    """FilterRepeater over array<string>, with a Unicode element kernel
+    on odd seeds."""
     inner = _str_chain(r, 0, 2, kernels=False)
     if explode:
         inner = inner | fs.Unicode()
@@ -452,3 +432,76 @@ def test_mask_first_fold_matches_per_step_fold(spark, seed):
     got = _rows(fs.validate(df, one))
     assert got == _rows(ref_validate(df, one)), one
     assert {row["_is_valid"] for row in got} == {True, False}, one
+
+
+# -- numeric coercion in every chain position -----------------------------
+
+NUMBERS = [
+    None, "", " ", "0", "7", " 42 ", "-3", "+5", "1_000", "\uff13", "1.5",
+    "2.00", ".5", "0.125", "1.005", "1e3", "nan", "-Infinity", "abc", "5.",
+    "5." + "0" * 19 + "1", "99999999999999999999", "-99999999999999999999",
+    "12345678901234567890.5", "\x007", "\u00a09\u00a0",
+]
+
+
+def _num_chain(r):
+    if r.random() < 0.5:
+        chain = fs.Int() | fs.Max(r.choice([0, 10, 1000]))
+    else:
+        chain = fs.Decimal(2)
+    if r.random() < 0.3:
+        chain = fs.Required() | chain
+    return as_chain(chain)
+
+
+def numeric_rules(seed: int) -> dict:
+    r = random.Random(seed)
+    return {
+        "t": _num_chain(r),
+        "rec": fs.FilterMapper(
+            {"t": _num_chain(r), "a": _str_chain(r, kernels=False)}
+        ),
+        "ts": fs.FilterRepeater(_num_chain(r)),
+    }
+
+
+def numeric_frame(spark, seed: int, n_rows: int = 48):
+    r = random.Random(2000 + seed)
+
+    def ts():
+        roll = r.random()
+        if roll < 0.1:
+            return None
+        return [r.choice(NUMBERS) for _ in range(r.randint(0, 4))]
+
+    rows = [
+        (
+            i,
+            r.choice(NUMBERS),
+            None if r.random() < 0.1 else (r.choice(NUMBERS), r.choice(STRINGS)),
+            ts(),
+        )
+        for i in range(n_rows)
+    ]
+    return spark.createDataFrame(
+        rows, "id int, t string, rec struct<t:string,a:string>, ts array<string>"
+    )
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_numeric_chains_match_per_step_fold(spark, seed):
+    df = numeric_frame(spark, seed)
+    rules = numeric_rules(seed)
+    cols = ["id", "t", "rec", "ts", "_violations", "_is_valid"]
+
+    def rows(out):
+        return [
+            r.asDict(recursive=True)
+            for r in out.select(cols).orderBy("id").collect()
+        ]
+
+    got = rows(fs.validate(df, rules))
+    assert got == rows(ref_validate(df, rules)), rules
+    for col in rules:
+        one = {col: rules[col]}
+        assert rows(fs.validate(df, one)) == rows(ref_validate(df, one)), one

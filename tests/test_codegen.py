@@ -10,8 +10,8 @@ sub-methods.  The fixes (norms below the exchanges; probe restriction as
 a broadcast join key instead of an ``isin`` filter) are pinned here by
 running with ``spark.sql.codegen.fallback=false``, which turns any
 codegen failure into a hard error.  The same setting pins the chain
-projection of ``validate``: the job's default rules and a wide table of
-32 four-step string chains.
+projection of ``validate``: the job's default rules, a wide table of
+32 four-step string chains, and the nested golden chains.
 """
 
 from __future__ import annotations
@@ -93,6 +93,17 @@ def test_validate_wide_chains_compile(spark, no_codegen_fallback):
     assert [len(row["_violations"]) for row in out] == want
     assert not any(row["_is_valid"] for row in out)
     assert out[0]["c4"] == "tool" and out[0]["c2"] == "ok"
+
+
+@pytest.mark.parametrize("chain_id", ["mapper_basic", "repeater_int", "switch_item"])
+def test_nested_chains_compile(spark, no_codegen_fallback, chain_id):
+    """Nested golden chains bind each step once, so their generated code
+    stays small enough for janino, and collect to their golden values."""
+    from tests.golden_utils import load_goldens
+    from tests.test_goldens import NESTED_SPEC_CHAINS, _assert_group
+
+    group = load_goldens("nested")[chain_id]
+    _assert_group(spark, NESTED_SPEC_CHAINS[chain_id](), group, chain_id)
 
 
 def test_exact_near_dups_compiles(emb64, no_codegen_fallback):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -427,6 +429,15 @@ def test_violations_with_values_joins_back_offending_values(tdf):
     }
 
 
+def _add(x, k=0):
+    return x + k
+
+
+def _call_adding(n):
+    """A ``Call`` rule whose callable closes over ``n``."""
+    return fs.Call(lambda x: x + n)
+
+
 @pytest.mark.parametrize(
     "before,after",
     (
@@ -437,13 +448,24 @@ def test_violations_with_values_joins_back_offending_values(tdf):
             lambda: fs.FilterMapper({"a": fs.Min(0)}),
             lambda: fs.FilterMapper({"a": fs.Min(5)}),
         ),
+        (lambda: fs.Call(lambda x: x + 1), lambda: fs.Call(lambda x: x + 2)),
+        (
+            lambda: fs.Call(functools.partial(_add, k=1)),
+            lambda: fs.Call(functools.partial(_add, k=2)),
+        ),
+        (lambda: _call_adding(1), lambda: _call_adding(2)),
     ),
-    ids=["truncate", "normalize", "repeater", "mapper"],
+    ids=[
+        "truncate", "normalize", "repeater", "mapper", "lambda-body", "partial",
+        "closure",
+    ],
 )
 def test_checkpoint_refuses_rule_parameter_changes(tmp_path, before, after):
     """The fingerprint signs every parameter of a rule, also those its
-    ``repr`` leaves out: a resume with the changed rule is refused, one
-    with an equal rule (a new instance) is not."""
+    ``repr`` leaves out, and a callable by its code, defaults and
+    closure: a resume with the changed rule is refused, one with an
+    equal rule (a new instance; a callable rebuilt by the same helper)
+    is not."""
     from filters_spark.engine.checkpoint import STATE_VERSION, suite_fingerprint
 
     def fingerprint(rule):

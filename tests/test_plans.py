@@ -68,6 +68,37 @@ def test_violations_build_without_array_filter(tdf):
     assert "filter(" not in plan and "ArrayFilter" not in plan, plan
 
 
+def test_chain_plans_grow_linearly(spark):
+    """Every compiled value is bound once (``Ctx.bind``), at the top of a
+    chain and inside ``FilterRepeater`` lambdas alike, so a chain's
+    analysed plan grows linearly with its steps.  Inlined, ``Int`` alone
+    analysed to megabytes (its conditions repeated its cast and
+    normalised text), and each repeater step multiplied the lambda's
+    tree."""
+    from filters_spark.core.compiler import attach_chain
+    from tests.golden_utils import decode, load_goldens
+    from tests.test_goldens import NESTED_SPEC_CHAINS
+
+    def analysed(df, chain):
+        out, _, _ = attach_chain(df, "v", chain)
+        return len(out._jdf.queryExecution().analyzed().toString().encode())
+
+    strings = spark.createDataFrame([("1",), (" 2.5",), (None,)], "v string")
+    assert analysed(strings, fs.Int()) < 100_000
+    goldens = load_goldens("nested")
+    for chain_id in ("repeater_int", "mapper_basic"):
+        group = goldens[chain_id]
+        rows = [(decode(c["input"]),) for c in group["cases"]]
+        df = spark.createDataFrame(rows, f"v {group['input_type']}")
+        assert analysed(df, NESTED_SPEC_CHAINS[chain_id]()) < 1_000_000, chain_id
+    longs = spark.createDataFrame([([1, 200, None],), (None,)], "v array<long>")
+    three = fs.Required() | fs.Min(0) | fs.Max(100)
+    five = three | fs.Min(1) | fs.Max(99)
+    assert analysed(longs, fs.FilterRepeater(five)) <= 2 * analysed(
+        longs, fs.FilterRepeater(three)
+    )
+
+
 def test_column_pruning_reaches_parquet_scan(spark, tmp_path):
     """A chain over one column must not read the others (ReadSchema
     pruning through the compiled projection)."""
