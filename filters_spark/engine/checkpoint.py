@@ -6,13 +6,15 @@ so the engine keeps a filesystem manifest: one JSON file per completed
 conv-bucket, written atomically (tmp + rename), recording lineage (input
 fingerprint, suite config hash) and the bucket's verdict counters.
 
-Resume = enumerate incomplete buckets and re-run ONLY those, pushing the
-bucket predicate into the scan.  The default bucket transform is
-``pmod(xxhash64(conv_id), N)``; on an Iceberg table partitioned by
-``bucket(N, conv_id)`` use
+Resume = enumerate incomplete buckets and re-run ONLY those: one row
+pass per job (the suite's ``row_results``, chains compiled once), each
+bucket group a filter on that pass's own ``_bucket``, which the
+optimizer pushes below the chains into the scan.  The default bucket
+transform is ``pmod(xxhash64(conv_id), N)``; on an Iceberg table
+partitioned by ``bucket(N, conv_id)`` use
 ``filters_spark.sources.iceberg.iceberg_bucket_fn`` instead (Iceberg's
-transform is Murmur3-32, not xxhash64) so the resume predicate matches
-the partition transform and becomes true partition pruning — on raw
+transform is Murmur3-32, not xxhash64) so the group filter matches the
+partition transform and becomes true partition pruning — on raw
 parquet the default is a scan-level filter.
 
 A killed job re-validates at most the buckets that had not committed
@@ -209,18 +211,22 @@ def run_resumable(
     after each group.  Returns aggregate counters across ALL completed
     buckets (this run + prior runs).
 
-    Each group reads its input ONCE: the suite's chain pass fills its
-    persisted narrow projection (``SuiteResult.keyed``), and the
+    One row pass per job: ``suite.row_results`` is built once, over the
+    input plus the ``hist_cols`` bins, so the rule chains compile once
+    whatever the number of groups.  Each group is that pass filtered to
+    the group's values of its own ``_bucket`` column; the filter reaches
+    the input scan below the chains, so each group reads only its own
+    rows, and reads them ONCE: the suite's persisted narrow projection
+    (``SuiteResult.keyed``) is filled from the filtered pass, and the
     group's verdicts, violations, drift census and stat state are all
     aggregated from it.
 
-    The resume predicate uses ``suite.bucket_fn`` — the SAME transform
-    that keys the suite's verdicts — so selected rows and verdict buckets
-    can never diverge (with a custom transform, e.g. ``iceberg_bucket_fn``
-    on a ``bucket(N, conv_id)`` table, both sides speak Iceberg's
-    Murmur3-32).  A verdict keyed outside the requested group means the
-    two transforms disagree after all and is raised, never silently
-    recorded.
+    A row's bucket is decided in one place, ``suite.row_results`` (with
+    ``suite.bucket_fn``; a custom transform, e.g. ``iceberg_bucket_fn``
+    on a ``bucket(N, conv_id)`` table, makes the group filter true
+    partition pruning), and the group filter, the verdicts and the
+    per-bucket state all read that column.  A verdict keyed outside the
+    requested group is still raised, never recorded in the manifest.
 
     ``output`` (optional) streams each group's verdicts + violations to
     ``{output}/verdicts`` / ``{output}/violations`` parquet, partitioned
@@ -264,6 +270,7 @@ def run_resumable(
     for name, v in (("buckets_per_job", buckets_per_job), ("hist_bins", hist_bins)):
         if v < 1:
             raise ValueError(f"{name} must be a positive int, got {v}")
+    suite.check_drift_columns(df)
     if not isinstance(manifest, CheckpointManifest):
         manifest = CheckpointManifest(manifest)
     kinds = stat_kinds(df, suite.stat_columns or df.columns)
@@ -283,37 +290,33 @@ def run_resumable(
         },
     )
     manifest.check_compatible(fingerprint)
-    n = suite.n_buckets
     done = manifest.completed()
-    todo = [b for b in range(n) if b not in done]
+    todo = [b for b in range(suite.n_buckets) if b not in done]
     newly = 0
-    # the verdict of a bucket the predicate matched no row of
+    # the verdict of a bucket no row of the pass falls in
     empty = verdict_totals([], suite.table_rules)
     empty["bucket_pass"] = empty.pop("passed")
-    conv_bucket = suite.bucket_fn(F.col(suite.conv), n)
     spark = df.sparkSession
+    if todo:
+        rows = suite.row_results(
+            df,
+            {
+                HIST_PREFIX + c: hist_bin(df, c, hist_bins, *hist_range)
+                for c in hist_cols or ()
+            },
+        )
 
     for i in range(0, len(todo), buckets_per_job):
         group = todo[i : i + buckets_per_job]
-        # On Iceberg with bucket(N, conv_id) partitioning (and
-        # bucket_fn=iceberg_bucket_fn) this predicate prunes to exactly
-        # these partitions.
-        sub = df.where(conv_bucket.isin(group))
-        result = suite._row_pass(
-            sub.withColumns(
-                {
-                    HIST_PREFIX + c: hist_bin(sub, c, hist_bins, *hist_range)
-                    for c in hist_cols or ()
-                }
-            )
-        )
+        # the filter reaches the scan below the chains; on Iceberg with
+        # bucket(N, conv_id) partitioning (and bucket_fn=
+        # iceberg_bucket_fn) it prunes to exactly these partitions
+        result = suite._row_pass(rows.where(F.col(BUCKET_COL).isin(group)))
         try:
-            # per-bucket state keyed by the row pass's bucket, which is
-            # the RAW conv key's — the same transform as the resume
-            # predicate above.  The census (drift dimensions and histogram
-            # bins) is one count aggregation; it runs first and fills the
-            # cache from one branch (the verdict cascade reads the cache
-            # from two).
+            # per-bucket state keyed by the row pass's bucket.  The census
+            # (drift dimensions and histogram bins) is one count
+            # aggregation; it runs first and fills the cache from one
+            # branch (the verdict cascade reads the cache from two).
             keyed = result.keyed
             entries = suite._drift_entries(keyed) + [
                 hist_entry(c, F.col(HIST_PREFIX + c)) for c in hist_cols or ()
@@ -343,13 +346,11 @@ def run_resumable(
         if stray:
             raise RuntimeError(
                 f"verdict buckets {sorted(stray)} fall outside the requested "
-                f"group {group}: the resume predicate and suite.bucket_fn "
-                "disagree (mixed bucket transforms?)"
+                f"group {group}; refusing to record them in the manifest"
             )
         for b in group:
-            # No verdict for a requested bucket ⇒ the predicate matched
-            # zero rows for it ⇒ genuinely empty (same transform on both
-            # sides, checked above).
+            # No verdict for a requested bucket ⇒ no row of the pass has
+            # that _bucket ⇒ genuinely empty.
             row = verdict_rows.get(b, empty)
             row.pop("bucket", None)
             manifest.mark(

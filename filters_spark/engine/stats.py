@@ -172,7 +172,9 @@ def stat_table(
     """The finish: one state row to the long ``(column, metric, value,
     value_str)`` table.  A ``c__distinct`` column, when present,
     replaces the HLL estimate (``column_stats(exact_distinct=True)``).
-    The unpivot is a stack over the one row, not a shuffle."""
+    The unpivot is a stack over the one row, not a shuffle.  Over no
+    rows (a one-shot state of an empty frame, or a merge of no states)
+    ``count`` is 0 and every other metric NULL."""
     total, none = F.col("__total"), F.lit(None)
     rows = []
     for c, kind in kinds.items():
@@ -181,13 +183,17 @@ def stat_table(
 
         nonnull = s("nonnull")
         metrics = [
-            ("count", total, none),
-            ("null_rate", (total - nonnull) / total, none),
+            # a merge of no states sums to a NULL total
+            ("count", F.coalesce(total, F.lit(0)), none),
+            ("null_rate", (total - nonnull) / F.nullif(total, F.lit(0)), none),
             (
                 "distinct",
-                s("distinct")
-                if f"{c}__distinct" in state.columns
-                else F.hll_sketch_estimate(s("hll")),
+                F.when(
+                    total > 0,
+                    s("distinct")
+                    if f"{c}__distinct" in state.columns
+                    else F.hll_sketch_estimate(s("hll")),
+                ),
                 none,
             ),
         ]

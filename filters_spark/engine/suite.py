@@ -7,9 +7,11 @@ Pipeline shape (what actually runs):
 
 1. ONE projection pass compiles all row chains (``validate``), carries
    tiny RAW copies of the key/drift columns, and tags each row with the
-   bucket of its RAW conv key (the key the uniqueness rollup and the
-   checkpoint's resume predicate use; a chain may clean or null the
-   key) — no shuffle.
+   bucket of its RAW conv key (a chain may clean or null the key) — no
+   shuffle.  ``row_results`` is the one place a row's bucket is decided:
+   the verdict cascade groups by that ``_bucket``, and the checkpoint
+   builds this pass once per job and selects each bucket group with a
+   filter on it, which reaches the input scan below the chains.
 2. Per-bucket verdicts — ONE aggregation cascade, hash aggs keyed by
    (conv_id, turn_idx), then conv_id, then bucket, reading the
    PERSISTED narrow projection (raw-key copies), not a second input
@@ -160,8 +162,12 @@ class ValidationSuite:
             raws[RAW_PREFIX + "lenbucket"] = length_bucket(self.length_col)
         return raws
 
-    def row_results(self, df: DataFrame) -> DataFrame:
-        extra = self._raw_copy_cols(df)
+    def row_results(self, df: DataFrame, carry: dict | None = None) -> DataFrame:
+        """The row pass over the input table ``df``: the compiled chains,
+        the raw copies and each row's ``_bucket``.  ``carry`` adds more
+        raw columns by name (``run_resumable``'s histogram bins); they
+        are not stat columns."""
+        extra = {**self._raw_copy_cols(df), **(carry or {})}
         # the bucket of the RAW key, taken before the chains run
         extra[BUCKET_COL] = self.bucket_fn(F.col(self.conv), self.n_buckets)
         if self.table_rules:
@@ -180,10 +186,12 @@ class ValidationSuite:
     def verdicts(self, rows: DataFrame) -> DataFrame:
         """Per-bucket verdict: row validity + uniqueness + gaplessness.
 
-        Every counter derives from ONE aggregation cascade over the RAW
-        key copies carried in ``rows`` — ``(conv, idx)`` counts →
+        ``rows`` is :meth:`row_results`' output (or its narrow persisted
+        projection).  Every counter derives from ONE aggregation cascade
+        over the RAW key copies carried in it — ``(conv, idx)`` counts →
         per-conversation stats (dup counters AND gapless flags computed
-        together) → bucket rollup — so the big keyed shuffle runs
+        together) → rollup by the row's ``_bucket`` — so the big keyed
+        shuffle runs
         exactly once AND reads the narrow persisted projection instead
         of rescanning the input (chains replace validated columns, so
         cleaned keys could be nulled; the ``__raw_`` copies preserve the
@@ -202,17 +210,20 @@ class ValidationSuite:
         raw_src = rows.select(
             F.col(RAW_PREFIX + self.conv).alias(self.conv),
             F.col(RAW_PREFIX + self.idx).alias(self.idx),
+            BUCKET_COL,
             "_is_valid",
             *(F.col(RULEF_COL).alias(c) for c in rule),
         )
-        level1 = raw_src.groupBy(self.conv, self.idx).agg(
+        # the row pass's bucket is a function of the raw conv key, so it
+        # rides the first two levels as a trailing key
+        level1 = raw_src.groupBy(self.conv, self.idx, BUCKET_COL).agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.when(~F.col("_is_valid"), 1).otherwise(0)).alias(
                 "n_invalid"
             ),
             *(F.sum(c).alias(c) for c in rule),
         )
-        conv_stats = level1.groupBy(self.conv).agg(
+        conv_stats = level1.groupBy(self.conv, BUCKET_COL).agg(
             F.count(F.lit(1)).alias("distinct_turns"),
             F.min(self.idx).alias("min_idx"),
             F.max(self.idx).alias("max_idx"),
@@ -229,9 +240,7 @@ class ValidationSuite:
             F.col("max_idx") == F.col("distinct_turns") - 1
         )
         summed = ["n_rows", "n_invalid", *rule, "dup_keys", "surplus_rows"]
-        v = conv_stats.groupBy(
-            self.bucket_fn(F.col(self.conv), self.n_buckets).alias(BUCKET_COL)
-        ).agg(
+        v = conv_stats.groupBy(BUCKET_COL).agg(
             *(F.sum(c).alias(c) for c in summed),
             F.count(F.lit(1)).alias("n_convs"),
             F.sum(F.when(~is_gapless, 1).otherwise(0)).alias("gappy_convs"),
@@ -310,17 +319,30 @@ class ValidationSuite:
 
     # -- the job ----------------------------------------------------------
 
+    def check_drift_columns(self, df: DataFrame) -> None:
+        """Raise ``ValueError`` when a configured drift/length column is
+        missing from the input ``df`` — the raw-copy carriers silently
+        skip absent columns (``row_results`` is also used verdict-only on
+        frames without drift columns), and an unchecked typo would
+        otherwise yield an empty current-side profile: KL ≡ 0.0, i.e. a
+        drift check that silently always passes.  Runs no Spark job."""
+        missing = [c for c in self.drift_cols if c not in df.columns]
+        if self.length_col and self.length_col not in df.columns:
+            missing.append(self.length_col)
+        if missing:
+            raise ValueError(
+                f"suite drift config references columns missing from the "
+                f"input frame: {missing} (available: {df.columns}); pass "
+                f"drift_cols=()/length_col=None to disable those checks"
+            )
+
     def run(
         self, df: DataFrame, baseline: DataFrame | None = None
     ) -> SuiteResult:
-        """Run the whole suite.
-
-        Raises ``ValueError`` when a configured drift/length column is
-        missing from ``df`` — the raw-copy carriers silently skip absent
-        columns (``row_results`` is also used verdict-only on frames
-        without drift columns), and an unchecked typo would otherwise
-        yield an empty current-side profile: KL ≡ 0.0, i.e. a drift
-        check that silently always passes.
+        """Run the whole suite: :meth:`_row_pass` over
+        :meth:`row_results`, then column stats and, with a ``baseline``,
+        drift.  Raises ``ValueError`` first when a configured drift or
+        length column is missing (:meth:`check_drift_columns`).
 
         The row pass caches a NARROW projection of the row-validation
         output — ``(conv, idx, bucket, _is_valid, _violations)`` plus the
@@ -333,7 +355,8 @@ class ValidationSuite:
         core-scaling; on a cluster it would be a second full
         materialisation.  Call ``result.unpersist()`` when done.
         """
-        result = self._row_pass(df)
+        self.check_drift_columns(df)
+        result = self._row_pass(self.row_results(df))
         kinds = stat_kinds(df, self.stat_columns or df.columns)
         result.stats = stat_table(result.keyed.agg(*stat_aggs(kinds)), kinds)
         if baseline is not None:
@@ -347,23 +370,15 @@ class ValidationSuite:
             )
         return result
 
-    def _row_pass(self, df: DataFrame) -> SuiteResult:
-        """:meth:`run` without column stats and drift — the row pass,
-        verdicts and violations over the persisted narrow projection
-        (``stats`` is ``None``).  ``run_resumable`` calls it per bucket
-        group and aggregates its own per-bucket state from ``keyed``."""
+    def _row_pass(self, rows: DataFrame) -> SuiteResult:
+        """:meth:`run` without column stats and drift: verdicts and
+        violations over the persisted narrow projection of ``rows``, the
+        output of :meth:`row_results` (``stats`` is ``None``).
+        ``run_resumable`` builds ``rows`` once per job and calls this per
+        bucket group with ``rows`` filtered to the group's ``_bucket``
+        values, then aggregates its per-bucket state from ``keyed``."""
         from pyspark import StorageLevel
 
-        missing = [c for c in self.drift_cols if c not in df.columns]
-        if self.length_col and self.length_col not in df.columns:
-            missing.append(self.length_col)
-        if missing:
-            raise ValueError(
-                f"suite drift config references columns missing from the "
-                f"input frame: {missing} (available: {df.columns}); pass "
-                f"drift_cols=()/length_col=None to disable those checks"
-            )
-        rows = self.row_results(df)
         raw_cols = [c for c in rows.columns if c.startswith(RAW_PREFIX)]
         rule_cols = [RULEF_COL] if RULEF_COL in rows.columns else []
         keyed = rows.select(

@@ -167,9 +167,10 @@ def main(argv: list[str] | None = None) -> int:
 
     out = args.output.rstrip("/")
     if args.manifest:
-        # run_resumable writes verdicts/violations per bucket group as it
-        # goes (dynamic partition overwrite keyed by bucket), reading each
-        # group's input once; drift comes from the summed per-bucket
+        # run_resumable builds the row pass once and writes
+        # verdicts/violations per bucket group as it goes (dynamic
+        # partition overwrite keyed by bucket), reading each group's
+        # input once; drift comes from the summed per-bucket
         # censuses plus one baseline scan, and the stats table from the
         # merged per-bucket stat states, so no input row is read twice.
         summary = run_resumable(
@@ -195,7 +196,8 @@ def main(argv: list[str] | None = None) -> int:
         # coalescing)
         verdicts = result.verdicts.collect()
         summary = {
-            "completed": len(verdicts),
+            # every bucket, empty ones too, as the manifest route counts
+            "completed": suite.n_buckets,
             **verdict_totals(verdicts, args.table_rules),
         }
         summary["passed"] &= not result.metrics.get("drift_failed", False)

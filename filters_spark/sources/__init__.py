@@ -5,7 +5,6 @@ from filters_spark.sources.iceberg import (
     iceberg_bucket_fn,
     read_transcripts,
     transcripts_ddl,
-    unfinished_bucket_filter,
 )
 
 __all__ = [
@@ -13,5 +12,4 @@ __all__ = [
     "iceberg_bucket_fn",
     "read_transcripts",
     "transcripts_ddl",
-    "unfinished_bucket_filter",
 ]

@@ -11,11 +11,11 @@ IMPORTANT transform note: Iceberg's ``bucket(N, col)`` partition
 transform is a Murmur3-32 hash (Iceberg spec §Appendix B), which is NOT
 the engine's default ``pmod(xxhash64(conv_id), N)`` bucket.  For verdict
 buckets to line up with physical Iceberg partitions — which is what
-turns the checkpoint-resume filter into real partition pruning — build
+turns the checkpoint's bucket-group filter into real partition pruning — build
 the :class:`~filters_spark.engine.suite.ValidationSuite` with
 ``bucket_fn=iceberg_bucket_fn(spark)`` so both sides use Iceberg's own
 transform.  On plain parquet the default xxhash64 bucket is fine (the
-resume filter is then a scan-level predicate, not partition pruning).
+group filter is then a scan-level predicate, not partition pruning).
 """
 
 from __future__ import annotations
@@ -91,26 +91,3 @@ def read_transcripts(
         return spark.read.parquet(ref)
     raise ValueError(f"unknown format {fmt!r}")
 
-
-def unfinished_bucket_filter(
-    df: DataFrame,
-    completed: set[int],
-    n_buckets: int,
-    conv: str = "conv_id",
-    bucket_fn=None,
-) -> DataFrame:
-    """Resume filter: keep only rows of buckets NOT in ``completed``.
-
-    With ``bucket_fn=iceberg_bucket_fn(spark)`` on a
-    ``bucket(N, conv_id)``-partitioned Iceberg table this predicate
-    matches the partition transform, so Iceberg prunes whole partitions
-    at planning time (unfinished data is never read).  With the default
-    xxhash64 bucket on parquet it evaluates per row group.
-    """
-    from filters_spark.engine.suite import bucket_of
-
-    fn = bucket_fn or bucket_of
-    remaining = [b for b in range(n_buckets) if b not in completed]
-    if len(remaining) == n_buckets:
-        return df
-    return df.where(fn(F.col(conv), n_buckets).isin(remaining))

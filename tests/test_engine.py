@@ -694,6 +694,62 @@ def test_checkpoint_reads_each_input_row_once(tmp_path, spark, tdf, baseline):
     assert seen.value == tdf.count()
 
 
+def test_run_resumable_builds_one_row_pass(tmp_path, tdf, monkeypatch):
+    """``run_resumable`` compiles the rule chains once per call, however
+    many bucket groups it runs, and the ``hist_cols`` bins ride that
+    pass as carried columns, not as stat columns: no group's persisted
+    projection holds a stat input of a bin (``__raw___raw_...``)."""
+    import filters_spark.engine.suite as suite_mod
+    from filters_spark.engine.checkpoint import HIST_PREFIX
+    from filters_spark.engine.stats import RAW_PREFIX
+
+    compiles, keyed_columns = [], []
+    validate, row_pass = suite_mod.validate, ValidationSuite._row_pass
+
+    def counting_validate(*args, **kwargs):
+        compiles.append(1)
+        return validate(*args, **kwargs)
+
+    def recording_row_pass(self, rows):
+        result = row_pass(self, rows)
+        keyed_columns.append(result.keyed.columns)
+        return result
+
+    monkeypatch.setattr(suite_mod, "validate", counting_validate)
+    monkeypatch.setattr(ValidationSuite, "_row_pass", recording_row_pass)
+    suite = ValidationSuite(RULES, n_buckets=8)
+    out = run_resumable(
+        tdf, suite, CheckpointManifest(tmp_path / "m"), buckets_per_job=2,
+        hist_cols=["text"],
+    )
+    assert out["completed"] == 8 and out["n_rows"] == tdf.count()
+    assert len(keyed_columns) == 4 and len(compiles) == 1
+    for cols in keyed_columns:
+        assert HIST_PREFIX + "text" in cols
+        assert not [c for c in cols if c.startswith(RAW_PREFIX + RAW_PREFIX)]
+
+
+@pytest.mark.parametrize("route", ["suite.run", "column_stats", "run_resumable"])
+def test_stats_of_empty_input(route, tmp_path, tdf):
+    """Over an empty input every stats route gives one table: each
+    column's ``count`` is 0 and every other metric NULL (not a division
+    by the zero count, nor the NULL count of a merge of no states)."""
+    empty = tdf.limit(0)
+    suite = ValidationSuite(RULES, n_buckets=8)
+    if route == "suite.run":
+        result = suite.run(empty)
+        got = _table(result.stats)
+        result.unpersist()
+    elif route == "column_stats":
+        got = _table(column_stats(empty))
+    else:
+        got = _table(run_resumable(empty, suite, tmp_path / "m")["stats"])
+    assert got.keys() == _table(column_stats(tdf)).keys()
+    assert got == {
+        (c, m): (0.0 if m == "count" else None, None) for c, m in got
+    }
+
+
 @pytest.mark.parametrize(
     "first, resumed",
     [
@@ -910,9 +966,10 @@ def test_checkpoint_resume_streams_outputs(tmp_path, tdf, baseline, spark):
 
 
 def test_resume_rejects_mismatched_bucket_fn(tmp_path, tdf, baseline):
-    """A custom bucket_fn flows into the resume predicate; a transform
-    that disagrees with the verdict keys must raise, not silently mark
-    unvalidated buckets complete (ADVICE r1 high)."""
+    """A custom ``bucket_fn`` (crc32 instead of the default xxhash64)
+    resumes end to end: the row pass's ``_bucket`` selects every group
+    and keys its verdicts, so all 8 buckets complete and every row is
+    counted once."""
     suite = ValidationSuite(RULES, n_buckets=8,
                             bucket_fn=lambda c, n: F.pmod(F.crc32(c), F.lit(n)).cast("int"))
     manifest = CheckpointManifest(tmp_path / "m3")
@@ -1047,20 +1104,15 @@ def test_verdicts_match_python_on_dirty_keys(spark):
     )
 
 
-def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
-    """``python -m filters_spark.job`` (in a subprocess: ``main`` stops
-    its session) over an input with an empty ``conv_id``: the one-shot
-    and the ``--manifest`` run exit 0 with the same verdict rows and
-    counters, and a rerun on the complete manifest validates no
-    group."""
-    import json
+def _start_job(tmp_path, src, out, *extra):
+    """``python -m filters_spark.job`` over the parquet ``src`` in a
+    subprocess (``main`` stops its session) of its own process group,
+    8 buckets in groups of 4 unless ``extra`` says otherwise."""
     import os
     import subprocess
     import sys
     from pathlib import Path
 
-    src = str(tmp_path / "input")
-    _convs_with_empty_key(spark).write.parquet(src)
     env = {
         **os.environ,
         "PYTHONPATH": str(Path(__file__).resolve().parent.parent),
@@ -1068,44 +1120,145 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
         "--conf spark.ui.enabled=false pyspark-shell",
         "SPARK_LOCAL_DIRS": str(tmp_path),
     }
+    log = tmp_path / f"{out}.log"
+    p = subprocess.Popen(
+        [sys.executable, "-m", "filters_spark.job", "--input", src,
+         "--output", str(tmp_path / out), "--n-buckets", "8",
+         "--buckets-per-job", "4", *extra],
+        env=env, stdout=subprocess.PIPE, stderr=log.open("a"), text=True,
+        start_new_session=True,
+    )
+    return p, log
 
-    def start(out, *extra):
-        log = tmp_path / f"{out}.log"
-        p = subprocess.Popen(
-            [sys.executable, "-m", "filters_spark.job", "--input", src,
-             "--output", str(tmp_path / out), "--n-buckets", "8",
-             "--buckets-per-job", "4", *extra],
-            env=env, stdout=subprocess.PIPE, stderr=log.open("w"), text=True,
-        )
-        return p, log
 
-    def summary(job):
-        p, log = job
-        stdout, _ = p.communicate(timeout=300)
-        assert p.returncode == 0, log.read_text()[-3000:]
-        return json.loads(stdout.strip().splitlines()[-1])
+def _job_summary(job):
+    """The summary line of a finished :func:`_start_job` run."""
+    import json
+
+    p, log = job
+    stdout, _ = p.communicate(timeout=300)
+    assert p.returncode == 0, log.read_text()[-3000:]
+    return json.loads(stdout.strip().splitlines()[-1])
+
+
+def _sorted_rows(frame):
+    return sorted(tuple(sorted(r.asDict().items())) for r in frame.collect())
+
+
+#: the job summary's counters that both job routes report
+JOB_COUNTERS = (
+    "completed", "n_rows", "n_invalid", "dup_keys", "gappy_convs", "passed"
+)
+
+
+def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
+    """``python -m filters_spark.job`` over an input with an empty
+    ``conv_id`` (4 conversations over 8 buckets, so some are empty): the
+    one-shot and the ``--manifest`` run exit 0 with the same verdict
+    rows and counters, ``completed`` included, and a rerun on the
+    complete manifest validates no group."""
+    src = str(tmp_path / "input")
+    _convs_with_empty_key(spark).write.parquet(src)
 
     def verdicts(out):
-        frame = spark.read.parquet(str(tmp_path / out / "verdicts"))
-        return sorted(
-            tuple(sorted(r.asDict().items())) for r in frame.collect()
-        )
+        return _sorted_rows(spark.read.parquet(str(tmp_path / out / "verdicts")))
 
     manifest = tmp_path / "manifest"
     # the two first runs are independent: run them side by side
-    procs = start("one"), start("res", "--manifest", str(manifest))
-    one_shot, resumed = (summary(p) for p in procs)
-    keys = ("n_rows", "n_invalid", "dup_keys", "gappy_convs", "passed")
+    procs = (
+        _start_job(tmp_path, src, "one"),
+        _start_job(tmp_path, src, "res", "--manifest", str(manifest)),
+    )
+    one_shot, resumed = (_job_summary(p) for p in procs)
+    keys = JOB_COUNTERS
     assert {k: resumed[k] for k in keys} == {k: one_shot[k] for k in keys}
     assert one_shot["n_rows"] == 12 and one_shot["n_invalid"] == 3
+    assert one_shot["completed"] == 8
     assert verdicts("res") == verdicts("one")
     entries = {p.name: p.read_text() for p in manifest.glob("bucket_*.json")}
     assert len(entries) == 8
-    rerun = summary(start("res", "--manifest", str(manifest)))
+    rerun = _job_summary(
+        _start_job(tmp_path, src, "res", "--manifest", str(manifest))
+    )
     assert {k: rerun[k] for k in keys} == {k: one_shot[k] for k in keys}
     assert {
         p.name: p.read_text() for p in manifest.glob("bucket_*.json")
     } == entries
+
+
+def _skewed_transcripts(spark):
+    """36 conversations of 5 turns and one hot conversation of 20 turns,
+    10% of the 200 rows (the skewed-key case), with invalid roles, an
+    empty ``conv_id``, a duplicate key and a gap."""
+    rows = [
+        (f"conv-{c:02d}", i, "user" if i % 2 == 0 else "assistant",
+         f"turn {i} of {c}", None)
+        for c in range(36)
+        for i in range(5)
+    ]
+    rows += [("hot", i, "user" if i % 2 else "tool", f"hot turn {i}", "code")
+             for i in range(20)]
+    rows[3] = ("conv-00", 3, "robot", "bad role", None)
+    rows[7] = ("", 2, "user", "empty key", None)
+    rows[12] = ("conv-02", 1, "user", "duplicate key", None)
+    rows[19] = ("conv-03", 9, "assistant", "gap", "search")
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string",
+    )
+
+
+def test_job_resume_after_sigkill_equals_one_shot(tmp_path, spark):
+    """The ``--manifest`` job SIGKILLed (its whole process group, JVM
+    included) as soon as its first manifest entry lands, resumed and
+    killed again at a later entry count, then resumed to the end, gives
+    a one-shot run's summary counters, verdict rows and violation counts
+    per key, over an input where one conversation holds 10% of the rows.
+    """
+    import os
+    import signal
+    import time
+
+    src = str(tmp_path / "input")
+    _skewed_transcripts(spark).write.parquet(src)
+    manifest = tmp_path / "manifest"
+    args = ("--manifest", str(manifest), "--buckets-per-job", "2")
+
+    def entries():
+        return len(list(manifest.glob("bucket_*.json")))
+
+    def kill_at(n):
+        """Start the job and SIGKILL its group once ``n`` entries exist;
+        return the count the kill left."""
+        p, log = _start_job(tmp_path, src, "res", *args)
+        while entries() < n:
+            assert p.poll() is None, log.read_text()[-3000:]
+            time.sleep(0.02)
+        os.killpg(p.pid, signal.SIGKILL)
+        p.communicate(timeout=60)
+        return entries()
+
+    one = _start_job(tmp_path, src, "one")
+    first = kill_at(1)
+    second = kill_at(first + 2)
+    assert 1 <= first < second < 8
+    resumed = _job_summary(_start_job(tmp_path, src, "res", *args))
+    one_shot = _job_summary(one)
+    keys = JOB_COUNTERS
+    assert {k: resumed[k] for k in keys} == {k: one_shot[k] for k in keys}
+    assert one_shot["n_rows"] == 200 and one_shot["dup_keys"] == 1
+
+    def read(out, name):
+        return spark.read.parquet(str(tmp_path / out / name))
+
+    assert _sorted_rows(read("res", "verdicts")) == _sorted_rows(
+        read("one", "verdicts")
+    )
+    per_key = [
+        _sorted_rows(read(out, "violations").groupBy("key", "code").count())
+        for out in ("res", "one")
+    ]
+    assert per_key[0] == per_key[1] and per_key[0]
 
 
 @pytest.mark.parametrize(

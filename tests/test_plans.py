@@ -133,31 +133,42 @@ def test_predicate_pushdown_reaches_parquet_scan(spark, tmp_path):
 
 def test_bucket_predicate_reaches_scan_below_kernel_repeater(spark, tmp_path):
     """A ``_bucket IN (group)`` filter over the suite's row pass sits on
-    the parquet scan, below the Arrow kernel of a ``FilterRepeater``
-    element chain: the row pass is a projection, so one bucket group
-    reads only its own rows (what building the row pass once per job
-    and selecting each group by its buckets needs)."""
+    the parquet scan, below the Arrow kernel, both of a ``FilterRepeater``
+    element chain and of the job's own rules (``Unicode`` at the top of
+    ``text``): the row pass is a projection, so one bucket group reads
+    only its own rows (what ``run_resumable``, which builds the row pass
+    once per job and selects each group by its buckets, relies on)."""
+    from filters_spark.data.transcripts import transcripts
     from filters_spark.engine.suite import BUCKET_COL
+    from filters_spark.job import default_rules
 
     rows = [(f"c{i % 9}", i % 4, [f"t{i}", "", "café"]) for i in range(40)]
     spark.createDataFrame(
         rows, "conv_id string, turn_idx int, texts array<string>"
     ).write.parquet(str(tmp_path / "t3"))
-    df = spark.read.parquet(str(tmp_path / "t3"))
-    suite = ValidationSuite(
-        {"texts": fs.FilterRepeater(fs.Required() | fs.Unicode())},
-        n_buckets=8, drift_cols=(), length_col=None,
+    transcripts(spark, n_convs=20).write.parquet(str(tmp_path / "t4"))
+    cases = (
+        (
+            "t3",
+            ValidationSuite(
+                {"texts": fs.FilterRepeater(fs.Required() | fs.Unicode())},
+                n_buckets=8, drift_cols=(), length_col=None,
+            ),
+        ),
+        ("t4", ValidationSuite(default_rules(), n_buckets=8)),
     )
-    out = suite.row_results(df).where(F.col(BUCKET_COL).isin([1, 5]))
-    lines = plan_of(out).splitlines()
-    kernel = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
-    bucket = next(
-        i for i, l in enumerate(lines) if "Filter" in l and "xxhash64" in l
-    )
-    scan = next(i for i, l in enumerate(lines) if "FileScan parquet" in l)
-    assert kernel < bucket < scan, "\n".join(lines)
-    # nothing but the columnar-to-row bridge between filter and scan
-    assert all("ColumnarToRow" in l for l in lines[bucket + 1 : scan]), lines
+    for path, suite in cases:
+        df = spark.read.parquet(str(tmp_path / path))
+        out = suite.row_results(df).where(F.col(BUCKET_COL).isin([1, 5]))
+        lines = plan_of(out).splitlines()
+        kernel = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
+        bucket = next(
+            i for i, l in enumerate(lines) if "Filter" in l and "xxhash64" in l
+        )
+        scan = next(i for i, l in enumerate(lines) if "FileScan parquet" in l)
+        assert kernel < bucket < scan, "\n".join(lines)
+        # nothing but the columnar-to-row bridge between filter and scan
+        assert all("ColumnarToRow" in l for l in lines[bucket + 1 : scan]), lines
 
 
 def test_orphans_broadcast_anti_join(spark, tdf):

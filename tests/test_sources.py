@@ -1,4 +1,4 @@
-"""Source-layer tests: parquet path, Iceberg gating, resume filter."""
+"""Source-layer tests: parquet path, Iceberg gating."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from filters_spark.sources import (
     iceberg_bucket_fn,
     read_transcripts,
     transcripts_ddl,
-    unfinished_bucket_filter,
 )
 
 
@@ -41,30 +40,3 @@ def test_read_transcripts_parquet(spark, tmp_path):
     with pytest.raises(ValueError):
         read_transcripts(spark, "x", "csvish")
 
-
-def test_unfinished_bucket_filter(spark):
-    df = spark.range(1000).select(
-        F.format_string("conv-%d", F.col("id")).alias("conv_id")
-    )
-    n = 8
-    from filters_spark.engine.suite import bucket_of
-
-    all_buckets = {
-        r["b"]
-        for r in df.select(
-            bucket_of(F.col("conv_id"), n).alias("b")
-        ).distinct().collect()
-    }
-    assert all_buckets == set(range(n))
-
-    done = {0, 1, 2, 3}
-    remaining = unfinished_bucket_filter(df, done, n)
-    got = {
-        r["b"]
-        for r in remaining.select(
-            bucket_of(F.col("conv_id"), n).alias("b")
-        ).distinct().collect()
-    }
-    assert got == set(range(n)) - done
-    # nothing completed -> unfiltered plan (no predicate added)
-    assert unfinished_bucket_filter(df, set(), n) is df
