@@ -3,8 +3,13 @@
 
 There is no Spark builtin for *batch* resumability (SURVEY.md §4.3(5)),
 so the engine keeps a filesystem manifest: one JSON file per completed
-conv-bucket, written atomically (tmp + rename), recording lineage (input
-fingerprint, suite config hash) and the bucket's verdict counters.
+conv-bucket, written atomically (tmp + rename), recording lineage (one
+fingerprint of the suite config, the stored state's spec and the input
+files) and the bucket's state: its verdict counters, drift census and
+stat state.  The manifest is the job's state: once every bucket has
+committed, the job is finished from it (``ValidationSuite.finish``)
+without rereading a validated row; only the violation rows are written
+as the groups run.
 
 Resume = enumerate incomplete buckets and re-run ONLY those: one row
 pass per job (the suite's ``row_results``, chains compiled once), each
@@ -29,13 +34,14 @@ import os
 import tempfile
 import time
 import types
+from collections import Counter
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from filters_spark.core.spec import BaseSpec, SpecMeta, resolve
-from filters_spark.engine.drift import collect_census, profile_from_census
+from filters_spark.engine.drift import collect_census
 from filters_spark.engine.stats import (
     RAW_PREFIX,
     bucket_stat_states,
@@ -117,9 +123,9 @@ def suite_fingerprint(suite: ValidationSuite, state: dict) -> str:
     """Stable digest of the config that determines what the stored
     per-bucket state MEANS: the suite's (rules, table rules, keys,
     bucket count, stat/drift columns) and the run's ``state`` spec
-    (resolved stat columns, histogram columns and grid).  Each rule is
-    signed by :func:`_sig`, so a changed parameter anywhere in it is
-    config drift."""
+    (resolved stat columns, histogram columns and grid, input files).
+    Each rule is signed by :func:`_sig`, so a changed parameter anywhere
+    in it is config drift."""
     import hashlib
 
     spec = repr(
@@ -143,11 +149,12 @@ class CheckpointManifest:
         self.dir = Path(path)
         self.dir.mkdir(parents=True, exist_ok=True)
 
-    def check_compatible(self, fingerprint: str) -> None:
+    def check_compatible(self, fingerprint: str, inputs: list = ()) -> None:
         """Refuse to resume over a manifest whose entries were written by
-        a different state-schema version or a different suite config —
-        merging them would silently blend incompatible state (VERDICT r4
-        item 7).  Unversioned (pre-v2) entries read as version 1."""
+        a different state-schema version or a different fingerprint (suite
+        config, state spec or ``inputs``, the input files) — merging them
+        would silently blend incompatible state (VERDICT r4 item 7).
+        Unversioned (pre-v2) entries read as version 1."""
         for b in sorted(self.completed()):
             entry = self.read(b)
             v = int(entry.get("state_version", 1))
@@ -165,8 +172,9 @@ class CheckpointManifest:
                     f"checkpoint manifest {self.dir} bucket {b} was written "
                     f"with suite config {fp}, current config is "
                     f"{fingerprint}; refusing to resume with changed rules, "
-                    "buckets or stat state — delete the manifest directory "
-                    "to re-validate"
+                    "buckets, stat state or input (this run reads "
+                    f"{len(inputs)} input files: {list(inputs)[:5]}) — "
+                    "delete the manifest directory to re-validate"
                 )
 
     def _file(self, bucket: int) -> Path:
@@ -228,12 +236,14 @@ def run_resumable(
     per-bucket state all read that column.  A verdict keyed outside the
     requested group is still raised, never recorded in the manifest.
 
-    ``output`` (optional) streams each group's verdicts + violations to
-    ``{output}/verdicts`` / ``{output}/violations`` parquet, partitioned
-    by bucket with dynamic partition overwrite — re-running a bucket
-    after a crash replaces exactly its own partition, so the result
-    tables stay consistent with the manifest without a second full
-    validation pass over the table.
+    ``output`` (optional): each group writes its violation rows to
+    ``{output}/violations`` parquet, partitioned by bucket with dynamic
+    partition overwrite — re-running a bucket after a crash replaces
+    exactly its own partition, so the table stays consistent with the
+    manifest without a second validation pass.  Once every bucket has
+    committed, :meth:`ValidationSuite.finish` writes ``{output}/verdicts``
+    (flat, one row per non-empty bucket, from the manifest's verdicts)
+    and ``{output}/stats``; an aborted run writes neither.
 
     Every manifest entry carries the bucket's STAT STATE (engine/stats.py:
     counts, min/max/sum, HLL and KLL sketches of each of the suite's
@@ -255,14 +265,14 @@ def run_resumable(
     ``length_histograms`` is EXACTLY a single-shot run's.  ``baseline``
     (optional) is the drift reference snapshot.  Groups run without it;
     once every bucket has committed, the censuses of all completed
-    buckets are summed, folded and normalised exactly as the one-shot
-    profile is (:func:`profile_from_census`), and ``suite.drift`` runs
-    ONCE with that current side, so only the baseline is scanned.  The
-    result is returned as ``drift`` and gates ``passed`` exactly as the
-    one-shot ``suite.run`` does.
+    buckets are summed and the job is finished by
+    :meth:`ValidationSuite.finish`, as the one-shot job is: drift runs
+    ONCE over the summed census, so only the baseline is scanned, and
+    gates ``passed``.
 
-    The stat columns and the histogram spec are part of the manifest's
-    fingerprint: resuming with other ones is refused, not merged.
+    The stat columns, the histogram spec and the input files
+    (``df.inputFiles()``) are part of the manifest's fingerprint:
+    resuming with other ones is refused, not merged.
 
     ``fail_after_buckets`` is a test hook: abort after N newly-completed
     buckets to simulate a killed job.
@@ -273,13 +283,14 @@ def run_resumable(
     suite.check_drift_columns(df)
     if not isinstance(manifest, CheckpointManifest):
         manifest = CheckpointManifest(manifest)
-    kinds = stat_kinds(df, suite.stat_columns or df.columns)
+    kinds = stat_kinds(df, suite.stat_columns_of(df))
     unknown = set(sketch_cols or ()) - set(kinds)
     if unknown:
         raise ValueError(
             f"sketch_cols {sorted(unknown)} are not stat columns of the "
             f"suite ({list(kinds)})"
         )
+    inputs = sorted(df.inputFiles())
     fingerprint = suite_fingerprint(
         suite,
         {
@@ -287,24 +298,23 @@ def run_resumable(
             "hist": [sorted(hist_cols), hist_bins, list(hist_range)]
             if hist_cols
             else None,
+            "inputs": inputs,
         },
     )
-    manifest.check_compatible(fingerprint)
+    manifest.check_compatible(fingerprint, inputs)
     done = manifest.completed()
     todo = [b for b in range(suite.n_buckets) if b not in done]
     newly = 0
     # the verdict of a bucket no row of the pass falls in
     empty = verdict_totals([], suite.table_rules)
     empty["bucket_pass"] = empty.pop("passed")
-    spark = df.sparkSession
-    if todo:
-        rows = suite.row_results(
-            df,
-            {
-                HIST_PREFIX + c: hist_bin(df, c, hist_bins, *hist_range)
-                for c in hist_cols or ()
-            },
-        )
+    rows = suite.row_results(
+        df,
+        {
+            HIST_PREFIX + c: hist_bin(df, c, hist_bins, *hist_range)
+            for c in hist_cols or ()
+        },
+    )
 
     for i in range(0, len(todo), buckets_per_job):
         group = todo[i : i + buckets_per_job]
@@ -318,27 +328,19 @@ def run_resumable(
             # aggregation; it runs first and fills the cache from one
             # branch (the verdict cascade reads the cache from two).
             keyed = result.keyed
-            entries = suite._drift_entries(keyed) + [
+            entries = suite.drift_entries(keyed) + [
                 hist_entry(c, F.col(HIST_PREFIX + c)) for c in hist_cols or ()
             ]
             census = collect_census(keyed, entries, BUCKET_COL)
             states = bucket_stat_states(keyed, kinds, BUCKET_COL)
             verdicts = result.verdicts.collect()
             if output is not None:
-                out = output.rstrip("/")
-                for name, frame in (
-                    (
-                        "verdicts",
-                        spark.createDataFrame(verdicts, result.verdicts.schema),
-                    ),
-                    ("violations", result.violations),
-                ):
-                    (
-                        frame.write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("bucket")
-                        .parquet(f"{out}/{name}")
-                    )
+                (
+                    result.violations.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("bucket")
+                    .parquet(f"{output.rstrip('/')}/violations")
+                )
         finally:
             result.unpersist()
         verdict_rows = {r["bucket"]: r.asDict() for r in verdicts}
@@ -367,29 +369,25 @@ def run_resumable(
             if fail_after_buckets is not None and newly >= fail_after_buckets:
                 return {"completed": len(done) + newly, "aborted": True}
 
-    # aggregate lineage and state across all manifest entries
-    entries = [manifest.read(b) for b in manifest.completed()]
+    # finish the job from the state of all manifest entries
+    entries = [manifest.read(b) for b in sorted(manifest.completed())]
     stat_states = [e["stats"] for e in entries if e["stats"] is not None]
-    census_sum: dict[str, dict[str, int]] = {}
+    census_sum: dict[str, Counter] = {}
     for entry in entries:
         for dim, kn in entry["census"].items():
-            acc = census_sum.setdefault(dim, {})
-            for k, c in kn.items():
-                acc[k] = acc.get(k, 0) + c
-    drift: dict = {}
-    if baseline is not None:
-        drift = suite.drift(
-            df, baseline, cur_profile=profile_from_census(spark, census_sum)
-        )
+            census_sum.setdefault(dim, Counter()).update(kn)
     stats = stat_table(merge_stat_states(df, kinds, stat_states), kinds)
-    out = {
-        "completed": len(entries),
-        "aborted": False,
-        **verdict_totals([e["verdict"] for e in entries], suite.table_rules),
-        "drift": drift,
-        "stats": stats,
-    }
-    out["passed"] &= not drift.get("drift_failed", False)
+    # the verdicts table holds the buckets with rows, as the one-shot's
+    verdict_rows = [
+        {"bucket": e["bucket"], **e["verdict"]}
+        for e in entries
+        if e["verdict"]["n_rows"] > 0
+    ]
+    summary = suite.finish(
+        df, verdict_rows, suite.verdicts(rows).schema, census_sum, stats,
+        baseline, output,
+    )
+    out = {"aborted": False, **summary, "stats": stats}
     if sketch_cols:
         out["distinct_estimates"] = {
             r["column"]: r["value"]

@@ -20,11 +20,15 @@ Pipeline shape (what actually runs):
 3. Column stats — one aggregation over the narrow stat inputs carried
    in the persisted projection (engine/stats.py: the mergeable stat
    state, finished into the long table).
-4. Drift — current side from the persisted raw copies (pre-bucketed
-   lengths), baseline side one scan, driver-side KL/PSI.
+4. The finish (:meth:`ValidationSuite.finish`), once per job on both
+   job routes, from the state the job collected: drift from the
+   collected census of the raw copies (pre-bucketed lengths) plus one
+   baseline scan, driver-side KL/PSI; the summary counters from the
+   verdict rows; the ``verdicts/`` and ``stats/`` tables.
 
-Input scans at 10^12 rows: one, the chain pass — every other stage
-reads the cached narrow projection.
+:meth:`ValidationSuite.run` only builds steps 1–3; nothing executes
+until the caller collects or writes.  Input scans at 10^12 rows: one,
+the chain pass — every other stage reads the cached narrow projection.
 
 Buckets default to ``pmod(xxhash64(conv_id), n_buckets)``; pass
 ``bucket_fn=filters_spark.sources.iceberg.iceberg_bucket_fn(spark)`` on
@@ -35,7 +39,7 @@ and the checkpoint/resume filter prunes at the storage layer.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +47,6 @@ from pyspark.sql import functions as F
 from filters_spark.core.compiler import validate
 from filters_spark.engine.drift import (
     cat_entry,
-    collect_census,
     dist_profile,
     kl_from_dicts,
     len_entry,
@@ -51,6 +54,7 @@ from filters_spark.engine.drift import (
     profile_from_census,
     psi_from_dicts,
 )
+from filters_spark.engine.handlers import explode_violations
 from filters_spark.engine.stats import (
     RAW_PREFIX,
     stat_aggs,
@@ -95,19 +99,12 @@ class SuiteResult:
     verdicts: DataFrame  # per-bucket pass/fail + counters
     stats: DataFrame | None  # long-format column stats
     violations: DataFrame  # exploded violation rows (key, code, message)
-    metrics: dict = field(default_factory=dict)  # drift + thresholds
     #: narrow persisted projection feeding verdicts/violations (see
     #: ValidationSuite.run); call :meth:`unpersist` when done
-    keyed: DataFrame | None = None
-
-    @property
-    def passed(self) -> bool:
-        failed = self.verdicts.where(~F.col("bucket_pass")).limit(1).count()
-        return failed == 0 and not self.metrics.get("drift_failed", False)
+    keyed: DataFrame
 
     def unpersist(self) -> None:
-        if self.keyed is not None:
-            self.keyed.unpersist()
+        self.keyed.unpersist()
 
 
 class ValidationSuite:
@@ -152,12 +149,17 @@ class ValidationSuite:
 
     # -- pieces ---------------------------------------------------------
 
+    def stat_columns_of(self, df: DataFrame) -> list[str]:
+        """The columns of the input ``df`` the suite takes stats of:
+        ``stat_columns``, or every column when that is unset."""
+        return self.stat_columns or df.columns
+
     def _raw_copy_cols(self, df: DataFrame) -> dict:
         keep = [self.conv, self.idx] + [
             c for c in self.drift_cols if c in df.columns
         ]
         raws = {RAW_PREFIX + c: F.col(c) for c in dict.fromkeys(keep)}
-        raws.update(stat_inputs(df, self.stat_columns or df.columns))
+        raws.update(stat_inputs(df, self.stat_columns_of(df)))
         if self.length_col and self.length_col in df.columns:
             raws[RAW_PREFIX + "lenbucket"] = length_bucket(self.length_col)
         return raws
@@ -265,7 +267,7 @@ class ValidationSuite:
             bucket_pass.alias("bucket_pass"),
         )
 
-    def _drift_entries(self, rows: DataFrame) -> list:
+    def drift_entries(self, rows: DataFrame) -> list:
         """Current-side drift profile entries over the raw copies riding
         the (persisted) row-pass output — no rescan of the input.  The
         length dimension uses the pre-computed bucket int, so the text
@@ -336,47 +338,79 @@ class ValidationSuite:
                 f"drift_cols=()/length_col=None to disable those checks"
             )
 
-    def run(
-        self, df: DataFrame, baseline: DataFrame | None = None
-    ) -> SuiteResult:
-        """Run the whole suite: :meth:`_row_pass` over
-        :meth:`row_results`, then column stats and, with a ``baseline``,
-        drift.  Raises ``ValueError`` first when a configured drift or
-        length column is missing (:meth:`check_drift_columns`).
+    def run(self, df: DataFrame) -> SuiteResult:
+        """Build the whole suite over ``df``: :meth:`_row_pass` over
+        :meth:`row_results`, then column stats over the persisted
+        projection.  Builds plans and executes nothing; drift is an
+        explicit :meth:`drift` call, and a job's summary and tables come
+        from :meth:`finish`.  Raises ``ValueError`` first when a
+        configured drift or length column is missing
+        (:meth:`check_drift_columns`).
 
         The row pass caches a NARROW projection of the row-validation
         output — ``(conv, idx, bucket, _is_valid, _violations)`` plus the
         raw copies — so verdicts, violation reporting, column stats and
-        the drift profile don't re-execute the full chain per action,
+        the drift census don't re-execute the full chain per action,
         while the wide cleaned rows stay a lazy projection the caller
         streams to its own sink.  Persisting the wide rows instead moves
         every cleaned text through the block manager: at bench scale
         that single-box cache write dominated wall time and capped
         core-scaling; on a cluster it would be a second full
-        materialisation.  Call ``result.unpersist()`` when done.
+        materialisation.  The first action fills the cache; call
+        ``result.unpersist()`` when done.
         """
         self.check_drift_columns(df)
         result = self._row_pass(self.row_results(df))
-        kinds = stat_kinds(df, self.stat_columns or df.columns)
+        kinds = stat_kinds(df, self.stat_columns_of(df))
         result.stats = stat_table(result.keyed.agg(*stat_aggs(kinds)), kinds)
-        if baseline is not None:
-            census = collect_census(
-                result.keyed, self._drift_entries(result.keyed)
-            )
-            result.metrics = self.drift(
-                df,
-                baseline,
-                cur_profile=profile_from_census(df.sparkSession, census),
-            )
         return result
 
+    def finish(
+        self,
+        df: DataFrame,
+        verdict_rows: list,
+        verdict_schema,
+        census: dict,
+        stats: DataFrame,
+        baseline: DataFrame | None = None,
+        output: str | None = None,
+    ) -> dict:
+        """Finish a job over the input ``df`` from the state it collected:
+        its per-bucket ``verdict_rows`` (Spark ``Row``s or dicts, only
+        buckets with rows), their ``verdict_schema`` (that of
+        :meth:`verdicts`), its uncapped drift ``census``
+        ``{dim: {key: n}}`` and its long ``stats`` table.  Returns the
+        summary: ``completed`` (every bucket, empty ones too), the
+        :func:`verdict_totals` counters, ``drift`` (``{}`` without a
+        ``baseline``; with one, one baseline scan) and ``passed``, which
+        drift can fail.  With ``output`` it writes ``{output}/verdicts``
+        and ``{output}/stats`` parquet, replacing what was there.  Both
+        job routes, one-shot and checkpointed, end here."""
+        drift = {}
+        if baseline is not None:
+            profile = profile_from_census(df.sparkSession, census)
+            drift = self.drift(df, baseline, cur_profile=profile)
+        summary = {
+            "completed": self.n_buckets,
+            **verdict_totals(verdict_rows, self.table_rules),
+            "drift": drift,
+        }
+        summary["passed"] &= not drift.get("drift_failed", False)
+        if output is not None:
+            out = output.rstrip("/")
+            df.sparkSession.createDataFrame(
+                verdict_rows, verdict_schema
+            ).write.mode("overwrite").parquet(f"{out}/verdicts")
+            stats.write.mode("overwrite").parquet(f"{out}/stats")
+        return summary
+
     def _row_pass(self, rows: DataFrame) -> SuiteResult:
-        """:meth:`run` without column stats and drift: verdicts and
-        violations over the persisted narrow projection of ``rows``, the
-        output of :meth:`row_results` (``stats`` is ``None``).
-        ``run_resumable`` builds ``rows`` once per job and calls this per
-        bucket group with ``rows`` filtered to the group's ``_bucket``
-        values, then aggregates its per-bucket state from ``keyed``."""
+        """:meth:`run` without column stats: verdicts and violations over
+        the persisted narrow projection of ``rows``, the output of
+        :meth:`row_results` (``stats`` is ``None``).  ``run_resumable``
+        builds ``rows`` once per job and calls this per bucket group
+        with ``rows`` filtered to the group's ``_bucket`` values, then
+        aggregates its per-bucket state from ``keyed``."""
         from pyspark import StorageLevel
 
         raw_cols = [c for c in rows.columns if c.startswith(RAW_PREFIX)]
@@ -390,25 +424,17 @@ class ValidationSuite:
             *rule_cols,
             *raw_cols,
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        verdicts = self.verdicts(keyed)
-        violations = (
+        violations = explode_violations(
             keyed.select(
                 self.conv,
                 self.idx,
-                BUCKET_COL,
-                F.explode("_violations").alias("v"),
-            ).select(
-                self.conv,
-                self.idx,
                 F.col(BUCKET_COL).alias("bucket"),
-                F.col("v.key").alias("key"),
-                F.col("v.code").alias("code"),
-                F.col("v.message").alias("message"),
+                "_violations",
             )
         )
         return SuiteResult(
             rows=rows.drop(*raw_cols, *rule_cols),
-            verdicts=verdicts,
+            verdicts=self.verdicts(keyed),
             stats=None,
             violations=violations,
             keyed=keyed,

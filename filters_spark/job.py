@@ -20,6 +20,9 @@ per-bucket checkpoint manifest as it goes (resume = rerun the same
 command), and prints one summary JSON line on stdout.  Either path reads
 the input once: the column stats come from the stat inputs carried in
 the chain pass (resumed: from the manifest's merged per-bucket states).
+Both paths end in ``ValidationSuite.finish``, which turns the collected
+verdict rows, drift census and stats into the summary and writes
+``verdicts/`` and ``stats/``.
 """
 
 from __future__ import annotations
@@ -32,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 import filters_spark as fs
 from filters_spark.engine.checkpoint import CheckpointManifest, run_resumable
-from filters_spark.engine.suite import ValidationSuite, verdict_totals
+from filters_spark.engine.drift import collect_census
+from filters_spark.engine.suite import ValidationSuite
 
 
 def default_rules() -> dict:
@@ -167,12 +171,11 @@ def main(argv: list[str] | None = None) -> int:
 
     out = args.output.rstrip("/")
     if args.manifest:
-        # run_resumable builds the row pass once and writes
-        # verdicts/violations per bucket group as it goes (dynamic
-        # partition overwrite keyed by bucket), reading each group's
-        # input once; drift comes from the summed per-bucket
-        # censuses plus one baseline scan, and the stats table from the
-        # merged per-bucket stat states, so no input row is read twice.
+        # run_resumable builds the row pass once and writes violations
+        # per bucket group as it goes (dynamic partition overwrite keyed
+        # by bucket), reading each group's input once; it finishes the
+        # job from the manifest's summed censuses, merged stat states
+        # and verdicts, so no input row is read twice.
         summary = run_resumable(
             df,
             suite,
@@ -188,26 +191,23 @@ def main(argv: list[str] | None = None) -> int:
             ),
             hist_bins=args.hist_bins,
         )
-        summary.pop("stats").write.mode("overwrite").parquet(f"{out}/stats")
+        del summary["stats"]  # written by the finish
     else:
-        result = suite.run(df, baseline=baseline)
+        result = suite.run(df)
+        # the census is one count aggregation: it runs first and fills
+        # the cache from one branch (the verdict cascade reads it from
+        # two)
+        census = collect_census(result.keyed, suite.drift_entries(result.keyed))
         # computed once: the collected rows are written back as they are
         # (a persisted verdicts frame would lose AQE's partition
         # coalescing)
         verdicts = result.verdicts.collect()
-        summary = {
-            # every bucket, empty ones too, as the manifest route counts
-            "completed": suite.n_buckets,
-            **verdict_totals(verdicts, args.table_rules),
-        }
-        summary["passed"] &= not result.metrics.get("drift_failed", False)
-        spark.createDataFrame(verdicts, result.verdicts.schema).write.mode(
-            "overwrite"
-        ).parquet(f"{out}/verdicts")
         result.violations.write.mode("overwrite").parquet(f"{out}/violations")
-        result.stats.write.mode("overwrite").parquet(f"{out}/stats")
+        summary = suite.finish(
+            df, verdicts, result.verdicts.schema, census, result.stats,
+            baseline, out,
+        )
         result.unpersist()
-        summary["drift"] = result.metrics
 
     summary["output"] = out
     print(json.dumps(summary))

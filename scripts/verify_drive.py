@@ -70,11 +70,11 @@ suite = ValidationSuite(
     },
     n_buckets=8,
 )
-res = suite.run(tdf, baseline=base)
+res = suite.run(tdf)
 print("VERDICTS:")
 for r in res.verdicts.orderBy("bucket").collect():
     print("  ", r.asDict())
-print("METRICS:", res.metrics)
+print("DRIFT:", suite.drift(tdf, base))
 print("TOP VIOLATION CODES:",
       res.violations.groupBy("key", "code").count().orderBy("count", ascending=False).limit(5).collect())
 with tempfile.TemporaryDirectory() as d:
@@ -82,4 +82,5 @@ with tempfile.TemporaryDirectory() as d:
     print("RESUME partial:", part)
     fin = run_resumable(tdf, suite, d, baseline=base)
     print("RESUME final:", fin)
-print("SUITE PASSED:", res.passed)
+print("SUITE PASSED:", fin["passed"])
+res.unpersist()

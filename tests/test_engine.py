@@ -245,15 +245,39 @@ def test_suite_raises_on_missing_drift_column(tdf, baseline):
     silently producing KL=0 over an empty profile (ADVICE r2)."""
     suite = ValidationSuite(RULES, n_buckets=8, drift_cols=("role", "tooool"))
     with pytest.raises(ValueError, match="tooool"):
-        suite.run(tdf, baseline=baseline)
+        suite.run(tdf)
     suite2 = ValidationSuite(RULES, n_buckets=8, length_col="nope")
     with pytest.raises(ValueError, match="nope"):
-        suite2.run(tdf, baseline=baseline)
+        suite2.run(tdf)
+
+
+def test_suite_run_starts_no_spark_job(spark, tdf):
+    """``suite.run`` only builds plans: under a job group of its own it
+    starts no Spark job, so the first action of the caller (the cache
+    fill) is charged to the caller's layer."""
+    sc = spark.sparkContext
+    sc.setJobGroup("suite-run-build", "ValidationSuite.run builds only")
+    try:
+        result = ValidationSuite(RULES, n_buckets=8).run(tdf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("suite-run-build")) == []
+    # the same job group does see a job when one runs
+    sc.setJobGroup("suite-run-build", "ValidationSuite.run builds only")
+    try:
+        assert result.keyed.count() == tdf.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        result.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup("suite-run-build"))
 
 
 def test_suite_run(tdf, baseline):
+    from filters_spark.engine.drift import collect_census
+
     suite = ValidationSuite(RULES, n_buckets=16)
-    result = suite.run(tdf, baseline=baseline)
+    result = suite.run(tdf)
+    census = collect_census(result.keyed, suite.drift_entries(result.keyed))
     verdicts = result.verdicts.collect()
     assert {r["bucket"] for r in verdicts} == set(range(16))
     assert sum(r["n_rows"] for r in verdicts) == tdf.count()
@@ -267,8 +291,16 @@ def test_suite_run(tdf, baseline):
     # seeded dups → no bucket with dups passes
     assert any(r["dup_keys"] > 0 for r in verdicts)
     assert all(not r["bucket_pass"] for r in verdicts if r["dup_keys"] > 0)
-    assert "kl_role" in result.metrics and "psi_text_len" in result.metrics
-    assert not result.passed  # seeded violations must fail the table
+    drift = suite.drift(tdf, baseline)
+    assert "kl_role" in drift and "psi_text_len" in drift
+    # the finish takes drift from the cached census, and it equals the
+    # drift of a scan of the input
+    summary = suite.finish(
+        tdf, verdicts, result.verdicts.schema, census, result.stats, baseline
+    )
+    result.unpersist()
+    assert summary["drift"] == drift
+    assert not summary["passed"]  # seeded violations must fail the table
 
 
 def test_text_equality_oracle(tdf):
@@ -525,6 +557,41 @@ def test_checkpoint_refuses_incompatible_state(tmp_path, tdf, baseline):
                           buckets_per_job=4)
     assert not final["aborted"] and final["completed"] == 8
     assert final["n_rows"] == tdf.count()
+
+
+def test_checkpoint_refuses_rewritten_input(tmp_path, spark):
+    """The input files are part of the manifest's fingerprint: a resume
+    over the same parquet files goes on, but one after the table was
+    rewritten is refused, naming the files it reads, instead of merging
+    the old rows' state with the new rows'."""
+    import re
+
+    def table(n):
+        return spark.range(n).select(
+            (F.col("id") % 10).cast("string").alias("conv_id"),
+            (F.col("id") / 10).cast("int").alias("turn_idx"),
+            F.lit("user").alias("role"),
+            F.lit(None).cast("string").alias("tool"),
+            F.concat(F.lit("turn "), F.col("id").cast("string")).alias("text"),
+        )
+
+    src = str(tmp_path / "input")
+    table(120).write.parquet(src)
+    suite = ValidationSuite(RULES, n_buckets=8)
+    manifest = CheckpointManifest(tmp_path / "m")
+    for completed in (2, 4):
+        partial = run_resumable(
+            spark.read.parquet(src), suite, manifest, buckets_per_job=2,
+            fail_after_buckets=2,
+        )
+        assert partial == {"completed": completed, "aborted": True}
+    table(1200).write.mode("overwrite").parquet(src)
+    rewritten = spark.read.parquet(src)
+    first_file = sorted(rewritten.inputFiles())[0]
+    with pytest.raises(RuntimeError, match=re.escape(first_file)):
+        run_resumable(rewritten, suite, manifest, buckets_per_job=2)
+    fresh = run_resumable(rewritten, suite, CheckpointManifest(tmp_path / "f"))
+    assert fresh["n_rows"] == 1200
 
 
 def test_checkpoint_table_rules_state(tmp_path, tdf):
@@ -939,16 +1006,23 @@ def test_salted_agg_spreads_identical_duplicate_flood(spark):
 
 
 def test_checkpoint_resume_streams_outputs(tmp_path, tdf, baseline, spark):
-    """run_resumable(output=...) writes per-bucket verdict/violation
-    parquet with dynamic partition overwrite: a resumed run completes
-    the table without duplicating already-written buckets."""
+    """run_resumable(output=...) writes each group's violation parquet
+    with dynamic partition overwrite by bucket, and the finish writes the
+    flat verdicts table once every bucket has committed: an aborted run
+    leaves no verdicts table, and the resumed run writes one row per
+    bucket without duplicating already-written violations."""
+    import os
+
     suite = ValidationSuite(RULES, n_buckets=8)
     manifest = CheckpointManifest(tmp_path / "m2")
     out = str(tmp_path / "out")
     run_resumable(tdf, suite, manifest, baseline=baseline,
                   buckets_per_job=2, fail_after_buckets=4, output=out)
+    assert not os.path.exists(f"{out}/verdicts")
+    assert os.path.exists(f"{out}/violations")
     run_resumable(tdf, suite, manifest, baseline=baseline,
                   buckets_per_job=4, output=out)
+    assert not list((tmp_path / "out" / "verdicts").glob("bucket=*"))
     verdicts = spark.read.parquet(f"{out}/verdicts")
     rows = verdicts.collect()
     assert len(rows) == 8  # one per bucket, no duplicates after resume
@@ -1163,6 +1237,10 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
     def verdicts(out):
         return _sorted_rows(spark.read.parquet(str(tmp_path / out / "verdicts")))
 
+    def verdicts_schema(out):
+        assert not list((tmp_path / out / "verdicts").glob("bucket=*"))
+        return spark.read.parquet(str(tmp_path / out / "verdicts")).schema
+
     manifest = tmp_path / "manifest"
     # the two first runs are independent: run them side by side
     procs = (
@@ -1175,6 +1253,7 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
     assert one_shot["n_rows"] == 12 and one_shot["n_invalid"] == 3
     assert one_shot["completed"] == 8
     assert verdicts("res") == verdicts("one")
+    assert verdicts_schema("res") == verdicts_schema("one")
     entries = {p.name: p.read_text() for p in manifest.glob("bucket_*.json")}
     assert len(entries) == 8
     rerun = _job_summary(
@@ -1184,6 +1263,9 @@ def test_job_cli_one_shot_and_manifest_agree(tmp_path, spark):
     assert {
         p.name: p.read_text() for p in manifest.glob("bucket_*.json")
     } == entries
+    # the rerun finishes the job again: the same flat verdicts table
+    assert verdicts("res") == verdicts("one")
+    assert verdicts_schema("res") == verdicts_schema("one")
 
 
 def _skewed_transcripts(spark):
